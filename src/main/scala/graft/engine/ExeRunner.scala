@@ -27,7 +27,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * the calling thread while stderr drains concurrently on a daemon thread —
   * stderr is never merged into the parsed stream and can never fill the OS
   * pipe buffer and wedge the child. stdin is closed immediately (the argv
-  * protocol has none). A non-zero exit fails the task loudly — the
+  * protocol has none). A non-zero exit fails the task loudly, with the
+  * tail of the child's stderr in the message — the
   * reference silently wrote nothing for a crashed exe
   * (`src/MapReduceWorker.java:159-163` swallows IOException), which turns
   * user bugs into empty results; documented divergence.
@@ -78,17 +79,28 @@ class ExeRunner(spark: SparkSession,
 }
 
 object ExeRunner {
+  /** Bytes of a failed exe's stderr kept for its error message. */
+  private val StderrTailBytes = 4096
+
   /** Spawn, drain stderr concurrently, parse stdout `key,value` lines.
     * Materializes the output before waitFor (bounded by one batch/key's
-    * result size — the argv contract already bounds inputs). */
+    * result size — the argv contract already bounds inputs). The drain
+    * keeps the last [[StderrTailBytes]] of stderr, which a failure appends
+    * to its message (the interpreter's own complaint, e.g. a script it
+    * cannot open, is otherwise lost). */
   private[engine] def run(cmd: Seq[String]): Iterator[KV] = {
     val pb = new ProcessBuilder(cmd: _*)
     val p = pb.start()
     p.getOutputStream.close()
+    @volatile var errTail = Array.emptyByteArray
     val errSink = new Thread(() => {
       try {
         val buf = new Array[Byte](8192)
-        while (p.getErrorStream.read(buf) >= 0) {}
+        var n = p.getErrorStream.read(buf)
+        while (n >= 0) {
+          errTail = (errTail ++ buf.take(n)).takeRight(StderrTailBytes)
+          n = p.getErrorStream.read(buf)
+        }
       } catch { case _: java.io.IOException => }
     })
     errSink.setDaemon(true)
@@ -101,8 +113,14 @@ object ExeRunner {
       }.toVector
       finally src.close()
     val rc = p.waitFor()
-    if (rc != 0)
-      throw new IllegalStateException(s"external exe failed (exit $rc): ${cmd.mkString(" ")}")
+    if (rc != 0) {
+      // the child has exited; a grandchild still holding stderr open must
+      // not hang the failure, so the wait for the drain is bounded
+      errSink.join(1000)
+      val stderr = new String(errTail, "UTF-8").trim
+      throw new IllegalStateException(s"external exe failed (exit $rc): ${cmd.mkString(" ")}" +
+        (if (stderr.isEmpty) "" else s"\nstderr (tail): $stderr"))
+    }
     out.iterator
   }
 }

@@ -2,16 +2,20 @@ package graft
 
 import graft.engine.{ExeRunner, KV, MapleJuice}
 
-/** The reference's shipped applications, run UNMODIFIED through the
-  * argv-contract adapter ([[graft.engine.ExeRunner]]): maple gets each
+/** The argv-contract adapter ([[graft.engine.ExeRunner]]): maple gets each
   * 10-line batch as one argv string, juice gets `(key, valuesFile)` —
-  * exactly `src/MapReduceWorker.java:114-123,235-247`. Results must match
-  * the in-JVM engine path bit for bit (same oracle as `wc_maple_juice`).
+  * exactly `src/MapReduceWorker.java:114-123,235-247`.
   *
-  * The apps are Python 2 (`print x` statements); a real python2 is
-  * preferred when present, else a temp copy gets the minimal
-  * print-statement shim — the argv CONTRACT is what's under test either
-  * way.
+  * Two faithfulness tests run the reference's shipped applications
+  * UNMODIFIED from a reference checkout at `/root/reference/applications`
+  * and are canceled where that directory is absent; WC must match the
+  * in-JVM engine path bit for bit (same oracle as `wc_maple_juice`). The
+  * apps are Python 2 (`print x` statements); a real python2 is preferred
+  * when present, else a temp copy gets the minimal print-statement shim —
+  * the argv CONTRACT is what's under test either way.
+  *
+  * The contract, cleanup and CLI tests run on word-count scripts the spec
+  * writes itself (Python 2 and 3 alike), so they run on every machine.
   */
 class ExeRunnerSpec extends SparkTestBase {
   import spark.implicits._
@@ -44,6 +48,31 @@ class ExeRunnerSpec extends SparkTestBase {
     }
   }
 
+  /** A Python fixture (2/3-compatible) written to a temp file; returns its path. */
+  private def pyScript(prefix: String, body: String): String = {
+    val f = java.nio.file.Files.createTempFile(prefix, ".py")
+    java.nio.file.Files.writeString(f, body)
+    f.toString
+  }
+
+  /** argv-contract word count: maple splits the batch `argv[1]` on
+    * whitespace, juice sums the ints in the values file `argv[2]`. */
+  private lazy val wcMaple = pyScript("graft_wc_maple_",
+    """import sys
+      |for w in sys.argv[1].split():
+      |    sys.stdout.write("%s,1\n" % w)
+      |""".stripMargin)
+  private lazy val wcJuice = pyScript("graft_wc_juice_",
+    """import sys
+      |total = 0
+      |f = open(sys.argv[2])
+      |for line in f:
+      |    if line.strip():
+      |        total += int(line)
+      |f.close()
+      |sys.stdout.write("%s,%d\n" % (sys.argv[1], total))
+      |""".stripMargin)
+
   private def runApp(lines: Seq[String], mapleApp: String, juiceApp: String): Map[String, String] = {
     val (mInterp, mPath) = interpreterFor(mapleApp)
     val (jInterp, jPath) = interpreterFor(juiceApp)
@@ -56,6 +85,7 @@ class ExeRunnerSpec extends SparkTestBase {
   }
 
   test("reference wc-maple.py + wc-juice.py run unmodified, match engine path") {
+    assume(java.nio.file.Files.isDirectory(refApps), s"reference checkout not found at $refApps")
     val lines = Seq("b a", "a c a", "b b", "x", "a b x y", "z z z",
       "one two", "two one", "three", "four five", "tail line after batch")
     val viaExe = runApp(lines, "wc-maple.py", "wc-juice.py")
@@ -70,6 +100,7 @@ class ExeRunnerSpec extends SparkTestBase {
   }
 
   test("reference rwlg-maple.py + rwlg-juice.py run unmodified (faithful including the newline quirk)") {
+    assume(java.nio.file.Files.isDirectory(refApps), s"reference checkout not found at $refApps")
     // rwlg-juice.py never strips newlines from the values it reads
     // (`value = value + "," + line` with `line` still ending in \n), so its
     // stdout is MULTI-LINE: `key,v1`, then `,v2`, `,v3`, ... — and the
@@ -96,24 +127,29 @@ class ExeRunnerSpec extends SparkTestBase {
   }
 
   test("argv batching edge cases: empty input and an exact-10-line batch") {
-    val (mInterp, mPath) = interpreterFor("wc-maple.py")
     val mj = new MapleJuice(spark)
-    val runner = new ExeRunner(spark, mInterp)
+    val runner = new ExeRunner(spark, Seq("python3"))
     // empty input → no process spawned, no output
-    assert(mj.maple(Seq.empty[String].toDS(), runner.mapleFn(mPath),
+    assert(mj.maple(Seq.empty[String].toDS(), runner.mapleFn(wcMaple),
       strictBatching = true).collect().isEmpty)
-    // exactly 10 lines → one full batch, all words counted
+    // exactly 10 lines in one partition → one full batch, all words counted
     val ten = (1 to 10).map(i => s"w$i")
-    val inter = mj.maple(ten.toDS(), runner.mapleFn(mPath), strictBatching = true)
+    val inter = mj.maple(ten.toDS().coalesce(1), runner.mapleFn(wcMaple), strictBatching = true)
       .collect()
     assert(inter.map(_.key).sorted.toSeq === ten.sorted)
     assert(inter.forall(_.value == "1"))
+    // ... and they reach the exe as ONE argv string of 10 lines
+    val countLines = pyScript("graft_count_lines_",
+      """import sys
+        |sys.stdout.write("lines,%d\n" % len(sys.argv[1].split("\n")))
+        |""".stripMargin)
+    assert(mj.maple(ten.toDS().coalesce(1), runner.mapleFn(countLines), strictBatching = true)
+      .collect().toSeq === Seq(KV("lines", "10")))
   }
 
   test("juice values file is cleaned up after the exe runs") {
-    val (jInterp, jPath) = interpreterFor("wc-juice.py")
     val before = tmpJuiceFiles()
-    val out = new ExeRunner(spark, jInterp).juiceFn(jPath)("k", Iterator("1", "2", "3")).toList
+    val out = new ExeRunner(spark, Seq("python3")).juiceFn(wcJuice)("k", Iterator("1", "2", "3")).toList
     assert(out === List(KV("k", "6")))
     assert(tmpJuiceFiles() === before) // no leaked graft_juice_ temp files
   }
@@ -143,7 +179,8 @@ class ExeRunnerSpec extends SparkTestBase {
 
   test("exe failure fails the job loudly (no silent empty output)") {
     val bad = java.nio.file.Files.createTempFile("graft_bad_", ".py")
-    java.nio.file.Files.writeString(bad, "import sys\nsys.exit(3)\n")
+    java.nio.file.Files.writeString(bad,
+      "import sys\nsys.stderr.write(\"graft_bad: giving up\\n\")\nsys.exit(3)\n")
     val mj = new MapleJuice(spark)
     val runner = new ExeRunner(spark, Seq("python3"))
     val ex = intercept[org.apache.spark.SparkException] {
@@ -151,6 +188,8 @@ class ExeRunnerSpec extends SparkTestBase {
         strictBatching = true).collect()
     }
     assert(ex.getMessage != null)
+    // the child's stderr tail travels with the failure
+    assert(ex.getMessage.contains("graft_bad: giving up"))
   }
 
   test("large exe output (>1 MB, far past the OS pipe buffer) never deadlocks") {
@@ -193,12 +232,9 @@ class ExeRunnerSpec extends SparkTestBase {
     val inFile = tmp.resolve("in.txt")
     java.nio.file.Files.writeString(inFile, "b a\na c a\n")
     val outFile = tmp.resolve("out.txt")
-    val (interp, maplePath) = interpreterFor("wc-maple.py")
-    val (_, juicePath) = interpreterFor("wc-juice.py")
-    val mapleExe =
-      if (interp == Seq("python3")) maplePath else s"interp:${interp.head}:$maplePath"
-    val juiceExe =
-      if (interp == Seq("python3")) juicePath else s"interp:${interp.head}:$juicePath"
+    // both spellings of an external exe: explicit interpreter and bare path
+    val mapleExe = s"interp:python3:$wcMaple"
+    val juiceExe = wcJuice
     val script = tmp.resolve("script.txt")
     java.nio.file.Files.writeString(script,
       s"""put $inFile exein/f1
@@ -206,7 +242,12 @@ class ExeRunnerSpec extends SparkTestBase {
          |juice $juiceExe 4 exewc1 exeout 1
          |get exeout $outFile
          |""".stripMargin)
-    Cli.main(Array(s"@$script"))
+    val shell = new java.io.ByteArrayOutputStream()
+    Console.withOut(shell) { Cli.main(Array(s"@$script")) }
+    // a failed step prints `error: <msg>` and the shell carries on, so
+    // surface it here rather than as a missing out.txt later
+    val shellOut = shell.toString("UTF-8")
+    assert(!shellOut.linesIterator.exists(_.startsWith("error:")), shellOut)
     val out = java.nio.file.Files.readString(outFile)
     assert(out === "a\t3\nb\t1\nc\t1")
   } }
