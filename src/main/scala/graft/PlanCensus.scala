@@ -2,13 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared physical-plan census: the AQE-final shuffle/broadcast counts and
-  * anti-pattern flags for one query. Two consumers:
-  *
-  *   - [[PlanDump]] prints it per query for interactive plan review;
-  *   - PlanCensusSpec asserts it against a committed golden file, so an
-  *     edit that adds an Exchange or flips a join strategy fails a TEST
-  *     instead of surfacing as a bench regression two rounds later.
+/** Physical-plan census: the AQE-final shuffle/broadcast counts and
+  * anti-pattern flags for one query. PlanCensusSpec asserts it against a
+  * committed golden file, so an edit that adds an Exchange or flips a join
+  * strategy fails a TEST instead of surfacing as a bench regression two
+  * rounds later.
   */
 object PlanCensus {
 

@@ -188,8 +188,8 @@ object ScaleGen {
     // lands at ≈ 26% / 30% / 34%, straddling BloomHitMin = 0.3. Containment
     // of "eval text (e toks) ++ own toks (o)" is (e−2)/(e+o−2), so
     // o = round((e−2)·(100−t)/t) targets t% — the knife edge where a single
-    // Bloom false positive could flip a verdict, which is exactly what the
-    // borderline parity rehearsal (EvalRehearsal) measures.
+    // Bloom false positive could flip a verdict (DedupSpec's contamination
+    // knife-edge test pins exact/Bloom agreement at that threshold).
     val contamKind = pmod(xxhash64($"id", lit(17)), lit(4L))
     val targetPct = element_at(typedLit(Seq(90, 26, 30, 34)),
       contamKind.cast("int") + 1)

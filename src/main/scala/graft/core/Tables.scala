@@ -71,7 +71,7 @@ object Tables {
     "spark.sql.adaptive.enabled" -> "true",
     "spark.graft.stream.statePartitions" -> "8")
 
-  /** Config-matrix overlay for measurement harnesses (Bench, PlanDump):
+  /** Config-matrix overlay for the Bench harness:
     * `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` overlays [[sessionDefaults]]
     * for one run — posture experiments (AQE on/off, state-store provider,
     * state-partition floor) vary configs without code edits while the

@@ -567,8 +567,8 @@ object Dedup {
     * (src, dst); output: (doc_id, cluster = min node of its component) for
     * every node incident to an edge.
     *
-    * The rounds run at the RDD layer (r11, the Graph fixpoint-plumbing
-    * lesson): each round of the old DF loop paid plan analysis, AQE
+    * The rounds run at the RDD layer (the lesson of the Graph
+    * message-passing kernel): each round of the old DF loop paid plan analysis, AQE
     * re-planning, an eager localCheckpoint barrier, a count action and
     * (on count plateaus) an `except` anti-join — measured 6-8 s at sf0.1
     * on a 249-EDGE set, i.e. pure orchestration. The RDD rounds are four

@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partition, Partitioner, TaskContext}
 import org.apache.spark.rdd.RDD
+import scala.collection.mutable.LongMap
 import graft.core.Tables
 
 /** Link-graph analytics over the reference's web-link graph.
@@ -25,14 +26,11 @@ import graft.core.Tables
   * agree bit-for-bit at every iteration, with no float-association or
   * round-half knife edge anywhere.
   *
-  * Scale shape: each iteration is ONE shuffle (contributions aggregated
-  * by destination — map-side combined, so a celebrity node's incoming
-  * mass is summed per map partition, never funneled raw into one task)
-  * plus a join against the static degree-annotated edge list, which is
-  * materialized ONCE (`localCheckpoint`) and reused all ten iterations.
-  * Lineage is cut per iteration (the star-contraction idiom) so the plan
-  * stays O(1)-deep; at cluster scale the same code checkpoints to
-  * distributed storage. Driver traffic is zero — no collect anywhere.
+  * Scale shape: the iterative operators (PageRank, PPR, HashMin CC, BFS,
+  * LPA, HITS, random walks) run on one RDD message-passing kernel — flat
+  * edges placed once, one map-side-combined shuffle per round (the kernel
+  * note below); the rest are DataFrame plans. Driver traffic is a scalar
+  * at most (HITS's max, the CC convergence count) — no collect anywhere.
   */
 object Graph {
 
@@ -47,65 +45,126 @@ object Graph {
     * oracle replayable as a finite CTE chain. */
   val PrIters = 10
 
-  // --------------------------------------- RDD fixpoint plumbing (r11/r12)
-  // The iterative operators (PageRank, PPR, HashMin CC, LPA, BFS, HITS,
-  // random walks) used to run each round as a Catalyst query with a
-  // localCheckpoint lineage cut every 2-3 rounds. Measured at sf0.1
-  // (OPTIMIZATION_r11.md): ~0.5-0.7 s per round of pure orchestration —
-  // per-round plan analysis, AQE re-planning, broadcast builds and the
-  // eager checkpoint barriers — on graphs whose per-round arithmetic is
-  // microseconds. The loops iterate at the RDD layer, the original
-  // Spark idiom for fixpoint message passing: the FLAT edge pairs are
-  // placed ONCE on a fixed HashPartitioner and persisted; each round
-  // streams them against a per-partition hash map of the current state
-  // (zipPartitions — both sides already co-partitioned, so the "join"
-  // is a map lookup per edge with NO per-key buffering), and the one
-  // real shuffle per round is a map-side-combined reduceByKey keyed by
-  // the SAME partitioner, so its output is already co-partitioned for
-  // the next round. No per-round planning, no broadcast builds, no
-  // barriers: the whole loop is one job at the materializing action.
+  /** The part → supplier link list every link-graph query reads: node ids
+    * namespaced into one keyspace arithmetically — part k → 2k, supplier
+    * k → 2k+1 — because partkeys and suppkeys overlap as raw integers; an
+    * 8-byte key beats string labels in the shuffle. */
+  private def partSupplierEdges(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Tables.lineitem(s, d)
+      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
+  }
+
+  /** Order baskets as a (gk, node) membership frame: order → part. */
+  private def orderBaskets(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    Tables.lineitem(s, d).select($"l_orderkey".as("gk"), $"l_partkey".as("node"))
+  }
+
+  /** The symmetric distinct (src, dst) frame of a directed edge frame,
+    * persisted for the fan-out reuse of [[jaccardNeighborsOf]],
+    * [[adamicAdarOf]] and [[modularityOf]] (their cache contract). A
+    * columnar cache, NOT a localCheckpoint: a checkpoint pins DESERIALIZED
+    * rows (~100 B/row — 3.6 GB of an 8 GiB heap at sf3, the measured OOM),
+    * where the cache holds the same edges in compressed pages and spills
+    * cleanly. */
+  private def undirected(e0: DataFrame): DataFrame =
+    e0.select("src", "dst").union(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().persist()
+
+  /** The oracles' twin of [[partSupplierEdges]]: the link list `li` and
+    * its symmetric distinct closure `und(src, dst)`. MATERIALIZED because
+    * every consumer reads `und` more than once (degrees, edges, nodes). */
+  private val undCte: String =
+    """li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
+      |und AS MATERIALIZED (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li)"""
+      .stripMargin
+
+  /** The seed catalog of [[personalizedPageRank]], [[bfsLayers]] and
+    * [[randomWalks]]: part-side nodes whose partkey is ≡ 0 mod
+    * [[PprSeedMod]] — pure node-id arithmetic, so no seed frame rides the
+    * rounds (an even node halves exactly, matching the oracle's `//`). */
+  private[graft] def isSeed(n: Long): Boolean = n % 2 == 0 && (n / 2) % PprSeedMod == 0
+
+  /** [[isSeed]] as a DuckDB predicate over the node column `c`. */
+  private def seedSql(c: String): String = s"$c % 2 = 0 AND ($c // 2) % $PprSeedMod = 0"
+
+  // ------------------------------------------- the message-passing kernel
+  // Every iterative operator here (PageRank, PPR, HashMin CC, BFS, LPA,
+  // HITS, random walks) repeats one round: each node sends a message along
+  // its edges and the messages are reduced by destination. The rounds run
+  // at the RDD layer — as Catalyst queries each round paid plan analysis,
+  // AQE re-planning and a checkpoint barrier for microseconds of
+  // arithmetic (OPTIMIZATION_r11.md). The FLAT (src, dst) pairs are placed
+  // once on a fixed HashPartitioner and persisted; a round streams them
+  // against a per-partition hash map of the current state (both sides are
+  // co-partitioned, so the "join" is one map lookup per edge), and its one
+  // shuffle is a map-side-combined reduceByKey on the SAME partitioner,
+  // whose output is co-partitioned for the next round. A whole loop is one
+  // job at the materializing action.
   //
-  // r12 (guide §2.5 skew / §5 memory): r11 gathered each node's
-  // neighbors into one sorted array (groupByKey) — max-degree-
-  // proportional single-task memory, a web-scale celebrity hub OOM
-  // (VERDICT r11 what's-wrong #2). The per-partition state maps are
-  // O(nodes in partition) and the edges stream, so NO structure
-  // anywhere in the family scales with a node's degree. The integer
-  // arithmetic is unchanged line for line (Scala `/` ≡ SQL `div` on
-  // the positive domain), so outputs are bit-identical — the DuckDB
-  // oracles and the *Local spec references did not move.
+  // Why flat streamed edges: the state maps hold one entry per node and
+  // the edges only stream past them, so per-task memory is O(nodes in
+  // partition), never O(max degree). Nothing in the family grows with one
+  // node's degree — a celebrity hub costs edges streamed, not an
+  // allocation, where a per-node neighbor array would be one task's OOM.
   //
-  // Partition count comes from spark.sql.shuffle.partitions — the same
-  // scale knob every DF shuffle here uses (local default = core count;
-  // a cluster deployment sizes it to data volume, and graph state
-  // partitioning follows it automatically).
+  // The partition count is spark.sql.shuffle.partitions, the scale knob
+  // every DataFrame shuffle here uses.
 
-  private def fixpointPartitioner(s: SparkSession): HashPartitioner =
-    new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+  /** One fixpoint run's shared setup: the loop partitioner, every RDD the
+    * loop holds across rounds (persisted, spillable), and [[seal]]. */
+  private[graft] final class Loop(s: SparkSession) {
+    val part = new HashPartitioner(
+      s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
-  /** Symmetric distinct FLAT edge pairs (src, dst) of a directed edge
-    * frame, partitioned by src on the loop partitioner: ONE scan explodes
-    * both directions, the dedup runs as a Tungsten DF `distinct` (codegen
-    * hash aggregate — a per-key set combiner at the RDD layer was
-    * measured slower: the shuffle then carries Java-serialized boxed sets
-    * instead of flat longs), then one partitionBy places every node's
-    * out-edges with its state.
-    *
-    * r12 (guide §2 skew / §5 memory): the r11 form gathered each node's
-    * neighbors into ONE array via groupByKey — a web-scale celebrity hub
-    * was a single-task, degree-proportional allocation (VERDICT r11
-    * what's-wrong #2). The fixpoint loops now stream these flat pairs
-    * against a per-partition hash map of the current state
-    * ([[zipPartitions]]), so no per-node structure of any size is ever
-    * materialized: per-task memory is O(nodes in partition), never
-    * O(max degree). */
-  private def symPairs(e0: DataFrame,
-      part: HashPartitioner): RDD[(Long, Long)] =
-    distinctSymPairs(e0).partitionBy(part)
+    /** Persist an RDD the loop reads across rounds, until [[seal]]. */
+    def hold[T](rdd: RDD[T]): RDD[T] = {
+      held += rdd
+      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
-  /** The symmetric distinct pair set before any RDD placement — shared
-    * by [[symPairs]] and the rank-sorted shuffle [[randomWalksOf]] runs
-    * instead of a plain partitionBy. */
+    /** Flat (src, dst) pairs placed by src, with each src's distinct
+      * out-degree — narrow: the count runs on the pairs' own partitioner. */
+    def place(pairs: RDD[(Long, Long)]): Placed = {
+      val placed = hold(pairs.partitionBy(part))
+      new Placed(placed, hold(placed.mapValues(_ => 1L).reduceByKey(part, _ + _)), part)
+    }
+
+    /** Materialize the result eagerly, so the caller's action replays none
+      * of the loop, then release everything the loop held. */
+    def seal(out: DataFrame): DataFrame = {
+      val materialized = out.localCheckpoint()
+      held.foreach(_.unpersist(false))
+      materialized
+    }
+  }
+
+  /** Flat (src, dst) pairs placed by src on a loop's partitioner, and each
+    * src's out-degree, co-partitioned with them — the node universe every
+    * loop initializes its state from. */
+  private[graft] final class Placed(val pairs: RDD[(Long, Long)],
+      val deg: RDD[(Long, Long)], val part: HashPartitioner) {
+    /** The initial state `f(node)` of every node, co-partitioned. */
+    def init(f: Long => Long): RDD[(Long, Long)] =
+      deg.mapPartitions(_.map { case (n, _) => (n, f(n)) }, preservesPartitioning = true)
+  }
+
+  /** `prev` declared as placed by `part`, moving no data — for keyed rows
+    * that already sit where `part` puts their keys. */
+  private final class PlacedBy[K, V](prev: RDD[(K, V)], part: Partitioner)
+      extends RDD[(K, V)](prev) {
+    override val partitioner: Option[Partitioner] = Some(part)
+    override protected def getPartitions: Array[Partition] = firstParent[(K, V)].partitions
+    override def compute(split: Partition, context: TaskContext): Iterator[(K, V)] =
+      firstParent[(K, V)].iterator(split, context)
+  }
+
+  /** The symmetric distinct flat pairs of a directed edge frame: ONE scan
+    * explodes both directions and the dedup is a Tungsten DF `distinct`
+    * (a per-key set combiner at the RDD layer was measured slower: its
+    * shuffle carries Java-serialized boxed sets instead of flat longs). */
   private def distinctSymPairs(e0: DataFrame): RDD[(Long, Long)] = {
     val s = e0.sparkSession
     import s.implicits._
@@ -117,127 +176,127 @@ object Graph {
       .as[(Long, Long)].rdd
   }
 
-  /** Distinct-neighbor degree per node, NARROW over co-partitioned flat
-    * pairs (map-side-combined reduceByKey on the same partitioner — no
-    * shuffle) — one row per node, co-partitioned with the pairs. Also the
-    * node universe the loops initialize their state from. */
-  private def degOf(pairs: RDD[(Long, Long)],
-      part: HashPartitioner): RDD[(Long, Int)] =
-    pairs.mapValues(_ => 1).reduceByKey(part, _ + _)
-
-  /** Drain an iterator of (node, value) into a primitive-friendly hash
-    * map — the per-partition state view the fixpoint rounds stream the
-    * flat edges against. Size is O(nodes in partition). */
-  private def toMap[V](it: Iterator[(Long, V)]): java.util.HashMap[Long, V] = {
-    val m = new java.util.HashMap[Long, V]()
-    it.foreach { case (k, v) => m.put(k, v) }
-    m
-  }
-
-  /** Re-iterate a per-partition state map as (node, value) pairs — the
-    * SELF-MESSAGE stream the HashMin/BFS rounds append to their neighbor
-    * messages. */
-  private def entries[V](m: java.util.HashMap[Long, V]): Iterator[(Long, V)] = {
-    val it = m.entrySet().iterator()
-    new Iterator[(Long, V)] {
-      override def hasNext: Boolean = it.hasNext
-      override def next(): (Long, V) = { val e = it.next(); (e.getKey, e.getValue) }
+  /** The round primitive of every loop: stream the placed edges against
+    * per-partition maps of `state` (and of the degrees, `withDeg`) and
+    * send `msg(state(src), deg(src))` to each edge's dst. With `self`,
+    * every node also sends its own state to itself, so a min-reduce
+    * carries it forward with no per-round join. The state must cover
+    * every edge source, and a miss throws naming the node — except with
+    * `reachedOnly` (BFS's distance map holds reached nodes only), where a
+    * source without state sends nothing. Callers reduce the messages on
+    * `g.part`, map-side combined, so a hub's incoming messages are folded
+    * per map partition, never funneled raw into one task. */
+  private[graft] def messages(g: Placed, state: RDD[(Long, Long)], what: String,
+      withDeg: Boolean = false, self: Boolean = false,
+      reachedOnly: Boolean = false)(msg: (Long, Long) => Long): RDD[(Long, Long)] =
+    g.pairs.zipPartitions(g.deg, state) { (eIt, dIt, sIt) =>
+      val sm = stateMap(sIt, what)
+      val dm = if (withDeg) stateMap(dIt, what) else null
+      val edges = if (reachedOnly) eIt.filter(e => sm.contains(e._1)) else eIt
+      val sent = edges.map { case (u, v) => (v, msg(sm(u), if (withDeg) dm(u) else 0L)) }
+      if (self) sent ++ sm.iterator else sent
     }
-  }
 
-  /** Materialize a fixpoint result frame eagerly (so the caller's action
-    * replays none of the loop) and release the adjacency cache the loop
-    * held — the unpersist-hygiene contract the DF loops left to
-    * ContextCleaner. */
-  private def sealResult(out: DataFrame, cached: RDD[_]*): DataFrame = {
-    val materialized = out.localCheckpoint()
-    cached.foreach(_.unpersist(false))
-    materialized
+  /** Drain a partition's (node, value) pairs into a Long-keyed map — the
+    * per-partition state view, O(nodes in partition), with no key boxing
+    * per lookup. Looking up a node the map lacks throws, naming the node:
+    * a boxed java.util.HashMap lookup would unbox the missing null to a
+    * silent 0. */
+  private def stateMap(it: Iterator[(Long, Long)], what: String): LongMap[Long] = {
+    val m = new LongMap[Long]((u: Long) => throw new IllegalStateException(
+      s"$what: node $u has an edge but no state; the state must cover every edge source"))
+    it.foreach { case (k, v) => m.update(k, v) }
+    m
   }
 
   /** PageRank over the RWLG edge set made symmetric: lineitem's
     * (part → supplier) link list, both directions, so rank actually
     * propagates (the raw edge list is bipartite one-way — supplier ranks
-    * would freeze after two rounds). Node ids are namespaced into one
-    * keyspace arithmetically — part k → 2k, supplier k → 2k+1 — because
-    * partkeys and suppkeys overlap as raw integers; an 8-byte join key
-    * beats string labels in the shuffle. */
-  def pageRank(s: SparkSession, d: String): DataFrame = {
+    * would freeze after two rounds). */
+  def pageRank(s: SparkSession, d: String): DataFrame =
+    pageRankOf(s, partSupplierEdges(s, d))
+
+  /** [[pageRank]] over an arbitrary directed edge frame (src, dst): the
+    * damped-rank loop with teleport mass on every node. */
+  private[graft] def pageRankOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    pageRankOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
+    dampedRanks(s, e0, PrIters, _ => true)(_.toDF("node", "rank_micros"))
   }
 
-  /** In-JVM reference of the same fixed-point iteration, for specs: the
-    * exact integer arithmetic on an adjacency map. */
-  private[graft] def pageRankLocal(
-      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  /** The damped-rank loop of [[pageRankOf]] and [[personalizedPageRankOf]]:
+    * `iters` rounds of `r ← t(n)·(1−d)·S + d · Σ_in (r_src div deg_src)`
+    * from `r₀ = t(n)·S`, in micro-units, where t(n) is 1 if `teleport(n)`
+    * and 0 otherwise — global PageRank teleports to every node, PPR to its
+    * seeds only. The graph is symmetric, so every node receives a sum each
+    * round and the state keeps covering the node set with no join. Scala
+    * `/` ≡ SQL `div` on this all-positive domain: the output is
+    * bit-identical to the unrolled-CTE oracle. */
+  private def dampedRanks(s: SparkSession, e0: DataFrame, iters: Int,
+      teleport: Long => Boolean)(out: RDD[(Long, Long)] => DataFrame): DataFrame = {
+    val loop = new Loop(s)
+    val g = loop.place(distinctSymPairs(e0))
+    var ranks = g.init(n => if (teleport(n)) PrScale else 0L)
+    for (_ <- 1 to iters)
+      ranks = messages(g, ranks, "pagerank", withDeg = true)(_ / _)
+        .reduceByKey(g.part, _ + _)
+        .mapPartitions(_.map { case (n, c) =>
+          (n, (if (teleport(n)) PrBase else 0L) + PrDamp * c / 100)
+        }, preservesPartitioning = true)
+    loop.seal(out(ranks))
+  }
+
+  /** In-JVM reference of [[dampedRanks]], for specs: the exact integer
+    * arithmetic on an adjacency map — global PageRank, or with `seeds` the
+    * personalized form (teleport on the seeds only, [[PprIters]] rounds).
+    * Zero-rank nodes are omitted, as the operators emit them (only the
+    * personalized form has any). */
+  private[graft] def pageRankLocal(edges: Seq[(Long, Long)],
+      seeds: Option[Set[Long]] = None): Map[Long, Long] = {
     val und = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
     val out = und.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val deg = out.view.mapValues(_.size.toLong).toMap
     val nodes = out.keySet
-    var r = nodes.map(_ -> PrScale).toMap
-    for (_ <- 1 to PrIters) {
+    val teleport = seeds.getOrElse(nodes)
+    var r = nodes.map(n => n -> (if (teleport(n)) PrScale else 0L)).toMap
+    for (_ <- 1 to seeds.fold(PrIters)(_ => PprIters)) {
       val c = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
       for (n <- nodes; d <- out(n)) c(d) += r(n) / deg(n)
-      r = nodes.map(n => n -> (PrBase + PrDamp * c(n) / 100L)).toMap
+      r = nodes.map(n => n -> ((if (teleport(n)) PrBase else 0L) + PrDamp * c(n) / 100L)).toMap
     }
-    r
+    r.filter(_._2 > 0)
   }
 
-  /** [[pageRank]] over an arbitrary directed edge frame (src, dst):
-    * symmetrizes, dedups, then iterates
-    * `r ← (1−d)·S + d · Σ_in (r_src div outdeg_src)` in micro-units —
-    * at the RDD layer (see the fixpoint-plumbing note above): flat edges
-    * placed once, one map-side-combined sum shuffle per round, the state
-    * attached by per-partition map lookup. The symmetric graph means
-    * every node receives ≥ 1 contribution, so the old per-round
-    * left-join against a node frame was redundant and is gone. Scala `/`
-    * ≡ SQL `div` on this all-positive domain — output bit-identical to
-    * the unrolled-CTE oracle. */
-  private[graft] def pageRankOf(s: SparkSession, e0: DataFrame): DataFrame = {
-    import s.implicits._
-    val part = fixpointPartitioner(s)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pairs = symPairs(e0, part).persist(lvl)
-    val deg = degOf(pairs, part).persist(lvl) // narrow; one row per node
-    var ranks = deg.mapValues(_ => PrScale)   // co-partitioned with pairs
-    for (_ <- 1 to PrIters) {
-      // stream the flat edges against per-partition deg/rank maps — the
-      // former narrow array join, without any per-node gather; the ONE
-      // shuffle per round stays the map-side-combined contribution sum
-      ranks = pairs.zipPartitions(deg, ranks) { (eIt, dIt, rIt) =>
-        val dm = toMap(dIt); val rm = toMap(rIt)
-        eIt.map { case (u, v) => (v, rm.get(u) / dm.get(u)) }
-      }
-        .reduceByKey(part, _ + _)
-        .mapValues(c => PrBase + PrDamp * c / 100)
-    }
-    sealResult(ranks.toDF("node", "rank_micros"), pairs, deg)
-  }
-
-  /** DuckDB twin: the same ten damped-sum rounds as an unrolled CTE chain
-    * (`r0 … r10`), every step in BIGINT micro-units with `//` matching
-    * Spark's `div` on the all-positive domain. Sums are cast back from
-    * DuckDB's HUGEINT so the output column is BIGINT on both sides. */
-  val pageRankOracle: String = {
-    val iters = (1 to PrIters).map { k =>
-      s"""r$k AS (SELECT n.node,
-         |    CAST($PrBase + ($PrDamp * coalesce(s.c, 0)) // 100 AS BIGINT) AS r
+  /** DuckDB twin of [[dampedRanks]]: `iters` damped-sum rounds as an
+    * unrolled CTE chain (`r0 … rN`), teleport gated on `teleport` (a
+    * predicate over `node`), every step in BIGINT micro-units with `//`
+    * matching Spark's `div` on the all-positive domain. Sums are cast back
+    * from DuckDB's HUGEINT so the output column is BIGINT on both sides.
+    * Zero-rank nodes are dropped (only PPR has any: a global rank is at
+    * least the base mass). */
+  private def dampedRanksOracle(iters: Int, teleport: String, out: String): String = {
+    val rounds = (1 to iters).map { k =>
+      s"""r$k AS MATERIALIZED (SELECT n.node,
+         |    CAST(CASE WHEN n.tp THEN $PrBase ELSE 0 END
+         |      + ($PrDamp * coalesce(s.c, 0)) // 100 AS BIGINT) AS r
          |  FROM nodes n LEFT JOIN (
          |    SELECT ed.dst AS node, CAST(sum(p.r // ed.outdeg) AS BIGINT) AS c
          |    FROM ed JOIN r${k - 1} p ON ed.src = p.node GROUP BY ed.dst) s
          |  USING (node))""".stripMargin
     }.mkString(",\n")
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
+    s"""WITH $undCte,
        |deg AS (SELECT src, count(*) AS outdeg FROM und GROUP BY src),
-       |ed AS (SELECT u.src, u.dst, d.outdeg FROM und u JOIN deg d USING (src)),
-       |nodes AS (SELECT DISTINCT src AS node FROM und),
-       |r0 AS (SELECT node, CAST($PrScale AS BIGINT) AS r FROM nodes),
-       |$iters
-       |SELECT node, r AS rank_micros FROM r$PrIters""".stripMargin
+       |ed AS MATERIALIZED (SELECT u.src, u.dst, d.outdeg
+       |  FROM und u JOIN deg d USING (src)),
+       |nodes AS MATERIALIZED (SELECT node, $teleport AS tp
+       |  FROM (SELECT DISTINCT src AS node FROM und)),
+       |r0 AS (SELECT node, CAST(CASE WHEN tp THEN $PrScale ELSE 0 END AS BIGINT) AS r
+       |  FROM nodes),
+       |$rounds
+       |SELECT node, r AS $out FROM r$iters WHERE r > 0""".stripMargin
   }
+
+  /** DuckDB twin of [[pageRank]]. */
+  val pageRankOracle: String = dampedRanksOracle(PrIters, "TRUE", "rank_micros")
 
   // ------------------------------------------------------ triangle counting
   /** Per-node triangle counts over the part co-purchase graph (parts
@@ -268,11 +327,8 @@ object Graph {
     *
     * Output: (node, n_triangles) for every node in ≥ 1 triangle; counts
     * are exact so the brute-force oracle hash-matches. */
-  def triangleCounts(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    triangleCountsOf(s, Tables.lineitem(s, d)
-      .select($"l_orderkey".as("gk"), $"l_partkey".as("node")))
-  }
+  def triangleCounts(s: SparkSession, d: String): DataFrame =
+    triangleCountsOf(s, orderBaskets(s, d))
 
   /** [[triangleCounts]] over an arbitrary (gk, node) membership frame:
     * nodes sharing a group key become edges; triangles are counted on
@@ -321,7 +377,7 @@ object Graph {
     // edge (u,v) owns triangle {u,v,w} iff w is an out-neighbor of BOTH
     val adj = orientedCk.groupBy($"src".as("n"))
       .agg(sort_array(collect_list($"dst")).as("nbrs"))
-    // sorted-merge intersect (r12): both adjacency arrays are sorted
+    // sorted-merge intersect: both adjacency arrays are sorted
     // distinct by construction (sort_array over the distinct oriented edge
     // set), so the per-edge intersection is a two-pointer merge in codegen
     // — array_intersect built a hash set per row for the same answer
@@ -353,11 +409,8 @@ object Graph {
     * every column integer and DuckDB-replayable, so the gate hash-matches
     * the ESTIMATOR itself while GraphSpec bounds its error against the
     * exact count (the HLL-sketch discipline). */
-  def triangleCountApprox(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    triangleCountApproxOf(s, Tables.lineitem(s, d)
-      .select($"l_orderkey".as("gk"), $"l_partkey".as("node")))
-  }
+  def triangleCountApprox(s: SparkSession, d: String): DataFrame =
+    triangleCountApproxOf(s, orderBaskets(s, d))
 
   /** [[triangleCountApprox]] over an arbitrary (gk, node) membership frame. */
   private[graft] def triangleCountApproxOf(s: SparkSession, mem0: DataFrame): DataFrame = {
@@ -419,17 +472,14 @@ object Graph {
     * supports join back on 8-byte part keys (co-partitioned shuffle
     * joins — the support table is |parts|-sized and NOT broadcast by
     * design), and the order total is a 1-row scalar subquery. */
-  def basketRules(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    basketRulesOf(s, Tables.lineitem(s, d)
-      .select($"l_orderkey".as("gk"), $"l_partkey".as("node")))
-  }
+  def basketRules(s: SparkSession, d: String): DataFrame =
+    basketRulesOf(s, orderBaskets(s, d))
 
   /** Pathological-basket cap: a group (order/basket/page) with more than
     * this many distinct members is DROPPED before any pair expansion.
     * The co-occurrence projection is quadratic PER GROUP — one bot cart,
     * ETL-merged mega-order, or boilerplate hub with 3M members expands to
-    * ~10¹² pairs and DOSes the whole job (the round-8 skew rehearsal
+    * ~10¹² pairs and DOSes the whole job (the skew rehearsal
     * plants exactly this: 50 % of lineitems on ONE order). Every serious
     * basket miner caps transaction length for the same reason; 64 is far
     * above any organic basket on this schema (≤ 7) while turning the
@@ -460,7 +510,7 @@ object Graph {
     * the edge set BEFORE any downstream join. */
   private[graft] def supportPairs(s: SparkSession, mem0: DataFrame): DataFrame = {
     import s.implicits._
-    // one gather instead of the membership self-join (r11, measured
+    // one gather instead of the membership self-join (measured
     // 3.7 s → 2.4 s warm at sf0.1, identical output): the sorted distinct
     // member array per group IS the capped membership — the cap filters
     // on its size, and the ≤ C(cap,2) ordered pairs explode in-row
@@ -477,7 +527,7 @@ object Graph {
     * column `p`. The [[cappedMembership]] semantics (distinct members,
     * over-cap groups dropped) expressed without the self-join.
     *
-    * The gather is the CAPPED aggregate (`graft_capped_set`, r12): its
+    * The gather is the CAPPED aggregate (`graft_capped_set`): its
     * buffer never holds more than [[BasketCap]]+1 distinct members, so a
     * pathological mega-group (one basket with 10⁷ members at 100 TB) can
     * no longer balloon an aggregation buffer before the size filter drops
@@ -590,85 +640,78 @@ object Graph {
     * ([[Dedup.dedupClusters]]).
     *
     * Algorithm: synchronous HashMin label propagation (the Pregel CC
-    * baseline) — `lbl ← min(lbl, min over in-neighbors lbl)` per round.
-    * One map-side-combined shuffle per round (min-aggregate by dst) plus a
-    * join against the once-materialized symmetric edge list; lineage cut
-    * every third round (the [[pageRankOf]] idiom). HashMin converges in
-    * O(diameter) rounds; at 100 TB, graphs with large diameter switch to
-    * the star-contraction form ([[Dedup.connectedComponents]], O(log n)
-    * rounds) — both are shipped, and GraphSpec pins them equal. */
+    * baseline) — `lbl ← min(lbl, min over neighbors lbl)` per round, the
+    * [[minRelaxation]] loop with the label itself as the message. HashMin
+    * converges in O(diameter) rounds; at 100 TB, graphs with large
+    * diameter switch to the star-contraction form
+    * ([[Dedup.connectedComponents]], O(log n) rounds) — both are shipped,
+    * and GraphSpec pins them equal. */
   def components(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    componentsOf(s, supportPairs(s, Tables.lineitem(s, d)
-      .select($"l_orderkey".as("gk"), $"l_partkey".as("node")))
+    componentsOf(s, supportPairs(s, orderBaskets(s, d))
       .select($"a".as("u"), $"b".as("v")))
   }
 
-  /** [[components]] over an arbitrary canonical (u, v) edge frame — the
-    * same HashMin rounds at the RDD layer (fixpoint-plumbing note): each
-    * round is ONE map-side-combined min shuffle that receives both the
-    * neighbor messages and each node's own label as a SELF-MESSAGE, so
-    * `min(self, incoming)` carries the label forward with no per-round
-    * join of any kind. Bit-identical to the unrolled-CTE oracle. */
+  /** [[components]] over an arbitrary canonical (u, v) edge frame.
+    * Bit-identical to the unrolled-CTE oracle. */
   private[graft] def componentsOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val part = fixpointPartitioner(s)
-    val pairs = symPairs(e0, part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def minIn(lbl: RDD[(Long, Long)]): RDD[(Long, Long)] =
-      pairs.zipPartitions(lbl) { (eIt, lIt) =>
-        val lm = toMap(lIt)
-        eIt.map { case (u, v) => (v, lm.get(u)) }
-      }.reduceByKey(part, math.min(_: Long, _: Long))
-    var lbl = degOf(pairs, part).mapPartitions(
-      _.map { case (n, _) => (n, n) }, preservesPartitioning = true)
-    for (_ <- 1 to CcIters) {
-      // carry + relax in the ONE min shuffle: each node sends its own
-      // label to itself alongside the neighbor messages, so
-      // `min(self, incoming)` ≡ the old left-join +
-      // least(lbl, coalesce(mn, lbl)) with no per-round join
-      lbl = pairs.zipPartitions(lbl) { (eIt, lIt) =>
-        val lm = toMap(lIt)
-        eIt.map { case (u, v) => (v, lm.get(u)) } ++ entries(lm)
-      }
-        .reduceByKey(part, math.min(_: Long, _: Long))
-    }
+    val loop = new Loop(s)
+    val g = loop.place(distinctSymPairs(e0))
+    def hashMin(lbl: RDD[(Long, Long)], rounds: Int) =
+      minRelaxation(g, lbl, rounds, "components")(l => l)
+    val lbl = hashMin(g.init(n => n), CcIters)
     // Runtime fixpoint probe (the [[Dedup.connectedComponents]]
-    // non-convergence discipline): HashMin has converged iff no node still
-    // sees a neighbor label below its own — one extra min round must
-    // change NOTHING. A graph whose diameter exceeds [[CcIters]] would
-    // otherwise silently ship within-CcIters-hop labels as component ids;
-    // unconverged labels are wrong labels, so fail LOUDLY and point at the
-    // O(log n) star-contraction form, which has no diameter dependence.
-    // Cost: one more map-side-combined min shuffle + a bounded count.
-    val falling = minIn(lbl).join(lbl)
-      .values.filter { case (mn, l) => mn < l }.count()
+    // non-convergence discipline): HashMin has converged iff one extra
+    // round changes NOTHING. A graph whose diameter exceeds [[CcIters]]
+    // would otherwise silently ship within-CcIters-hop labels as component
+    // ids; unconverged labels are wrong labels, so fail LOUDLY and point at
+    // the O(log n) star-contraction form, which has no diameter dependence.
+    // Cost: one more min round + a narrow co-partitioned join and count.
+    val falling = hashMin(lbl, 1).join(lbl)
+      .values.filter { case (next, l) => next < l }.count()
     if (falling > 0)
       throw new IllegalStateException(
         s"components did not converge in $CcIters HashMin rounds " +
           s"($falling labels still falling — graph diameter exceeds the " +
           "round bound; use Dedup.connectedComponents, the O(log n) " +
           "star-contraction form, for large-diameter graphs)")
-    sealResult(lbl.toDF("node", "component"), pairs)
+    loop.seal(lbl.toDF("node", "component"))
   }
 
-  /** DuckDB twin of [[components]]: the same [[CcIters]] HashMin rounds as
-    * an unrolled CTE chain (`l0 … l12`), every step BIGINT min/least. */
-  lazy val componentsOracle: String = {
-    val iters = (1 to CcIters).map { k =>
-      s"""l$k AS MATERIALIZED (SELECT p.node, least(p.lbl, coalesce(m.mn, p.lbl)) AS lbl
-         |  FROM l${k - 1} p LEFT JOIN (
-         |    SELECT e.dst AS node, min(q.lbl) AS mn
-         |    FROM ed e JOIN l${k - 1} q ON e.src = q.node GROUP BY e.dst) m
-         |  USING (node))""".stripMargin
+  /** The min-relaxation loop of HashMin [[componentsOf]] and
+    * [[bfsLayersOf]]: `rounds` rounds of `x ← min(x, min over neighbors
+    * step(x_nbr))`. Each node's own value rides the same min shuffle as a
+    * self-message, so there is no per-round join. */
+  private def minRelaxation(g: Placed, x0: RDD[(Long, Long)], rounds: Int,
+      what: String, reachedOnly: Boolean = false)(
+      step: Long => Long): RDD[(Long, Long)] =
+    (1 to rounds).foldLeft(x0) { (x, _) =>
+      messages(g, x, what, self = true, reachedOnly = reachedOnly)((v, _) => step(v))
+        .reduceByKey(g.part, math.min(_: Long, _: Long))
+    }
+
+  /** DuckDB twin of [[minRelaxation]]: `rounds` unrolled MATERIALIZED
+    * rounds `x1 … xN` over `ed(src, dst)` from `x0(node, x)`, each the min
+    * of a node's own value and `step` (an expression over the neighbor's
+    * `p.x`); each round is referenced twice, carry and relax. */
+  private def minRelaxationOracle(rounds: Int, step: String): String =
+    (1 to rounds).map { k =>
+      s"""x$k AS MATERIALIZED (SELECT node, CAST(min(x) AS BIGINT) AS x FROM (
+         |    SELECT node, x FROM x${k - 1}
+         |    UNION ALL
+         |    SELECT ed.dst AS node, $step AS x
+         |    FROM ed JOIN x${k - 1} p ON ed.src = p.node) GROUP BY node)""".stripMargin
     }.mkString(",\n")
+
+  /** DuckDB twin of [[components]]: [[CcIters]] HashMin rounds over the
+    * symmetric support pairs, every node starting as its own label. */
+  lazy val componentsOracle: String =
     s"""WITH $supportPairsCtes,
        |ed AS MATERIALIZED (SELECT a AS src, b AS dst FROM pr UNION SELECT b, a FROM pr),
-       |nodes AS (SELECT DISTINCT src AS node FROM ed),
-       |l0 AS MATERIALIZED (SELECT node, node AS lbl FROM nodes),
-       |$iters
-       |SELECT node, lbl AS component FROM l$CcIters""".stripMargin
-  }
+       |x0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS x FROM ed),
+       |${minRelaxationOracle(CcIters, "p.x")}
+       |SELECT node, x AS component FROM x$CcIters""".stripMargin
 
   // ----------------------------------------------------------------- k-core
   /** Core order for [[kcore]]: the 3-core — the standard "dense enough to
@@ -696,8 +739,7 @@ object Graph {
     * count on any scale. */
   def kcore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    kcoreOf(s, supportPairs(s, Tables.lineitem(s, d)
-      .select($"l_orderkey".as("gk"), $"l_partkey".as("node")))
+    kcoreOf(s, supportPairs(s, orderBaskets(s, d))
       .select($"a".as("u"), $"b".as("v")))
   }
 
@@ -755,8 +797,7 @@ object Graph {
     * degree count, then a ≤ 2·64-row aggregate. */
   def degreeHistogram(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val raw = Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
+    val raw = partSupplierEdges(s, d)
     val und = raw.select($"src", $"dst")
       .union(raw.select($"dst".as("src"), $"src".as("dst")))
       .distinct()
@@ -775,10 +816,7 @@ object Graph {
   /** DuckDB twin of [[degreeHistogram]] — same symmetric distinct edge
     * set, bit-length bucket, shift-built ranges. */
   val degreeHistogramOracle: String =
-    """WITH raw AS (SELECT 2 * l_partkey AS src, 2 * l_suppkey + 1 AS dst
-      |  FROM lineitem),
-      |und AS (SELECT DISTINCT src, dst FROM (
-      |  SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw)),
+    s"""WITH $undCte,
       |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
       |  FROM und GROUP BY src),
       |b AS (SELECT CASE WHEN src % 2 = 0 THEN 'part' ELSE 'supplier' END AS side,
@@ -803,51 +841,40 @@ object Graph {
     * (vanilla LPA breaks ties randomly and is not a function of its
     * input; a correctness-gated engine cannot ship that).
     *
-    * Scale shape: one map-side-combined count shuffle per round keyed on
-    * (node, label) + one argmax aggregate keyed on node, against the
-    * once-checkpointed symmetric edge list — O(diameter)-free: the round
-    * count is FIXED, communities stabilize in a handful of rounds on
+    * Scale shape: per round, the kernel's round with the neighbor's label
+    * as the message, then two map-side-combined shuffles with flat Long
+    * values — a count keyed on (node, label) and the plurality reduce
+    * keyed on node (no window, no sort). O(diameter)-free: the round count
+    * is FIXED, and communities stabilize in a handful of rounds on
     * small-world graphs (Raghavan's observation, independent of |V|).
-    * The argmax is min(struct(-count, label)) — no window, no sort, a
-    * two-level aggregate a 1000-executor run combines map-side. Lineage
-    * cut every 2nd round (the [[pageRankOf]] idiom).
     *
     * Output: (node, community) for every node, community = converged
     * plurality label. */
-  def labelPropagation(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    labelPropagationOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+  def labelPropagation(s: SparkSession, d: String): DataFrame =
+    labelPropagationOf(s, partSupplierEdges(s, d))
 
   /** [[labelPropagation]] over an arbitrary directed edge frame
     * (src, dst): symmetrizes, dedups, then runs [[LpaIters]] plurality
     * rounds. */
   private[graft] def labelPropagationOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val part = fixpointPartitioner(s)
-    val pairs = symPairs(e0, part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var lab = degOf(pairs, part).mapPartitions(
-      _.map { case (n, _) => (n, n) }, preservesPartitioning = true)
+    val loop = new Loop(s)
+    val g = loop.place(distinctSymPairs(e0))
+    var lab = g.init(n => n)
     for (_ <- 1 to LpaIters) {
-      // two map-side-combined shuffles per round, both with flat Long
-      // values (a per-key label→count map combiner was measured 2×
-      // slower here — per-partition-per-key boxed HashMaps dominate the
-      // serializer): count neighbor labels by (node, label), then the
-      // deterministic plurality — max count, tie toward the smallest
-      // label, the old (−cnt, lab) struct-min — reduced by node
-      lab = pairs.zipPartitions(lab) { (eIt, lIt) =>
-        val lm = toMap(lIt)
-        eIt.map { case (u, v) => ((v, lm.get(u): Long), 1L) }
-      }
+      // count neighbor labels by (node, label), then the deterministic
+      // plurality — max count, tie toward the smallest label — reduced by
+      // node (a per-key label→count map combiner was measured 2× slower:
+      // per-partition-per-key boxed HashMaps dominate the serializer)
+      lab = messages(g, lab, "label propagation")((l, _) => l)
+        .map((_, 1L))
         .reduceByKey(_ + _)
         .map { case ((n, l), c) => (n, (l, c)) }
-        .reduceByKey(part, (a, b) =>
+        .reduceByKey(g.part, (a, b) =>
           if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b)
         .mapValues(_._1)
     }
-    sealResult(lab.toDF("node", "community"), pairs)
+    loop.seal(lab.toDF("node", "community"))
   }
 
   /** In-JVM reference of the same deterministic LPA, for specs. */
@@ -865,12 +892,13 @@ object Graph {
     lab
   }
 
-  /** DuckDB twin of [[labelPropagation]] — [[LpaIters]] unrolled
-    * MATERIALIZED rounds (each round is referenced by the next round's
-    * count AND carried forward; un-materialized, DuckDB 1.0 re-inlines
-    * the whole history per reference), plurality by
-    * row_number ORDER BY cnt DESC, lab ASC. */
-  val labelPropagationOracle: String = {
+  /** The LPA chain shared by [[labelPropagationOracle]] and
+    * [[modularityOracle]]: [[LpaIters]] unrolled MATERIALIZED rounds
+    * `l1 … lN` (each round is referenced by the next round's count AND
+    * carried forward; un-materialized, DuckDB 1.0 re-inlines the whole
+    * history per reference), plurality by row_number ORDER BY cnt DESC,
+    * lab ASC. */
+  private val lpaCtes: String = {
     val iters = (1 to LpaIters).map { k =>
       s"""l$k AS MATERIALIZED (SELECT node, lab FROM (
          |    SELECT c.node, c.lab,
@@ -880,14 +908,17 @@ object Graph {
          |          FROM ed JOIN l${k - 1} p ON ed.src = p.node
          |          GROUP BY ed.dst, p.lab) c) WHERE rk = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
+    s"""$undCte,
        |ed AS MATERIALIZED (SELECT src, dst FROM und),
        |nodes AS (SELECT DISTINCT src AS node FROM und),
        |l0 AS MATERIALIZED (SELECT node, node AS lab FROM nodes),
-       |$iters
-       |SELECT node, lab AS community FROM l$LpaIters""".stripMargin
+       |$iters""".stripMargin
   }
+
+  /** DuckDB twin of [[labelPropagation]]. */
+  val labelPropagationOracle: String =
+    s"""WITH $lpaCtes
+       |SELECT node, lab AS community FROM l$LpaIters""".stripMargin
 
   // --------------------------------------------- personalized PageRank (PPR)
   /** PPR iteration count — shorter horizon than global PageRank: the
@@ -900,77 +931,29 @@ object Graph {
   /** Personalized PageRank from a seed set (Jeh & Widom 2003; the
     * related-items / trust-propagation primitive): identical damped-sum
     * iteration to [[pageRank]] except the teleport mass (1−d)·scale
-    * lands ONLY on seed nodes — rank measures proximity to the seed set
-    * instead of global centrality. Integer micro-units end to end
-    * ([[PrScale]]/[[PrDamp]]), so the fixed-point iterate is bit-exact
-    * on any partitioning and the oracle is an unrolled CTE chain.
+    * lands ONLY on seed nodes ([[isSeed]]) — rank measures proximity to
+    * the seed set instead of global centrality. Integer micro-units end
+    * to end ([[PrScale]]/[[PrDamp]]), so the fixed-point iterate is
+    * bit-exact on any partitioning and the oracle is an unrolled CTE
+    * chain.
     *
-    * Scale shape: identical to [[pageRankOf]] — the seed indicator rides
-    * the once-checkpointed node frame; per round one join against the
-    * static edge list + one map-side-combined sum shuffle. Output keeps
-    * only nodes with non-zero rank (the reached set), so sink emission
-    * is proportional to the seed neighborhood, not |V|. */
-  def personalizedPageRank(s: SparkSession, d: String): DataFrame = {
+    * Scale shape: the [[dampedRanks]] loop, one map-side-combined sum
+    * shuffle per round. Output keeps only nodes with non-zero rank (the
+    * reached set), so sink emission is proportional to the seed
+    * neighborhood, not |V|. */
+  def personalizedPageRank(s: SparkSession, d: String): DataFrame =
+    personalizedPageRankOf(s, partSupplierEdges(s, d))
+
+  /** [[personalizedPageRank]] over an arbitrary directed edge frame
+    * (src, dst), seeded by [[isSeed]]. */
+  private[graft] def personalizedPageRankOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val e0 = Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-    val part = fixpointPartitioner(s)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pairs = symPairs(e0, part).persist(lvl)
-    val deg = degOf(pairs, part).persist(lvl)
-    // the seed indicator is pure node-id arithmetic — no seed frame to
-    // carry through the rounds (even node ⇒ integer halving is exact,
-    // matching both the old DOUBLE division and the oracle's `//`).
-    // Constants copied to locals only for closure-capture HYGIENE — object
-    // Graph's members are static MODULE$ accesses that capture nothing
-    // (pageRankOf references PrScale directly for the same reason), so
-    // either spelling serializes fine; locals just make that obvious.
-    val (seedMod, scale0, base0, damp0) = (PprSeedMod, PrScale, PrBase, PrDamp)
-    val seed = (node: Long) => node % 2 == 0 && (node / 2) % seedMod == 0
-    var ranks = deg.mapPartitions(
-      _.map { case (n, _) => (n, if (seed(n)) scale0 else 0L) },
-      preservesPartitioning = true)
-    for (_ <- 1 to PprIters) {
-      // symmetric graph ⇒ the contribution sum covers every node, and
-      // the teleport mass is recomputed from the key — one shuffle/round
-      ranks = pairs.zipPartitions(deg, ranks) { (eIt, dIt, rIt) =>
-        val dm = toMap(dIt); val rm = toMap(rIt)
-        eIt.map { case (u, v) => (v, rm.get(u) / dm.get(u)) }
-      }
-        .reduceByKey(part, _ + _)
-        .mapPartitions(_.map { case (n, c) =>
-          (n, (if (seed(n)) base0 else 0L) + damp0 * c / 100)
-        }, preservesPartitioning = true) // key untouched: stay co-partitioned
-    }
-    sealResult(
-      ranks.filter(_._2 > 0).toDF("node", "ppr_micros"), pairs, deg)
+    dampedRanks(s, e0, PprIters, isSeed)(_.filter(_._2 > 0).toDF("node", "ppr_micros"))
   }
 
-  /** DuckDB twin of [[personalizedPageRank]] — the [[pageRankOracle]]
-    * chain with the teleport mass gated on the seed indicator. */
-  val personalizedPageRankOracle: String = {
-    val iters = (1 to PprIters).map { k =>
-      s"""r$k AS MATERIALIZED (SELECT n.node,
-         |    CAST(CASE WHEN n.seed THEN $PrBase ELSE 0 END
-         |      + ($PrDamp * coalesce(s.c, 0)) // 100 AS BIGINT) AS r
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT ed.dst AS node, CAST(sum(p.r // ed.outdeg) AS BIGINT) AS c
-         |    FROM ed JOIN r${k - 1} p ON ed.src = p.node GROUP BY ed.dst) s
-         |  USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
-       |deg AS (SELECT src, count(*) AS outdeg FROM und GROUP BY src),
-       |ed AS MATERIALIZED (SELECT u.src, u.dst, d.outdeg
-       |  FROM und u JOIN deg d USING (src)),
-       |nodes AS MATERIALIZED (SELECT node,
-       |    node % 2 = 0 AND (node // 2) % $PprSeedMod = 0 AS seed
-       |  FROM (SELECT DISTINCT src AS node FROM und)),
-       |r0 AS (SELECT node, CAST(CASE WHEN seed THEN $PrScale ELSE 0 END AS BIGINT) AS r
-       |  FROM nodes),
-       |$iters
-       |SELECT node, r AS ppr_micros FROM r$PprIters WHERE r > 0""".stripMargin
-  }
+  /** DuckDB twin of [[personalizedPageRank]]. */
+  val personalizedPageRankOracle: String =
+    dampedRanksOracle(PprIters, seedSql("node"), "ppr_micros")
 
   // ---------------------------------------------- multi-source BFS layers
   /** BFS hop bound — the [[CcIters]] bounded-horizon contract: output
@@ -981,73 +964,36 @@ object Graph {
   val BfsMaxHops = 6
 
   /** Multi-source BFS over the part–supplier graph: hop distance from
-    * the [[PprSeedMod]] seed set ([[personalizedPageRank]]'s seeds, so
-    * the two operators describe the same neighborhoods — one by mass,
-    * one by hops). Iterative min-relaxation: dist ← min(dist, min over
-    * in-neighbors dist+1), [[BfsMaxHops]] rounds.
+    * the [[isSeed]] seed set ([[personalizedPageRank]]'s seeds, so the two
+    * operators describe the same neighborhoods — one by mass, one by
+    * hops). Iterative min-relaxation: dist ← min(dist, min over neighbors
+    * dist+1), [[BfsMaxHops]] rounds.
     *
-    * Scale shape: per round one join of the static edge list against
-    * the CURRENT distance frame + one map-side-combined min shuffle —
-    * the HashMin discipline ([[componentsOf]]); the distance frame only
-    * ever holds REACHED nodes, so early rounds shuffle frontier-sized
-    * frames, not |V|. Lineage cut every 2nd round. */
-  def bfsLayers(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    bfsLayersOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+    * Scale shape: the [[minRelaxation]] loop, one map-side-combined min
+    * shuffle per round; the distance state only ever holds REACHED nodes,
+    * so early rounds send and shuffle frontier-sized message sets, not
+    * |E|. */
+  def bfsLayers(s: SparkSession, d: String): DataFrame =
+    bfsLayersOf(s, partSupplierEdges(s, d))
 
-  /** [[bfsLayers]] over an arbitrary directed edge frame (src, dst) —
-    * the same min-relaxation rounds at the RDD layer (fixpoint-plumbing
-    * note): the distance set only ever holds REACHED nodes, and each
-    * round is ONE map-side-combined min shuffle that carries both the
-    * dist+1 neighbor relaxations and each reached node's own distance as
-    * a self-message — there is no per-round join. */
+  /** [[bfsLayers]] over an arbitrary directed edge frame (src, dst). */
   private[graft] def bfsLayersOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val part = fixpointPartitioner(s)
-    val pairs = symPairs(e0, part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = degOf(pairs, part)
-      .mapPartitions(_.collect {
-        case (n, _) if n % 2 == 0 && (n / 2) % PprSeedMod == 0 => (n, 0L)
-      }, preservesPartitioning = true)
-    for (_ <- 1 to BfsMaxHops) {
-      // carry + relax in the ONE min shuffle (the componentsOf
-      // self-message idiom): each reached node re-sends its own distance
-      // to itself alongside the dist+1 neighbor messages; the distance
-      // map holds REACHED nodes only, so early rounds stay frontier-sized
-      dist = pairs.zipPartitions(dist) { (eIt, dIt) =>
-        val dm = toMap(dIt)
-        eIt.flatMap { case (u, v) =>
-          val dd = dm.getOrDefault(u, -1L) // distances are >= 0
-          if (dd < 0L) Iterator.empty else Iterator.single((v, dd + 1L))
-        } ++ entries(dm)
-      }
-        .reduceByKey(part, math.min(_: Long, _: Long))
-    }
-    sealResult(dist.toDF("node", "hops"), pairs)
+    val loop = new Loop(s)
+    val g = loop.place(distinctSymPairs(e0))
+    val seeds = g.init(_ => 0L).filter { case (n, _) => isSeed(n) }
+    loop.seal(minRelaxation(g, seeds, BfsMaxHops, "bfs layers", reachedOnly = true)(_ + 1)
+      .toDF("node", "hops"))
   }
 
-  /** DuckDB twin of [[bfsLayers]] — [[BfsMaxHops]] unrolled MATERIALIZED
-    * min-relaxation rounds (each round referenced twice: carry + relax). */
-  val bfsLayersOracle: String = {
-    val iters = (1 to BfsMaxHops).map { k =>
-      s"""d$k AS MATERIALIZED (SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-         |    SELECT node, d FROM d${k - 1}
-         |    UNION ALL
-         |    SELECT ed.dst AS node, p.d + 1 AS d
-         |    FROM ed JOIN d${k - 1} p ON ed.src = p.node) GROUP BY node)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
+  /** DuckDB twin of [[bfsLayers]]. */
+  val bfsLayersOracle: String =
+    s"""WITH $undCte,
        |ed AS MATERIALIZED (SELECT src, dst FROM und),
-       |d0 AS (SELECT src AS node, CAST(0 AS BIGINT) AS d
-       |  FROM (SELECT DISTINCT src FROM und)
-       |  WHERE src % 2 = 0 AND (src // 2) % $PprSeedMod = 0),
-       |$iters
-       |SELECT node, d AS hops FROM d$BfsMaxHops""".stripMargin
-  }
+       |x0 AS (SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS x FROM und
+       |  WHERE ${seedSql("src")}),
+       |${minRelaxationOracle(BfsMaxHops, "p.x + 1")}
+       |SELECT node, x AS hops FROM x$BfsMaxHops""".stripMargin
 
   // ------------------------------------------------ HITS hubs & authorities
   /** HITS iteration count — like [[LpaIters]], a fixed horizon so the
@@ -1073,56 +1019,38 @@ object Graph {
     * deployment halves the scale constant (documented, not silently
     * saturated).
     *
-    * Scale shape: per half-step one map-side-combined sum shuffle over
-    * the once-checkpointed edge list plus one single-row max aggregate
-    * broadcast back (the scalar-subquery crossJoin shape); lineage cut
-    * every second round. */
-  def hits(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    hitsOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+    * Scale shape: the directed edges placed twice — by src for the
+    * hub→authority half-step, by dst for the way back — and per half-step
+    * the kernel's round, one map-side-combined sum shuffle, and one tiny
+    * `max` action for the normalization constant. */
+  def hits(s: SparkSession, d: String): DataFrame =
+    hitsOf(s, partSupplierEdges(s, d))
 
-  /** [[hits]] over an arbitrary directed edge frame (src, dst) — the
-    * same integer half-steps at the RDD layer (fixpoint-plumbing note):
-    * the flat edge list placed once in each direction and persisted, one
-    * map-side-combined sum shuffle per half-step, and the
-    * max-normalization constant fetched with one tiny `max` action in
-    * place of the old scalar-subquery crossJoin (stage reuse makes the
-    * re-read of the half-step's shuffle output free). */
+  /** [[hits]] over an arbitrary directed edge frame (src, dst). */
   private[graft] def hitsOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val part = fixpointPartitioner(s)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ed = e0.select($"src", $"dst").distinct().as[(Long, Long)].rdd
-      .persist(lvl)
-    // flat co-partitioned edges both ways — no per-node gather (the r11
-    // groupByKey arrays were max-degree-proportional single-task memory)
-    val edOut = ed.partitionBy(part).persist(lvl)           // by src
-    val edIn = ed.map(_.swap).partitionBy(part).persist(lvl) // by dst
-    def halfStep(edges: RDD[(Long, Long)],
-        score: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      // raw is consumed twice (the max action, then the normalize) —
-      // both reads hit the same reduceByKey shuffle output, so stage
-      // reuse makes the second read a shuffle-file replay, not a
-      // recomputation of the half-step
-      val raw = edges.zipPartitions(score) { (eIt, sIt) =>
-        val sm = toMap(sIt)
-        eIt.map { case (u, t) => (t, sm.get(u): Long) }
-      }.reduceByKey(part, _ + _)
+    val loop = new Loop(s)
+    val ed = loop.hold(e0.select($"src", $"dst").distinct().as[(Long, Long)].rdd)
+    val bySrc = loop.place(ed)
+    val byDst = loop.place(ed.map(_.swap))
+    def halfStep(g: Placed, score: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      // raw is consumed twice (the max action, then the normalize) — both
+      // reads hit the same reduceByKey shuffle output, so stage reuse
+      // makes the second read a shuffle-file replay, not a recomputation
+      val raw = messages(g, score, "hits")((x, _) => x).reduceByKey(g.part, _ + _)
       val mx = raw.values.max()
       raw.mapValues(v => v * PrScale / mx)
     }
-    var hub = degOf(edOut, part).mapValues(_ => PrScale)
+    var hub = bySrc.init(_ => PrScale)
     var auth: RDD[(Long, Long)] = null
     for (_ <- 1 to HitsIters) {
-      auth = halfStep(edOut, hub) // keyed by dst
-      hub = halfStep(edIn, auth)  // keyed by src
+      auth = halfStep(bySrc, hub) // keyed by dst
+      hub = halfStep(byDst, auth) // keyed by src
     }
     val out = hub.map { case (n, sc) => (n, "hub", sc) }
       .union(auth.map { case (n, sc) => (n, "authority", sc) })
       .toDF("node", "kind", "score_micros")
-    sealResult(out, ed, edOut, edIn)
+    loop.seal(out)
   }
 
   /** In-JVM reference of the same integer HITS, for specs. */
@@ -1202,60 +1130,57 @@ object Graph {
     * |seeds|·[[WalksPerSeed]]-row frontier's per-partition map with the
     * rank equality as the residual predicate — frontier-sized shuffles,
     * [[WalkSteps]] rounds, no driver traffic. */
-  def randomWalks(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    randomWalksOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+  def randomWalks(s: SparkSession, d: String): DataFrame =
+    randomWalksOf(s, partSupplierEdges(s, d))
 
   /** [[randomWalks]] over an arbitrary directed edge frame (src, dst):
     * symmetrizes, ranks each node's neighbors, then walks from the
-    * [[PprSeedMod]] seed catalog. */
+    * [[isSeed]] seed catalog. */
   private[graft] def randomWalksOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val part = fixpointPartitioner(s)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val loop = new Loop(s)
+    val part = loop.part
     // RANK-INDEXED flat adjacency (src, (dst, rnk)) — rnk = position of
     // dst among src's ascending neighbors, exactly the oracle's
-    // row_number()-1. Built by ONE sorted shuffle placed by src (spills
-    // through the shuffle sorter, never a per-node array: the r11 sorted
-    // adjacency array made a celebrity hub one giant allocation) and a
-    // streaming per-run counter.
-    val bySrc = new org.apache.spark.Partitioner {
+    // row_number()-1. Built by ONE sorted shuffle placed by src (it spills
+    // through the shuffle sorter, never a per-node array) and a streaming
+    // per-run counter. bySrc places each (src, dst) key where `part`
+    // places src, so the Long-keyed rows it yields are declared under
+    // `part` itself.
+    val bySrc = new Partitioner {
       override def numPartitions: Int = part.numPartitions
       override def getPartition(key: Any): Int =
         part.getPartition(key.asInstanceOf[(Long, Long)]._1)
     }
-    val ranked = distinctSymPairs(e0)
+    val ranked = loop.hold(new PlacedBy(distinctSymPairs(e0)
       .map(p => (p, ()))
       .repartitionAndSortWithinPartitions(bySrc)
-      .mapPartitions({ it =>
+      .mapPartitions { it =>
         var curSrc = Long.MinValue
         var rnk = -1
         it.map { case ((u, v), _) =>
           if (u != curSrc) { curSrc = u; rnk = 0 } else rnk += 1
           (u, (v, rnk))
         }
-      }, preservesPartitioning = true)
-      .persist(lvl)
+      }, part))
     // degrees per node: last rank of each run + 1, streamed — one row per
-    // node, placed by the same src hash so it zips with ranked
-    val deg = ranked.mapPartitions({ it =>
-      new Iterator[(Long, Int)] {
+    // node, placed like ranked so it zips with it
+    val deg = loop.hold(ranked.mapPartitions({ it =>
+      new Iterator[(Long, Long)] {
         private val base = it.buffered
         override def hasNext: Boolean = base.hasNext
-        override def next(): (Long, Int) = {
+        override def next(): (Long, Long) = {
           val (u, (_, r0)) = base.next()
           var last = r0
           while (base.hasNext && base.head._1 == u) last = base.next()._2._2
-          (u, last + 1)
+          (u, last + 1L)
         }
       }
-    }, preservesPartitioning = true).persist(lvl)
+    }, preservesPartitioning = true))
     // frontier keyed by current node, placed like ranked; each step
     // shuffles only the |seeds|·WalksPerSeed-row frontier
     var frontier = deg.mapPartitions(_.collect {
-      case (n, _) if n % 2 == 0 && (n / 2) % PprSeedMod == 0 =>
+      case (n, _) if isSeed(n) =>
         Iterator.range(0, WalksPerSeed)
           .map(w => (n, n * WalksPerSeed + w)).toSeq
     }.flatten, preservesPartitioning = true)
@@ -1269,11 +1194,10 @@ object Graph {
       // `walk:<id>:<step>:<cur>`, first 8 hex chars parsed base-16
       // (always < 2³², so non-negative). The digest instance and each
       // walker's drawn TARGET RANK are computed once per partition per
-      // step (not per edge, not per row — the r11 shape allocated a
-      // MessageDigest per frontier row); the edge stream then only
-      // compares its running rank against the precomputed target.
+      // step, not per edge or per row; the edge stream then only compares
+      // its running rank against the precomputed target.
       frontier = ranked.zipPartitions(deg, frontier) { (eIt, dIt, fIt) =>
-        val dm = toMap(dIt)
+        val dm = stateMap(dIt, "random walks")
         val md = java.security.MessageDigest.getInstance("MD5")
         // cur -> walkers at cur as (walkId, targetRank) — frontier-sized
         val fm = new java.util.HashMap[Long, java.util.ArrayList[(Long, Int)]]()
@@ -1282,7 +1206,7 @@ object Graph {
           val hex = md.digest(s"walk:$walkId:$step:$cur"
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))
             .take(4).map(b => f"$b%02x").mkString
-          val target = (java.lang.Long.parseLong(hex, 16) % dm.get(cur)).toInt
+          val target = (java.lang.Long.parseLong(hex, 16) % dm(cur)).toInt
           var l = fm.get(cur)
           if (l == null) { l = new java.util.ArrayList[(Long, Int)](); fm.put(cur, l) }
           l.add((walkId, target))
@@ -1311,7 +1235,7 @@ object Graph {
       visited = visited.union(
         frontier.map { case (cur, walkId) => (walkId, k.toLong, cur) })
     }
-    sealResult(visited.toDF("walk_id", "step", "node"), ranked, deg)
+    loop.seal(visited.toDF("walk_id", "step", "node"))
   }
 
   /** DuckDB twin of [[randomWalks]] — ranked adjacency via the same
@@ -1328,14 +1252,12 @@ object Graph {
     val outs = (1 to WalkSteps).map { k =>
       s"SELECT walk_id, CAST($k AS BIGINT) AS step, cur AS node FROM w$k"
     }.mkString("\nUNION ALL\n")
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
+    s"""WITH $undCte,
        |adj AS MATERIALIZED (SELECT src, dst,
        |    row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS rnk,
        |    count(*) OVER (PARTITION BY src) AS deg
        |  FROM und),
-       |seeds AS (SELECT DISTINCT src AS node FROM und
-       |  WHERE src % 2 = 0 AND (src // 2) % $PprSeedMod = 0),
+       |seeds AS (SELECT DISTINCT src AS node FROM und WHERE ${seedSql("src")}),
        |w0 AS MATERIALIZED (SELECT node * $WalksPerSeed + w AS walk_id,
        |    node AS cur
        |  FROM seeds, (SELECT unnest(range($WalksPerSeed)) AS w)),
@@ -1378,11 +1300,8 @@ object Graph {
     * capped wedge self-join (per-center ≤ cap² pair rows, map-side
     * expanded), one (a, b) count aggregate, two broadcast-sized degree
     * joins. No global window, no driver traffic. */
-  def jaccardNeighbors(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    jaccardNeighborsOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+  def jaccardNeighbors(s: SparkSession, d: String): DataFrame =
+    jaccardNeighborsOf(s, partSupplierEdges(s, d))
 
   /** [[jaccardNeighbors]] over an arbitrary directed edge frame.
     *
@@ -1395,15 +1314,7 @@ object Graph {
     * the cached edges outlive their run. */
   private[graft] def jaccardNeighborsOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    // persist (compressed columnar cache), NOT localCheckpoint: the edge
-    // list is reused by the degree aggregate, the wedge expansion, and
-    // two denominator joins, but a checkpoint pins it as DESERIALIZED
-    // rows (~100 B/row — 3.6 GB of an 8 GiB heap at sf3, the measured
-    // OOM); the columnar cache holds the same 36 M edges in ~2 longs'
-    // worth of compressed pages and spills cleanly
-    val und = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().persist()
+    val und = undirected(e0)
     val deg = und.groupBy($"src".as("n")).agg(count(lit(1)).as("deg"))
     val small = deg.filter($"deg" <= JaccCenterCap).select($"n".as("c"))
     val capped = und.join(small, und("src") === small("c"))
@@ -1441,26 +1352,14 @@ object Graph {
     * Scale shape: the LPA rounds dominate ([[labelPropagationOf]]);
     * modularity itself is two label joins against the edge list, one
     * count aggregate per community, one broadcast single-row m. */
-  def modularity(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    modularityOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+  def modularity(s: SparkSession, d: String): DataFrame =
+    modularityOf(s, partSupplierEdges(s, d))
 
   /** [[modularity]] over an arbitrary directed edge frame (src, dst). */
   private[graft] def modularityOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    // persist, NOT localCheckpoint: the undirected edge list is FAN-OUT
-    // REUSE (m2 aggregate + degree aggregate + the internal-edge filter),
-    // exactly the [[jaccardNeighborsOf]] idiom — a checkpoint pins it as
-    // deserialized rows (the measured sf3 OOM class, SCALE_r10), where
-    // the columnar cache compresses and spills cleanly
-    val und = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().persist()
-    // lab IS a localCheckpoint: LPA's output lineage is LpaIters rounds
-    // deep (loop-lineage-cut, not mere reuse) and only |nodes| rows wide
-    val lab = labelPropagationOf(s, e0).localCheckpoint()
+    val und = undirected(e0) // m2, degrees and the internal-edge filter
+    val lab = labelPropagationOf(s, e0)
     val m2 = und.agg(count(lit(1)).as("m2")) // = 2m (both directions)
     val deg = und.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
     val byComm = lab.join(deg, "node")
@@ -1486,22 +1385,8 @@ object Graph {
   /** DuckDB twin of [[modularity]] — the [[labelPropagationOracle]]
     * chain extended with the same integer-snapped Q arithmetic
     * (HUGEINT squares mirror the DECIMAL(38,0) side). */
-  val modularityOracle: String = {
-    val iters = (1 to LpaIters).map { k =>
-      s"""l$k AS MATERIALIZED (SELECT node, lab FROM (
-         |    SELECT c.node, c.lab,
-         |      row_number() OVER (PARTITION BY c.node
-         |        ORDER BY c.cnt DESC, c.lab ASC) AS rk
-         |    FROM (SELECT ed.dst AS node, p.lab, count(*) AS cnt
-         |          FROM ed JOIN l${k - 1} p ON ed.src = p.node
-         |          GROUP BY ed.dst, p.lab) c) WHERE rk = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS MATERIALIZED (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
-       |ed AS MATERIALIZED (SELECT src, dst FROM und),
-       |nodes AS (SELECT DISTINCT src AS node FROM und),
-       |l0 AS MATERIALIZED (SELECT node, node AS lab FROM nodes),
-       |$iters,
+  val modularityOracle: String =
+    s"""WITH $lpaCtes,
        |lab AS MATERIALIZED (SELECT node, lab AS community FROM l$LpaIters),
        |m2 AS (SELECT CAST(count(*) AS BIGINT) AS m2 FROM und),
        |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
@@ -1519,7 +1404,6 @@ object Graph {
        |    - (CAST(c.d_sum AS HUGEINT) * c.d_sum * 1000000)
        |      // (CAST(m.m2 AS HUGEINT) * m.m2) AS BIGINT) AS q_contrib_micros
        |FROM bycomm c LEFT JOIN internal i USING (community), m2 m""".stripMargin
-  }
 
   // ---------------------------------------- Adamic–Adar link prediction
   /** Adamic–Adar scores over the same capped wedge candidates as
@@ -1545,19 +1429,13 @@ object Graph {
     * Scale shape: identical to [[jaccardNeighbors]] — the capped wedge
     * expansion with the center's full degree carried on each pair row,
     * then one map-side-combined (a, b) sum. */
-  def adamicAdar(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    adamicAdarOf(s, Tables.lineitem(s, d)
-      .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst")))
-  }
+  def adamicAdar(s: SparkSession, d: String): DataFrame =
+    adamicAdarOf(s, partSupplierEdges(s, d))
 
   /** [[adamicAdar]] over an arbitrary directed edge frame. */
   private[graft] def adamicAdarOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    // persist, not localCheckpoint — the jaccardNeighborsOf memory note
-    val und = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct().persist()
+    val und = undirected(e0)
     val deg = und.groupBy($"src".as("n")).agg(count(lit(1)).as("deg"))
     val capped = und.join(deg.filter($"deg" <= JaccCenterCap)
         .select($"n".as("c"), $"deg".as("cdeg")), und("src") === col("c"))
@@ -1575,8 +1453,7 @@ object Graph {
   /** DuckDB twin of [[adamicAdar]] — same capped wedges, same per-term
     * micro snap before the integer sum. */
   val adamicAdarOracle: String =
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
+    s"""WITH $undCte,
        |deg AS MATERIALIZED (SELECT src AS n, CAST(count(*) AS BIGINT) AS deg
        |  FROM und GROUP BY src),
        |capped AS MATERIALIZED (SELECT u.src AS c, d.deg AS cdeg, u.dst AS nb
@@ -1590,8 +1467,7 @@ object Graph {
   /** DuckDB twin of [[jaccardNeighbors]] — same capped wedge expansion,
     * full-degree denominators, integer-micro division. */
   val jaccardNeighborsOracle: String =
-    s"""WITH li AS (SELECT 2 * l_partkey AS p, 2 * l_suppkey + 1 AS s FROM lineitem),
-       |und AS (SELECT p AS src, s AS dst FROM li UNION SELECT s, p FROM li),
+    s"""WITH $undCte,
        |deg AS MATERIALIZED (SELECT src AS n, CAST(count(*) AS BIGINT) AS deg
        |  FROM und GROUP BY src),
        |capped AS MATERIALIZED (SELECT u.src AS c, u.dst AS nb

@@ -307,8 +307,7 @@ object TextOps {
     * (≤ |vocab|·maxlen pair rows, symbol count shrinks monotonically), a
     * TakeOrderedAndProject argmax whose single row is the ONLY driver
     * traffic (the [[bpeApply]] constant-traffic class: K rows total),
-    * and one map-only rewrite; lineage cut per round
-    * ([[graft.operators.Graph.pageRankOf]] idiom). The rewrite uses the
+    * and one map-only rewrite; lineage cut per round. The rewrite uses the
     * same delimiter-framed scan-left `replace` semantics as
     * [[bpeApply]], so JVM and DuckDB agree bit-for-bit. */
   def bpeTrain(s: SparkSession, d: String): DataFrame =

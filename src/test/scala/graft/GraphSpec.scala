@@ -263,6 +263,41 @@ class GraphSpec extends SparkTestBase {
     assert(again === out)
   }
 
+  test("personalized pagerank equals the in-JVM seeded reference on a hand-built graph") {
+    // seeds 0 and 100 (even, half ≡ 0 mod PprSeedMod): a star with a tail
+    // around 0, a path from 100, and a seedless path that gets no mass
+    val edges = Seq((0L, 1L), (0L, 3L), (0L, 5L), (5L, 7L),
+      (100L, 102L), (102L, 104L), (104L, 106L), (11L, 13L), (13L, 15L))
+    val seeds = edges.flatMap { case (a, b) => Seq(a, b) }.filter(Graph.isSeed).toSet
+    assert(seeds === Set(0L, 100L))
+    val got = Graph.personalizedPageRankOf(spark, edges.toDF("src", "dst"))
+      .as[(Long, Long)].collect().toMap
+    assert(got === Graph.pageRankLocal(edges, Some(seeds)))
+    // the seedless component is omitted; each seed out-ranks its neighbors
+    assert(got.keySet === Set(0L, 1L, 3L, 5L, 7L, 100L, 102L, 104L, 106L))
+    assert(Seq(1L, 3L, 5L).forall(n => got(0L) > got(n)))
+    assert(got(100L) > got(102L))
+  }
+
+  test("fixpoint kernel: a state missing an edge source fails loudly, naming the node") {
+    val loop = new Graph.Loop(spark)
+    val g = loop.place(spark.sparkContext.parallelize(
+      Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))))
+    val partial = g.init(n => n).filter(_._1 != 3L) // node 3 has no state
+    val ex = intercept[Exception] {
+      Graph.messages(g, partial, "spec")((x, _) => x).collect()
+    }
+    val cause = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalStateException => e }
+    assert(cause.exists(_.getMessage.contains("node 3 has an edge but no state")),
+      s"expected a loud miss, got $ex")
+    // BFS's reached-only state is the declared exception: a miss sends nothing
+    val sent = Graph.messages(g, partial, "spec", reachedOnly = true)((x, _) => x)
+      .collect().toSet
+    assert(sent === Set((2L, 1L), (1L, 2L), (3L, 2L)))
+    Seq(g.pairs, g.deg).foreach(_.unpersist())
+  }
+
   test("bfs layers: exact hop distances on a hand path; horizon bound honored") {
     // path 0-2-4-6-...: node 0 is the only seed (0/2 % 50 == 0); node 2k
     // sits k hops away. Use part-side ids (even) so the seed rule applies.
