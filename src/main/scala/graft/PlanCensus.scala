@@ -20,12 +20,9 @@ object PlanCensus {
   }
 
   /** Execute the query (noop sink — AQE only finalizes the plan after a
-    * run) and census the formatted physical plan. Returns the census and
-    * the full plan text. */
-  def of(df: DataFrame): (Census, String) = {
+    * run) and census its executed physical plan. */
+  def of(df: DataFrame): Census = {
     df.write.mode("overwrite").format("noop").save()
-    val plan = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // counts and flags come from WALKING the executed (AQE-final) plan —
     // a node AQE replaced at runtime must not be flagged as present, and
     // a regex over the explain text breaks when a cached subtree nests
@@ -45,7 +42,7 @@ object PlanCensus {
       // partitionBy(lit(1)); exempt only bounded-by-construction inputs
       "single-partition-window" -> c.singlePartWindow,
     ).collect { case (f, true) => f }
-    (Census(c.shuffles, c.broadcasts, flags), plan)
+    Census(c.shuffles, c.broadcasts, flags)
   }
 
   /** Queries ALLOWED to carry an anti-pattern flag, each with its

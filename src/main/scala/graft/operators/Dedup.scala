@@ -928,6 +928,17 @@ object Dedup {
     * is excluded from candidate generation — see [[simhashValuePairs]]. */
   val SimhashBucketCap = 256L
 
+  /** (key, band, chunk) rows: the integer signature column `sig` cut into
+    * `bands` chunks of `bits` bits — the banding of SimHash (here) and of
+    * sign-LSH ([[Similarity.annLshTopK]]); two signatures share a bucket
+    * in a band iff they agree on all of its bits. */
+  private[graft] def bandChunks(df: DataFrame, key: String, sig: String,
+      bands: Int, bits: Int): DataFrame =
+    df.select(col(key), explode(expr(s"transform(sequence(0, ${bands - 1}), " +
+        s"b -> named_struct('band', b, 'chunk', ($sig >> (b * $bits)) & ${(1L << bits) - 1}))"))
+        .as("bb"))
+      .select(col(key), col("bb.band"), col("bb.chunk"))
+
   /** Near-dup SIMHASH VALUE pairs: band-join over DISTINCT 64-bit values,
     * with TWO hot-bucket guards. Emits (sh_a, sh_b, hamming) with
     * sh_a < sh_b and 0 < hamming <= 6.
@@ -953,11 +964,7 @@ object Dedup {
     *     replicates the cap exactly. */
   private[graft] def simhashValuePairs(sh: DataFrame): DataFrame = {
     import sh.sparkSession.implicits._
-    val vals = sh.select($"simhash").distinct()
-    val bands = vals.select($"simhash",
-        explode(expr("transform(sequence(0, 3), " +
-          "b -> named_struct('band', b, 'chunk', (simhash >> (b * 16)) & 65535))")).as("bb"))
-      .select($"simhash", $"bb.band", $"bb.chunk")
+    val bands = bandChunks(sh.select($"simhash").distinct(), "simhash", "simhash", 4, 16)
     val cold = bands.groupBy($"band", $"chunk")
       .agg(count(lit(1)).as("n")).filter($"n" <= SimhashBucketCap)
       .select($"band", $"chunk")

@@ -112,14 +112,15 @@ object Graph {
   // The partition count is spark.sql.shuffle.partitions, the scale knob
   // every DataFrame shuffle here uses.
 
-  /** One fixpoint run's shared setup: the loop partitioner, every RDD the
-    * loop holds across rounds (persisted, spillable), and [[seal]]. */
+  /** One fixpoint run's shared setup: the loop partitioner and every RDD
+    * the loop holds across rounds (persisted, spillable) — see
+    * [[Loop.run]]. */
   private[graft] final class Loop(s: SparkSession) {
     val part = new HashPartitioner(
       s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
-    /** Persist an RDD the loop reads across rounds, until [[seal]]. */
+    /** Persist an RDD the loop reads across rounds, until the run ends. */
     def hold[T](rdd: RDD[T]): RDD[T] = {
       held += rdd
       rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -131,13 +132,18 @@ object Graph {
       val placed = hold(pairs.partitionBy(part))
       new Placed(placed, hold(placed.mapValues(_ => 1L).reduceByKey(part, _ + _)), part)
     }
+  }
 
-    /** Materialize the result eagerly, so the caller's action replays none
-      * of the loop, then release everything the loop held. */
-    def seal(out: DataFrame): DataFrame = {
-      val materialized = out.localCheckpoint()
-      held.foreach(_.unpersist(false))
-      materialized
+  private[graft] object Loop {
+    /** Run one fixpoint loop: `body` builds the result on a fresh [[Loop]],
+      * the result is materialized eagerly (so the caller's action replays
+      * none of the loop), and everything the loop held is released on
+      * every exit — a throw, such as the components convergence probe's,
+      * included. */
+    def run(s: SparkSession)(body: Loop => DataFrame): DataFrame = {
+      val loop = new Loop(s)
+      try body(loop).localCheckpoint()
+      finally loop.held.foreach(_.unpersist(false))
     }
   }
 
@@ -233,16 +239,17 @@ object Graph {
     * bit-identical to the unrolled-CTE oracle. */
   private def dampedRanks(s: SparkSession, e0: DataFrame, iters: Int,
       teleport: Long => Boolean)(out: RDD[(Long, Long)] => DataFrame): DataFrame = {
-    val loop = new Loop(s)
-    val g = loop.place(distinctSymPairs(e0))
-    var ranks = g.init(n => if (teleport(n)) PrScale else 0L)
-    for (_ <- 1 to iters)
-      ranks = messages(g, ranks, "pagerank", withDeg = true)(_ / _)
-        .reduceByKey(g.part, _ + _)
-        .mapPartitions(_.map { case (n, c) =>
-          (n, (if (teleport(n)) PrBase else 0L) + PrDamp * c / 100)
-        }, preservesPartitioning = true)
-    loop.seal(out(ranks))
+    Loop.run(s) { loop =>
+      val g = loop.place(distinctSymPairs(e0))
+      var ranks = g.init(n => if (teleport(n)) PrScale else 0L)
+      for (_ <- 1 to iters)
+        ranks = messages(g, ranks, "pagerank", withDeg = true)(_ / _)
+          .reduceByKey(g.part, _ + _)
+          .mapPartitions(_.map { case (n, c) =>
+            (n, (if (teleport(n)) PrBase else 0L) + PrDamp * c / 100)
+          }, preservesPartitioning = true)
+      out(ranks)
+    }
   }
 
   /** In-JVM reference of [[dampedRanks]], for specs: the exact integer
@@ -656,27 +663,29 @@ object Graph {
     * Bit-identical to the unrolled-CTE oracle. */
   private[graft] def componentsOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val loop = new Loop(s)
-    val g = loop.place(distinctSymPairs(e0))
-    def hashMin(lbl: RDD[(Long, Long)], rounds: Int) =
-      minRelaxation(g, lbl, rounds, "components")(l => l)
-    val lbl = hashMin(g.init(n => n), CcIters)
-    // Runtime fixpoint probe (the [[Dedup.connectedComponents]]
-    // non-convergence discipline): HashMin has converged iff one extra
-    // round changes NOTHING. A graph whose diameter exceeds [[CcIters]]
-    // would otherwise silently ship within-CcIters-hop labels as component
-    // ids; unconverged labels are wrong labels, so fail LOUDLY and point at
-    // the O(log n) star-contraction form, which has no diameter dependence.
-    // Cost: one more min round + a narrow co-partitioned join and count.
-    val falling = hashMin(lbl, 1).join(lbl)
-      .values.filter { case (next, l) => next < l }.count()
-    if (falling > 0)
-      throw new IllegalStateException(
-        s"components did not converge in $CcIters HashMin rounds " +
-          s"($falling labels still falling — graph diameter exceeds the " +
-          "round bound; use Dedup.connectedComponents, the O(log n) " +
-          "star-contraction form, for large-diameter graphs)")
-    loop.seal(lbl.toDF("node", "component"))
+    Loop.run(s) { loop =>
+      val g = loop.place(distinctSymPairs(e0))
+      def hashMin(lbl: RDD[(Long, Long)], rounds: Int) =
+        minRelaxation(g, lbl, rounds, "components")(l => l)
+      val lbl = hashMin(g.init(n => n), CcIters)
+      // Runtime fixpoint probe (the [[Dedup.connectedComponents]]
+      // non-convergence discipline): HashMin has converged iff one extra
+      // round changes NOTHING. A graph whose diameter exceeds [[CcIters]]
+      // would otherwise silently ship within-CcIters-hop labels as
+      // component ids; unconverged labels are wrong labels, so fail LOUDLY
+      // and point at the O(log n) star-contraction form, which has no
+      // diameter dependence. Cost: one more min round + a narrow
+      // co-partitioned join and count.
+      val falling = hashMin(lbl, 1).join(lbl)
+        .values.filter { case (next, l) => next < l }.count()
+      if (falling > 0)
+        throw new IllegalStateException(
+          s"components did not converge in $CcIters HashMin rounds " +
+            s"($falling labels still falling — graph diameter exceeds the " +
+            "round bound; use Dedup.connectedComponents, the O(log n) " +
+            "star-contraction form, for large-diameter graphs)")
+      lbl.toDF("node", "component")
+    }
   }
 
   /** The min-relaxation loop of HashMin [[componentsOf]] and
@@ -858,23 +867,25 @@ object Graph {
     * rounds. */
   private[graft] def labelPropagationOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val loop = new Loop(s)
-    val g = loop.place(distinctSymPairs(e0))
-    var lab = g.init(n => n)
-    for (_ <- 1 to LpaIters) {
-      // count neighbor labels by (node, label), then the deterministic
-      // plurality — max count, tie toward the smallest label — reduced by
-      // node (a per-key label→count map combiner was measured 2× slower:
-      // per-partition-per-key boxed HashMaps dominate the serializer)
-      lab = messages(g, lab, "label propagation")((l, _) => l)
-        .map((_, 1L))
-        .reduceByKey(_ + _)
-        .map { case ((n, l), c) => (n, (l, c)) }
-        .reduceByKey(g.part, (a, b) =>
-          if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b)
-        .mapValues(_._1)
+    Loop.run(s) { loop =>
+      val g = loop.place(distinctSymPairs(e0))
+      var lab = g.init(n => n)
+      for (_ <- 1 to LpaIters) {
+        // count neighbor labels by (node, label), then the deterministic
+        // plurality — max count, tie toward the smallest label — reduced
+        // by node (a per-key label→count map combiner was measured 2×
+        // slower: per-partition-per-key boxed HashMaps dominate the
+        // serializer)
+        lab = messages(g, lab, "label propagation")((l, _) => l)
+          .map((_, 1L))
+          .reduceByKey(_ + _)
+          .map { case ((n, l), c) => (n, (l, c)) }
+          .reduceByKey(g.part, (a, b) =>
+            if (a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)) a else b)
+          .mapValues(_._1)
+      }
+      lab.toDF("node", "community")
     }
-    loop.seal(lab.toDF("node", "community"))
   }
 
   /** In-JVM reference of the same deterministic LPA, for specs. */
@@ -979,11 +990,12 @@ object Graph {
   /** [[bfsLayers]] over an arbitrary directed edge frame (src, dst). */
   private[graft] def bfsLayersOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val loop = new Loop(s)
-    val g = loop.place(distinctSymPairs(e0))
-    val seeds = g.init(_ => 0L).filter { case (n, _) => isSeed(n) }
-    loop.seal(minRelaxation(g, seeds, BfsMaxHops, "bfs layers", reachedOnly = true)(_ + 1)
-      .toDF("node", "hops"))
+    Loop.run(s) { loop =>
+      val g = loop.place(distinctSymPairs(e0))
+      val seeds = g.init(_ => 0L).filter { case (n, _) => isSeed(n) }
+      minRelaxation(g, seeds, BfsMaxHops, "bfs layers", reachedOnly = true)(_ + 1)
+        .toDF("node", "hops")
+    }
   }
 
   /** DuckDB twin of [[bfsLayers]]. */
@@ -1029,28 +1041,29 @@ object Graph {
   /** [[hits]] over an arbitrary directed edge frame (src, dst). */
   private[graft] def hitsOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val loop = new Loop(s)
-    val ed = loop.hold(e0.select($"src", $"dst").distinct().as[(Long, Long)].rdd)
-    val bySrc = loop.place(ed)
-    val byDst = loop.place(ed.map(_.swap))
-    def halfStep(g: Placed, score: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-      // raw is consumed twice (the max action, then the normalize) — both
-      // reads hit the same reduceByKey shuffle output, so stage reuse
-      // makes the second read a shuffle-file replay, not a recomputation
-      val raw = messages(g, score, "hits")((x, _) => x).reduceByKey(g.part, _ + _)
-      val mx = raw.values.max()
-      raw.mapValues(v => v * PrScale / mx)
+    Loop.run(s) { loop =>
+      val ed = loop.hold(e0.select($"src", $"dst").distinct().as[(Long, Long)].rdd)
+      val bySrc = loop.place(ed)
+      val byDst = loop.place(ed.map(_.swap))
+      def halfStep(g: Placed, score: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+        // raw is consumed twice (the max action, then the normalize) — both
+        // reads hit the same reduceByKey shuffle output, so stage reuse
+        // makes the second read a shuffle-file replay, not a recomputation
+        val raw = messages(g, score, "hits")((x, _) => x).reduceByKey(g.part, _ + _)
+        val mx = raw.values.max()
+        raw.mapValues(v => v * PrScale / mx)
+      }
+      var hub = bySrc.init(_ => PrScale)
+      var auth: RDD[(Long, Long)] = null
+      for (_ <- 1 to HitsIters) {
+        auth = halfStep(bySrc, hub) // keyed by dst
+        hub = halfStep(byDst, auth) // keyed by src
+      }
+      val out = hub.map { case (n, sc) => (n, "hub", sc) }
+        .union(auth.map { case (n, sc) => (n, "authority", sc) })
+        .toDF("node", "kind", "score_micros")
+      out
     }
-    var hub = bySrc.init(_ => PrScale)
-    var auth: RDD[(Long, Long)] = null
-    for (_ <- 1 to HitsIters) {
-      auth = halfStep(bySrc, hub) // keyed by dst
-      hub = halfStep(byDst, auth) // keyed by src
-    }
-    val out = hub.map { case (n, sc) => (n, "hub", sc) }
-      .union(auth.map { case (n, sc) => (n, "authority", sc) })
-      .toDF("node", "kind", "score_micros")
-    loop.seal(out)
   }
 
   /** In-JVM reference of the same integer HITS, for specs. */
@@ -1138,104 +1151,105 @@ object Graph {
     * [[isSeed]] seed catalog. */
   private[graft] def randomWalksOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
-    val loop = new Loop(s)
-    val part = loop.part
-    // RANK-INDEXED flat adjacency (src, (dst, rnk)) — rnk = position of
-    // dst among src's ascending neighbors, exactly the oracle's
-    // row_number()-1. Built by ONE sorted shuffle placed by src (it spills
-    // through the shuffle sorter, never a per-node array) and a streaming
-    // per-run counter. bySrc places each (src, dst) key where `part`
-    // places src, so the Long-keyed rows it yields are declared under
-    // `part` itself.
-    val bySrc = new Partitioner {
-      override def numPartitions: Int = part.numPartitions
-      override def getPartition(key: Any): Int =
-        part.getPartition(key.asInstanceOf[(Long, Long)]._1)
-    }
-    val ranked = loop.hold(new PlacedBy(distinctSymPairs(e0)
-      .map(p => (p, ()))
-      .repartitionAndSortWithinPartitions(bySrc)
-      .mapPartitions { it =>
-        var curSrc = Long.MinValue
-        var rnk = -1
-        it.map { case ((u, v), _) =>
-          if (u != curSrc) { curSrc = u; rnk = 0 } else rnk += 1
-          (u, (v, rnk))
-        }
-      }, part))
-    // degrees per node: last rank of each run + 1, streamed — one row per
-    // node, placed like ranked so it zips with it
-    val deg = loop.hold(ranked.mapPartitions({ it =>
-      new Iterator[(Long, Long)] {
-        private val base = it.buffered
-        override def hasNext: Boolean = base.hasNext
-        override def next(): (Long, Long) = {
-          val (u, (_, r0)) = base.next()
-          var last = r0
-          while (base.hasNext && base.head._1 == u) last = base.next()._2._2
-          (u, last + 1L)
-        }
+    Loop.run(s) { loop =>
+      val part = loop.part
+      // RANK-INDEXED flat adjacency (src, (dst, rnk)) — rnk = position of
+      // dst among src's ascending neighbors, exactly the oracle's
+      // row_number()-1. Built by ONE sorted shuffle placed by src (it spills
+      // through the shuffle sorter, never a per-node array) and a streaming
+      // per-run counter. bySrc places each (src, dst) key where `part`
+      // places src, so the Long-keyed rows it yields are declared under
+      // `part` itself.
+      val bySrc = new Partitioner {
+        override def numPartitions: Int = part.numPartitions
+        override def getPartition(key: Any): Int =
+          part.getPartition(key.asInstanceOf[(Long, Long)]._1)
       }
-    }, preservesPartitioning = true))
-    // frontier keyed by current node, placed like ranked; each step
-    // shuffles only the |seeds|·WalksPerSeed-row frontier
-    var frontier = deg.mapPartitions(_.collect {
-      case (n, _) if isSeed(n) =>
-        Iterator.range(0, WalksPerSeed)
-          .map(w => (n, n * WalksPerSeed + w)).toSeq
-    }.flatten, preservesPartitioning = true)
-    var visited = frontier
-      .map { case (cur, walkId) => (walkId, 0L, cur) }
-    for (k <- 1 to WalkSteps) {
-      val step = k // avoid capturing the loop var reference in the closure
-      // The per-step neighbor draw: salted-md5-prefix of (walk_id, step,
-      // cur) as a non-negative BIGINT, modulo degree — byte-identical to
-      // the SQL form the DuckDB twin replays: md5 of the UTF-8 string
-      // `walk:<id>:<step>:<cur>`, first 8 hex chars parsed base-16
-      // (always < 2³², so non-negative). The digest instance and each
-      // walker's drawn TARGET RANK are computed once per partition per
-      // step, not per edge or per row; the edge stream then only compares
-      // its running rank against the precomputed target.
-      frontier = ranked.zipPartitions(deg, frontier) { (eIt, dIt, fIt) =>
-        val dm = stateMap(dIt, "random walks")
-        val md = java.security.MessageDigest.getInstance("MD5")
-        // cur -> walkers at cur as (walkId, targetRank) — frontier-sized
-        val fm = new java.util.HashMap[Long, java.util.ArrayList[(Long, Int)]]()
-        fIt.foreach { case (cur, walkId) =>
-          md.reset()
-          val hex = md.digest(s"walk:$walkId:$step:$cur"
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            .take(4).map(b => f"$b%02x").mkString
-          val target = (java.lang.Long.parseLong(hex, 16) % dm(cur)).toInt
-          var l = fm.get(cur)
-          if (l == null) { l = new java.util.ArrayList[(Long, Int)](); fm.put(cur, l) }
-          l.add((walkId, target))
-        }
-        eIt.flatMap { case (u, (v, rnk)) =>
-          val l = fm.get(u)
-          if (l == null) Iterator.empty
-          else {
-            var i = 0
-            var out = List.empty[(Long, Long)]
-            while (i < l.size()) {
-              val (walkId, target) = l.get(i)
-              if (target == rnk) out = (v, walkId) :: out
-              i += 1
-            }
-            out.iterator
+      val ranked = loop.hold(new PlacedBy(distinctSymPairs(e0)
+        .map(p => (p, ()))
+        .repartitionAndSortWithinPartitions(bySrc)
+        .mapPartitions { it =>
+          var curSrc = Long.MinValue
+          var rnk = -1
+          it.map { case ((u, v), _) =>
+            if (u != curSrc) { curSrc = u; rnk = 0 } else rnk += 1
+            (u, (v, rnk))
+          }
+        }, part))
+      // degrees per node: last rank of each run + 1, streamed — one row per
+      // node, placed like ranked so it zips with it
+      val deg = loop.hold(ranked.mapPartitions({ it =>
+        new Iterator[(Long, Long)] {
+          private val base = it.buffered
+          override def hasNext: Boolean = base.hasNext
+          override def next(): (Long, Long) = {
+            val (u, (_, r0)) = base.next()
+            var last = r0
+            while (base.hasNext && base.head._1 == u) last = base.next()._2._2
+            (u, last + 1L)
           }
         }
-      // part places Long node keys exactly where bySrc placed the
-      // (src, dst)-keyed adjacency rows: both are the node hash modulo
-      // the loop partition count, so the next step's zip stays aligned
-      }.partitionBy(part)
-      // frontier is consumed twice (next step's zip + the visited union):
-      // it is a ShuffledRDD, so the second read replays shuffle files —
-      // no recomputation (deliberate reliance on stage reuse)
-      visited = visited.union(
-        frontier.map { case (cur, walkId) => (walkId, k.toLong, cur) })
+      }, preservesPartitioning = true))
+      // frontier keyed by current node, placed like ranked; each step
+      // shuffles only the |seeds|·WalksPerSeed-row frontier
+      var frontier = deg.mapPartitions(_.collect {
+        case (n, _) if isSeed(n) =>
+          Iterator.range(0, WalksPerSeed)
+            .map(w => (n, n * WalksPerSeed + w)).toSeq
+      }.flatten, preservesPartitioning = true)
+      var visited = frontier
+        .map { case (cur, walkId) => (walkId, 0L, cur) }
+      for (k <- 1 to WalkSteps) {
+        val step = k // avoid capturing the loop var reference in the closure
+        // The per-step neighbor draw: salted-md5-prefix of (walk_id, step,
+        // cur) as a non-negative BIGINT, modulo degree — byte-identical to
+        // the SQL form the DuckDB twin replays: md5 of the UTF-8 string
+        // `walk:<id>:<step>:<cur>`, first 8 hex chars parsed base-16
+        // (always < 2³², so non-negative). The digest instance and each
+        // walker's drawn TARGET RANK are computed once per partition per
+        // step, not per edge or per row; the edge stream then only compares
+        // its running rank against the precomputed target.
+        frontier = ranked.zipPartitions(deg, frontier) { (eIt, dIt, fIt) =>
+          val dm = stateMap(dIt, "random walks")
+          val md = java.security.MessageDigest.getInstance("MD5")
+          // cur -> walkers at cur as (walkId, targetRank) — frontier-sized
+          val fm = new java.util.HashMap[Long, java.util.ArrayList[(Long, Int)]]()
+          fIt.foreach { case (cur, walkId) =>
+            md.reset()
+            val hex = md.digest(s"walk:$walkId:$step:$cur"
+                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+              .take(4).map(b => f"$b%02x").mkString
+            val target = (java.lang.Long.parseLong(hex, 16) % dm(cur)).toInt
+            var l = fm.get(cur)
+            if (l == null) { l = new java.util.ArrayList[(Long, Int)](); fm.put(cur, l) }
+            l.add((walkId, target))
+          }
+          eIt.flatMap { case (u, (v, rnk)) =>
+            val l = fm.get(u)
+            if (l == null) Iterator.empty
+            else {
+              var i = 0
+              var out = List.empty[(Long, Long)]
+              while (i < l.size()) {
+                val (walkId, target) = l.get(i)
+                if (target == rnk) out = (v, walkId) :: out
+                i += 1
+              }
+              out.iterator
+            }
+          }
+        // part places Long node keys exactly where bySrc placed the
+        // (src, dst)-keyed adjacency rows: both are the node hash modulo
+        // the loop partition count, so the next step's zip stays aligned
+        }.partitionBy(part)
+        // frontier is consumed twice (next step's zip + the visited union):
+        // it is a ShuffledRDD, so the second read replays shuffle files —
+        // no recomputation (deliberate reliance on stage reuse)
+        visited = visited.union(
+          frontier.map { case (cur, walkId) => (walkId, k.toLong, cur) })
+      }
+      visited.toDF("walk_id", "step", "node")
     }
-    loop.seal(visited.toDF("walk_id", "step", "node"))
   }
 
   /** DuckDB twin of [[randomWalks]] — ranked adjacency via the same

@@ -1,69 +1,85 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.GraftFunctions.dot
 import graft.core.Tables
 import graft.functions.Hashing
 
-/** Approximate-nearest-neighbor search over the `embeddings` table
-  * (`Array[Float]`, dim 64).
+/** Approximate-nearest-neighbor search and embedding diagnostics over the
+  * `embeddings` table (`Array[Float]`, dim 64).
   *
-  *   - [[annBruteTopK]]: exact cosine top-k — the baseline and the oracle.
-  *     Dot products are codegen'd `zip_with`/`aggregate`, ranking is a
-  *     partitioned window; ranking key is (round(sim, 6) DESC, vec_id) so
-  *     float ties can never make the result nondeterministic vs the oracle.
-  *   - [[annLshTopK]]: sign-LSH (random hyperplanes) bucketed search — the
-  *     scale path. Candidates come from a banded equi-join on signature
-  *     chunks (never a cross join); exact cosine re-ranks candidates.
+  * Every ANN query is one shape — a CANDIDATE SOURCE feeding ONE exact
+  * cosine re-rank and top-k, the filter-then-verify unit of thresholded
+  * similarity search. The sources:
+  *
+  *   - brute force ([[annBruteTopK]]): every corpus vector — the exact
+  *     baseline and the recall truth;
+  *   - sign-LSH ([[annLshTopK]]): vectors sharing a signature band;
+  *   - IVF ([[annIvfTopK]]): vectors in the query's probed k-means cells;
+  *   - PQ and IVF+PQ ([[annPqTopK]], [[annIvfPqTopK]]): the ADC shortlist
+  *     over 8-byte codes, optionally restricted to the probed cells;
+  *   - filtered search and hard-negative mining ([[annFilteredTopK]],
+  *     [[annHardNegatives]] and their brute truths): a source narrowed by
+  *     a label relation (`=` or `<>`) before the re-rank.
+  *
+  * Why one kernel: the re-rank is the only place a neighbor's rank is
+  * decided, so every leg shares ONE rank tail — (round(sim, 6) DESC,
+  * vec_id ASC), in the engine ([[topK]]) and in the DuckDB twins
+  * ([[rerankSql]]). A float tie can then never order neighbors differently
+  * in the engine and its oracle, and an approximate leg differs from its
+  * truth only in which candidates it found, never in how it ranked them.
   *
   * 100 TB shape: brute force is O(Q·N) dot products and only exists for
-  * verification/small Q; LSH keeps the shuffle keyed on (band, chunk) with
-  * bucket sizes bounded by band width — skew-safe under AQE.
+  * verification/small Q; the index sources bound the candidate stream
+  * (band buckets, probed cells, ADC shortlists) before any full-precision
+  * vector moves.
   */
 object Similarity {
 
   val NumQueries = 5
   val TopK = 10
 
-  /** The (vec_id, v: array<double>) corpus frame every ANN leg starts
-    * from — factored so [[annRecallReport]] can compute it once, persist
-    * it for its nine legs, and release it at exit. */
-  private def vecsOf(s: SparkSession,
-      d: String): org.apache.spark.sql.Dataset[(Long, Array[Double])] = {
+  private type Vecs = Dataset[(Long, Array[Double])]
+
+  /** The (vec_id, v: array<double>) corpus frame — the one embedding
+    * decode; [[annRecallReport]] persists it once for all its legs. */
+  private def vecsOf(s: SparkSession, d: String): Vecs = {
     import s.implicits._
     Tables.embeddings(s, d)
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
   }
 
-  private def withNorm(s: SparkSession, d: String): DataFrame =
-    withNormOf(s, vecsOf(s, d))
+  private def labelsOf(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select("vec_id", "label")
 
-  /** (vec_id, v, norm) derived from an existing vector frame — same
-    * values as the historical parquet-scan form (the dot/sqrt is
-    * bit-deterministic), so every rerank/brute consumer is unchanged. */
-  private def withNormOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])]): DataFrame = {
+  /** (vec_id, v, norm) of a vector frame. */
+  private def withNormOf(s: SparkSession, vecs: Vecs): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions.dot
     vecs.toDF("vec_id", "v").withColumn("norm", sqrt(dot($"v", $"v")))
   }
 
-  /** Exact brute-force cosine top-k for the first [[NumQueries]] vectors. */
-  def annBruteTopK(s: SparkSession, d: String): DataFrame =
-    annBruteTopKOn(s, withNorm(s, d))
+  /** A label relation narrowing a candidate source: a vector stays a
+    * candidate of a query iff their labels are equal (`same`) or differ. */
+  private final case class LabelFilter(labels: DataFrame, same: Boolean) {
+    def holds(a: Column, b: Column): Column = if (same) a === b else a =!= b
+  }
 
-  private def annBruteTopKOn(s: SparkSession, e: DataFrame): DataFrame = {
-    import s.implicits._
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-    // BroadcastNestedLoopJoin by design: the broadcast side is NumQueries
-    // rows; every corpus vector must score against each (brute force)
-    val scored = e.join(broadcast(q), $"vec_id" =!= $"query_id")
-      .withColumn("sim",
-        org.apache.spark.sql.graft.GraftFunctions.dot($"qv", $"v") /
-          ($"qnorm" * $"norm"))
+  /** The first [[NumQueries]] vectors of a normed frame, as the query side. */
+  private def queriesOf(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < NumQueries).select(Seq(col("vec_id").as("query_id"),
+      col("v").as("qv"), col("norm").as("qnorm")) ++ extra: _*)
+
+  private def cosine: Column = dot(col("qv"), col("v")) / (col("qnorm") * col("norm"))
+
+  /** THE rank tail of every leg: per query, the [[TopK]] best
+    * (query_id, vec_id, sim) rows by (round(sim, 6) DESC, vec_id ASC) —
+    * rounding first so float noise can never reorder a tie against the
+    * oracle ([[rerankSql]] is its twin). */
+  private def topK(scored: DataFrame): DataFrame = {
+    import scored.sparkSession.implicits._
     val w = Window.partitionBy($"query_id")
       .orderBy(round($"sim", 6).desc, $"vec_id".asc)
     scored.withColumn("rank", row_number().over(w))
@@ -72,20 +88,71 @@ object Similarity {
         round($"sim", 4).as("cos_sim"))
   }
 
-  val annBruteTopKOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+  /** The brute source and its scorer in one join: every corpus vector
+    * against the [[NumQueries]]-row broadcast query side, narrowed by
+    * `filter`. Unfiltered and `<>` this is a BroadcastNestedLoopJoin BY
+    * DESIGN (no equi-key exists); `=` makes the label a hash-join key, so
+    * each vector scores only against same-label queries. */
+  private def bruteOn(s: SparkSession, vecs: Vecs,
+      filter: Option[LabelFilter]): DataFrame = {
+    import s.implicits._
+    val norm = withNormOf(s, vecs)
+    val e = filter.fold(norm)(f => norm.join(f.labels, "vec_id"))
+    val q = queriesOf(e, filter.map(_ => $"label".as("qlabel")).toSeq: _*)
+    val notSelf = $"vec_id" =!= $"query_id"
+    topK(e.join(broadcast(q), filter.fold(notSelf)(_.holds($"label", $"qlabel") && notSelf))
+      .withColumn("sim", cosine))
+  }
+
+  /** Exact cosine re-rank of (query_id, vec_id) candidate pairs, top-k. */
+  private def rerankOn(s: SparkSession, vecs: Vecs, cands: DataFrame): DataFrame = {
+    val norm = withNormOf(s, vecs)
+    topK(cands.join(norm, "vec_id").join(broadcast(queriesOf(norm)), "query_id")
+      .withColumn("sim", cosine))
+  }
+
+  /** DuckDB twin of a candidate source: `cand(query_id, vec_id)` = the
+    * pairs of `from` (corpus vector `c`, query `q`), self-pairs dropped,
+    * narrowed by the label relation `rel` (`=` or `<>`) when given. */
+  private def candSql(from: String, c: String, q: String,
+      rel: Option[String] = None): String = {
+    val (join, where) = rel.fold(("", "")) { op =>
+      (s"\n  JOIN embeddings l ON l.vec_id = $c JOIN embeddings ql ON ql.vec_id = $q",
+        s" AND l.label $op ql.label")
+    }
+    s"""cand AS (SELECT DISTINCT $q AS query_id, $c AS vec_id
+       |  FROM $from$join
+       |  WHERE $c <> $q$where)""".stripMargin
+  }
+
+  /** DuckDB twin of [[rerankOn]] + [[topK]]: exact cosine re-rank of the
+    * candidate CTE `cand` over the corpus CTE `e(vec_id, v)`, and the one
+    * rank tail. The statement's last CTEs and its final SELECT. */
+  private def rerankSql(cand: String): String =
+    s"""n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
        |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
        |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT query_id, vec_id,
-       |    list_dot_product(qv, v) / (qnorm * norm) AS sim
-       |  FROM n CROSS JOIN q WHERE vec_id <> query_id),
+       |scored AS (SELECT c.query_id, c.vec_id,
+       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
+       |  FROM $cand c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
        |ranked AS (SELECT query_id, vec_id, sim,
        |    row_number() OVER (PARTITION BY query_id
        |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
        |  FROM scored)
        |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
        |FROM ranked WHERE rank <= $TopK""".stripMargin
+
+  /** DuckDB twin of [[bruteOn]]: every (query, vector) pair is a candidate. */
+  private def bruteSql(rel: Option[String]): String =
+    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |${candSql(s"e c JOIN e q ON q.vec_id < $NumQueries", "c.vec_id", "q.vec_id", rel)},
+       |${rerankSql("cand")}""".stripMargin
+
+  /** Exact brute-force cosine top-k for the first [[NumQueries]] vectors. */
+  def annBruteTopK(s: SparkSession, d: String): DataFrame =
+    bruteOn(s, vecsOf(s, d), None)
+
+  val annBruteTopKOracle: String = bruteSql(None)
 
   /** Int8 embedding quantization: per-vector absmax scaling to [-127,127]
     * — 4x storage reduction for the embedding column (the difference
@@ -95,9 +162,7 @@ object Similarity {
     * with top-k stability under quantization). */
   def quantizeEmbeddings(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
+    vecsOf(s, d)
       .map { case (id, v) =>
         var m = 0.0
         var i = 0
@@ -161,8 +226,7 @@ object Similarity {
 
   /** Sign-LSH bucketed ANN: 16-bit signatures, candidates = vectors sharing
     * any 4-bit signature band with the query, exact re-rank of candidates.
-    * Probabilistic recall → rows-only oracle; SimilaritySpec measures
-    * recall@k against [[annBruteTopK]]. */
+    * SimilaritySpec measures recall@k against [[annBruteTopK]]. */
   val SigBits = 16
   val BandBits = 4
   val NumBands: Int = SigBits / BandBits
@@ -170,8 +234,7 @@ object Similarity {
   def signatures(s: SparkSession, d: String): DataFrame =
     signaturesOf(s, vecsOf(s, d))
 
-  private def signaturesOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])]): DataFrame = {
+  private def signaturesOf(s: SparkSession, vecs: Vecs): DataFrame = {
     import s.implicits._
     val planes = Hashing.hyperplanes(SigBits, 64)
     vecs.map { case (id, v) => (id, Hashing.signSignature(v, planes)) }
@@ -238,6 +301,20 @@ object Similarity {
   private def nearestCell(cs: Array[(Long, Array[Double])], v: Array[Double]): Long =
     cosTo(cs, v).maxBy { case (cid, sim) => (sim, -cid) }._1
 
+  /** The `n` cells nearest to `v`: cosine DESC, smaller cell id on ties. */
+  private def probeRing(cs: Array[(Long, Array[Double])], v: Array[Double],
+      n: Int): Array[Long] =
+    cosTo(cs, v).sortBy { case (cid, sim) => (-sim, cid) }.take(n).map(_._1)
+
+  /** Every corpus vector's nearest cell, (vec_id, cell), under broadcast
+    * centroids. */
+  private def assignCells(s: SparkSession, vecs: Vecs,
+      centroids: Array[(Long, Array[Double])]): DataFrame = {
+    import s.implicits._
+    val bc = s.sparkContext.broadcast(centroids)
+    vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }.toDF("vec_id", "cell")
+  }
+
   /** The fixed-point mean `Aggregator` shared by the IVF Lloyd passes and
     * the PQ codebook training: per-partition (Long-sum, count) partials
     * per cell, quantized at [[IvfFixedScale]] so the mean is independent
@@ -290,8 +367,7 @@ object Similarity {
     * (sum, count) buffer per cell it sees, never a cell's row set. The
     * sums are fixed-point Longs ([[IvfFixedScale]]) so the result is
     * independent of partition merge order. */
-  private def lloydCentroids(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])]): Array[(Long, Array[Double])] = {
+  private def lloydCentroids(s: SparkSession, vecs: Vecs): Array[(Long, Array[Double])] = {
     import s.implicits._
     val meanAgg = fixedMeanAgg
     // seeding: k-means++ farthest-first over a DETERMINISTIC random sample
@@ -495,81 +571,57 @@ object Similarity {
     *     a cell assignment); only the re-rank uses list_dot_product,
     *     where the brute oracle already proved parity and ranking rounds
     *     to 6dp first. */
-  val annIvfTopKOracle: String =
+  val annIvfTopKOracle: String = s"${ivfCandSql(IvfProbes)},\n${rerankSql("cand")}"
+
+  /** DuckDB twin of the IVF candidate source: the [[ivfCorpusCtes]]
+    * replay, each query's `probes` nearest cells (`pr`, the same
+    * (sim DESC, cid ASC) order as [[probeRing]]), then the corpus vectors
+    * assigned to them, narrowed by `rel`. */
+  private def ivfCandSql(probes: Int, rel: Option[String] = None): String =
     s"""$ivfCorpusCtes,
        |pr AS (SELECT query_id, cell FROM (
        |    SELECT vv.vec_id AS query_id, cc.cid AS cell,
        |      row_number() OVER (PARTITION BY vv.vec_id
        |        ORDER BY ${dotf("cc.cv", "vv.v")} / (cc.cn * vv.vn) DESC, cc.cid ASC) AS rk
        |    FROM vv CROSS JOIN c${IvfLloydIters}n cc WHERE vv.vec_id < $NumQueries)
-       |  WHERE rk <= $IvfProbes),
-       |cand AS (SELECT DISTINCT p.query_id, a.vec_id
-       |  FROM asg a JOIN pr p USING (cell) WHERE a.vec_id <> p.query_id),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-       |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT c.query_id, c.vec_id,
-       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
-       |  FROM cand c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+       |  WHERE rk <= $probes),
+       |${candSql("asg a JOIN pr p USING (cell)", "a.vec_id", "p.query_id", rel)}""".stripMargin
 
   def annIvfTopK(s: SparkSession, d: String): DataFrame = {
     val vecs = vecsOf(s, d)
-    annIvfTopKOf(s, vecs, lloydCentroids(s, vecs), withNormOf(s, vecs))
+    ivfOn(s, vecs, lloydCentroids(s, vecs), IvfProbes, None)
   }
 
-  private def annIvfTopKOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])], norm: DataFrame): DataFrame = {
+  /** The IVF source: the corpus vectors assigned to each query's `probes`
+    * nearest cells, narrowed by `filter` BEFORE the re-rank (pre-filtering:
+    * no top-k slot goes to a vector the filter would discard). One
+    * |V|-row assignment frame, [[NumQueries]]-row broadcast probes and
+    * query labels; candidates are pruned before any full-precision vector
+    * moves. */
+  private def ivfOn(s: SparkSession, vecs: Vecs,
+      centroids: Array[(Long, Array[Double])], probes: Int,
+      filter: Option[LabelFilter]): DataFrame = {
     import s.implicits._
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("vec_id", "cell")
-    val probes = vecs.filter(_._1 < NumQueries).flatMap { case (qid, v) =>
-      cosTo(bc.value, v).sortBy { case (cid, sim) => (-sim, cid) }
-        .take(IvfProbes).map { case (cid, _) => (qid, cid) }
+    val ring = vecs.filter(_._1 < NumQueries).flatMap { case (qid, v) =>
+      probeRing(centroids, v, probes).map((qid, _))
     }.toDF("query_id", "cell")
-    val cands = assigned.join(broadcast(probes), "cell")
+    val pairs = assignCells(s, vecs, centroids).join(broadcast(ring), "cell")
       .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id").distinct()
-    rerankOn(s, norm, cands)
-  }
-
-  /** Exact cosine re-rank of (query_id, vec_id) candidate pairs, top-k. */
-  private def rerank(s: SparkSession, d: String, cands: DataFrame): DataFrame =
-    rerankOn(s, withNorm(s, d), cands)
-
-  private def rerankOn(s: SparkSession, e: DataFrame,
-      cands: DataFrame): DataFrame = {
-    import s.implicits._
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"))
-    val scored = cands
-      .join(e, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("sim",
-        org.apache.spark.sql.graft.GraftFunctions.dot($"qv", $"v") /
-          ($"qnorm" * $"norm"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy(round($"sim", 6).desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= TopK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"sim", 4).as("cos_sim"))
+    val cands = filter.fold(pairs) { f =>
+      val qlab = f.labels.filter($"vec_id" < NumQueries)
+        .select($"vec_id".as("query_id"), $"label".as("qlabel"))
+      pairs.join(f.labels, "vec_id").join(broadcast(qlab), "query_id")
+        .filter(f.holds($"label", $"qlabel"))
+    }
+    rerankOn(s, vecs, cands.select($"query_id", $"vec_id").distinct())
   }
 
   /** DuckDB twin of [[annLshTopK]] — deterministic end to end: the
     * hyperplanes are a fixed splitmix64 stream (inlined below via
-    * `Double.toString`, which round-trips exactly), and every float
-    * accumulation (norms, plane dots) is an ORDERED left-to-right fold
-    * matching the JVM loop bit-for-bit, so the sign of each plane dot —
-    * the only place a last-ulp difference could flip anything — is
-    * identical. Candidates, re-rank, and tie-breaks mirror the engine. */
+    * `Double.toString`, which round-trips exactly), and every plane dot is
+    * an ORDERED left-to-right fold matching the JVM loop bit-for-bit, so
+    * the sign of each plane dot — the only place a last-ulp difference
+    * could flip anything — is identical. */
   val annLshTopKOracle: String = {
     val planeRows = Hashing.hyperplanes(SigBits, 64).zipWithIndex.map {
       case (row, p) =>
@@ -577,9 +629,6 @@ object Similarity {
     }.mkString(",\n")
     val mask = (1 << BandBits) - 1
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_reduce(list_prepend(0.0,
-       |    list_transform(range(64), j -> v[j+1] * v[j+1])), (a, x) -> a + x)) AS norm
-       |  FROM e),
        |planes(p, pv) AS (VALUES $planeRows),
        |sigbit AS (SELECT vec_id, p,
        |    CASE WHEN list_reduce(list_prepend(0.0,
@@ -591,42 +640,24 @@ object Similarity {
        |bands AS (SELECT vec_id, b, (sig // (1 << ($BandBits * b))) % ${mask + 1} AS chunk
        |  FROM sig, unnest(range($NumBands)) AS t(b)),
        |qb AS (SELECT vec_id AS query_id, b, chunk FROM bands WHERE vec_id < $NumQueries),
-       |cand AS (SELECT DISTINCT qb.query_id, bands.vec_id
-       |  FROM bands JOIN qb ON bands.b = qb.b AND bands.chunk = qb.chunk
-       |  WHERE bands.vec_id <> qb.query_id),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-       |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT c.query_id, c.vec_id,
-       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
-       |  FROM cand c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+       |${candSql("bands JOIN qb ON bands.b = qb.b AND bands.chunk = qb.chunk",
+            "bands.vec_id", "qb.query_id")},
+       |${rerankSql("cand")}""".stripMargin
   }
 
-  def annLshTopK(s: SparkSession, d: String): DataFrame = {
-    val vecs = vecsOf(s, d)
-    annLshTopKOf(s, vecs, withNormOf(s, vecs))
-  }
+  def annLshTopK(s: SparkSession, d: String): DataFrame = lshOn(s, vecsOf(s, d))
 
-  private def annLshTopKOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      norm: DataFrame): DataFrame = {
+  /** The LSH source: vectors sharing a (band, chunk) bucket with a query
+    * — an equi-join on the bucket, never a cross join. */
+  private def lshOn(s: SparkSession, vecs: Vecs): DataFrame = {
     import s.implicits._
-    val mask = (1 << BandBits) - 1
-    val bands = signaturesOf(s, vecs).select($"vec_id", $"sig",
-        explode(expr(s"transform(sequence(0, ${NumBands - 1}), " +
-          s"b -> named_struct('band', b, 'chunk', (sig >> (b * $BandBits)) & $mask))")).as("bb"))
-      .select($"vec_id", $"bb.band", $"bb.chunk")
+    val bands = Dedup.bandChunks(signaturesOf(s, vecs), "vec_id", "sig", NumBands, BandBits)
     val qBands = bands.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"band", $"chunk")
     val cands = bands.join(broadcast(qBands), Seq("band", "chunk"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id").distinct()
-    rerankOn(s, norm, cands)
+    rerankOn(s, vecs, cands)
   }
 
   // ------------------------------------------------------------- SemDeDup
@@ -662,15 +693,8 @@ object Similarity {
     * k choice implies. No driver-side pairwise anything. */
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions.dot
-    val vecs = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
-    val centroids = lloydCentroids(s, vecs)
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("vec_id", "cell")
-    val e = withNorm(s, d).join(assigned, "vec_id")
+    val vecs = vecsOf(s, d)
+    val e = withNormOf(s, vecs).join(assignCells(s, vecs, lloydCentroids(s, vecs)), "vec_id")
     val a = e.select($"cell", $"vec_id".as("a_id"), $"v".as("va"), $"norm".as("na"))
     val b = e.select($"cell", $"vec_id".as("b_id"), $"v".as("vb"), $"norm".as("nb"))
     a.join(b, Seq("cell")).filter($"a_id" < $"b_id")
@@ -734,9 +758,7 @@ object Similarity {
   def reduceEmbeddings(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val planes = Hashing.hyperplanes(RpDims, 64, RpSeed)
-    Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
+    vecsOf(s, d)
       .flatMap { case (id, v) =>
         Iterator.tabulate(planes.length) { p =>
           val pv = planes(p)
@@ -797,12 +819,7 @@ object Similarity {
     * constant driver traffic — and encoding is a map-only pass under a
     * broadcast codebook (8 KiB). Nothing shuffles the vectors
     * themselves, at any corpus size. */
-  def pqCodes(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    pqCodesOf(s, Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])])
-  }
+  def pqCodes(s: SparkSession, d: String): DataFrame = pqCodesOf(s, vecsOf(s, d))
 
   /** Nearest centroid of one subspace's codebook: L2² accumulated in
     * ascending component order (the oracle's fold order); strict `<`
@@ -821,10 +838,26 @@ object Similarity {
     (best, bestD)
   }
 
+  /** The code word of `v`: its nearest codebook entry per subspace. */
+  private def encode(cb: Array[Array[Array[Double]]], v: Array[Double]): Array[Int] =
+    Array.tabulate(PqSub)(sub => nearestSubCell(cb(sub), v, sub)._1)
+
+  /** A query's ADC distance table: L2² of its subvector `sub` to codebook
+    * entry `cid`, accumulated in ascending component order. */
+  private def adcTable(cb: Array[Array[Array[Double]]],
+      qv: Array[Double]): Array[Array[Double]] =
+    Array.tabulate(PqSub, cb(0).length) { (sub, cid) =>
+      var dd = 0.0; var i = 0
+      while (i < PqDim) {
+        val df = qv(sub * PqDim + i) - cb(sub)(cid)(i); dd += df * df; i += 1
+      }
+      dd
+    }
+
   /** Codebook training: seeds + [[PqIters]] fixed-point Lloyd passes.
     * Returns cb(sub)(cid)(comp). */
   private[graft] def pqTrain(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])]): Array[Array[Array[Double]]] = {
+      vecs: Dataset[(Long, Array[Double])]): Array[Array[Array[Double]]] = {
     import s.implicits._
     val meanAgg = fixedMeanAgg
     // seeds: centroid j of EVERY subspace comes from the j-th seed vector
@@ -861,7 +894,7 @@ object Similarity {
     * the correctness gate can canonicalize (a raw `array<long>` column
     * crashed the driver's pandas lex-sort in r7). */
   private[graft] def pqCodesOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])]): DataFrame = {
+      vecs: Dataset[(Long, Array[Double])]): DataFrame = {
     import s.implicits._
     val bcb = s.sparkContext.broadcast(pqTrain(s, vecs))
     vecs.map { case (id, v) =>
@@ -979,43 +1012,40 @@ object Similarity {
     * oracle. */
   def annPqTopK(s: SparkSession, d: String): DataFrame = {
     val vecs = vecsOf(s, d)
-    annPqTopKOf(s, vecs, pqTrain(s, vecs), withNormOf(s, vecs))
+    adcOn(s, vecs, pqTrain(s, vecs), None)
   }
 
-  private def annPqTopKOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      cb: Array[Array[Array[Double]]], norm: DataFrame): DataFrame = {
+  /** The ADC source of [[annPqTopK]] and, with `ivf` centroids,
+    * [[annIvfPqTopK]]: ONE corpus pass finds each vector's IVF cell and,
+    * only if some query probes it (every query, without `ivf`), encodes
+    * the vector once and ADC-scores it against those queries — [[PqSub]]
+    * table lookups in ascending-subspace order, so the shortlist ranks
+    * are bit-exact in the DuckDB twin. The [[AdcShortlist]] best per
+    * query feed the exact re-rank. */
+  private def adcOn(s: SparkSession, vecs: Vecs, cb: Array[Array[Array[Double]]],
+      ivf: Option[Array[(Long, Array[Double])]]): DataFrame = {
     import s.implicits._
-    val queries = vecs.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    // per-query distance table: dt(q)(sub)(cid), ascending loops
-    val dt: Array[(Long, Array[Array[Double]])] = queries.map { case (qid, qv) =>
-      (qid, Array.tabulate(PqSub, cb(0).length) { (sub, cid) =>
-        var dd = 0.0; var i = 0
-        while (i < PqDim) {
-          val df = qv(sub * PqDim + i) - cb(sub)(cid)(i); dd += df * df; i += 1
-        }
-        dd
-      })
+    // per query: its probed cells and ADC table — one constant-size broadcast
+    val qside = vecs.filter(_._1 < NumQueries).collect().sortBy(_._1).map {
+      case (qid, qv) => (qid, ivf.map(probeRing(_, qv, IvfProbes).toSet), adcTable(cb, qv))
     }
+    val bIvf = s.sparkContext.broadcast(ivf)
     val bcb = s.sparkContext.broadcast(cb)
-    val bdt = s.sparkContext.broadcast(dt)
-    // one pass: encode each vector, then ADC-score it against every query
+    val bq = s.sparkContext.broadcast(qside)
     val adc = vecs.flatMap { case (id, v) =>
-      val codes = new Array[Int](PqSub)
-      var sub = 0
-      while (sub < PqSub) {
-        codes(sub) = nearestSubCell(bcb.value(sub), v, sub)._1; sub += 1
-      }
-      bdt.value.iterator.filter(_._1 != id).map { case (qid, tbl) =>
-        var d = 0.0; var s2 = 0
-        while (s2 < PqSub) { d += tbl(s2)(codes(s2)); s2 += 1 }
-        (qid, id, d)
-      }
+      val cell = bIvf.value.fold(-1L)(nearestCell(_, v))
+      lazy val codes = encode(bcb.value, v)
+      bq.value.iterator
+        .filter { case (qid, cells, _) => qid != id && cells.forall(_.contains(cell)) }
+        .map { case (qid, _, tbl) =>
+          var dist = 0.0; var sub = 0
+          while (sub < PqSub) { dist += tbl(sub)(codes(sub)); sub += 1 }
+          (qid, id, dist)
+        }
     }.toDF("query_id", "vec_id", "adc")
     val w = Window.partitionBy($"query_id").orderBy($"adc".asc, $"vec_id".asc)
-    val shortlist = adc.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= AdcShortlist).select($"query_id", $"vec_id")
-    rerankOn(s, norm, shortlist)
+    rerankOn(s, vecs, adc.withColumn("rk", row_number().over(w))
+      .filter($"rk" <= AdcShortlist).select($"query_id", $"vec_id"))
   }
 
   // --------------------------------------------------- IVF+PQ composed ANN
@@ -1037,102 +1067,44 @@ object Similarity {
     * twin replays the whole composition bit-for-bit. */
   def annIvfPqTopK(s: SparkSession, d: String): DataFrame = {
     val vecs = vecsOf(s, d)
-    annIvfPqTopKOf(s, vecs, lloydCentroids(s, vecs), pqTrain(s, vecs),
-      withNormOf(s, vecs))
+    adcOn(s, vecs, pqTrain(s, vecs), Some(lloydCentroids(s, vecs)))
   }
 
-  private def annIvfPqTopKOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])],
-      cb: Array[Array[Array[Double]]], norm: DataFrame): DataFrame = {
-    import s.implicits._
-    val queries = vecs.filter(_._1 < NumQueries).collect().sortBy(_._1)
-    // per-query (probed cell set, ADC distance table) — one broadcast:
-    // NumQueries × (IvfProbes + PqSub·PqK doubles), constant size
-    val qside: Array[(Long, Set[Long], Array[Array[Double]])] =
-      queries.map { case (qid, qv) =>
-        val cells = cosTo(centroids, qv)
-          .sortBy { case (cid, sim) => (-sim, cid) }
-          .take(IvfProbes).map(_._1).toSet
-        val tbl = Array.tabulate(PqSub, cb(0).length) { (sub, cid) =>
-          var dd = 0.0; var i = 0
-          while (i < PqDim) {
-            val df = qv(sub * PqDim + i) - cb(sub)(cid)(i); dd += df * df; i += 1
-          }
-          dd
-        }
-        (qid, cells, tbl)
-      }
-    val bcCells = s.sparkContext.broadcast(centroids)
-    val bcb = s.sparkContext.broadcast(cb)
-    val bq = s.sparkContext.broadcast(qside)
-    val adc = vecs.flatMap { case (id, v) =>
-      val cell = nearestCell(bcCells.value, v)
-      var codes: Array[Int] = null // encoded lazily, only for probed cells
-      bq.value.iterator
-        .filter { case (qid, cells, _) => qid != id && cells.contains(cell) }
-        .map { case (qid, _, tbl) =>
-          if (codes == null) {
-            codes = new Array[Int](PqSub)
-            var sub = 0
-            while (sub < PqSub) {
-              codes(sub) = nearestSubCell(bcb.value(sub), v, sub)._1; sub += 1
-            }
-          }
-          var d2 = 0.0; var s2 = 0
-          while (s2 < PqSub) { d2 += tbl(s2)(codes(s2)); s2 += 1 }
-          (qid, id, d2)
-        }
-    }.toDF("query_id", "vec_id", "adc")
-    val w = Window.partitionBy($"query_id").orderBy($"adc".asc, $"vec_id".asc)
-    val shortlist = adc.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= AdcShortlist).select($"query_id", $"vec_id")
-    rerankOn(s, norm, shortlist)
-  }
-
-  /** DuckDB twin of [[annIvfPqTopK]]: the [[ivfCorpusCtes]] training +
-    * probe + candidate chain (verbatim from [[annIvfTopKOracle]]), the
-    * `p`-prefixed [[pqCtesBody]] training replay, ADC restricted to the
-    * IVF candidate pairs, then the shortlist and exact re-rank of
-    * [[annPqTopKOracle]]. */
-  val annIvfPqTopKOracle: String =
-    s"""$ivfCorpusCtes,
-       |pr AS (SELECT query_id, cell FROM (
-       |    SELECT vv.vec_id AS query_id, cc.cid AS cell,
-       |      row_number() OVER (PARTITION BY vv.vec_id
-       |        ORDER BY ${dotf("cc.cv", "vv.v")} / (cc.cn * vv.vn) DESC, cc.cid ASC) AS rk
-       |    FROM vv CROSS JOIN c${IvfLloydIters}n cc WHERE vv.vec_id < $NumQueries)
-       |  WHERE rk <= $IvfProbes),
-       |cand AS (SELECT DISTINCT p.query_id, a.vec_id
-       |  FROM asg a JOIN pr p USING (cell) WHERE a.vec_id <> p.query_id),
-       |${pqCtesBody("p")},
-       |qv AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < $NumQueries),
+  /** DuckDB twin of the ADC source: the query distance tables as one
+    * (query, sub, cid) join against the trained codebooks of the PQ chain
+    * (CTE prefix `p` beside the IVF chain), the ADC sum as an ORDERED
+    * subspace fold (bit-parity with the JVM loop) — with `ivf`, only over
+    * the IVF `cand` pairs — and the [[AdcShortlist]] best per query as
+    * `short(query_id, vec_id)`. */
+  private def adcShortSql(ivf: Boolean): String = {
+    val x = if (ivf) "p" else ""
+    val inCand =
+      if (ivf) "\n  JOIN cand c ON c.query_id = d.query_id AND c.vec_id = f.vec_id" else ""
+    s"""qv AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < $NumQueries),
        |qsub AS (SELECT query_id, t.sub AS sub,
        |    v[($PqDim * t.sub + 1):($PqDim * t.sub + $PqDim)] AS qsv
        |  FROM qv, unnest(range($PqSub)) AS t(sub)),
        |dt AS (SELECT q.query_id, q.sub, cb.cid, ${pqL2f("q.qsv", "cb.cv")} AS dist
-       |  FROM qsub q JOIN pcb$PqIters cb ON cb.sub = q.sub),
+       |  FROM qsub q JOIN ${x}cb$PqIters cb ON cb.sub = q.sub),
        |adcl AS (SELECT d.query_id, f.vec_id, list(d.dist ORDER BY f.sub) AS dl
-       |  FROM pfin f JOIN dt d ON d.sub = f.sub AND d.cid = f.cell
-       |  JOIN cand c ON c.query_id = d.query_id AND c.vec_id = f.vec_id
+       |  FROM ${x}fin f JOIN dt d ON d.sub = f.sub AND d.cid = f.cell$inCand
+       |  WHERE f.vec_id <> d.query_id
        |  GROUP BY d.query_id, f.vec_id),
        |short AS (SELECT query_id, vec_id FROM (
        |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
        |      ORDER BY list_reduce(list_prepend(0.0, dl), (a, x) -> a + x) ASC,
        |               vec_id ASC) AS rk
-       |    FROM adcl) WHERE rk <= $AdcShortlist),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-       |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT c.query_id, c.vec_id,
-       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
-       |  FROM short c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+       |    FROM adcl) WHERE rk <= $AdcShortlist)""".stripMargin
+  }
+
+  /** DuckDB twin of [[annIvfPqTopK]]: the IVF candidate source, the
+    * `p`-prefixed [[pqCtesBody]] training replay, the ADC shortlist over
+    * the IVF candidates, and the exact re-rank. */
+  val annIvfPqTopKOracle: String =
+    s"""${ivfCandSql(IvfProbes)},
+       |${pqCtesBody("p")},
+       |${adcShortSql(ivf = true)},
+       |${rerankSql("short")}""".stripMargin
 
   // ------------------------------------------------------- filtered ANN
   /** Probe depth for [[annFilteredTopK]]: filtered search probes DEEPER
@@ -1156,66 +1128,15 @@ object Similarity {
     * are a [[NumQueries]]-row broadcast, and the filter prunes candidates
     * before the re-rank join touches any full-precision vector. */
   def annFilteredTopK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val vecs = vecsOf(s, d)
-    annFilteredTopKOf(s, vecs, lloydCentroids(s, vecs),
-      Tables.embeddings(s, d).select($"vec_id", $"label"), withNormOf(s, vecs))
+    ivfOn(s, vecs, lloydCentroids(s, vecs), FilteredProbes,
+      Some(LabelFilter(labelsOf(s, d), same = true)))
   }
 
-  private def annFilteredTopKOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])],
-      labels: DataFrame, norm: DataFrame): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("vec_id", "cell")
-    val probes = vecs.filter(_._1 < NumQueries).flatMap { case (qid, v) =>
-      cosTo(bc.value, v).sortBy { case (cid, sim) => (-sim, cid) }
-        .take(FilteredProbes).map { case (cid, _) => (qid, cid) }
-    }.toDF("query_id", "cell")
-    val qlab = labels.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"label".as("qlabel"))
-    val cands = assigned.join(broadcast(probes), "cell")
-      .filter($"vec_id" =!= $"query_id")
-      .join(labels, "vec_id")
-      .join(broadcast(qlab), "query_id")
-      .filter($"label" === $"qlabel")
-      .select($"query_id", $"vec_id").distinct()
-    rerankOn(s, norm, cands)
-  }
-
-  /** DuckDB twin of [[annFilteredTopK]]: the [[ivfCorpusCtes]] training
-    * replay with the widened probe ring and the label equi-filter on the
-    * candidate set — everything else verbatim from [[annIvfTopKOracle]]. */
+  /** DuckDB twin of [[annFilteredTopK]]: the IVF candidate source with the
+    * widened probe ring and the same-label relation. */
   val annFilteredTopKOracle: String =
-    s"""$ivfCorpusCtes,
-       |pr AS (SELECT query_id, cell FROM (
-       |    SELECT vv.vec_id AS query_id, cc.cid AS cell,
-       |      row_number() OVER (PARTITION BY vv.vec_id
-       |        ORDER BY ${dotf("cc.cv", "vv.v")} / (cc.cn * vv.vn) DESC, cc.cid ASC) AS rk
-       |    FROM vv CROSS JOIN c${IvfLloydIters}n cc WHERE vv.vec_id < $NumQueries)
-       |  WHERE rk <= $FilteredProbes),
-       |lab AS (SELECT vec_id, label FROM embeddings),
-       |qlab AS (SELECT vec_id AS query_id, label AS qlabel FROM embeddings
-       |  WHERE vec_id < $NumQueries),
-       |cand AS (SELECT DISTINCT p.query_id, a.vec_id
-       |  FROM asg a JOIN pr p USING (cell)
-       |  JOIN lab l ON l.vec_id = a.vec_id
-       |  JOIN qlab ql ON ql.query_id = p.query_id
-       |  WHERE a.vec_id <> p.query_id AND l.label = ql.qlabel),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-       |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT c.query_id, c.vec_id,
-       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
-       |  FROM cand c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+    s"${ivfCandSql(FilteredProbes, Some("="))},\n${rerankSql("cand")}"
 
   /** EXACT filtered ground truth for [[annFilteredTopK]] — brute-force
     * cosine top-k restricted to same-label vectors (the "vector search
@@ -1229,52 +1150,10 @@ object Similarity {
     * an equi-key (a hash join on label with the id inequality as a
     * residual), so each corpus vector scores only against same-label
     * queries. */
-  def annFilteredBruteTopK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    annFilteredBruteTopKOn(s, withNorm(s, d),
-      Tables.embeddings(s, d).select($"vec_id", $"label"))
-  }
+  def annFilteredBruteTopK(s: SparkSession, d: String): DataFrame =
+    bruteOn(s, vecsOf(s, d), Some(LabelFilter(labelsOf(s, d), same = true)))
 
-  private def annFilteredBruteTopKOn(s: SparkSession, norm: DataFrame,
-      labels: DataFrame): DataFrame = {
-    import s.implicits._
-    val e = norm.join(labels, "vec_id")
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"),
-        $"label".as("qlabel"))
-    val scored = e.join(broadcast(q),
-        $"label" === $"qlabel" && $"vec_id" =!= $"query_id")
-      .withColumn("sim",
-        org.apache.spark.sql.graft.GraftFunctions.dot($"qv", $"v") /
-          ($"qnorm" * $"norm"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy(round($"sim", 6).desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= TopK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"sim", 4).as("cos_sim"))
-  }
-
-  /** DuckDB twin of [[annFilteredBruteTopK]]: [[annBruteTopKOracle]]
-    * with the label carried through and the same-label equi-filter on
-    * the scored pairs. */
-  val annFilteredBruteTopKOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-       |  FROM embeddings),
-       |n AS (SELECT vec_id, v, label, sqrt(list_dot_product(v, v)) AS norm
-       |  FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm,
-       |    label AS qlabel FROM n WHERE vec_id < $NumQueries),
-       |scored AS (SELECT query_id, vec_id,
-       |    list_dot_product(qv, v) / (qnorm * norm) AS sim
-       |  FROM n CROSS JOIN q
-       |  WHERE vec_id <> query_id AND label = qlabel),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+  val annFilteredBruteTopKOracle: String = bruteSql(Some("="))
 
   // -------------------------------------------------- hard-negative mining
   /** Hard-negative mining — the contrastive-training data op: for each
@@ -1294,66 +1173,15 @@ object Similarity {
     * frame, [[NumQueries]]-row broadcast query labels, candidates pruned
     * before any full-precision vector moves. */
   def annHardNegatives(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val vecs = vecsOf(s, d)
-    annHardNegativesOf(s, vecs, lloydCentroids(s, vecs),
-      Tables.embeddings(s, d).select($"vec_id", $"label"), withNormOf(s, vecs))
-  }
-
-  private def annHardNegativesOf(s: SparkSession,
-      vecs: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      centroids: Array[(Long, Array[Double])],
-      labels: DataFrame, norm: DataFrame): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("vec_id", "cell")
-    val probes = vecs.filter(_._1 < NumQueries).flatMap { case (qid, v) =>
-      cosTo(bc.value, v).sortBy { case (cid, sim) => (-sim, cid) }
-        .take(FilteredProbes).map { case (cid, _) => (qid, cid) }
-    }.toDF("query_id", "cell")
-    val qlab = labels.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"label".as("qlabel"))
-    val cands = assigned.join(broadcast(probes), "cell")
-      .filter($"vec_id" =!= $"query_id")
-      .join(labels, "vec_id")
-      .join(broadcast(qlab), "query_id")
-      .filter($"label" =!= $"qlabel")
-      .select($"query_id", $"vec_id").distinct()
-    rerankOn(s, norm, cands)
+    ivfOn(s, vecs, lloydCentroids(s, vecs), FilteredProbes,
+      Some(LabelFilter(labelsOf(s, d), same = false)))
   }
 
   /** DuckDB twin of [[annHardNegatives]]: [[annFilteredTopKOracle]] with
-    * the label filter negated — training replay, widened probe ring, and
-    * re-rank verbatim. */
+    * the label relation negated. */
   val annHardNegativesOracle: String =
-    s"""$ivfCorpusCtes,
-       |pr AS (SELECT query_id, cell FROM (
-       |    SELECT vv.vec_id AS query_id, cc.cid AS cell,
-       |      row_number() OVER (PARTITION BY vv.vec_id
-       |        ORDER BY ${dotf("cc.cv", "vv.v")} / (cc.cn * vv.vn) DESC, cc.cid ASC) AS rk
-       |    FROM vv CROSS JOIN c${IvfLloydIters}n cc WHERE vv.vec_id < $NumQueries)
-       |  WHERE rk <= $FilteredProbes),
-       |lab AS (SELECT vec_id, label FROM embeddings),
-       |qlab AS (SELECT vec_id AS query_id, label AS qlabel FROM embeddings
-       |  WHERE vec_id < $NumQueries),
-       |cand AS (SELECT DISTINCT p.query_id, a.vec_id
-       |  FROM asg a JOIN pr p USING (cell)
-       |  JOIN lab l ON l.vec_id = a.vec_id
-       |  JOIN qlab ql ON ql.query_id = p.query_id
-       |  WHERE a.vec_id <> p.query_id AND l.label <> ql.qlabel),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-       |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT c.query_id, c.vec_id,
-       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
-       |  FROM cand c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+    s"${ivfCandSql(FilteredProbes, Some("<>"))},\n${rerankSql("cand")}"
 
   /** EXACT hard-negative ground truth — brute-force cosine top-k among
     * DIFFERENT-label vectors ([[annFilteredBruteTopK]] with the label
@@ -1362,51 +1190,10 @@ object Similarity {
     * predicate keeps most of the corpus eligible, so the broadcast join
     * carries the inequality as a residual over the [[NumQueries]]-row
     * build side exactly like the unfiltered brute baseline. */
-  def annHardNegBruteTopK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    annHardNegBruteTopKOn(s, withNorm(s, d),
-      Tables.embeddings(s, d).select($"vec_id", $"label"))
-  }
+  def annHardNegBruteTopK(s: SparkSession, d: String): DataFrame =
+    bruteOn(s, vecsOf(s, d), Some(LabelFilter(labelsOf(s, d), same = false)))
 
-  private def annHardNegBruteTopKOn(s: SparkSession, norm: DataFrame,
-      labels: DataFrame): DataFrame = {
-    import s.implicits._
-    val e = norm.join(labels, "vec_id")
-    val q = e.filter($"vec_id" < NumQueries)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"norm".as("qnorm"),
-        $"label".as("qlabel"))
-    val scored = e.join(broadcast(q),
-        $"label" =!= $"qlabel" && $"vec_id" =!= $"query_id")
-      .withColumn("sim",
-        org.apache.spark.sql.graft.GraftFunctions.dot($"qv", $"v") /
-          ($"qnorm" * $"norm"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy(round($"sim", 6).desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= TopK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"rank",
-        round($"sim", 4).as("cos_sim"))
-  }
-
-  /** DuckDB twin of [[annHardNegBruteTopK]]: [[annFilteredBruteTopKOracle]]
-    * with the label equality negated. */
-  val annHardNegBruteTopKOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-       |  FROM embeddings),
-       |n AS (SELECT vec_id, v, label, sqrt(list_dot_product(v, v)) AS norm
-       |  FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm,
-       |    label AS qlabel FROM n WHERE vec_id < $NumQueries),
-       |scored AS (SELECT query_id, vec_id,
-       |    list_dot_product(qv, v) / (qnorm * norm) AS sim
-       |  FROM n CROSS JOIN q
-       |  WHERE vec_id <> query_id AND label <> qlabel),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+  val annHardNegBruteTopKOracle: String = bruteSql(Some("<>"))
 
   // ---------------------------------------------- contrastive triplet table
   /** Contrastive-training triplet assembly — the op that turns a labeled,
@@ -1469,15 +1256,9 @@ object Similarity {
     * |cells·labels|-row window. Nothing here grows super-linearly. */
   def clusterProfile(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val vecs = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
-    val centroids = lloydCentroids(s, vecs)
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("vec_id", "cell")
-    val labeled = assigned
-      .join(Tables.embeddings(s, d).select($"vec_id", $"label"), "vec_id")
+    val vecs = vecsOf(s, d)
+    val labeled = assignCells(s, vecs, lloydCentroids(s, vecs))
+      .join(labelsOf(s, d), "vec_id")
     val cl = labeled.groupBy($"cell", $"label").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy($"cell").orderBy($"cnt".desc, $"label".asc)
     cl.withColumn("rk", row_number().over(w))
@@ -1526,13 +1307,8 @@ object Similarity {
     * output |cells| rows whatever the corpus. */
   def embedDriftReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val vecs = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
-    val centroids = lloydCentroids(s, vecs.filter(_._1 % 2 == 0))
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("vec_id", "cell")
+    val vecs = vecsOf(s, d)
+    val assigned = assignCells(s, vecs, lloydCentroids(s, vecs.filter(_._1 % 2 == 0)))
     val h = assigned.groupBy($"cell").agg(
       sum(when($"vec_id" % 2 === 0, 1L).otherwise(0L)).as("n_train"),
       sum(when($"vec_id" % 2 =!= 0, 1L).otherwise(0L)).as("n_ingest"))
@@ -1587,13 +1363,8 @@ object Similarity {
 
   def clusterTerms(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val vecs = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
-    val centroids = lloydCentroids(s, vecs)
-    val bc = s.sparkContext.broadcast(centroids)
-    val assigned = vecs.map { case (id, v) => (id, nearestCell(bc.value, v)) }
-      .toDF("doc_id", "cell")
+    val vecs = vecsOf(s, d)
+    val assigned = assignCells(s, vecs, lloydCentroids(s, vecs)).toDF("doc_id", "cell")
     val toks = Tables.documents(s, d).select($"doc_id",
       explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
     val tf = toks.join(assigned, "doc_id")
@@ -1667,8 +1438,7 @@ object Similarity {
     * ROUNDED margin so the threshold can never split an ulp. */
   def bitextMarginPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions.dot
-    val e = withNorm(s, d)
+    val e = withNormOf(s, vecsOf(s, d))
     val x = e.filter($"vec_id" % 2 === 0 && $"vec_id" < BitextQueries)
       .select($"vec_id".as("src_id"), $"v".as("xv"), $"norm".as("xnorm"))
     val y = e.filter($"vec_id" % 2 === 1)
@@ -1757,57 +1527,50 @@ object Similarity {
     * outputs. */
   def annRecallReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // r12 (guide §1.2 / §2.4): run separately, the nine legs shared
-    // nothing — nine embeddings scans, the SAME full-corpus IVF centroids
-    // trained four times (ivf, ivfpq, filtered, hardneg) and the SAME PQ
-    // codebooks twice (pq, ivfpq). The report still RUNS every leg it
-    // measures, but computes the shared corpus-side inputs ONCE: the
-    // decoded vector frame is persisted for the duration of the query,
-    // each deterministic training runs once (bit-identical inputs ⇒
-    // bit-identical codebooks ⇒ unchanged leg outputs — the standalone
-    // ann_* queries are untouched and still train themselves). The 6-row
-    // result seals via localCheckpoint and the cache is released at exit:
-    // nothing survives the query, no cross-run state.
-    val vecs = vecsOf(s, d).persist()
-    val norm = withNormOf(s, vecs)
-    val labels = Tables.embeddings(s, d).select($"vec_id", $"label")
-    val centroids = lloydCentroids(s, vecs)
-    val cb = pqTrain(s, vecs)
-    val brute = annBruteTopKOn(s, norm).select($"query_id", $"neighbor_id")
-      .localCheckpoint()
-    def legVs(method: String, df: DataFrame, truth: DataFrame): DataFrame = {
-      val expected = truth.agg(count(lit(1)).as("n_expected"))
-      df.select($"query_id", $"neighbor_id")
-        .join(truth, Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("n_matched"))
-        .crossJoin(broadcast(expected))
-        .select(lit(method).as("method"), $"n_matched", $"n_expected",
-          expr("(n_matched * 1000000) div n_expected").as("recall_micros"))
+    withRecallLegs(s, d) { legs =>
+      legs.map { case (method, leg, truth) =>
+        val pairs = truth.select($"query_id", $"neighbor_id")
+        leg.select($"query_id", $"neighbor_id")
+          .join(pairs, Seq("query_id", "neighbor_id"))
+          .agg(count(lit(1)).as("n_matched"))
+          .crossJoin(broadcast(pairs.agg(count(lit(1)).as("n_expected"))))
+          .select(lit(method).as("method"), $"n_matched", $"n_expected",
+            expr("(n_matched * 1000000) div n_expected").as("recall_micros"))
+      }.reduce(_ unionAll _).localCheckpoint()
     }
-    def leg(method: String, df: DataFrame): DataFrame =
-      legVs(method, df, brute)
-    // the filtered leg measures against the FILTERED brute truth — the
-    // unfiltered truth would punish the index for honoring the predicate
-    val filteredTruth = annFilteredBruteTopKOn(s, norm, labels)
-      .select($"query_id", $"neighbor_id")
-    // likewise the hard-negative leg: truth = the negated-predicate brute
-    val hardnegTruth = annHardNegBruteTopKOn(s, norm, labels)
-      .select($"query_id", $"neighbor_id")
-    val report =
-      leg("ivf", annIvfTopKOf(s, vecs, centroids, norm))
-        .unionAll(leg("ivfpq", annIvfPqTopKOf(s, vecs, centroids, cb, norm)))
-        .unionAll(leg("lsh", annLshTopKOf(s, vecs, norm)))
-        .unionAll(leg("pq", annPqTopKOf(s, vecs, cb, norm)))
-        .unionAll(legVs("filtered",
-          annFilteredTopKOf(s, vecs, centroids, labels, norm), filteredTruth))
-        .unionAll(legVs("hardneg",
-          annHardNegativesOf(s, vecs, centroids, labels, norm), hardnegTruth))
-    val sealed0 = report.localCheckpoint()
-    vecs.unpersist(false)
-    sealed0
   }
 
-  /** DuckDB twin of [[annRecallReport]] — the five index oracles and
+  /** The report's legs as (method, leg, truth), handed to `f` while their
+    * shared corpus-side inputs live. Run separately, the legs would scan
+    * the embeddings once each, train the SAME IVF centroids four times and
+    * the SAME PQ codebooks twice; here the decoded vectors are persisted
+    * and each deterministic training runs once (bit-identical inputs, so
+    * bit-identical codebooks and unchanged leg rows — SimilaritySpec pins
+    * every leg to its standalone query). The brute truth feeds four legs,
+    * so it is materialized once. `f` must materialize what it keeps: the
+    * vectors are released when it returns or throws. */
+  private[graft] def withRecallLegs[A](s: SparkSession, d: String)(
+      f: Seq[(String, DataFrame, DataFrame)] => A): A = {
+    val vecs = vecsOf(s, d).persist()
+    try {
+      val centroids = lloydCentroids(s, vecs)
+      val cb = pqTrain(s, vecs)
+      val brute = bruteOn(s, vecs, None).localCheckpoint()
+      // the filtered legs measure against their own brute truths — the
+      // unfiltered truth would punish an index for honoring the predicate
+      val same = Some(LabelFilter(labelsOf(s, d), same = true))
+      val other = Some(LabelFilter(labelsOf(s, d), same = false))
+      f(Seq(
+        ("ivf", ivfOn(s, vecs, centroids, IvfProbes, None), brute),
+        ("ivfpq", adcOn(s, vecs, cb, Some(centroids)), brute),
+        ("lsh", lshOn(s, vecs), brute),
+        ("pq", adcOn(s, vecs, cb, None), brute),
+        ("filtered", ivfOn(s, vecs, centroids, FilteredProbes, same), bruteOn(s, vecs, same)),
+        ("hardneg", ivfOn(s, vecs, centroids, FilteredProbes, other), bruteOn(s, vecs, other))))
+    } finally vecs.unpersist(false)
+  }
+
+  /** DuckDB twin of [[annRecallReport]] — the six index oracles and
     * their truth oracles as derived tables (nested WITH), joined on
     * (query, neighbor) exactly as the engine legs. `lazy` because it
     * composes [[annPqTopKOracle]], declared further down the object —
@@ -1840,33 +1603,8 @@ object Similarity {
     * exact re-rank of the shortlist exactly as the IVF/LSH twins. */
   val annPqTopKOracle: String =
     s"""$pqCtes,
-       |qv AS (SELECT vec_id AS query_id, v FROM e WHERE vec_id < $NumQueries),
-       |qsub AS (SELECT query_id, t.sub AS sub,
-       |    v[($PqDim * t.sub + 1):($PqDim * t.sub + $PqDim)] AS qsv
-       |  FROM qv, unnest(range($PqSub)) AS t(sub)),
-       |dt AS (SELECT q.query_id, q.sub, cb.cid, ${pqL2f("q.qsv", "cb.cv")} AS dist
-       |  FROM qsub q JOIN cb$PqIters cb ON cb.sub = q.sub),
-       |adcl AS (SELECT d.query_id, f.vec_id, list(d.dist ORDER BY f.sub) AS dl
-       |  FROM fin f JOIN dt d ON d.sub = f.sub AND d.cid = f.cell
-       |  WHERE f.vec_id <> d.query_id
-       |  GROUP BY d.query_id, f.vec_id),
-       |short AS (SELECT query_id, vec_id FROM (
-       |    SELECT query_id, vec_id, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY list_reduce(list_prepend(0.0, dl), (a, x) -> a + x) ASC,
-       |               vec_id ASC) AS rk
-       |    FROM adcl) WHERE rk <= $AdcShortlist),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
-       |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
-       |      WHERE vec_id < $NumQueries),
-       |scored AS (SELECT c.query_id, c.vec_id,
-       |    list_dot_product(q.qv, n.v) / (q.qnorm * n.norm) AS sim
-       |  FROM short c JOIN n ON n.vec_id = c.vec_id JOIN q ON q.query_id = c.query_id),
-       |ranked AS (SELECT query_id, vec_id, sim,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(sim, 6) DESC, vec_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id AS neighbor_id, rank, round(sim, 4) AS cos_sim
-       |FROM ranked WHERE rank <= $TopK""".stripMargin
+       |${adcShortSql(ivf = false)},
+       |${rerankSql("short")}""".stripMargin
 
   // ------------------------------------------- power iteration (top PC)
   /** Power-iteration rounds. Fixed (not convergence-tested) so the
@@ -2000,10 +1738,7 @@ object Similarity {
     * |[[MrlDims]]| rows. */
   def matryoshkaReport(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.GraftFunctions.dot
-    val base = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v0"))
+    val base = vecsOf(s, d).toDF("vec_id", "v0")
     def scoredAt(dim: Int): DataFrame = {
       val e = base.select($"vec_id", slice($"v0", 1, dim).as("v"))
         .withColumn("norm", sqrt(dot($"v", $"v")))

@@ -396,7 +396,9 @@ case class BloomContains(left: Expression, right: Expression, k: Int, log2m: Int
   * two-pointer merge intersection of two sorted distinct long arrays — the
   * triangle-closure hot path, where `array_intersect` paid a hash-set
   * build per oriented edge. PRECONDITION (caller-owned): both inputs
-  * sorted ascending and distinct. */
+  * sorted ascending and distinct — so it is internal, reached only through
+  * [[GraftFunctions.sortedIntersect]] and never registered for SQL, where
+  * no caller could be held to it. */
 case class SortedLongIntersect(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] =
@@ -426,7 +428,12 @@ case class SortedLongIntersect(left: Expression, right: Expression)
   * aggregation buffer BEFORE any size filter can drop it — a pathological
   * mega-group (one basket with 10⁷ members at 100 TB) is an executor OOM.
   * This buffer is O(cap) by construction, map-side partials included
-  * (guide §5 memory / §2 skew). */
+  * (guide §5 memory / §2 skew).
+  *
+  * Internal, like [[SortedLongIntersect]]: which cap+1 values an over-cap
+  * group keeps depends on partial merge order, so it is reached only
+  * through [[GraftFunctions.cappedSortedSet]], whose callers drop those
+  * groups, and never registered for SQL. */
 case class CappedDistinctSortedLongs(
     child: Expression,
     cap: Int,
@@ -606,19 +613,6 @@ object GraftFunctions {
           if (exprs.length > 2) foldableInt("graft_bloom_contains", exprs(2)) else 5,
           if (exprs.length > 3) foldableInt("graft_bloom_contains", exprs(3)) else 20)
       }, "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_sorted_intersect takes 2 arguments, got ${exprs.length}")
-        SortedLongIntersect(exprs.head, exprs(1))
-      }, "built-in")
-    reg.createOrReplaceTempFunction("graft_capped_set",
-      exprs => {
-        require(exprs.length == 2,
-          s"graft_capped_set takes 2 arguments, got ${exprs.length}")
-        CappedDistinctSortedLongs(exprs.head,
-          foldableInt("graft_capped_set", exprs(1)))
-      }, "built-in")
   }
 }
 
@@ -674,17 +668,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject(ext, "graft_dot", classOf[ArrayDotProduct], exprs => {
       require(exprs.length == 2, s"graft_dot takes 2 arguments, got ${exprs.length}")
       ArrayDotProduct(exprs.head, exprs(1))
-    })
-    inject(ext, "graft_sorted_intersect", classOf[SortedLongIntersect], exprs => {
-      require(exprs.length == 2,
-        s"graft_sorted_intersect takes 2 arguments, got ${exprs.length}")
-      SortedLongIntersect(exprs.head, exprs(1))
-    })
-    inject(ext, "graft_capped_set", classOf[CappedDistinctSortedLongs], exprs => {
-      require(exprs.length == 2,
-        s"graft_capped_set takes 2 arguments, got ${exprs.length}")
-      CappedDistinctSortedLongs(exprs.head,
-        foldableInt("graft_capped_set", exprs(1)))
     })
   }
 }

@@ -160,9 +160,20 @@ class ExpressionsSpec extends SparkTestBase {
       assert(m === m.sorted, "result must stay sorted")
     }
     // null propagation
-    val row = spark.sql(
-      "SELECT graft_sorted_intersect(CAST(NULL AS ARRAY<BIGINT>), array(1L))").collect().head
+    val row = Seq(1L).toDF("x")
+      .select(GraftFunctions.sortedIntersect(lit(null).cast("array<bigint>"), array($"x")))
+      .collect().head
     assert(row.isNullAt(0))
+  }
+
+  test("the precondition-carrying functions are internal: register() leaves them out of SQL") {
+    GraftFunctions.register(spark)
+    Seq("graft_sorted_intersect", "graft_capped_set").foreach { n =>
+      assert(!spark.catalog.functionExists(n), n)
+      intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $n(array(1L), array(1L))").collect()
+      }
+    }
   }
 
   test("graft_capped_set equals sort_array(collect_set) under the cap; buffer is bounded") {

@@ -141,11 +141,14 @@ class GraphSpec extends SparkTestBase {
     // still holds label 2 (the min within 12 hops), so the one-extra-round
     // probe must throw instead of silently shipping within-12-hop labels
     val edges = (1L to 13L).map(i => (i, i + 1)).toDF("u", "v")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalStateException] {
       Graph.componentsOf(spark, edges).collect()
     }
     assert(ex.getMessage.contains("did not converge"))
     assert(ex.getMessage.contains("star-contraction"))
+    // the throw path releases what the loop held (placed pairs, degrees)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
   }
 
   test("kcore: peeling cascades and reports in-core degrees exactly") {

@@ -27,7 +27,7 @@ class PlanCensusSpec extends SparkTestBase {
       // cleared per query: a lingering cache would swap a scan subtree for
       // InMemoryRelation and make the census depend on suite order
       spark.catalog.clearCache()
-      name -> PlanCensus.of(fn(spark, sf))._1
+      name -> PlanCensus.of(fn(spark, sf))
     }
     val actual = censuses.map { case (name, c) => c.line(name) }
 

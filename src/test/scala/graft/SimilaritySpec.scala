@@ -19,6 +19,31 @@ class SimilaritySpec extends SparkTestBase {
     }
   }
 
+  test("recall report: each shared-input leg equals its standalone ann_* query") {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int, Double)] =
+      df.select("query_id", "neighbor_id", "rank", "cos_sim")
+        .as[(Long, Long, Int, Double)].collect().toSet
+    // the legs run on the report's persisted vectors, once-trained
+    // centroids and once-trained codebooks
+    val shared = Similarity.withRecallLegs(spark, sf) { legs =>
+      legs.map { case (method, leg, truth) => (method, rows(leg), rows(truth)) }
+    }
+    assert(shared.map(_._1) === Seq("ivf", "ivfpq", "lsh", "pq", "filtered", "hardneg"))
+    val standalone = Map(
+      "ivf" -> Similarity.annIvfTopK _, "ivfpq" -> Similarity.annIvfPqTopK _,
+      "lsh" -> Similarity.annLshTopK _, "pq" -> Similarity.annPqTopK _,
+      "filtered" -> Similarity.annFilteredTopK _, "hardneg" -> Similarity.annHardNegatives _)
+    val brute = rows(Similarity.annBruteTopK(spark, sf))
+    val truths = Map(
+      "filtered" -> rows(Similarity.annFilteredBruteTopK(spark, sf)),
+      "hardneg" -> rows(Similarity.annHardNegBruteTopK(spark, sf))).withDefaultValue(brute)
+    shared.foreach { case (method, leg, truth) =>
+      assert(leg.nonEmpty && truth.nonEmpty, method)
+      assert(leg === rows(standalone(method)(spark, sf)), s"$method leg")
+      assert(truth === truths(method), s"$method truth")
+    }
+  }
+
   test("LSH ANN recall@10 vs brute force is useful") {
     val brute = Similarity.annBruteTopK(spark, sf)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet

@@ -29,6 +29,13 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("the precondition-carrying functions are not injected") {
+    val reg = injectedRegistry()
+    Seq("graft_sorted_intersect", "graft_capped_set").foreach { n =>
+      assert(!reg.functionExists(FunctionIdentifier(n)), n)
+    }
+  }
+
   test("extension-injected graft_minhash honors k and rejects a non-foldable k") {
     val reg = injectedRegistry()
     val builder = reg.lookupFunctionBuilder(FunctionIdentifier("graft_minhash")).get
