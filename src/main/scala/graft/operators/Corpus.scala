@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Tables
@@ -399,7 +399,7 @@ object Corpus {
     // part of the one plan, so no separate driver-side count() action/scan
     val n = docs.agg(count(lit(1)).cast("double").as("n_total"))
     val words = docs.select($"doc_id",
-      explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("term"))
+      explode(TextOps.tokens).as("term"))
     val tf = words.groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy($"doc_id").orderBy($"tfidf".desc, $"term".asc)
@@ -421,8 +421,8 @@ object Corpus {
     *
     * Shape: explode → vocabulary count (two-phase) → word join back (the
     * vocabulary is corpus-proportional — no broadcast hint, AQE sizes it,
-    * and hot words like stop-words are exactly the skew-join-split case
-    * rehearsed in SCALE_r5.md) → per-doc aggregate. N and V ride one
+    * and hot words like stop-words are exactly the case AQE's skew-join
+    * split handles) → per-doc aggregate. N and V ride one
     * broadcast single-row aggregate (the scalar-subquery shape).
     * Float note: the per-doc sum of logs associates differently in DuckDB
     * than in Spark's partial aggregation; bounded by ulps and absorbed by
@@ -433,7 +433,7 @@ object Corpus {
   private[graft] def lmBitsOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val words = docs.select($"doc_id",
-      explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
+      explode(TextOps.tokens).as("word"))
     val c = words.groupBy($"word").agg(count(lit(1)).as("c"))
     val nv = c.agg(sum($"c").cast("double").as("n_total"),
       count(lit(1)).cast("double").as("v_total"))
@@ -447,8 +447,8 @@ object Corpus {
   /** DuckDB twin of [[lmBits]] — ln(x)/ln(2) mirrors Spark's
     * `log(base, x)` evaluation shape. */
   val lmBitsOracle: String =
-    """WITH tok AS (SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS word
+    s"""WITH tok AS (SELECT doc_id,
+      |    unnest(${TextOps.tokensSql}) AS word
       |  FROM documents),
       |c AS (SELECT word, count(*) AS c FROM tok GROUP BY word),
       |t AS (SELECT CAST(sum(c) AS DOUBLE) AS n_total,
@@ -469,7 +469,7 @@ object Corpus {
   private[graft] def knPairsOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
-      .withColumn("t", expr("filter(split(text, '\\\\s+'), x -> x <> '')"))
+      .withColumn("t", TextOps.tokens)
       .select($"doc_id", explode(expr(
         """zip_with(slice(t, 1, greatest(size(t) - 1, 0)),
           |         slice(t, 2, greatest(size(t) - 1, 0)),
@@ -523,7 +523,7 @@ object Corpus {
     * left-associated probability expression. */
   val knBigramOracle: String =
     s"""WITH d AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
+       |    ${TextOps.tokensSql} AS t
        |  FROM documents),
        |pp AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
        |    unnest(t[2:len(t)]) AS w2 FROM d WHERE len(t) >= 2),
@@ -570,7 +570,7 @@ object Corpus {
     * association differences are absorbed by the shared 4-dp round. */
   val knScoreOracle: String =
     s"""WITH d AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
+       |    ${TextOps.tokensSql} AS t
        |  FROM documents),
        |pp AS (SELECT doc_id, unnest(t[1:len(t)-1]) AS w1,
        |    unnest(t[2:len(t)]) AS w2 FROM d WHERE len(t) >= 2),
@@ -637,7 +637,7 @@ object Corpus {
     * plus `quantile_cont` cut points over the same ×10⁴ integers. */
   val ccnetBucketsOracle: String =
     s"""WITH tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word
+       |    unnest(${TextOps.tokensSql}) AS word
        |  FROM documents),
        |c AS (SELECT word, count(*) AS c FROM tok GROUP BY word),
        |t AS (SELECT CAST(sum(c) AS DOUBLE) AS n_total,
@@ -660,81 +660,141 @@ object Corpus {
        |       ELSE 'middle' END AS bucket
        |FROM bx JOIN thr USING (lang)""".stripMargin
 
-  /** BM25 retrieval top-k (Robertson & Zaragoza 2009, "The Probabilistic
-    * Relevance Framework: BM25 and Beyond" — public Okapi BM25): score
-    * every document against a fixed query-term set and return the K best.
-    * This is the retrieval primitive behind targeted selection and
-    * retrieval-based decontamination (find the corpus docs most similar to
-    * an eval/target query before a human or a stronger scorer looks at
-    * them). k1 = 1.2, b = 0.75 — the standard defaults.
+  // ------------------------------------------------------ BM25 retrieval
+  /** The retrieval family — [[bm25TopK]], [[rm3Expand]]'s two passes,
+    * [[hybridRrfTopK]]'s lexical leg and the [[retrievalEvalReport]]
+    * meter — runs on ONE Okapi BM25 scorer (Robertson & Zaragoza 2009,
+    * "The Probabilistic Relevance Framework: BM25 and Beyond"; k1 = 1.2,
+    * b = 0.75, the standard defaults), [[bm25Of]], and its DuckDB twin
+    * [[bm25Sql]] over the [[bm25PrefixSql]] token/length CTEs. A query is
+    * a broadcast term frame: `word` alone for one query, or
+    * (query_id, word) for per-query terms; the scorer groups by every
+    * term-frame column except `word`, plus doc_id, and rounds the per-doc
+    * sum to 4 dp.
     *
-    * Scale shape: tokens are FILTERED to the query terms before any
-    * aggregate, so the tf table is |docs touching a query term| not
-    * |tokens|; df (≤ |query| rows) and the (N, avgdl) scalar are broadcast;
-    * doc length joins tf on doc_id (the one corpus-sized shuffle). The
-    * top-k is `orderBy.limit` → TakeOrderedAndProject: each partition
-    * keeps K rows, the driver merges — no global sort shuffle. Ranking
-    * compares the ×10⁴ INTEGER of the 4dp-rounded score with doc_id as
-    * the total-order tie-break, so engine and oracle cut the same K docs
-    * (the house integer-space-threshold rule). */
+    * There is one rank key, [[bm25Rank]] (its twin [[bm25RankSql]]): the
+    * ×10⁴ INTEGER of the 4dp score, with doc_id as the total-order
+    * tie-break. Engine and oracle sum the per-term weights in different
+    * orders, so the raw doubles may differ in the last ulps; ranking on
+    * the snapped integer is what makes both engines cut the same K docs
+    * (the house integer-space-threshold rule), and every cut, rank window
+    * and meter reads that one key.
+    *
+    * Scale shape: tokens are FILTERED to the query terms by the broadcast
+    * term-frame join before any aggregate, so the tf table is |docs
+    * touching a query term| not |tokens|; df (≤ |terms| rows) and the
+    * (N, avgdl) scalar are broadcast; doc length joins tf on doc_id (the
+    * one corpus-sized shuffle). */
   val Bm25K1 = 1.2
   val Bm25B = 0.75
   val Bm25TopK = 50
   val Bm25Query: Seq[String] = Seq("spark", "vector", "query")
 
+  /** (doc_id, word) token stream of a (doc_id, text) frame. */
+  private def wordsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(TextOps.tokens).as("word"))
+
+  /** Doc lengths (doc_id, dl) of a token stream and the one-row
+    * (n_docs, avgdl) scalar over them. */
+  private def docLengthsOf(toks: DataFrame): (DataFrame, DataFrame) = {
+    val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+    (dl, dl.agg(count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl")))
+  }
+
+  /** The Okapi BM25 weight of one (doc, term) row carrying tf, df, dl,
+    * n_docs and avgdl — the expression text [[bm25Sql]] mirrors term for
+    * term, in the same association order. */
+  private def bm25Term: Column =
+    log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1) *
+      (col("tf") * (Bm25K1 + 1)) /
+      (col("tf") + lit(Bm25K1) *
+        (lit(1 - Bm25B) + lit(Bm25B) * col("dl") / col("avgdl")))
+
+  /** BM25 of every doc of the (doc_id, word) stream `toks` against the
+    * term frame `terms` (broadcast; `word` plus any query keys): tf per
+    * (keys, doc, word), df per (keys, word), the doc lengths and
+    * (N, avgdl) of the whole stream; one row per (keys, doc_id) touching
+    * a term, `bm25` rounded to 4 dp. */
+  private[graft] def bm25Of(toks: DataFrame, terms: DataFrame): DataFrame = {
+    val termKeys = terms.columns.toSeq.map(col)
+    val docKeys = terms.columns.toSeq.filter(_ != "word").map(col) :+ col("doc_id")
+    val (dl, stats) = docLengthsOf(toks)
+    val tf = toks.join(broadcast(terms), "word")
+      .groupBy(docKeys :+ col("word"): _*).agg(count(lit(1)).as("tf"))
+    val df = tf.groupBy(termKeys: _*).agg(count(lit(1)).as("df"))
+    tf.join(broadcast(df), terms.columns.toSeq)
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .groupBy(docKeys: _*).agg(round(sum(bm25Term), 4).as("bm25"))
+  }
+
+  /** The one BM25 rank key: ×10⁴ integer of the 4dp score. */
+  private[graft] def bm25Rank: Column = expr("cast(round(bm25 * 10000) as bigint)")
+
+  /** Top `k` rows of a scored frame by ([[bm25Rank]] DESC, doc_id) — a
+    * TakeOrderedAndProject: each partition keeps K rows, the driver
+    * merges, no global sort shuffle. */
+  private def bm25Cut(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(bm25Rank.desc, col("doc_id").asc).limit(k)
+
+  /** DuckDB twin of [[wordsOf]] + [[docLengthsOf]]: CTEs `tok`, `dl`, `st`. */
+  private val bm25PrefixSql: String =
+    s"""tok AS (SELECT doc_id,
+       |    unnest(${TextOps.tokensSql}) AS word
+       |  FROM documents),
+       |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
+       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl)""".stripMargin
+
+  /** DuckDB twin of [[bm25Of]]: a SELECT of (keys, doc_id, bm25) scoring
+    * `tok` against the relation `terms`, whose columns are `keys` plus
+    * `word`. df counts a term's (keys, word) partition of the tf rows. */
+  private def bm25Sql(terms: String, keys: Seq[String] = Nil): String = {
+    val byDoc = (keys :+ "doc_id").mkString(", ")
+    s"""SELECT $byDoc,
+       |  round(sum(
+       |    ln((st.n_docs - df + 0.5) / (df + 0.5) + 1)
+       |      * (tf * ($Bm25K1 + 1))
+       |      / (tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl.dl / st.avgdl))
+       |  ), 4) AS bm25
+       |FROM (SELECT *, count(*) OVER (PARTITION BY ${(keys :+ "word").mkString(", ")}) AS df
+       |  FROM (SELECT $byDoc, word, count(*) AS tf
+       |    FROM tok JOIN $terms USING (word) GROUP BY $byDoc, word))
+       |JOIN dl USING (doc_id) CROSS JOIN st
+       |GROUP BY $byDoc""".stripMargin
+  }
+
+  /** DuckDB twin of [[bm25Rank]]. */
+  private val bm25RankSql = "CAST(round(bm25 * 10000) AS BIGINT)"
+
+  /** DuckDB twin of [[bm25Cut]] over the scored relation `from`. */
+  private def bm25CutSql(from: String, k: Int): String =
+    s"SELECT doc_id, bm25 FROM $from ORDER BY $bm25RankSql DESC, doc_id LIMIT $k"
+
+  /** The single query as a term relation. */
+  private val bm25QuerySql: String =
+    s"SELECT unnest([${Bm25Query.map(t => s"'$t'").mkString(", ")}]) AS word"
+
+  /** BM25 retrieval top-k: score every document against the fixed query
+    * [[Bm25Query]] and return the [[Bm25TopK]] best — the retrieval
+    * primitive behind targeted selection and retrieval-based
+    * decontamination (find the corpus docs most similar to an
+    * eval/target query before a human or a stronger scorer looks at
+    * them). */
   def bm25TopK(s: SparkSession, d: String): DataFrame =
     bm25TopKOf(Tables.documents(s, d))
 
   private[graft] def bm25TopKOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val toks = docs.select($"doc_id",
-      explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
-    val dl = toks.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    val qtf = toks.filter($"word".isin(Bm25Query: _*))
-      .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-    val dfreq = qtf.groupBy($"word").agg(count(lit(1)).as("df"))
-    val scored = qtf.join(broadcast(dfreq), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf", log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1))
-      .withColumn("s",
-        $"idf" * ($"tf" * (Bm25K1 + 1)) /
-          ($"tf" + lit(Bm25K1) * (lit(1 - Bm25B) + lit(Bm25B) * $"dl" / $"avgdl")))
-      .groupBy($"doc_id").agg(round(sum($"s"), 4).as("bm25"))
-    scored
-      .withColumn("bx", expr("cast(round(bm25 * 10000) as bigint)"))
-      .orderBy($"bx".desc, $"doc_id".asc)
-      .limit(Bm25TopK)
+    bm25Cut(bm25Of(wordsOf(docs), Bm25Query.toDF("word")), Bm25TopK)
       .select($"doc_id", $"bm25")
   }
 
-  /** DuckDB twin of [[bm25TopK]] — same token filter, same df/dl/avgdl
-    * algebra in the same evaluation order, same ×10⁴ integer rank with
-    * doc_id tie-break. */
-  val bm25TopKOracle: String = {
-    val q = Bm25Query.map(t => s"'$t'").mkString(", ")
-    s"""WITH tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word
-       |  FROM documents),
-       |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-       |qtf AS (SELECT doc_id, word, count(*) AS tf FROM tok
-       |  WHERE word IN ($q) GROUP BY 1, 2),
-       |df AS (SELECT word, count(*) AS df FROM qtf GROUP BY word),
-       |s AS (SELECT qtf.doc_id,
-       |  round(sum(
-       |    ln((st.n_docs - df.df + 0.5) / (df.df + 0.5) + 1)
-       |      * (qtf.tf * ($Bm25K1 + 1))
-       |      / (qtf.tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl.dl / st.avgdl))
-       |  ), 4) AS bm25
-       |  FROM qtf JOIN df USING (word) JOIN dl USING (doc_id) CROSS JOIN st
-       |  GROUP BY qtf.doc_id)
-       |SELECT doc_id, bm25 FROM s
-       |ORDER BY CAST(round(bm25 * 10000) AS BIGINT) DESC, doc_id
-       |LIMIT $Bm25TopK""".stripMargin
-  }
+  /** DuckDB twin of [[bm25TopK]]. */
+  val bm25TopKOracle: String =
+    s"""WITH $bm25PrefixSql,
+       |q AS ($bm25QuerySql),
+       |s AS (${bm25Sql("q")})
+       |${bm25CutSql("s", Bm25TopK)}""".stripMargin
 
   // ------------------------------------------------ retrieval eval report
   /** Rank cutoffs for [[retrievalEvalReport]]. */
@@ -750,9 +810,8 @@ object Corpus {
     *
     * All metrics are integer micros over exact counts; reciprocal rank
     * is `10⁶ div first_relevant_rank` (0 when no relevant doc makes the
-    * cutoff). Rank order is the ranker's own published total order
-    * (snapped BM25 desc, doc_id) — the report can never disagree with
-    * the operator it meters.
+    * cutoff). Rank order is the ranker's own [[bm25Rank]] total order —
+    * the report can never disagree with the operator it meters.
     *
     * Scale shape: the BM25 leg is [[bm25TopKOf]] (its cost); relevance
     * is one map-side conjunctive filter; the rank window runs over the
@@ -764,16 +823,14 @@ object Corpus {
   private[graft] def retrievalEvalReportOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
-    val toks = docs.select($"doc_id",
-      expr("filter(split(text, '\\\\s+'), x -> x <> '')").as("toks"))
+    val toks = docs.select($"doc_id", TextOps.tokens.as("toks"))
     val rel = toks.filter(
         Bm25Query.map(t => array_contains($"toks", t)).reduce(_ && _))
       .select($"doc_id", lit(1L).as("rel"))
     val nRel = rel.agg(count(lit(1)).as("n_relevant"))
     // bounded-by-construction global window: <= Bm25TopK rows after limit
     val ranked = bm25TopKOf(docs)
-      .withColumn("rank", row_number().over(Window.orderBy(
-        expr("CAST(round(bm25 * 10000) AS BIGINT)").desc, $"doc_id".asc)))
+      .withColumn("rank", row_number().over(Window.orderBy(bm25Rank.desc, $"doc_id".asc)))
       .join(rel, Seq("doc_id"), "left")
       .localCheckpoint()
     RetrEvalCuts.map { k =>
@@ -806,12 +863,11 @@ object Corpus {
          |FROM marked WHERE rank <= $k""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH ranked AS MATERIALIZED (SELECT doc_id, bm25,
-       |    row_number() OVER (ORDER BY CAST(round(bm25 * 10000) AS BIGINT) DESC,
-       |      doc_id ASC) AS rank
+       |    row_number() OVER (ORDER BY $bm25RankSql DESC, doc_id ASC) AS rank
        |  FROM ($bm25TopKOracle)),
        |rel AS MATERIALIZED (SELECT doc_id, 1 AS rel FROM (
        |    SELECT doc_id,
-       |      list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+       |      ${TextOps.tokensSql} AS toks
        |    FROM documents)
        |  WHERE list_has_all(toks, [$terms])),
        |nrel AS (SELECT CAST(count(*) AS BIGINT) AS n_relevant FROM rel),
@@ -835,9 +891,8 @@ object Corpus {
     * |sources| · 64 rows whatever the corpus. */
   def lengthHistogram(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val perDoc = Tables.documents(s, d).select($"source",
-      expr("size(filter(split(text, '\\\\s+'), x -> x <> ''))")
-        .cast("long").as("n_tokens"))
+    val perDoc = Tables.documents(s, d)
+      .select($"source", size(TextOps.tokens).cast("long").as("n_tokens"))
     perDoc
       .withColumn("bucket",
         when($"n_tokens" === 0L, lit(-1))
@@ -856,8 +911,7 @@ object Corpus {
     * shift-built ranges. */
   val lengthHistogramOracle: String =
     s"""WITH t AS (SELECT source,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'),
-       |      x -> x <> '')) AS BIGINT) AS n_tokens
+       |    CAST(len(${TextOps.tokensSql}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |b AS (SELECT source,
        |    CASE WHEN n_tokens = 0 THEN -1
@@ -891,7 +945,7 @@ object Corpus {
   def ngramDiversity(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-      .withColumn("t", expr("filter(split(text, '\\\\s+'), x -> x <> '')"))
+      .withColumn("t", TextOps.tokens)
       .withColumn("g2", expr(
         """zip_with(slice(t, 1, greatest(size(t) - 1, 0)),
           |         slice(t, 2, greatest(size(t) - 1, 0)),
@@ -918,8 +972,8 @@ object Corpus {
     * indexing (DuckDB `range` is empty-safe on short docs, its list
     * indexing total), same integer-micros ratio. */
   val ngramDiversityOracle: String =
-    """WITH d AS (SELECT source,
-      |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS t
+    s"""WITH d AS (SELECT source,
+      |    ${TextOps.tokensSql} AS t
       |  FROM documents),
       |g AS (
       |  SELECT source, 1 AS n, unnest(t) AS gram FROM d
@@ -963,7 +1017,7 @@ object Corpus {
     import docs.sparkSession.implicits._
     val split = Sampling.trainTestSplitOf(docs).select($"doc_id", $"split")
     val grams = docs
-      .withColumn("t", expr("filter(split(text, '\\\\s+'), x -> x <> '')"))
+      .withColumn("t", TextOps.tokens)
       .withColumn("g2", expr(
         """zip_with(slice(t, 1, greatest(size(t) - 1, 0)),
           |         slice(t, 2, greatest(size(t) - 1, 0)),
@@ -994,7 +1048,7 @@ object Corpus {
   val ngramNoveltyOracle: String = {
     import Sampling.{SplitBuckets, SplitTrainLt, SplitValidLt}
     s"""WITH sp AS MATERIALIZED (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t,
+       |    ${TextOps.tokensSql} AS t,
        |    CASE WHEN CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))
        |        AS BIGINT) % $SplitBuckets < $SplitTrainLt THEN 'train'
        |      WHEN CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8))
@@ -1033,9 +1087,10 @@ object Corpus {
     *
     *   - lexical leg: "more-like-this" BM25 — each query doc's top
     *     [[HybridTerms]] tf·idf terms (tf · ln(N/df), the
-    *     [[tfidfTopTerms]] salience formula) become its query terms,
-    *     scored with the [[bm25TopK]] Okapi algebra over the corpus,
-    *     top [[Similarity.TopK]] docs per query;
+    *     [[tfidfTopTerms]] salience formula) become its (query_id, word)
+    *     term frame, scored by [[bm25Of]] over the corpus minus the
+    *     query doc itself, top [[Similarity.TopK]] docs per query by
+    *     [[bm25Rank]];
     *   - dense leg: [[Similarity.annIvfTopK]] verbatim (IVF-probed exact
     *     re-rank, top-k cosine neighbors);
     *   - fusion: full-outer on (query, doc); each leg contributes
@@ -1062,11 +1117,9 @@ object Corpus {
   def hybridRrfTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val nq = Similarity.NumQueries
-    val toks = Tables.documents(s, d).select($"doc_id",
-      explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
-    val dl = toks.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
+    val docs = Tables.documents(s, d)
+    val toks = wordsOf(docs)
+    val stats = docLengthsOf(toks)._2
     // per-query-doc term counts (|Q| docs — tiny by contract)
     val qtf = toks.filter($"doc_id" < nq)
       .groupBy($"doc_id", $"word").agg(count(lit(1)).as("qtf"))
@@ -1084,22 +1137,8 @@ object Corpus {
       .withColumn("rk", row_number().over(selW))
       .filter($"rk" <= HybridTerms)
       .select($"query_id", $"word")
-    // BM25 leg over the selected-term postings only
-    val ctf = toks.join(broadcast(qterms.select($"word").distinct()), "word")
-      .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-    val lexScored = ctf.join(broadcast(qterms), "word")
-      .filter($"doc_id" =!= $"query_id")
-      .join(broadcast(dfq), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("sterm",
-        log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1) *
-          ($"tf" * (Bm25K1 + 1)) /
-          ($"tf" + lit(Bm25K1) * (lit(1 - Bm25B) + lit(Bm25B) * $"dl" / $"avgdl")))
-      .groupBy($"query_id", $"doc_id").agg(round(sum($"sterm"), 4).as("bm25"))
-    val lexW = Window.partitionBy($"query_id").orderBy($"bx".desc, $"doc_id".asc)
-    val lex = lexScored
-      .withColumn("bx", expr("cast(round(bm25 * 10000) as bigint)"))
+    val lexW = Window.partitionBy($"query_id").orderBy(bm25Rank.desc, $"doc_id".asc)
+    val lex = hybridLexOf(docs, qterms)
       .withColumn("lex_rank", row_number().over(lexW))
       .filter($"lex_rank" <= Similarity.TopK)
       .select($"query_id", $"doc_id", $"lex_rank")
@@ -1119,16 +1158,18 @@ object Corpus {
         $"rrf_micros", $"fused_rank")
   }
 
-  /** DuckDB twin of [[hybridRrfTopK]]: the [[bm25TopKOracle]] token/df
-    * algebra with per-query term selection, [[Similarity.annIvfTopKOracle]]
-    * verbatim as the dense leg, integer-micro RRF fusion. */
+  /** The lexical leg of [[hybridRrfTopK]]: [[bm25Of]] over the
+    * (query_id, word) term frame `qterms`, minus each query doc itself. */
+  private[graft] def hybridLexOf(docs: DataFrame, qterms: DataFrame): DataFrame =
+    bm25Of(wordsOf(docs), qterms).filter(col("doc_id") =!= col("query_id"))
+
+  /** DuckDB twin of [[hybridRrfTopK]]: per-query term selection,
+    * [[bm25Sql]] keyed by query_id as the lexical leg,
+    * [[Similarity.annIvfTopKOracle]] verbatim as the dense leg,
+    * integer-micro RRF fusion. */
   lazy val hybridRrfTopKOracle: String = {
     val nq = Similarity.NumQueries
-    s"""WITH tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word
-       |  FROM documents),
-       |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
+    s"""WITH $bm25PrefixSql,
        |qtf AS (SELECT doc_id AS query_id, word, count(*) AS qtf FROM tok
        |  WHERE doc_id < $nq GROUP BY 1, 2),
        |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok
@@ -1140,20 +1181,12 @@ object Corpus {
        |          q.word ASC) AS rk
        |    FROM qtf q JOIN dfq d USING (word) CROSS JOIN st)
        |  WHERE rk <= $HybridTerms),
-       |ctf AS (SELECT doc_id, word, count(*) AS tf FROM tok
-       |  WHERE word IN (SELECT DISTINCT word FROM qsel) GROUP BY 1, 2),
-       |lexs AS (SELECT s2.query_id, c.doc_id,
-       |    round(sum(ln((st.n_docs - d.df + 0.5) / (d.df + 0.5) + 1)
-       |      * (c.tf * ($Bm25K1 + 1))
-       |      / (c.tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl.dl / st.avgdl))), 4) AS bm25
-       |  FROM ctf c JOIN qsel s2 USING (word) JOIN dfq d USING (word)
-       |  JOIN dl ON dl.doc_id = c.doc_id CROSS JOIN st
-       |  WHERE c.doc_id <> s2.query_id
-       |  GROUP BY 1, 2),
+       |lexs AS (SELECT * FROM (${bm25Sql("qsel", Seq("query_id"))})
+       |  WHERE doc_id <> query_id),
        |lex AS (SELECT query_id, doc_id, lex_rank FROM (
        |    SELECT query_id, doc_id,
        |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY CAST(round(bm25 * 10000) AS BIGINT) DESC, doc_id ASC) AS lex_rank
+       |        ORDER BY $bm25RankSql DESC, doc_id ASC) AS lex_rank
        |    FROM lexs) WHERE lex_rank <= ${Similarity.TopK}),
        |dense AS (SELECT query_id, neighbor_id AS doc_id, rank AS dense_rank
        |  FROM (${Similarity.annIvfTopKOracle})),
@@ -1185,44 +1218,22 @@ object Corpus {
     * expansion): documents discussing the topic in different words than
     * the seed query become reachable.
     *
-    * Scale shape: each BM25 pass is the [[bm25TopK]] discipline (token
-    * stream filtered to ≤ 13 query terms before any aggregate; df and
-    * the (N, avgdl) scalar broadcast; one corpus-sized dl shuffle);
-    * the feedback model aggregates over [[RmFbDocs]] documents' tokens
-    * only; the final rank window runs on the already-truncated
-    * [[Bm25TopK]]-row result, not the corpus. */
+    * Scale shape: each BM25 pass is one [[bm25Of]] call (token stream
+    * filtered to ≤ 13 query terms before any aggregate; df and the
+    * (N, avgdl) scalar broadcast; one corpus-sized dl shuffle); the
+    * feedback model aggregates over [[RmFbDocs]] documents' tokens only;
+    * both cuts are [[bm25Cut]]s, so no window ever runs on the corpus. */
   val RmFbDocs = 10
   val RmFbTerms = 10
 
   def rm3Expand(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val toks = Tables.documents(s, d).select($"doc_id",
-      explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
-    val dl = toks.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg($"dl").as("avgdl"))
-    // one BM25 scoring pass over an arbitrary (small, broadcast) term set
-    def bm25Scores(terms: DataFrame): DataFrame = {
-      val qtf = toks.join(broadcast(terms), "word")
-        .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-      val dfreq = qtf.groupBy($"word").agg(count(lit(1)).as("df"))
-      qtf.join(broadcast(dfreq), "word")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(stats))
-        .withColumn("sterm",
-          log(($"n_docs" - $"df" + 0.5) / ($"df" + 0.5) + 1) *
-            ($"tf" * (Bm25K1 + 1)) /
-            ($"tf" + lit(Bm25K1) * (lit(1 - Bm25B) + lit(Bm25B) * $"dl" / $"avgdl")))
-        .groupBy($"doc_id").agg(round(sum($"sterm"), 4).as("bm25"))
-        .withColumn("bx", expr("cast(round(bm25 * 10000) as bigint)"))
-    }
+    val toks = wordsOf(Tables.documents(s, d))
     val q0 = Bm25Query.toDF("word")
-    val fb = bm25Scores(q0)
-      .orderBy($"bx".desc, $"doc_id".asc).limit(RmFbDocs)
-      .select($"doc_id")
+    val fb = bm25Cut(bm25Of(toks, q0), RmFbDocs).select($"doc_id")
     val exp = toks.join(broadcast(fb), "doc_id")
       .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-      .join(dl, "doc_id")
+      .join(docLengthsOf(toks)._1, "doc_id")
       .withColumn("w", expr("tf * 1000000L div dl"))
       .groupBy($"word").agg(sum($"w").as("weight_micros"))
       .filter(!$"word".isin(Bm25Query: _*))
@@ -1232,57 +1243,26 @@ object Corpus {
     // output mirrors [[bm25TopK]] (TakeOrderedAndProject cut, no global
     // rank window — the house "global order without a global window"
     // rule; rank is derivable from (bm25, doc_id))
-    bm25Scores(q0.unionAll(exp))
-      .orderBy($"bx".desc, $"doc_id".asc).limit(Bm25TopK)
-      .select($"doc_id", $"bm25")
+    bm25Cut(bm25Of(toks, q0.unionAll(exp)), Bm25TopK).select($"doc_id", $"bm25")
   }
 
-  /** DuckDB twin of [[rm3Expand]]: the [[bm25TopKOracle]] algebra run
-    * twice with the integer-micros feedback model between the passes. */
-  val rm3ExpandOracle: String = {
-    val q = Bm25Query.map(t => s"'$t'").mkString(", ")
-    s"""WITH tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word
-       |  FROM documents),
-       |dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
-       |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl),
-       |t0 AS (SELECT doc_id, word, count(*) AS tf FROM tok
-       |  WHERE word IN ($q) GROUP BY 1, 2),
-       |d0 AS (SELECT word, count(*) AS df FROM t0 GROUP BY word),
-       |s0 AS (SELECT t0.doc_id,
-       |  round(sum(
-       |    ln((st.n_docs - d0.df + 0.5) / (d0.df + 0.5) + 1)
-       |      * (t0.tf * ($Bm25K1 + 1))
-       |      / (t0.tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl.dl / st.avgdl))
-       |  ), 4) AS bm25
-       |  FROM t0 JOIN d0 USING (word) JOIN dl USING (doc_id) CROSS JOIN st
-       |  GROUP BY t0.doc_id),
-       |fb AS (SELECT doc_id FROM s0
-       |  ORDER BY CAST(round(bm25 * 10000) AS BIGINT) DESC, doc_id
-       |  LIMIT $RmFbDocs),
+  /** DuckDB twin of [[rm3Expand]]: [[bm25Sql]] run twice with the
+    * integer-micros feedback model between the passes. */
+  val rm3ExpandOracle: String =
+    s"""WITH $bm25PrefixSql,
+       |q0 AS ($bm25QuerySql),
+       |s0 AS (${bm25Sql("q0")}),
+       |fb AS (${bm25CutSql("s0", RmFbDocs)}),
        |ftf AS (SELECT t.doc_id, t.word, count(*) AS tf FROM tok t
        |  JOIN fb USING (doc_id) GROUP BY 1, 2),
        |exp AS (SELECT word FROM (
        |    SELECT f.word, CAST(sum(f.tf * 1000000 // dl.dl) AS BIGINT) AS weight_micros
        |    FROM ftf f JOIN dl USING (doc_id)
-       |    WHERE f.word NOT IN ($q) GROUP BY f.word)
+       |    WHERE f.word NOT IN (SELECT word FROM q0) GROUP BY f.word)
        |  ORDER BY weight_micros DESC, word ASC LIMIT $RmFbTerms),
-       |qe AS (SELECT unnest([$q]) AS word UNION ALL SELECT word FROM exp),
-       |te AS (SELECT t.doc_id, t.word, count(*) AS tf FROM tok t
-       |  JOIN qe USING (word) GROUP BY 1, 2),
-       |de AS (SELECT word, count(*) AS df FROM te GROUP BY word),
-       |se AS (SELECT te.doc_id,
-       |  round(sum(
-       |    ln((st.n_docs - de.df + 0.5) / (de.df + 0.5) + 1)
-       |      * (te.tf * ($Bm25K1 + 1))
-       |      / (te.tf + $Bm25K1 * (1 - $Bm25B + $Bm25B * dl.dl / st.avgdl))
-       |  ), 4) AS bm25
-       |  FROM te JOIN de USING (word) JOIN dl USING (doc_id) CROSS JOIN st
-       |  GROUP BY te.doc_id)
-       |SELECT doc_id, bm25 FROM se
-       |ORDER BY CAST(round(bm25 * 10000) AS BIGINT) DESC, doc_id
-       |LIMIT $Bm25TopK""".stripMargin
-  }
+       |qe AS (SELECT word FROM q0 UNION ALL SELECT word FROM exp),
+       |se AS (${bm25Sql("qe")})
+       |${bm25CutSql("se", Bm25TopK)}""".stripMargin
 
   // ------------------------------------------------- phrase-match retrieval
   /** Exact-phrase query terms, in order. Chosen to occur multiple times in
@@ -1312,7 +1292,7 @@ object Corpus {
     import docs.sparkSession.implicits._
     val post = docs
       .select($"doc_id", posexplode(
-        expr("filter(split(text, '\\\\s+'), x -> x <> '')")))
+        TextOps.tokens))
       .toDF("doc_id", "pos", "word")
       .filter($"word".isin(phrase: _*))
     val aligned = phrase.zipWithIndex.map { case (w, j) =>
@@ -1332,7 +1312,7 @@ object Corpus {
     val conds = PhraseQuery.zipWithIndex
       .map { case (w, j) => s"t[i+$j] = '$w'" }.mkString(" AND ")
     s"""WITH d AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
+       |    ${TextOps.tokensSql} AS t
        |  FROM documents),
        |m AS (SELECT doc_id,
        |    list_filter(range(1, len(t) - ${L - 2}), i -> $conds) AS hits
@@ -1379,7 +1359,7 @@ object Corpus {
     import docs.sparkSession.implicits._
     val B = DsirBuckets
     val toks = docs.select($"doc_id", $"source",
-        explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
+        explode(TextOps.tokens).as("word"))
       .withColumn("bucket",
         conv(substring(md5($"word"), 1, 8), 16, 10).cast("long") % B)
     val perBucket = toks.groupBy($"bucket").agg(
@@ -1405,7 +1385,7 @@ object Corpus {
     * bit-equal and only the per-doc sum needs the 4dp rounding. */
   val dsirWeightsOracle: String =
     s"""WITH tok AS (SELECT doc_id, source,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word
+       |    unnest(${TextOps.tokensSql}) AS word
        |  FROM documents),
        |tb AS (SELECT doc_id, source,
        |    CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT) % $DsirBuckets AS bucket
@@ -1485,34 +1465,15 @@ object Corpus {
         (round(log(($"d_pos" + 1) / ($"d_neg" + 1)) + $"evid", 4) + lit(0.0)).as("nb_logodds"))
   }
 
-  /** The Gopher-rule keep predicate over a `text` column, as DuckDB SQL —
-    * the exact integer-space form [[graft.operators.TextOps.gopherRulesOracle]]
-    * pins; shared by [[nbQualityOracle]] and [[datasetCardOracle]]. */
-  private[graft] val gopherPosSql: String =
-    """(CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) >= 50
-      |     AND CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) <= 100000
-      |     AND CAST(list_sum(list_transform(list_filter(string_split_regex(text, '\s+'), x -> x <> ''), x -> length(x))) AS BIGINT)
-      |         BETWEEN 3 * len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-      |             AND 10 * len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-      |     AND (CAST(length(text) - length(replace(text, '#', '')) AS BIGINT)
-      |          + (length(text) - length(replace(text, '...', ''))) // 3) * 10
-      |         <= len(list_filter(string_split_regex(text, '\s+'), x -> x <> ''))
-      |     AND CAST(len(list_filter(list_filter(string_split_regex(text, '\s+'), x -> x <> ''), x -> regexp_matches(x, '[a-z]'))) AS BIGINT) * 5
-      |         >= CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS BIGINT) * 4
-      |     AND len(list_intersect(list_filter(string_split_regex(text, '\s+'), x -> x <> ''), ['the','a','of','and','to','in','is','it'])) >= 2
-      |    )""".stripMargin
-
   /** DuckDB twin of [[nbQuality]] — the [[dsirWeightsOracle]] float
     * discipline: per-bucket log-weights are bit-equal (same smoothing
     * algebra, same evaluation order), only the per-doc sum crosses the
-    * 4dp rounding; the gopher label predicate is [[gopherPosSql]], the
+    * 4dp rounding; the gopher label is [[TextOps.gopherKeepSql]], the
     * integer-space form whose parity [[TextOps.gopherRulesOracle]]
     * already pins. */
   val nbQualityOracle: String =
-    s"""WITH lab AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks,
-       |    $gopherPosSql AS pos
-       |  FROM documents),
+    s"""WITH ${TextOps.gopherCtes("doc_id")},
+       |lab AS (SELECT doc_id, toks, ${TextOps.gopherKeepSql} AS pos FROM gm),
        |tb AS (SELECT doc_id, pos,
        |    CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT) % $DsirBuckets AS bucket
        |  FROM (SELECT doc_id, pos, unnest(toks) AS word FROM lab)),
@@ -1569,13 +1530,14 @@ object Corpus {
         expr("(n_keep * 1000000) div n_docs").as("gopher_keep_micros"))
   }
 
-  /** DuckDB twin of [[datasetCard]] — the [[gopherPosSql]] predicate,
-    * the lmBits ceil-quarter token mass, integer `//` ratios. */
+  /** DuckDB twin of [[datasetCard]] — the [[TextOps.gopherKeepSql]]
+    * verdict, the lmBits ceil-quarter token mass, integer `//` ratios. */
   val datasetCardOracle: String =
-    s"""WITH pd AS (SELECT source, lang, n_chars,
+    s"""WITH ${TextOps.gopherCtes("source, lang, n_chars")},
+       |pd AS (SELECT source, lang, n_chars,
        |    CAST((n_chars + 3) // 4 AS BIGINT) AS tok,
-       |    $gopherPosSql AS keep
-       |  FROM documents),
+       |    ${TextOps.gopherKeepSql} AS keep
+       |  FROM gm),
        |b AS (SELECT source, count(*) AS n_docs,
        |    CAST(sum(tok) AS BIGINT) AS token_mass,
        |    count(DISTINCT lang) AS n_langs,
@@ -1652,7 +1614,7 @@ object Corpus {
 
   val tfidfTopTermsOracle: String =
     s"""WITH w AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '${"\\"}s+'), x -> x <> '')) AS term
+       |    unnest(${TextOps.tokensSql}) AS term
        |  FROM documents),
        |tf AS (SELECT doc_id, term, count(*) AS tf FROM w GROUP BY 1, 2),
        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
@@ -1696,8 +1658,7 @@ object Corpus {
     val s = docs.sparkSession
     import s.implicits._
     val sw = docs
-      .select(explode(expr(
-        "filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"), $"source")
+      .select(explode(TextOps.tokens).as("word"), $"source")
       .groupBy($"source", $"word").agg(count(lit(1)).as("tf"))
     val bySource = sw.groupBy($"source").agg(sum($"tf").as("t_s"))
     val byWord = sw.groupBy($"word").agg(sum($"tf").as("tf_w"))
@@ -1721,8 +1682,8 @@ object Corpus {
   /** DuckDB twin of [[domainJs]] — same split-vocabulary algebra,
     * ln(x)/ln(2) mirroring Spark's log(2.0, x). */
   val domainJsOracle: String =
-    """WITH sw AS (SELECT source,
-      |    unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS word
+    s"""WITH sw AS (SELECT source,
+      |    unnest(${TextOps.tokensSql}) AS word
       |  FROM documents),
       |c AS (SELECT source, word, CAST(count(*) AS BIGINT) AS tf
       |  FROM sw GROUP BY 1, 2),

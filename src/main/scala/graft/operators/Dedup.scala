@@ -15,8 +15,6 @@ import graft.core.Tables
   */
 object Dedup {
 
-  private def tokensCol: Column = expr("filter(split(text, '\\\\s+'), x -> x <> '')")
-
   /** Absolute ceiling on the MOSS df-prune caps (winnow + n-gram index).
     * A pure 1%-of-corpus cap is quadratic (bucket joins cost (0.01n)2);
     * worse, even a LOOSE absolute ceiling leaves a quadratic TRANSITION
@@ -253,15 +251,8 @@ object Dedup {
 
   val ngramJaccardOracle: String =
     s"""WITH ${collapseCtes(
-        "len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) >= 3")},
-      |t AS (SELECT doc_id,
-      |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      |  FROM repdocs),
-      |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(len(toks) - 2),
-      |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]))) AS gram
-      |  FROM t WHERE len(toks) >= 3),
-      |sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),
+        s"len(${TextOps.tokensSql}) >= 3")},
+      |${gramCtesFrom("repdocs", "")},
       |nd AS (SELECT count(DISTINCT doc_id) AS n FROM g),
       |hot AS (SELECT gram FROM g GROUP BY gram
       |  HAVING count(*) > (SELECT least(greatest(16, n // 100), $DfCapCeiling) FROM nd)),
@@ -456,14 +447,7 @@ object Dedup {
       }
       (b0 +: steps).mkString(",\n")
     }
-    s"""${p}t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-       |  FROM documents),
-       |${p}g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(len(toks) - 2),
-       |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]))) AS gram
-       |  FROM ${p}t WHERE len(toks) >= 3),
-       |${p}sz AS (SELECT doc_id, count(*) AS n FROM ${p}g GROUP BY doc_id),
+    s"""${gramCtesFrom("documents", p)},
        |${SqlU64.fnvCtesPrefixed(s"${p}g", p)},
        |${p}gh AS (SELECT g.doc_id, f.h FROM ${p}g g JOIN ${p}fnv f USING (gram)),
        |${p}seeds AS (SELECT i AS k, ($seedList)[i+1] AS s
@@ -639,19 +623,25 @@ object Dedup {
     out
   }
 
-  /** Shared oracle fragments — the ONE copy of the gram construction,
+  /** DuckDB twin of [[gramsOf]]: the `t/g/sz` CTE chain over the docs of
+    * `src` — tokens, distinct word 3-grams per doc, gram count per doc —
+    * with every CTE name prefixed by `p`, so a consumer whose WITH chain
+    * already claims `t`/`g`/`sz` can splice a second copy. */
+  private[operators] def gramCtesFrom(src: String, p: String): String =
+    s"""${p}t AS (SELECT doc_id,
+       |    ${TextOps.tokensSql} AS toks
+       |  FROM $src),
+       |${p}g AS (SELECT doc_id, unnest(list_distinct(list_transform(
+       |    range(len(toks) - 2),
+       |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]))) AS gram
+       |  FROM ${p}t WHERE len(toks) >= 3),
+       |${p}sz AS (SELECT doc_id, count(*) AS n FROM ${p}g GROUP BY doc_id)""".stripMargin
+
+  /** Shared oracle fragments — the gram chain over `documents`, the
     * 0.5-Jaccard pair predicate, and transitive-closure SQL that every
     * closure-based oracle (clusters, keep-list, curation pipeline,
     * contamination) composes from, so a threshold change is one edit. */
-  private[operators] val gramCtes: String =
-    """t AS (SELECT doc_id,
-      |    list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-      |  FROM documents),
-      |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(len(toks) - 2),
-      |    i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]))) AS gram
-      |  FROM t WHERE len(toks) >= 3),
-      |sz AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id)""".stripMargin
+  private[operators] val gramCtes: String = gramCtesFrom("documents", "")
 
   private[operators] val closureCtes: String = gramCtes + ",\n" +
     """inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
@@ -921,7 +911,7 @@ object Dedup {
   private[graft] def simhashesOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.graft.GraftFunctions
-    docs.select($"doc_id", GraftFunctions.simhash64(tokensCol).as("simhash"))
+    docs.select($"doc_id", GraftFunctions.simhash64(TextOps.tokens).as("simhash"))
   }
 
   /** Max distinct simhash values a (band, chunk) bucket may hold before it
@@ -1012,7 +1002,7 @@ object Dedup {
   val simhashPairsOracle: String = {
     val U = "CAST(18446744073709551616 AS HUGEINT)" // 2^64
     s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+       |    ${TextOps.tokensSql} AS toks
        |  FROM documents),
        |tok AS (SELECT doc_id, unnest(toks) AS w FROM t),
        |vocab AS (SELECT DISTINCT w FROM tok),
@@ -1409,8 +1399,8 @@ object Dedup {
     *
     * Scale shape: distinct (doc, fp) → fp document-frequency (two-phase
     * count, map-side combined) → join back on fp (hot boilerplate
-    * fingerprints are the AQE skew-join-split case rehearsed in
-    * SCALE_r5.md) → per-doc count aggregate. The shuffle carries 8-byte
+    * fingerprints are the case AQE's skew-join split handles) → per-doc
+    * count aggregate. The shuffle carries 8-byte
     * fingerprints, never text; no windows, no driver traffic. */
   def softDedupWeights(s: SparkSession, d: String): DataFrame =
     softDedupWeightsOf(Tables.documents(s, d))

@@ -83,26 +83,15 @@ object Sampling {
   }
 
   // closure fragments come from Dedup (one copy of the pair/closure
-  // semantics); the quality formula mirrors TextOps.qualityScore — an SQL
-  // fragment shared with qualityScoreOracle would need its CTE names
-  // parameterized, so the formula is asserted equal by the gate instead
+  // semantics), the quality score from TextOps' shared CTEs (prefixed:
+  // the closure chain already claims `t`)
   val curationPipelineOracle: String =
     s"""WITH RECURSIVE ${Dedup.closureCtes},
        |${Dedup.clustersCte},
-       |q AS (SELECT doc_id, text,
-       |    len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_toks,
-       |    len(list_filter(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
-       |        x -> x IN ('the','a','of','and','to','in','is','it'))) AS n_stop,
-       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
-       |  FROM documents),
-       |scored AS (SELECT doc_id, text,
-       |    round(least(1.0, n_toks / 100.0) * 0.5
-       |      + (n_stop / CAST(n_toks AS DOUBLE)) * 0.3
-       |      + (1.0 - n_punct / CAST(length(text) AS DOUBLE)) * 0.2, 4) AS quality_score
-       |  FROM q),
+       |${TextOps.qualityCtesPrefixed("q_")},
        |kept AS (
        |  SELECT s.doc_id, s.text, s.quality_score
-       |  FROM scored s LEFT JOIN clusters c ON s.doc_id = c.doc_id
+       |  FROM q_sc s LEFT JOIN clusters c ON s.doc_id = c.doc_id
        |  WHERE coalesce(c.cluster, s.doc_id) = s.doc_id
        |    AND s.quality_score >= 0.5)
        |SELECT doc_id, quality_score, CAST(doc_id % 8 AS INTEGER) AS shard,
@@ -174,7 +163,7 @@ object Sampling {
     * The naive plan (`row_number() OVER (ORDER BY ...)` with no partition
     * key) is the textbook 100 TB scale-killer: Spark plans an empty-
     * partition-spec Window and funnels every row through a single task
-    * (the exact class [[graft.PlanWalk]] flags since r6). This operator
+    * (the exact class [[graft.PlanWalk]] flags). This operator
     * produces the identical result with the classic distributed total-
     * order recipe:
     *
@@ -271,7 +260,7 @@ object Sampling {
     import s.implicits._
     docs
       .select($"doc_id",
-        size(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).cast("long").as("tok"),
+        size(TextOps.tokens).cast("long").as("tok"),
         ($"doc_id" % buckets).cast("long").as("bucket"))
       .repartition($"bucket")
       .sortWithinPartitions($"bucket", $"doc_id")
@@ -296,7 +285,7 @@ object Sampling {
     * and [[packEfficiencyOracle]] read it. */
   private val packCtes: String =
     s"""WITH RECURSIVE t AS (SELECT doc_id,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS BIGINT) AS tok,
+       |    CAST(len(${TextOps.tokensSql}) AS BIGINT) AS tok,
        |    CAST(doc_id % $PackBuckets AS BIGINT) AS bucket
        |  FROM documents),
        |r AS (SELECT doc_id, tok, bucket,

@@ -1366,7 +1366,7 @@ object Similarity {
     val vecs = vecsOf(s, d)
     val assigned = assignCells(s, vecs, lloydCentroids(s, vecs)).toDF("doc_id", "cell")
     val toks = Tables.documents(s, d).select($"doc_id",
-      explode(expr("filter(split(text, '\\\\s+'), x -> x <> '')")).as("word"))
+      explode(TextOps.tokens).as("word"))
     val tf = toks.join(assigned, "doc_id")
       .groupBy($"cell", $"word").agg(count(lit(1)).as("tf"))
     val dfc = tf.groupBy($"word").agg(count(lit(1)).as("df_cells"))
@@ -1386,7 +1386,7 @@ object Similarity {
   lazy val clusterTermsOracle: String =
     s"""$ivfCorpusCtes,
        |tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS word
+       |    unnest(${TextOps.tokensSql}) AS word
        |  FROM documents),
        |ct AS (SELECT a.cell, t.word, count(*) AS tf
        |  FROM tok t JOIN asg a ON a.vec_id = t.doc_id GROUP BY 1, 2),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.engine.{KV, MapleJuice}
@@ -23,8 +23,27 @@ import org.apache.spark.sql.Encoders
   */
 object TextOps {
 
-  private def tokensCol: org.apache.spark.sql.Column =
-    expr("filter(split(text, '\\\\s+'), x -> x <> '')")
+  // ------------------------------------------------------------- tokenizer
+  /** The one word tokenizer of every text, retrieval and dedup operator: a
+    * token is a maximal run of characters outside [[Blanks]]; the empty
+    * tokens a leading or trailing blank run (or the empty text) leaves
+    * are dropped. [[tokens]] is the engine column over `text`,
+    * [[tokensSqlOf]] its DuckDB twin — both split on the same regex
+    * text. The class is spelled out rather than written `\s` because the
+    * two engines disagree on `\s`: Java's is `[ \t\n\x0B\f\r]`, RE2's
+    * leaves out `\x0B`, so DuckDB would keep "a\x0Bb" as one token where
+    * Spark yields two. Unicode blanks (NBSP, U+2003) split in neither. */
+  private[graft] val Blanks = "[ \\t\\n\\x0B\\f\\r]+"
+
+  /** Engine tokens of the `text` column (array<string>). */
+  private[graft] def tokens: Column = filter(split(col("text"), Blanks), _ =!= "")
+
+  /** DuckDB twin of [[tokens]] over a text-valued SQL expression. */
+  private[graft] def tokensSqlOf(text: String): String =
+    s"list_filter(string_split_regex($text, '$Blanks'), x -> x <> '')"
+
+  /** [[tokensSqlOf]] over the `text` column. */
+  private[graft] def tokensSql: String = tokensSqlOf("text")
 
   // ----------------------------------------------------------- word count
   /** A1/A2 semantics (reference `applications/wc-maple.py:5-7`,
@@ -128,7 +147,7 @@ object TextOps {
   def tokenStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, d)
-      .withColumn("toks", expr("filter(split(text, '\\\\s+'), x -> x <> '')"))
+      .withColumn("toks", tokens)
       .select(
         $"doc_id",
         size($"toks").as("n_tokens"),
@@ -142,8 +161,8 @@ object TextOps {
   private def cast2d(c: org.apache.spark.sql.Column) = c.cast("double")
 
   val tokenStatsOracle: String =
-    """WITH t AS (SELECT doc_id,
-      |  list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id,
+      |  $tokensSql AS toks
       |  FROM documents)
       |SELECT doc_id,
       | len(toks) AS n_tokens,
@@ -179,7 +198,7 @@ object TextOps {
   private[graft] def chunkDocumentsOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs
-      .withColumn("toks", tokensCol)
+      .withColumn("toks", tokens)
       .withColumn("n", size($"toks"))
       .select($"doc_id", $"toks", $"n",
         posexplode(expr(
@@ -198,7 +217,7 @@ object TextOps {
     * list slicing mirroring Spark's `slice(arr, start, length)`. */
   val chunkDocumentsOracle: String =
     s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+       |    $tokensSql AS toks
        |  FROM documents),
        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
        |c AS (SELECT doc_id, toks, n, u.s AS start_tok,
@@ -256,7 +275,7 @@ object TextOps {
   /** [[bpeMergeCandidates]] over an arbitrary (text) frame. */
   private[graft] def bpeMergeCandidatesOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    docs.select(explode(tokensCol).as("w"))
+    docs.select(explode(tokens).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("f"))
       // one-char words contain no adjacent pair
       .filter(length($"w") >= 2)
@@ -273,8 +292,7 @@ object TextOps {
     * positions (both engines are character- not byte-indexed), same
     * total-order cut. */
   val bpeMergeCandidatesOracle: String =
-    s"""WITH tok AS (SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-       |    x -> x <> '')) AS w FROM documents),
+    s"""WITH tok AS (SELECT unnest($tokensSql) AS w FROM documents),
        |wf AS (SELECT w, count(*) AS f FROM tok GROUP BY w HAVING length(w) >= 2),
        |pairs AS (SELECT substr(w, CAST(i + 1 AS INT), 1) AS a,
        |    substr(w, CAST(i + 2 AS INT), 1) AS b, f
@@ -317,7 +335,7 @@ object TextOps {
   private[graft] def bpeTrainOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    var vocab = docs.select(explode(tokensCol).as("w"))
+    var vocab = docs.select(explode(tokens).as("w"))
       .groupBy($"w").agg(count(lit(1)).as("f"))
       .select(concat(regexp_replace($"w", "(.)", " $1"), lit(" ")).as("e"), $"f")
       .localCheckpoint()
@@ -350,7 +368,7 @@ object TextOps {
     * `AS MATERIALIZED` CTE chain (`v0, p1, b1, v1, …` — the
     * [[graft.operators.Graph.componentsOracle]] template; MATERIALIZED
     * because inlining K rounds of scalar-subquery rewrites re-derives
-    * the whole prefix per round, the CHANGES_r8 §2 inlining wall), each
+    * the whole prefix per round), each
     * round: pair counts over the split symbol stream, `LIMIT 1` under
     * the identical (cnt DESC, a, b) total order, delimiter-framed
     * `replace` rewrite via scalar subqueries on the one-row argmax. */
@@ -371,8 +389,7 @@ object TextOps {
     val out = (1 to BpeTrainRounds).map { k =>
       s"SELECT CAST($k AS BIGINT) AS merge_rank, a, b, cnt FROM b$k"
     }.mkString("\nUNION ALL\n")
-    s"""WITH tok AS (SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-       |    x -> x <> '')) AS w FROM documents),
+    s"""WITH tok AS (SELECT unnest($tokensSql) AS w FROM documents),
        |wf AS (SELECT w, count(*) AS f FROM tok GROUP BY w),
        |v0 AS MATERIALIZED (SELECT regexp_replace(w, '(.)', ' \\1', 'g') || ' ' AS e, f
        |  FROM wf),
@@ -424,7 +441,7 @@ object TextOps {
       org.apache.spark.sql.functions.replace(c, lit(s" $a $b "), lit(s" $a$b "))
     }
     val extra = passthrough.map(col)
-    docs.select(($"doc_id" +: extra :+ explode(tokensCol).as("w")): _*)
+    docs.select(($"doc_id" +: extra :+ explode(tokens).as("w")): _*)
       .select(($"doc_id" +: extra :+ length($"w").as("n_chars") :+
         // " s1 s2 ... sk " carries k+1 delimiters
         (length(encoded) -
@@ -453,16 +470,15 @@ object TextOps {
     * each word's spaced char stream with `list_reduce` + `replace` — the same
     * scan-left-continue-after semantics as the JVM chain. The
     * VARCHAR-index fold (indices cast to VARCHAR so the accumulator and
-    * elements share `list_reduce`'s one type) is the [[pqCtes]]-era
-    * workaround for DuckDB's single-type fold lists. */
+    * elements share `list_reduce`'s one type) works around DuckDB's
+    * single-type fold lists. */
   lazy val bpeApplyOracle: String =
     s"""WITH merges AS (SELECT merge_rank, a, b FROM ($bpeTrainOracle)),
        |ml AS (SELECT
        |    list(' ' || a || ' ' || b || ' ' ORDER BY merge_rank) AS fr,
        |    list(' ' || a || b || ' ' ORDER BY merge_rank) AS t2
        |  FROM merges),
-       |tok AS (SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'),
-       |    x -> x <> '')) AS w FROM documents),
+       |tok AS (SELECT doc_id, unnest($tokensSql) AS w FROM documents),
        |enc AS (SELECT doc_id, length(w) AS n_chars,
        |    length(e) - length(replace(e, ' ', '')) - 1 AS n_sym
        |  FROM (SELECT doc_id, w,
@@ -528,8 +544,7 @@ object TextOps {
        |    list(' ' || a || ' ' || b || ' ' ORDER BY merge_rank) AS fr,
        |    list(' ' || a || b || ' ' ORDER BY merge_rank) AS t2
        |  FROM merges),
-       |tok AS (SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'),
-       |    x -> x <> '')) AS w FROM documents),
+       |tok AS (SELECT doc_id, unnest($tokensSql) AS w FROM documents),
        |enc AS (SELECT doc_id, length(w) AS n_chars,
        |    length(e) - length(replace(e, ' ', '')) - 1 AS n_sym
        |  FROM (SELECT doc_id, w,
@@ -575,7 +590,7 @@ object TextOps {
     import docs.sparkSession.implicits._
     val stop = "('the','a','of','and','to','in','is','it')"
     docs
-      .withColumn("toks", expr("filter(split(text, '\\\\s+'), x -> x <> '')"))
+      .withColumn("toks", tokens)
       .withColumn("n_toks", size($"toks"))
       .withColumn("n_stop", expr(s"size(filter(toks, x -> x IN $stop))"))
       .withColumn("n_punct",
@@ -637,7 +652,7 @@ object TextOps {
     * claim `t`) can splice a collision-free copy of the SAME formula. */
   private[operators] def qualityCtesPrefixed(p: String): String =
     s"""${p}t AS (SELECT doc_id, source, text,
-       |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+       |  $tokensSql AS toks
        |  FROM documents),
        |${p}m AS (SELECT doc_id, source, text, len(toks) AS n_toks,
        |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','it'))) AS n_stop,
@@ -711,7 +726,7 @@ object TextOps {
   /** The Gopher metric columns over a frame with a `text` column:
     * `toks`, `n_words`, `sum_len`, `n_sym`, `n_alpha`, `n_stop`, and the
     * combined `gopher_keep` verdict — THE one Scala copy of the rule
-    * predicate ([[graft.operators.Corpus.gopherPosSql]] is its one SQL
+    * predicate ([[gopherCtes]] + [[gopherKeepSql]] is its one SQL
     * twin); [[gopherRulesOf]], `Corpus.nbQualityOf`, and
     * `Corpus.datasetCardOf` all read these columns rather than
     * re-deriving the thresholds. */
@@ -720,7 +735,7 @@ object TextOps {
     import s.implicits._
     val stop = "'the','a','of','and','to','in','is','it'"
     docs
-      .withColumn("toks", tokensCol)
+      .withColumn("toks", tokens)
       .withColumn("n_words", size($"toks").cast("long"))
       .withColumn("sum_len",
         expr("aggregate(transform(toks, x -> length(x)), 0L, (a, x) -> a + x)"))
@@ -753,30 +768,42 @@ object TextOps {
         $"gopher_keep".as("keep"))
   }
 
-  /** DuckDB twin of [[gopherRules]] — same integer-space thresholds, same
-    * ratio4 display form ('//' = the engine's `div`). */
-  val gopherRulesOracle: String =
-    s"""WITH t AS (SELECT doc_id, text,
-       |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+  /** DuckDB twin of [[withGopherMetrics]]: CTE `gt` tokenizes
+    * `documents`, CTE `gm` carries `cols`, `toks` and the five metric
+    * columns; [[gopherKeepSql]] is the verdict over them. The one SQL copy
+    * of the rule, read by [[gopherRulesOracle]], `Corpus.nbQualityOracle`
+    * and `Corpus.datasetCardOracle`. */
+  private[operators] def gopherCtes(cols: String): String =
+    s"""gt AS (SELECT $cols, text,
+       |  $tokensSql AS toks
        |  FROM documents),
-       |m AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_words,
+       |gm AS (SELECT $cols, toks, CAST(len(toks) AS BIGINT) AS n_words,
        |  CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT) AS sum_len,
        |  CAST((length(text) - length(replace(text, '#', '')))
        |    + (length(text) - length(replace(text, '...', ''))) // 3 AS BIGINT) AS n_sym,
        |  CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS BIGINT) AS n_alpha,
        |  CAST(len(list_intersect(toks, ['the','a','of','and','to','in','is','it'])) AS BIGINT) AS n_stop
-       |  FROM t)
+       |  FROM gt)""".stripMargin
+
+  /** The Gopher keep verdict over the [[gopherCtes]] metric columns. */
+  private[operators] val gopherKeepSql: String =
+    """(n_words >= 50 AND n_words <= 100000
+      |    AND sum_len >= n_words * 3 AND sum_len <= n_words * 10
+      |    AND n_sym * 10 <= n_words
+      |    AND n_alpha * 5 >= n_words * 4
+      |    AND n_stop >= 2)""".stripMargin
+
+  /** DuckDB twin of [[gopherRules]] — same integer-space thresholds, same
+    * ratio4 display form ('//' = the engine's `div`). */
+  val gopherRulesOracle: String =
+    s"""WITH ${gopherCtes("doc_id")}
        |SELECT doc_id, n_words,
        |  ${Dedup.ratio4Sql("sum_len", "n_words")} AS mean_word_len,
        |  ${Dedup.ratio4Sql("n_sym", "n_words")} AS symbol_ratio,
        |  ${Dedup.ratio4Sql("n_alpha", "n_words")} AS alpha_frac,
        |  n_stop AS n_stop_distinct,
-       |  (n_words >= 50 AND n_words <= 100000
-       |    AND sum_len >= n_words * 3 AND sum_len <= n_words * 10
-       |    AND n_sym * 10 <= n_words
-       |    AND n_alpha * 5 >= n_words * 4
-       |    AND n_stop >= 2) AS keep
-       |FROM m""".stripMargin
+       |  $gopherKeepSql AS keep
+       |FROM gm""".stripMargin
 
   // ------------------------------------------------------ blocklist filter
   /** C4-style term-blocklist gate (Raffel et al. 2020 §2.2 — the public
@@ -802,7 +829,7 @@ object TextOps {
     import s.implicits._
     val listSql = Blocklist.map(w => s"'$w'").mkString(", ")
     docs
-      .withColumn("toks", tokensCol)
+      .withColumn("toks", tokens)
       .withColumn("n_blocked",
         expr(s"size(filter(toks, x -> array_contains(array($listSql), x)))")
           .cast("long"))
@@ -813,9 +840,9 @@ object TextOps {
   val blocklistFilterOracle: String = {
     val listSql = Blocklist.map(w => s"'$w'").mkString(", ")
     s"""SELECT doc_id,
-       | CAST(len(list_filter(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+       | CAST(len(list_filter($tokensSql,
        |   x -> list_contains([$listSql], x))) AS BIGINT) AS n_blocked,
-       | len(list_filter(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''),
+       | len(list_filter($tokensSql,
        |   x -> list_contains([$listSql], x))) = 0 AS keep
        |FROM documents""".stripMargin
   }
@@ -856,7 +883,7 @@ object TextOps {
     import s.implicits._
     val listSql = Blocklist.map(w => s"'$w'").mkString(", ")
     docs
-      .withColumn("toks", tokensCol)
+      .withColumn("toks", tokens)
       // empty docs: explicit empty line set (sequence(0,-1) would DESCEND)
       .withColumn("lines", expr(
         s"""CASE WHEN size(toks) = 0 THEN CAST(array() AS ARRAY<ARRAY<STRING>>)
@@ -880,7 +907,7 @@ object TextOps {
   val c4LineCleanOracle: String = {
     val listSql = Blocklist.map(w => s"'$w'").mkString(", ")
     s"""WITH t AS (SELECT doc_id,
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+       |    $tokensSql AS toks
        |  FROM documents),
        |fr AS (SELECT doc_id,
        |    list_transform(range(CAST(ceil(len(toks) / $C4LineTokens.0) AS BIGINT)),
@@ -924,7 +951,7 @@ object TextOps {
     import s.implicits._
     org.apache.spark.sql.graft.GraftFunctions.register(s) // installs strategy
     val tf = Tables.documents(s, d)
-      .select($"doc_id", explode(tokensCol).as("term"))
+      .select($"doc_id", explode(tokens).as("term"))
       .groupBy($"term", $"doc_id").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
       .filter($"df" >= IndexMinDf)
@@ -940,7 +967,7 @@ object TextOps {
     * row_number-filter by construction, PlanSpec's q07b precedent). */
   val invertedIndexOracle: String =
     s"""WITH tok AS (SELECT doc_id,
-       |    unnest(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS term
+       |    unnest($tokensSql) AS term
        |  FROM documents),
        |tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
        |  FROM tok GROUP BY 1, 2),
@@ -1212,7 +1239,7 @@ object TextOps {
   def repetitionSignals(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val words = Tables.documents(s, d)
-      .select($"doc_id", explode(tokensCol).as("word"))
+      .select($"doc_id", explode(tokens).as("word"))
     words.groupBy($"doc_id", $"word").agg(count(lit(1)).as("freq"))
       .groupBy($"doc_id")
       .agg(sum($"freq").as("n_words"), count(lit(1)).as("n_distinct_words"),
@@ -1225,8 +1252,8 @@ object TextOps {
   }
 
   val repetitionSignalsOracle: String =
-    """WITH w AS (SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS word
+    s"""WITH w AS (SELECT doc_id,
+      |    unnest($tokensSql) AS word
       |  FROM documents),
       |f AS (SELECT doc_id, word, count(*) AS freq FROM w GROUP BY 1, 2),
       |m AS (SELECT doc_id, CAST(sum(freq) AS BIGINT) AS n_words,
@@ -1280,8 +1307,8 @@ object TextOps {
     * to be fully SQL-expressible, so language ID is hash-matched, not
     * rows-only. */
   val langIdOracle: String =
-    """WITH t AS (SELECT doc_id, text, lang,
-      |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+    s"""WITH t AS (SELECT doc_id, text, lang,
+      |  ${tokensSqlOf("lower(text)")} AS toks
       |  FROM documents),
       |c AS (SELECT doc_id, text, lang, toks,
       |  len(list_filter(toks, x -> x IN ('the','and','of','to','is','with','for','that'))) AS n_en,
@@ -1296,7 +1323,7 @@ object TextOps {
       | FROM c)
       |SELECT doc_id,
       | CASE WHEN len(toks) = 0 THEN 'und'
-      |      WHEN regexp_matches(text, '[\x{4E00}-\x{9FFF}]') THEN 'zh'
+      |      WHEN regexp_matches(text, '[\\x{4E00}-\\x{9FFF}]') THEN 'zh'
       |      WHEN best.n = 0 THEN 'und'
       |      ELSE best.l END AS pred_lang,
       | lang AS actual_lang

@@ -209,6 +209,35 @@ class CorpusSpec extends SparkTestBase {
     assert(ranks.sameElements(ranks.sortBy { case (bx, nid) => (-bx, -nid) }),
       "rows must arrive in (score desc, doc_id asc) rank order")
     assert(got.length <= Corpus.Bm25TopK)
+    // the per-query path (hybrid's lexical leg): a two-query term frame
+    // over the same corpus. Query 0 = doc 0 asks (spark, vector); query 2
+    // = doc 2 asks (filter, spark). df is corpus-wide: spark 3, vector 1,
+    // filter 5. Each (query, doc) score is the hand formula summed over
+    // the query's terms; a doc never scores against its own query
+    val terms = Seq((0L, "spark"), (0L, "vector"), (2L, "filter"), (2L, "spark"))
+      .toDF("query_id", "word")
+    val perQuery = Corpus.hybridLexOf(docs, terms)
+      .select("query_id", "doc_id", "bm25").as[(Long, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    val dl = Map(0L -> 3.0, 1L -> 6.0, 2L -> 2.0, 3L -> 2.0, 4L -> 2.0)
+    val tf = Map(
+      0L -> Map("spark" -> 2, "filter" -> 1), 1L -> Map("spark" -> 1, "filter" -> 5),
+      2L -> Map("vector" -> 1, "filter" -> 1), 3L -> Map("filter" -> 2),
+      4L -> Map("spark" -> 1, "filter" -> 1))
+    val df = Map("spark" -> 3, "vector" -> 1, "filter" -> 5)
+    def w(word: String, doc: Long): Double = tf(doc).get(word).fold(0.0) { t =>
+      math.log((5 - df(word) + 0.5) / (df(word) + 0.5) + 1) *
+        (t * (k1 + 1)) / (t + k1 * (1 - b + b * dl(doc) / 3.0))
+    }
+    val queries = Map(0L -> Seq("spark", "vector"), 2L -> Seq("filter", "spark"))
+    val want = for {
+      (q, ws) <- queries; doc <- dl.keys
+      if doc != q && ws.exists(tf(doc).contains)
+    } yield (q, doc) -> r4(ws.map(w(_, doc)).sum)
+    assert(perQuery.keySet === want.keySet)
+    want.foreach { case (k, v) => assert(perQuery(k) === v, s"(query, doc) = $k") }
+    assert(!perQuery.contains((0L, 0L)) && !perQuery.contains((2L, 2L)),
+      "a query doc must not retrieve itself")
   }
 
   test("DSIR weights: target-token docs outrank, hand-computed ratio, empty doc omitted") {

@@ -19,6 +19,43 @@ class TextSpec extends SparkTestBase {
     }
   }
 
+  test("tokenizer: engine tokens and the DuckDB tokensSql split the edge strings alike") {
+    import scala.sys.process._
+    assume(scala.util.Try(Seq("python3", "-c", "import duckdb").! == 0).getOrElse(false),
+      "python3 with the duckdb module not available")
+    val edges = Seq("a\u000Bb", "\u000B", "x \u000B\t y", "a\tb\r\nc\fd", "\t\t\r\r\f\f",
+      "  lead", "trail  ", "  both  ", "", "   ", "a\u00A0b", "a\u2003b", "a b")
+    // a token as its code points in hex, a row as its tokens — the same
+    // plain-ASCII line on both sides, whatever the token characters
+    def line(toks: Seq[String]): String =
+      toks.map(_.codePoints.toArray.map(Integer.toHexString).mkString(",")).mkString(" ")
+    val engine = edges.zipWithIndex.toDF("text", "i")
+      .select($"i", TextOps.tokens.as("toks")).as[(Int, Seq[String])].collect()
+      .sortBy(_._1).map(r => line(r._2)).toSeq
+    def jsonStr(s: String) = s.map(c => f"\\u${c.toInt}%04x").mkString("\"", "", "\"")
+    val input = s"""{"sql": ${jsonStr(TextOps.tokensSql)}, "texts": [${edges.map(jsonStr).mkString(", ")}]}"""
+    val script =
+      """import duckdb, json, sys
+        |req = json.load(sys.stdin)
+        |con = duckdb.connect()
+        |con.execute("CREATE TABLE d (i INTEGER, text VARCHAR)")
+        |con.executemany("INSERT INTO d VALUES (?, ?)", list(enumerate(req["texts"])))
+        |for (toks,) in con.execute("SELECT " + req["sql"] + " FROM d ORDER BY i").fetchall():
+        |    print(" ".join(",".join(format(ord(c), "x") for c in t) for t in toks))
+        |""".stripMargin
+    val out = (Seq("python3", "-c", script) #<
+      new java.io.ByteArrayInputStream(input.getBytes("UTF-8"))).!!
+    val duck = out.split("\n", -1).dropRight(1).toSeq
+    assert(duck.length === edges.length, out)
+    edges.indices.foreach { i =>
+      assert(duck(i) === engine(i), s"edge string ${edges(i).map(_.toInt)}")
+    }
+    // the expected split itself: \x0B is a blank, NBSP and U+2003 are not
+    assert(engine(0) === "61 62")
+    assert(engine(8) === "" && engine(9) === "")
+    assert(engine(10) === "61,a0,62" && engine(11) === "61,2003,62")
+  }
+
   test("quality quantile filter: per-source keep fraction, threshold membership, approx parity") {
     import org.apache.spark.sql.functions.col
     val docs = graft.core.Tables.documents(spark, sf)
