@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.{JobRunner, KV}
+import graft.engine.{Builtins, JobRunner}
 import graft.sources.Sdfs
 
 /** Reference-compatible command shell (reference README.md:53-92 command
@@ -240,28 +240,14 @@ object Cli {
     } else (Seq("python3"), exe)
 
   private def mapleFn(spark: SparkSession, exe: String): graft.engine.MapleJuice.MapleFn =
-    exe match {
-      case "builtin:wc" =>
-        ls => ls.flatMap(_.split("\\s+")).filter(_.nonEmpty).map(w => KV(w, "1"))
-      case "builtin:rwlg" =>
-        ls => ls.flatMap { l =>
-          val i = l.indexOf(',')
-          if (i < 0) Iterator.empty
-          else Iterator.single(KV(l.substring(i + 1), l.substring(0, i)))
-        }
-      case _ =>
-        val (interp, path) = splitExe(exe)
-        new graft.engine.ExeRunner(spark, interp).mapleFn(path)
+    Builtins.byName.get(exe).map(_._1).getOrElse {
+      val (interp, path) = splitExe(exe)
+      new graft.engine.ExeRunner(spark, interp).mapleFn(path)
     }
 
   private def juiceFn(spark: SparkSession, exe: String): graft.engine.MapleJuice.JuiceFn =
-    exe match {
-      case "builtin:wc" =>
-        (k, vs) => Iterator.single(KV(k, vs.map(_.toLong).sum.toString))
-      case "builtin:rwlg" =>
-        (k, vs) => Iterator.single(KV(k, vs.toSet.toSeq.sorted.mkString(",")))
-      case _ =>
-        val (interp, path) = splitExe(exe)
-        new graft.engine.ExeRunner(spark, interp).juiceFn(path)
+    Builtins.byName.get(exe).map(_._2).getOrElse {
+      val (interp, path) = splitExe(exe)
+      new graft.engine.ExeRunner(spark, interp).juiceFn(path)
     }
 }

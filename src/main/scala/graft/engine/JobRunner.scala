@@ -30,7 +30,9 @@ class JobRunner(spark: SparkSession, sdfs: graft.sources.Sdfs) {
   private val staged = scala.collection.concurrent.TrieMap[String, DataFrame]()
 
   /** Enqueue-and-wait (the reference CLI blocks watching progress anyway);
-    * returns output row count. One job at a time, FIFO. */
+    * returns the Maple's pair count or the lines the Juice wrote, the
+    * latter counted by the write itself ([[MapleJuice.sinkSorted]]). One
+    * job at a time, FIFO. */
   def submit(job: Job): Long = synchronized { run(job) }
 
   private def run(job: Job): Long = job match {
@@ -59,8 +61,7 @@ class JobRunner(spark: SparkSession, sdfs: graft.sources.Sdfs) {
       import spark.implicits._
       val inter = interDf.as[KV]
       val result = engine.juice(inter, fn)
-      engine.sinkSorted(result, dest, singleFile = single)
-      val n = spark.read.textFile(dest).count()
+      val n = engine.sinkSorted(result, dest, singleFile = single)
       if (deleteInput) {
         // delete-input applies to whichever form the intermediate took:
         // a staged cache entry, or a PUBLISHED SDFS intermediate (the

@@ -1,5 +1,8 @@
 package graft.engine
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -24,11 +27,25 @@ object MapleJuice {
 
   /** Juice contract — reference `src/MapReduceWorker.java:235-247`: the user
     * executable receives (key, file-of-values) and emits `key,value` pairs.
-    * Spark-natively: `groupByKey(_.key).flatMapGroups`.
+    * Spark-natively: group by the `key` column, then `flatMapGroups`.
     */
   type JuiceFn = (String, Iterator[String]) => Iterator[KV]
 
   val BatchSizeCompat = 10
+
+  /** Lines a written text row reads back as. The text reader ends a line
+    * at `\n`, `\r` or `\r\n`, so a value holding breaks spans several; the
+    * writer's own `\n` after a trailing `\r` makes one `\r\n`. */
+  private def linesIn(row: String): Long = {
+    var n = 1L
+    var i = 0
+    while (i < row.length) {
+      val c = row.charAt(i)
+      if (c == '\n' || (c == '\r' && i + 1 < row.length && row.charAt(i + 1) != '\n')) n += 1
+      i += 1
+    }
+    n
+  }
 }
 
 /** Spark-native re-expression of the reference's Maple/Juice dataflow
@@ -50,18 +67,39 @@ object MapleJuice {
   *   - algebraic reduces should use [[juiceAggregated]] (partial map-side
   *     aggregation — the Hadoop-combiner analog, SURVEY.md §2.1 D4).
   *   - sorted single-file output is a compat mode; the scalable sink is
-  *     range-partitioned sorted parquet ([[sinkSorted]]).
+  *     range-partitioned sorted text ([[sinkSorted]]).
   */
 class MapleJuice(spark: SparkSession) {
   import MapleJuice._
   import spark.implicits._
 
-  /** D1: directory scan — enumerate + read input lines. Spark handles
-    * listing, splitting and task assignment (D2); `maxPartitionBytes`
-    * replaces the reference's count-based contiguous file split
-    * (`src/MapReduceMaster.java:70-95`). */
-  def readLines(dir: String): Dataset[String] =
-    spark.read.option("recursiveFileLookup", "true").textFile(dir)
+  /** D1: directory scan — enumerate + read input lines, as at least
+    * `defaultParallelism` balanced, contiguous splits (the reference's
+    * contiguous file split, `src/MapReduceMaster.java:70-95`).
+    *
+    * Not the session's text source: its splits pack files to
+    * `spark.sql.files.maxPartitionBytes` with a 4 MB open-cost floor per
+    * file, so a 6 MB input `put` as two part files read as 2 splits, and
+    * every Maple (and the Juice map side over its cached output) ran 2
+    * tasks on 4 slots. Hadoop's `TextInputFormat` with `minPartitions =
+    * defaultParallelism` aims each split at total size / parallelism
+    * (capped by the block size), so every slot gets a share. The session
+    * file settings stay as they are: the SQL tables read through them.
+    *
+    * Same lines as `spark.read.option("recursiveFileLookup", "true")
+    * .textFile(dir)`: the walk recurses into nested directories (`put`
+    * writes each name as a directory of part files), skips hidden `_`/`.`
+    * names (`_SUCCESS`, `.crc`), and a line ends at `\n`, `\r` or
+    * `\r\n`, the last one with or without a terminator. */
+  def readLines(dir: String): Dataset[String] = {
+    val sc = spark.sparkContext
+    val conf = new JobConf(sc.hadoopConfiguration)
+    FileInputFormat.setInputPaths(conf, new Path(dir))
+    conf.setBoolean(FileInputFormat.INPUT_DIR_RECURSIVE, true)
+    sc.hadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable], classOf[Text],
+        sc.defaultParallelism)
+      .map(_._2.toString).toDS()
+  }
 
   /** D3: the Maple phase. `strictBatching = true` reproduces the
     * reference's 10-line batch boundary including the short tail batch
@@ -78,9 +116,11 @@ class MapleJuice(spark: SparkSession) {
     * (`src/MapReduceMaster.java:276-281`). Keys are disjoint across tasks by
     * construction, so the reference's duplicate-key last-write-wins gather
     * (D8, `src/MapReduceMaster.java:371-374`) cannot trigger — the engine is
-    * deterministic where the reference was not (SURVEY.md §7.4). */
+    * deterministic where the reference was not (SURVEY.md §7.4). Grouped
+    * by the `key` column, not a typed key function: the shuffle carries
+    * each pair once, with no deserialized copy of its key beside it. */
   def juice(inter: Dataset[KV], fn: JuiceFn): Dataset[KV] =
-    inter.groupByKey(_.key)
+    inter.groupBy($"key").as[String, KV]
       .flatMapGroups((k, rows) => fn(k, rows.map(_.value)))
 
   /** Algebraic fast path for Juice fns that are associative+commutative
@@ -91,19 +131,33 @@ class MapleJuice(spark: SparkSession) {
       inter: Dataset[KV], agg: Aggregator[KV, B, O]): Dataset[(String, O)] =
     inter.groupByKey(_.key).agg(agg.toColumn)
 
-  /** D9+D10: sorted sink. `singleFile = true` is the reference-compat mode
-    * (one `key\tvalue` text file, `src/MapReduceMaster.java:453-489`);
-    * default is the scalable form — range-partitioned, sorted within
-    * partitions, so output is globally sorted across part files without a
-    * single-task bottleneck. */
+  /** D9+D10: sorted sink; returns the number of lines it wrote.
+    * `singleFile = true` is the reference-compat mode (one `key\tvalue`
+    * text file sorted by the whole line, `src/MapReduceMaster.java:453-489`):
+    * one shuffle into a single partition, sorted there. Not `orderBy` +
+    * `coalesce(1)`: `orderBy` range-partitions, and the RangePartitioner's
+    * sample job re-runs the whole Juice (shuffle read, grouping, `JuiceFn`)
+    * before the exchange runs it again. The default is the scalable form —
+    * range-partitioned, sorted within partitions, so output is globally
+    * sorted across part files without a single-task bottleneck.
+    *
+    * The count is taken in the write's own final stage, so nothing is read
+    * back. That stage is the write job's result stage, where Spark merges
+    * an accumulator update once per partition: a failed attempt's update is
+    * dropped and a re-run of a finished partition is not merged again, so
+    * the count is exact under task and stage retry. The range sampler reads
+    * the stage before the exchange and never touches it. */
   def sinkSorted(result: Dataset[KV], dest: String,
-                 singleFile: Boolean = false): Unit = {
+                 singleFile: Boolean = false): Long = {
     val lines = result
       .select(concat_ws("\t", $"key", $"value").as("value"))
     val arranged =
-      if (singleFile) lines.orderBy($"value").coalesce(1)
+      if (singleFile) lines.repartition(1).sortWithinPartitions($"value")
       else lines.repartitionByRange($"value").sortWithinPartitions($"value")
-    arranged.write.mode("overwrite").text(dest)
+    val written = spark.sparkContext.longAccumulator("graft.sink.lines")
+    arranged.as[String].map { r => written.add(linesIn(r)); r }
+      .write.mode("overwrite").text(dest)
+    written.value
   }
 
   /** Sorted result as a DataFrame (what D8–D9 gather+TreeMap produce,

@@ -816,6 +816,9 @@ object Dedup {
     import s.implicits._
     import org.apache.spark.sql.graft.GraftFunctions
     val nWords = 1 << (log2m - 6)
+    // resolved here, not in the Aggregator's body: `s.implicits` there
+    // would make the task-shipped class capture the session
+    val bitsEnc = implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
     // empty-array zero is the no-rows-seen sentinel (the meanAgg idiom) —
     // a task that saw no eval grams ships 0 bytes, not 128 KiB of zeros
     val bloomAgg = new org.apache.spark.sql.expressions.Aggregator[
@@ -836,10 +839,8 @@ object Dedup {
         }
       def finish(r: Array[Long]): Array[Long] =
         if (r.length == 0) new Array[Long](nWords) else r
-      def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-        implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
-      def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-        implicitly[org.apache.spark.sql.Encoder[Array[Long]]]
+      def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] = bitsEnc
+      def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] = bitsEnc
     }
     grams
       .select(explode(

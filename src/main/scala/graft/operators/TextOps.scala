@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.engine.{KV, MapleJuice}
+import graft.engine.{Builtins, KV, MapleJuice}
 import org.apache.spark.sql.Encoders
 
 /** The reference's two shipped applications — word count and reverse
@@ -46,20 +46,16 @@ object TextOps {
   private[graft] def tokensSql: String = tokensSqlOf("text")
 
   // ----------------------------------------------------------- word count
-  /** A1/A2 semantics (reference `applications/wc-maple.py:5-7`,
-    * `wc-juice.py:5-14`): whitespace-split, count per word. */
-  private def wcMaple: MapleJuice.MapleFn =
-    lines => lines.flatMap(_.split("\\s+")).filter(_.nonEmpty).map(w => KV(w, "1"))
-
-  private def wcJuice: MapleJuice.JuiceFn =
-    (key, values) => Iterator.single(KV(key, values.map(_.toLong).sum.toString))
+  // The A1–A4 Maple/Juice bodies (reference `applications/wc-*.py`,
+  // `rwlg-*.py`) live in `graft.engine.Builtins`; word count splits on the
+  // tokenizer above in the engine, the declarative plan and the oracle.
 
   /** Word count driven through the Maple/Juice engine (typed path). */
   def wcMapleJuice(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val mj = new MapleJuice(s)
     val lines = Tables.documents(s, d).select($"text").as[String]
-    mj.runOn(lines, wcMaple, wcJuice)
+    mj.runOn(lines, Builtins.wcMaple, Builtins.wcJuice)
       .select($"key".as("word"), $"value".cast("long").as("cnt"))
   }
 
@@ -71,7 +67,7 @@ object TextOps {
     import s.implicits._
     val mj = new MapleJuice(s)
     val lines = Tables.documents(s, d).select($"text").as[String]
-    val inter = mj.maple(lines, wcMaple)
+    val inter = mj.maple(lines, Builtins.wcMaple)
     val counts = new org.apache.spark.sql.expressions.Aggregator[KV, Long, Long] {
       def zero: Long = 0L
       def reduce(b: Long, kv: KV): Long = b + kv.value.toLong
@@ -85,43 +81,28 @@ object TextOps {
 
   /** Word count as the declarative plan (explode + hash aggregate with
     * map-side partial counts — the combiner the reference lacked). */
-  def wcDataFrame(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  def wcDataFrame(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(explode(split($"text", "\\s+")).as("word"))
-      .filter($"word" =!= "")
-      .groupBy($"word")
+      .select(explode(tokens).as("word"))
+      .groupBy(col("word"))
       .agg(count(lit(1)).as("cnt"))
-  }
 
   val wcOracle: String =
-    """SELECT word, count(*) AS cnt FROM (
-      |  SELECT unnest(string_split_regex(text, '\s+')) AS word FROM documents) t
-      |WHERE word <> '' GROUP BY word""".stripMargin
+    s"""SELECT word, count(*) AS cnt FROM (
+      |  SELECT unnest($tokensSql) AS word FROM documents) t
+      |GROUP BY word""".stripMargin
 
   // ------------------------------------------------- reverse web-link graph
-  /** A3/A4 semantics (reference `applications/rwlg-maple.py:5-7`,
-    * `rwlg-juice.py:5-14`): reverse `source,target` edges, gather a sorted
-    * distinct adjacency list per target. Edge list here: lineitem's
-    * (part → supplier) pairs, stringly-typed exactly like the reference. */
-  private def rwlgMaple: MapleJuice.MapleFn =
-    lines => lines.flatMap { line =>
-      val i = line.indexOf(',')
-      if (i < 0) Iterator.empty
-      else Iterator.single(KV(line.substring(i + 1), line.substring(0, i)))
-    }
-
-  private def rwlgJuice: MapleJuice.JuiceFn =
-    (key, values) =>
-      Iterator.single(KV(key, values.toSet.toSeq.sorted.mkString(",")))
-
-  /** RWLG through the Maple/Juice engine. */
+  /** RWLG through the Maple/Juice engine: reverse `source,target` edges,
+    * gather a sorted distinct adjacency list per target. Edge list here:
+    * lineitem's (part → supplier) pairs, stringly-typed exactly like the
+    * reference. */
   def rwlgMapleJuice(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val mj = new MapleJuice(s)
     val edges = Tables.lineitem(s, d)
       .select(concat_ws(",", $"l_partkey", $"l_suppkey").as("line")).as[String]
-    mj.runOn(edges, rwlgMaple, rwlgJuice)
+    mj.runOn(edges, Builtins.rwlgMaple, Builtins.rwlgJuice)
       .select($"key".as("target"), $"value".as("sources"))
   }
 

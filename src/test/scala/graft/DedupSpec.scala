@@ -326,6 +326,20 @@ class DedupSpec extends SparkTestBase {
     assert(bloom(11L) === ((6L, 0.3)) && bloom(12L) === ((7L, 0.35)))
   }
 
+  test("bloom contamination runs in a session where an Observation has run") {
+    // an Observation leaves a non-serializable ObservationManager in its
+    // session, so any task-shipped class that captured the session fails
+    // with Task not serializable from then on; a fresh session keeps the
+    // shared one clean for the other suites
+    import org.apache.spark.sql.functions.{count, lit}
+    val s2 = spark.newSession()
+    val obs = org.apache.spark.sql.Observation("probe")
+    s2.range(3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") === 3L)
+    val flagged = Dedup.bloomContamination(s2, sf).collect()
+    assert(flagged.length === Dedup.bloomContamination(spark, sf).count())
+  }
+
   test("embedding cosine pairs match a driver-side recomputation") {
     import spark.implicits._
     val vecs = graft.core.Tables.embeddings(spark, sf)

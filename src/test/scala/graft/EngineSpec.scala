@@ -60,6 +60,55 @@ class EngineSpec extends SparkTestBase {
     assert(lines.toSeq === Seq("a\t1", "b\t2", "c\t3"))
   }
 
+  test("sinkSorted single file: 8 input partitions, one data file, whole-line order, count") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink1").toString + "/out"
+    val rnd = new scala.util.Random(5)
+    val kvs = Seq.fill(2000)(KV(rnd.alphanumeric.take(1 + rnd.nextInt(4)).mkString,
+      rnd.nextInt(1000).toString))
+    val n = mj.sinkSorted(kvs.toDS().repartition(8), dir, singleFile = true)
+    val data = new java.io.File(dir).listFiles()
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith(".")).toSeq
+    assert(data.size === 1, data.map(_.getName))
+    val lines = java.nio.file.Files.readAllLines(data.head.toPath).toArray.toSeq
+    val expected = kvs.map(kv => s"${kv.key}\t${kv.value}").sorted
+    assert(lines === expected)
+    assert(n === 2000L)
+  }
+
+  test("readLines: nested dirs, hidden files, CR/CRLF ends and a bare last line read like the text source") {
+    val root = java.nio.file.Files.createTempDirectory("graft_lines")
+    def write(rel: String, body: String): Unit = {
+      val p = root.resolve(rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+    }
+    write("in/part0/part-00000.txt", "a b\r\nc\r\n\r\nd")
+    write("in/part0/_SUCCESS", "hidden\n")
+    write("in/part0/.part-00000.txt.crc", "hidden\n")
+    write("in/part1/deeper/part-00001.txt", "x\ry\r\n\tz \nlast without newline")
+    write("in/part1/_SUCCESS", "")
+    write("in/flat.txt", "\n\nflat\n")
+    val dir = root.resolve("in").toString
+    val got = mj.readLines(dir).collect().toSeq.sorted
+    val ref = spark.read.option("recursiveFileLookup", "true").textFile(dir)
+      .collect().toSeq.sorted
+    assert(got === ref)
+    assert(got === Seq("", "", "", "\tz ", "a b", "c", "d", "flat",
+      "last without newline", "x", "y"))
+  }
+
+  test("readLines: a multi-MB input splits into at least defaultParallelism partitions") {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory("graft_split").toString
+    val sdfs = new graft.sources.Sdfs(spark, wh)
+    // two part files, like a put of a 2-partition Dataset
+    sdfs.put(spark.range(0, 120000, 1, 2).map(i => s"line $i of the split input"), "in")
+    val lines = mj.readLines(s"$wh/in")
+    assert(lines.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+    assert(lines.count() === 120000L)
+  }
+
   test("pipe runner: external exe maple (cat) preserves kv lines") {
     import spark.implicits._
     val pr = new PipeRunner(spark)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{JobRunner, KV}
+import graft.engine.{Builtins, JobRunner, KV}
 import graft.sources.Sdfs
 
 class SdfsSpec extends SparkTestBase {
@@ -78,5 +78,42 @@ class SdfsSpec extends SparkTestBase {
     assert(nOut === 3)
     val lines = spark.read.textFile(dest).collect().toSeq
     assert(lines === Seq("a\t3", "b\t1", "c\t1"))
+  }
+
+  test("JobRunner: empty Maple output gives 0 and 0, and the sink holds no lines") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val (sdfs, wh) = freshSdfs()
+    sdfs.put(Seq("", " \t ", "").toDS(), "blank/part0")
+    val runner = new JobRunner(spark, sdfs)
+    val dest = s"$wh/out_empty"
+    // bounded: a count that waits on metrics that never arrive must fail,
+    // not hang the suite
+    val (nInter, nOut) = Await.result(Future {
+      val m = runner.submit(runner.MapleJob(s"$wh/blank", Builtins.wcMaple, "empty_inter"))
+      (m, runner.submit(runner.JuiceJob("empty_inter", Builtins.wcJuice, dest, deleteInput = true)))
+    }, 3.minutes)
+    assert(nInter === 0L)
+    assert(nOut === 0L)
+    assert(spark.read.textFile(dest).count() === 0L)
+  }
+
+  test("JobRunner: juice count equals the lines on disk when keys emit 0, 2 or multi-line values") {
+    val (sdfs, wh) = freshSdfs()
+    sdfs.put(Seq("k1\ta", "k2\tb", "k3\tc", "k4\td", "k1\te").toDS(), "uneven")
+    val runner = new JobRunner(spark, sdfs)
+    val dest = s"$wh/out_uneven"
+    // k2 emits nothing; k1 and k3 two lines each; k4 values whose line
+    // breaks (LF, CRLF, lone CR, trailing CR) make one row read back as
+    // several lines, or as one
+    val n = runner.submit(runner.JuiceJob("uneven", (k, vs) => k match {
+      case "k2" => Iterator.empty
+      case "k4" => Iterator(KV(k, "x\ny"), KV(k, "p\r\nq\rr"), KV(k, "t\r"))
+      case _ => vs.toSeq.sorted.iterator.flatMap(v => Iterator(KV(k, v), KV(k, v + v)))
+    }, dest))
+    val onDisk = spark.read.textFile(dest).collect()
+    assert(n === onDisk.length.toLong)
+    assert(n === 6L + 2 + 3 + 1)
   }
 }

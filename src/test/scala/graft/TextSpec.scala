@@ -6,6 +6,9 @@ import graft.multimodal.Multimodal
 class TextSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** A JSON string literal of `s`, every char written as a unicode escape. */
+  private def jsonStr(s: String) = s.map(c => f"\\u${c.toInt}%04x").mkString("\"", "", "\"")
+
   test("token stats: counts are consistent with raw text") {
     val row = TextOps.tokenStats(spark, sf)
       .select("doc_id", "n_tokens", "n_token_chars")
@@ -32,7 +35,6 @@ class TextSpec extends SparkTestBase {
     val engine = edges.zipWithIndex.toDF("text", "i")
       .select($"i", TextOps.tokens.as("toks")).as[(Int, Seq[String])].collect()
       .sortBy(_._1).map(r => line(r._2)).toSeq
-    def jsonStr(s: String) = s.map(c => f"\\u${c.toInt}%04x").mkString("\"", "", "\"")
     val input = s"""{"sql": ${jsonStr(TextOps.tokensSql)}, "texts": [${edges.map(jsonStr).mkString(", ")}]}"""
     val script =
       """import duckdb, json, sys
@@ -54,6 +56,37 @@ class TextSpec extends SparkTestBase {
     assert(engine(0) === "61 62")
     assert(engine(8) === "" && engine(9) === "")
     assert(engine(10) === "61,a0,62" && engine(11) === "61,2003,62")
+  }
+
+  test("word count: the builtin Maple/Juice and the DuckDB wcOracle count the edge strings alike") {
+    import scala.sys.process._
+    assume(scala.util.Try(Seq("python3", "-c", "import duckdb").! == 0).getOrElse(false),
+      "python3 with the duckdb module not available")
+    val docs = Seq("a\u000Bb a", "\u000B", "x \u000B\t y", "a\tb\r\nc\fd", "\t\t\r\r\f\f",
+      "  lead", "trail  ", "  both  ", "", "   ", "a\u00A0b", "b a")
+    // a word as its code points in hex, then its count — plain ASCII on
+    // both sides, whatever the word characters
+    def hex(w: String): String = w.codePoints.toArray.map(Integer.toHexString).mkString(",")
+    val engine = new graft.engine.MapleJuice(spark)
+      .runOn(docs.toDS(), graft.engine.Builtins.wcMaple, graft.engine.Builtins.wcJuice)
+      .as[(String, String)].collect().map { case (w, n) => s"${hex(w)} $n" }.sorted.toSeq
+    val input = s"""{"sql": ${jsonStr(TextOps.wcOracle)}, "texts": [${docs.map(jsonStr).mkString(", ")}]}"""
+    val script =
+      """import duckdb, json, sys
+        |req = json.load(sys.stdin)
+        |con = duckdb.connect()
+        |con.execute("CREATE TABLE documents (doc_id INTEGER, text VARCHAR)")
+        |con.executemany("INSERT INTO documents VALUES (?, ?)", list(enumerate(req["texts"])))
+        |for (w, n) in con.execute(req["sql"]).fetchall():
+        |    print(",".join(format(ord(c), "x") for c in w), n)
+        |""".stripMargin
+    val out = (Seq("python3", "-c", script) #<
+      new java.io.ByteArrayInputStream(input.getBytes("UTF-8"))).!!
+    val duck = out.split("\n").filter(_.nonEmpty).sorted.toSeq
+    assert(duck === engine)
+    // the expected counts: \x0B, tab, CR, LF and FF separate words, NBSP does not
+    assert(engine === Seq("61 4", "61,a0,62 1", "62 3", "63 1", "64 1", "6c,65,61,64 1",
+      "74,72,61,69,6c 1", "78 1", "79 1", "62,6f,74,68 1").sorted)
   }
 
   test("quality quantile filter: per-source keep fraction, threshold membership, approx parity") {
