@@ -2,20 +2,47 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftFunctions
 import graft.core.Tables
 
-/** Deduplication operator family over the `documents` table — the core of a
-  * pre-training data pipeline (exact → fingerprint → MinHash-LSH → SimHash
-  * → n-gram Jaccard), each with the 100 TB strategy stated inline.
+/** Deduplication operator family over the `documents` table — exact,
+  * n-gram Jaccard, winnowing, MinHash-LSH, SimHash, span, paragraph and
+  * embedding dedup plus the decontamination passes — each with its 100 TB
+  * shape stated inline.
   *
-  * Scale doctrine: anything pairwise must be *blocked* first (LSH bands,
-  * SimHash bands) so the shuffle key is the block id and candidate
-  * generation is an equi-join, never a cross join. Exact pairwise forms
-  * exist here as oracles/verifiers for the probabilistic paths.
+  * The set-Jaccard near-dup operators share ONE kernel: a CANDIDATE SOURCE
+  * feeds ONE exact verifier, the filter-then-verify unit of thresholded
+  * similarity search.
+  *
+  *   - **Candidate sources** (each keeps its own recall contract): the
+  *     df-pruned inverted index ([[prunedIndexOf]]; n-gram Jaccard and
+  *     winnowing), MinHash band buckets ([[lshBandsOf]]; MinHash-LSH and the
+  *     clustering edges) and the fixed-size eval side of those buckets,
+  *     broadcast (fuzzy decontamination).
+  *   - **One verifier** ([[jaccardTail]]): every candidate carries the
+  *     exact intersection `c` of its two FULL element sets — from the gram
+  *     arrays on the LSH legs, as rare count plus hot add-back on the
+  *     pruned index — and is kept iff c / (na + nb − c) reaches the
+  *     threshold, scored by [[ratio4]]. Emitted scores are exact by
+  *     construction; two sources differ only in which pairs they find.
+  *   - **One identical-copy collapse** ([[collapseCopies]]): byte-identical
+  *     docs become their min-doc_id md5 representative before any index or
+  *     band is built; [[Copies.expand]] restores the copy pairs where the
+  *     output is pairs.
+  *
+  * The DuckDB twins compose the same pieces: [[collapseCtes]] /
+  * [[expandCollapsedSql]], [[prunedCandCtes]] and [[scoredPairsCtes]], so
+  * a threshold, cap or score change is one edit in each engine.
+  *
+  * Scale doctrine: anything pairwise is *blocked* first (pruned index,
+  * LSH bands, SimHash bands) so the shuffle key is the block id and
+  * candidate generation is an equi-join, never a cross join. Exact
+  * pairwise forms exist here as oracles/verifiers for the probabilistic
+  * paths.
   */
 object Dedup {
 
-  /** Absolute ceiling on the MOSS df-prune caps (winnow + n-gram index).
+  /** Absolute ceiling on the MOSS df-prune cap of [[prunedIndexOf]].
     * A pure 1%-of-corpus cap is quadratic (bucket joins cost (0.01n)2);
     * worse, even a LOOSE absolute ceiling leaves a quadratic TRANSITION
     * regime — fingerprints whose df sits just under the ceiling triple
@@ -26,55 +53,61 @@ object Dedup {
     * jac >= 0.5 pair shares a third of its fingerprint union, and the
     * discriminative fingerprints (word-boundary-spanning windows, rare
     * phrases) have single-digit df. One constant, interpolated into the
-    * Scala caps AND both DuckDB oracles, so they cannot drift. */
+    * Scala cap AND its DuckDB twin, so they cannot drift. */
   val DfCapCeiling = 64L
 
-  // ------------------------------------- identical-copy collapse/expansion
-  /** Shared identical-copy guard for the df-pruned pairwise operators
-    * ([[ngramJaccardPairsOf]], [[TextOps.winnowCandidatesOf]]): collapse
-    * byte-identical docs to their min-doc_id representative BEFORE the
-    * pruned index is built, score pairs among representatives only, then
-    * expand rep pairs back to copy pairs and add the within-group clique
-    * at score 1.0.
+  /** Jaccard floor of the symmetric word-3-gram near-dup pairs (n-gram,
+    * MinHash-LSH and the closure oracles' pair graph). */
+  val NearDupJaccard = 0.5
+
+  // ----------------------------------------------------- near-dup kernel
+  /** The collapse half of the identical-copy guard: the docs passing
+    * `eligible`, grouped by md5(text), each group's minimum doc_id its
+    * representative. [[Copies.members]] maps every eligible doc to its
+    * rep, [[Copies.reps]] holds the representatives' own rows of `docs`.
     *
     * Why: with the absolute [[DfCapCeiling]], a cluster of more than ~64
     * identical copies makes every one of its index keys hot, so all pairs
-    * inside it silently vanish from a pruned index — and duplicate-heavy
-    * clusters are precisely what a dedup operator must find. Collapsing
-    * first bounds every cluster's index contribution to ONE doc; the
-    * expansion is output-bound (those pairs ARE the result).
-    *
-    * `eligible` scopes the collapse to docs that can produce index keys at
-    * all (gram-bearing / long-enough) — an ineligible doc can never pair,
-    * and keeping it out preserves the node universe. `score` names the score
-    * column `scoreReps` emits alongside (doc_a, doc_b); identical text ⇒
-    * identical key set ⇒ the rep's score transfers to every copy pair. */
-  private[graft] def expandCollapsedPairs(
-      docs: DataFrame, eligible: Column, score: String)(
-      scoreReps: DataFrame => DataFrame): DataFrame = {
+    * inside it silently vanish from a pruned index; and m copies share all
+    * [[MinHashBands]] band buckets, m²/2 LSH candidates. Collapsing first
+    * bounds every cluster's contribution to ONE doc; identical text ⇒
+    * identical element set, so a rep's pairs and scores are every copy's.
+    * `eligible` keeps docs that can never pair (no grams / shorter than
+    * the shingle) out, preserving the node universe. The shuffle carries
+    * (128-bit digest, id), never the document text. DuckDB twin:
+    * [[collapseCtes]]. */
+  private[operators] def collapseCopies(docs: DataFrame, eligible: Column): Copies = {
     val s = docs.sparkSession
     import s.implicits._
     val withH = docs.filter(eligible).select($"doc_id", md5($"text").as("h"))
     val groups = withH.groupBy($"h").agg(min($"doc_id").as("rep"))
-    val members = withH.join(groups, "h").select($"doc_id", $"rep")
-    val repDocs = docs.join(
-      groups.select($"rep".as("doc_id")), Seq("doc_id"), "left_semi")
-    val repPairs = scoreReps(repDocs)
-    val expanded = repPairs
-      .join(members.select($"rep".as("doc_a"), $"doc_id".as("ma")), "doc_a")
-      .join(members.select($"rep".as("doc_b"), $"doc_id".as("mb")), "doc_b")
-      .select(least($"ma", $"mb").as("doc_a"),
-        greatest($"ma", $"mb").as("doc_b"), col(score))
-    val withinGroup = members.as("a").join(members.as("b"),
-        $"a.rep" === $"b.rep" && $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
-        lit(1.0).as(score))
-    expanded.union(withinGroup)
+    Copies(withH.join(groups, "h").select($"doc_id", $"rep"),
+      docs.join(groups.select($"rep".as("doc_id")), Seq("doc_id"), "left_semi"))
   }
 
-  /** DuckDB twin of [[expandCollapsedPairs]]'s collapse half: the
-    * `wg`/`grp`/`mem`/`repdocs` CTE prologue (no leading `WITH`, no
-    * trailing comma). `eligibleWhere` mirrors the `eligible` predicate. */
+  /** The result of [[collapseCopies]]: (doc_id, rep) for every eligible
+    * doc, and the representative docs. */
+  private[operators] final case class Copies(members: DataFrame, reps: DataFrame) {
+    /** The expansion half: rep pairs (doc_a, doc_b, `score`) back to copy
+      * pairs, plus each group's clique at score 1.0 — output-bound, those
+      * pairs ARE the result. DuckDB twin: [[expandCollapsedSql]]. */
+    def expand(repPairs: DataFrame, score: String): DataFrame = {
+      import members.sparkSession.implicits._
+      repPairs
+        .join(members.select($"rep".as("doc_a"), $"doc_id".as("ma")), "doc_a")
+        .join(members.select($"rep".as("doc_b"), $"doc_id".as("mb")), "doc_b")
+        .select(least($"ma", $"mb").as("doc_a"),
+          greatest($"ma", $"mb").as("doc_b"), col(score))
+        .union(members.as("a").join(members.as("b"),
+            $"a.rep" === $"b.rep" && $"a.doc_id" < $"b.doc_id")
+          .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
+            lit(1.0).as(score)))
+    }
+  }
+
+  /** DuckDB twin of [[collapseCopies]]: the `wg`/`grp`/`mem`/`repdocs` CTE
+    * prologue (no leading `WITH`, no trailing comma). `eligibleWhere`
+    * mirrors the `eligible` predicate. */
   private[graft] def collapseCtes(eligibleWhere: String): String =
     s"""wg AS (SELECT doc_id, md5(text) AS h FROM documents
        |  WHERE $eligibleWhere),
@@ -83,8 +116,8 @@ object Dedup {
        |repdocs AS (SELECT d.doc_id, d.text
        |  FROM documents d SEMI JOIN grp ON d.doc_id = grp.rep)""".stripMargin
 
-  /** DuckDB twin of [[expandCollapsedPairs]]'s expansion half: the final
-    * SELECT over a rep-pair CTE named `rp` with score column `score`. */
+  /** DuckDB twin of [[Copies.expand]]: the final SELECT over a rep-pair
+    * CTE named `rp` with score column `score`. */
   private[graft] def expandCollapsedSql(score: String): String =
     s"""SELECT least(ma.doc_id, mb.doc_id) AS doc_a,
        |       greatest(ma.doc_id, mb.doc_id) AS doc_b, $score
@@ -92,6 +125,124 @@ object Dedup {
        |UNION ALL
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, 1.0 AS $score
        |FROM mem a JOIN mem b ON a.rep = b.rep AND a.doc_id < b.doc_id""".stripMargin
+
+  /** The df-pruned inverted index (MOSS's "too common to be interesting"
+    * rule) over a (doc_id, els) frame, `els` the non-empty array of the
+    * doc's distinct elements — word 3-grams or winnowing fingerprints.
+    * Returns the rare-index candidates with their rare-shared count
+    * (doc_a, doc_b, c_rare), the hot element set (el) and the exploded
+    * index (doc_id, el) they were pruned against.
+    *
+    * An element is hot when its df exceeds max(16, 1% of docs), capped at
+    * [[DfCapCeiling]]: the per-element self-join bucket is then bounded by
+    * the cap, so a hot stop-gram can never make the join quadratic on a
+    * skewed corpus (asserted on a planted hot-gram corpus in DedupSpec),
+    * and the hot set is small by construction, hence broadcast. The doc
+    * count is a one-row aggregate crossJoined in (the scalar-subquery
+    * shape, as in tf-idf) — part of the one plan, no driver-side count().
+    * DuckDB twin: [[prunedCandCtes]]. */
+  private def prunedIndexOf(sets: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val s = sets.sparkSession
+    import s.implicits._
+    val nd = sets.agg(count(lit(1)).as("ndocs"))
+    val els = sets.select($"doc_id", explode($"els").as("el"))
+    val hot = els.groupBy($"el").agg(count(lit(1)).as("df"))
+      .crossJoin(broadcast(nd))
+      .filter($"df" > least(greatest(lit(16L), ($"ndocs" / 100).cast("long")),
+        lit(DfCapCeiling)))
+      .select($"el")
+    val rare = els.join(broadcast(hot), Seq("el"), "left_anti")
+    val rarePairs = rare.as("a").join(rare.as("b"),
+        $"a.el" === $"b.el" && $"a.doc_id" < $"b.doc_id")
+      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+      .agg(count(lit(1)).as("c_rare"))
+    (rarePairs, hot, els)
+  }
+
+  /** Near-dup pairs (doc_a, doc_b, `score`) of the pruned index, exact
+    * under the prune: c = c_rare + |hot(a) ∩ hot(b)| is the full-set
+    * intersection at pruned-index cost (per-doc hot sets are small by
+    * construction), verified by [[jaccardTail]].
+    *
+    * A pair sharing ONLY hot elements is never a candidate — at jac ≥ 0.5
+    * a pair shares a third of its union, so requiring one rare shared
+    * element loses essentially nothing (TextSpec bounds recall against the
+    * unpruned truth). The residual blind spot, inherent to MOSS
+    * df-pruning: a cluster of more than the cap of NEAR-identical (not
+    * byte-identical) docs makes its shared elements hot; the LSH path has
+    * no such blind spot and is the recall authority there.
+    *
+    * The element-set frame is cached once: it feeds the doc count, the
+    * index, the hot sets and the sizes (MEMORY_AND_DISK and evictable, so
+    * it borrows, never starves, execution memory). Sets, not the exploded
+    * frame, so a size is `size(els)` and the doc count a row count — no
+    * per-doc aggregate, no extra shuffle. */
+  private[operators] def prunedJaccardPairsOf(
+      sets0: DataFrame, minJac: Double, score: String): DataFrame = {
+    val s = sets0.sparkSession
+    import s.implicits._
+    val sets = sets0.cache()
+    val (rarePairs, hot, els) = prunedIndexOf(sets)
+    val hotSets = els.join(broadcast(hot), Seq("el"))
+      .groupBy($"doc_id").agg(collect_set($"el").as("hs"))
+    val sizes = sets.select($"doc_id", size($"els").as("n"))
+    jaccardTail(rarePairs
+      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
+      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
+      .join(hotSets.select($"doc_id".as("doc_a"), $"hs".as("ha")), Seq("doc_a"), "left")
+      .join(hotSets.select($"doc_id".as("doc_b"), $"hs".as("hb")), Seq("doc_b"), "left")
+      .withColumn("c", $"c_rare" + when($"ha".isNull || $"hb".isNull, 0)
+        .otherwise(size(array_intersect($"ha", $"hb")))), minJac, score)
+  }
+
+  /** The LSH legs of the kernel: `candsOf` turns the (doc_id, bucket) band
+    * table of `docs` into candidate (doc_a, doc_b) pairs, each verified on
+    * the full gram sets by [[jaccardTail]] into (doc_a, doc_b, jac). The
+    * gram frame is cached once: it is read to minhash and again to verify. */
+  private def lshJaccardPairsOf(docs: DataFrame, minJac: Double)(
+      candsOf: DataFrame => DataFrame): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    val grams = gramsOf(docs).cache()
+    jaccardTail(candsOf(lshBandsOf(grams))
+      .join(grams.select($"doc_id".as("doc_a"), $"grams".as("ga")), "doc_a")
+      .join(grams.select($"doc_id".as("doc_b"), $"grams".as("gb")), "doc_b")
+      .select($"doc_a", $"doc_b", size(array_intersect($"ga", $"gb")).as("c"),
+        size($"ga").as("na"), size($"gb").as("nb")), minJac, "jac")
+  }
+
+  /** THE verifier of every set-Jaccard leg: (doc_a, doc_b, c, na, nb) rows
+    * — c the exact intersection of the two full element sets, na/nb their
+    * sizes — kept iff c / (na + nb − c) ≥ `minJac` and scored by
+    * [[ratio4]] as `score`. DuckDB twin: [[scoredPairsCtes]]. */
+  private def jaccardTail(pairs: DataFrame, minJac: Double, score: String): DataFrame =
+    pairs.filter(col("c") / (col("na") + col("nb") - col("c")) >= minJac)
+      .select(col("doc_a"), col("doc_b"), ratio4("c", "na + nb - c").as(score))
+
+  /** DuckDB twin of [[prunedIndexOf]]: CTEs nd/hot/rare/cand over the CTE
+    * `src(doc_id, <el>)`, ending in `cand(doc_a, doc_b)`. */
+  private[operators] def prunedCandCtes(src: String, el: String): String =
+    s"""nd AS (SELECT count(DISTINCT doc_id) AS n FROM $src),
+       |hot AS (SELECT $el FROM $src GROUP BY $el
+       |  HAVING count(*) > (SELECT least(greatest(16, n // 100), $DfCapCeiling) FROM nd)),
+       |rare AS (SELECT x.doc_id, x.$el FROM $src x ANTI JOIN hot h ON x.$el = h.$el),
+       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM rare a JOIN rare b ON a.$el = b.$el AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** DuckDB twin of [[jaccardTail]] with its intersection: `${p}inter`
+    * counts the shared `el`s of every `${p}cand(doc_a, doc_b)` pair in the
+    * CTE `${p}src(doc_id, el)`, and `out(doc_a, doc_b, score)` keeps and
+    * scores it against the sizes `${p}sz(doc_id, n)`. Every name is
+    * prefixed by `p`, so a composed oracle can hoist two copies. */
+  private[operators] def scoredPairsCtes(p: String, src: String, el: String,
+      minJac: Double, score: String, out: String): String =
+    s"""${p}inter AS (SELECT c.doc_a, c.doc_b, count(*) AS c
+       |  FROM ${p}cand c JOIN $p$src a ON a.doc_id = c.doc_a
+       |              JOIN $p$src b ON b.doc_id = c.doc_b AND a.$el = b.$el
+       |  GROUP BY 1, 2),
+       |$p$out AS (SELECT doc_a, doc_b, ${ratio4Sql("c", "sa.n + sb.n - c")} AS $score
+       |  FROM ${p}inter JOIN ${p}sz sa ON sa.doc_id = doc_a JOIN ${p}sz sb ON sb.doc_id = doc_b
+       |  WHERE c / (sa.n + sb.n - c) >= $minJac)""".stripMargin
 
   // --------------------------------------------- knife-edge-free ratios
   /** 4dp round-half-up of the INTEGER rational num/den, in pure integer
@@ -116,9 +267,15 @@ object Dedup {
     * replaces was ~10× slower because Catalyst re-evaluates it per filter
     * and join side). */
   private def gramsOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-        org.apache.spark.sql.graft.GraftFunctions.wordGrams(col("text"), 3).as("grams"))
+    docs.select(col("doc_id"), GraftFunctions.wordGrams(col("text"), 3).as("grams"))
       .filter(size(col("grams")) > 0)
+
+  /** [[gramsOf]] as the kernel's (doc_id, els) element-set frame. */
+  private def gramSetsOf(docs: DataFrame): DataFrame =
+    gramsOf(docs).select(col("doc_id"), col("grams").as("els"))
+
+  /** Docs with at least one word 3-gram: the only ones that can pair. */
+  private def gramBearing: Column = size(GraftFunctions.wordGrams(col("text"), 3)) > 0
 
   // ------------------------------------------------------------ exact dedup
   /** Exact dedup by full text: hash-groupBy on the text (at scale: on
@@ -141,131 +298,35 @@ object Dedup {
       |GROUP BY md5(text)""".stripMargin
 
   // --------------------------------------------------- exact n-gram Jaccard
-  /** Near-dup pairs: word-3-gram Jaccard >= 0.5, MOSS-shaped:
-    *
-    *   1. candidate generation over a FREQUENCY-PRUNED gram inverted index
-    *      — grams appearing in more than max(16, 1%) of gram-bearing docs
-    *      are dropped from the index (same rule as
-    *      [[TextOps.winnowCandidates]]), so the per-gram self-join bucket
-    *      is capped by the df threshold and a hot stop-gram can never make
-    *      the join quadratic on a skewed corpus (asserted on a planted
-    *      hot-gram corpus in DedupSpec);
-    *   2. exact verification on FULL gram sets for candidates only —
-    *      emitted scores are exact by construction.
-    *
-    * A jac >= 0.5 pair that shares ONLY hot grams would be missed — at
-    * threshold 0.5 the pair shares a third of its gram union, so requiring
-    * one rare shared gram loses essentially nothing (the LSH-parity spec
-    * cross-checks). The DuckDB oracle replicates the prune exactly. */
+  /** Near-dup pairs: word-3-gram Jaccard ≥ [[NearDupJaccard]], MOSS-shaped
+    * — the kernel's pruned-index leg over gram elements: identical copies
+    * collapsed ([[collapseCopies]]), candidates from the df-pruned gram
+    * index, exact full-set scores ([[prunedJaccardPairsOf]]), copy pairs
+    * restored. Unguarded, any identical cluster larger than the df cap
+    * vanished from this operator's output while [[minhashLshPairsOf]]
+    * still emitted it — breaking the LSH == exact parity the clustering
+    * oracle rests on. The DuckDB oracle replicates the collapse and the
+    * prune exactly. */
   def ngramJaccardPairs(s: SparkSession, d: String): DataFrame =
     ngramJaccardPairsOf(Tables.documents(s, d))
 
-  /** [[ngramJaccardPairs]] over an arbitrary (doc_id, text) frame.
-    *
-    * Two scale guards compose here:
-    *
-    *   - **identical-copy collapse** (as in [[clusterEdges]]): docs are
-    *     md5-collapsed to representatives BEFORE the gram index, so an
-    *     m-copy identical cluster cannot make its own grams hot and
-    *     silently drop out of the pruned index (unguarded, any cluster
-    *     larger than the df cap vanished from this operator's output while
-    *     [[minhashLshPairsOf]] still emitted it — breaking the LSH==exact
-    *     parity the clustering oracle rests on). Rep-level pairs are then
-    *     expanded back to copy pairs, plus within-group pairs at jac 1.0 —
-    *     both output-bound (those pairs ARE the result).
-    *   - **exact-intersection under the df-prune**: the rare-gram
-    *     self-join counts c_rare per rep pair in ONE aggregate; the hot
-    *     contribution is added back from per-doc HOT-gram sets (small by
-    *     construction), so c = c_rare + |hot(a)∩hot(b)| is the exact
-    *     full-set intersection at pruned-index cost.
-    *
-    * Honest residual limitation (inherent to MOSS df-pruning): a cluster
-    * of more than dfCap NEAR-identical (not byte-identical) docs still
-    * makes its shared grams hot, and pairs inside it are missed unless
-    * they share a rare gram — the LSH path has no such blind spot and is
-    * the recall authority for such corpora. */
-  private[graft] def ngramJaccardPairsOf(docs: DataFrame,
-                                         cacheGrams: Boolean = true): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    // collapse scoped to GRAM-BEARING docs; see [[expandCollapsedPairs]]
-    expandCollapsedPairs(docs,
-      size(org.apache.spark.sql.graft.GraftFunctions.wordGrams($"text", 3)) > 0,
-      "jac") { repDocs =>
-      // cacheGrams: the gram frame feeds the df aggregate, the pruned index,
-      // and the sizes join (bounded-corpus default, as with the LSH gram
-      // cache); at 100 TB set false — recomputing a scan is cheaper than
-      // churning a cache (same contract as minhashLshPairs)
-      val grams0 = gramsOf(repDocs)
-      val grams = if (cacheGrams) grams0.cache() else grams0
-      val (rarePairs, hot, g) = prunedRarePairs(grams)
-      val hotSets = g.join(broadcast(hot), Seq("gram"))
-        .groupBy($"doc_id").agg(collect_set($"gram").as("hg"))
-      val sizes = grams.select($"doc_id", size($"grams").as("n"))
-      rarePairs
-        .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
-        .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
-        .join(hotSets.select($"doc_id".as("doc_a"), $"hg".as("ha")), Seq("doc_a"), "left")
-        .join(hotSets.select($"doc_id".as("doc_b"), $"hg".as("hb")), Seq("doc_b"), "left")
-        .withColumn("c", $"c_rare" + when($"ha".isNull || $"hb".isNull, 0)
-          .otherwise(size(array_intersect($"ha", $"hb"))))
-        .withColumn("jac", $"c" / ($"na" + $"nb" - $"c"))
-        .filter($"jac" >= 0.5)
-        .select($"doc_a", $"doc_b", ratio4("c", "na + nb - c").as("jac"))
-    }
-  }
-
-  /** Rare-index candidate pairs with rare-shared counts, plus the hot-gram
-    * set and exploded index they were pruned against — the ONE copy of
-    * the df-cap rule shared by the operator and the spec helper. */
-  private def prunedRarePairs(grams: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val s = grams.sparkSession
-    import s.implicits._
-    // absolute ceiling on the df cap: see [[DfCapCeiling]] — a pure 1%
-    // cap is quadratic, and even a loose ceiling has a quadratic
-    // transition regime. The doc count is a broadcast single-row
-    // aggregate (the scalar-subquery shape, as in tf-idf) — part of the
-    // one plan, no separate driver-side count() action.
-    val nd = grams.agg(count(lit(1)).as("ndocs"))
-    val g = grams.select($"doc_id", explode($"grams").as("gram"))
-    val hot = g.groupBy($"gram").agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(nd))
-      .filter($"df" > least(greatest(lit(16L), ($"ndocs" / 100).cast("long")),
-        lit(DfCapCeiling)))
-      .select($"gram")
-    // hot set is small by construction (grams in >1% of docs)
-    val rare = g.join(broadcast(hot), Seq("gram"), "left_anti")
-    val rarePairs = rare.as("a").join(rare.as("b"),
-        $"a.gram" === $"b.gram" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(count(lit(1)).as("c_rare"))
-    (rarePairs, hot, g)
+  /** [[ngramJaccardPairs]] over an arbitrary (doc_id, text) frame. */
+  private[graft] def ngramJaccardPairsOf(docs: DataFrame): DataFrame = {
+    val copies = collapseCopies(docs, gramBearing)
+    copies.expand(prunedJaccardPairsOf(
+      gramSetsOf(copies.reps), NearDupJaccard, "jac"), "jac")
   }
 
   /** Candidate (doc_a, doc_b) pairs from the df-pruned gram index —
     * exposed so the hot-gram boundedness is directly assertable. */
-  private[graft] def ngramCandidates(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    prunedRarePairs(gramsOf(docs))._1.select($"doc_a", $"doc_b")
-  }
+  private[graft] def ngramCandidates(docs: DataFrame): DataFrame =
+    prunedIndexOf(gramSetsOf(docs))._1.select("doc_a", "doc_b")
 
   val ngramJaccardOracle: String =
-    s"""WITH ${collapseCtes(
-        s"len(${TextOps.tokensSql}) >= 3")},
+    s"""WITH ${collapseCtes(s"len(${TextOps.tokensSql}) >= 3")},
       |${gramCtesFrom("repdocs", "")},
-      |nd AS (SELECT count(DISTINCT doc_id) AS n FROM g),
-      |hot AS (SELECT gram FROM g GROUP BY gram
-      |  HAVING count(*) > (SELECT least(greatest(16, n // 100), $DfCapCeiling) FROM nd)),
-      |rare AS (SELECT g.doc_id, g.gram FROM g ANTI JOIN hot h ON g.gram = h.gram),
-      |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM rare a JOIN rare b ON a.gram = b.gram AND a.doc_id < b.doc_id),
-      |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS c
-      |  FROM cand c JOIN g a ON a.doc_id = c.doc_a
-      |              JOIN g b ON b.doc_id = c.doc_b AND a.gram = b.gram
-      |  GROUP BY 1, 2),
-      |rp AS (SELECT doc_a, doc_b, ${ratio4Sql("c", "sa.n + sb.n - c")} AS jac
-      |  FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-      |  WHERE c / (sa.n + sb.n - c) >= 0.5)
+      |${prunedCandCtes("g", "gram")},
+      |${scoredPairsCtes("", "g", "gram", NearDupJaccard, "jac", "rp")}
       |${expandCollapsedSql("jac")}""".stripMargin
 
   // ------------------------------------------------------------ MinHash LSH
@@ -289,26 +350,26 @@ object Dedup {
     * of the signature construction: both the public form and the LSH
     * pipeline go through here, so they cannot drift. */
   private def signaturesOf(grams: DataFrame): DataFrame =
-    grams.select(col("doc_id"),
-      org.apache.spark.sql.graft.GraftFunctions.minhash(col("grams"), MinHashPerms).as("sig"))
+    grams.select(col("doc_id"), GraftFunctions.minhash(col("grams"), MinHashPerms).as("sig"))
 
   def minhashSignatures(s: SparkSession, d: String): DataFrame =
     signaturesOf(gramsOf(Tables.documents(s, d)))
 
-  /** `cacheGrams`: the gram arrays are needed twice — once to minhash,
-    * once to exact-verify candidates. Caching skips the second tokenize
-    * pass (default — right for bounded corpora and the bench scale; the
-    * cache is MEMORY_AND_DISK and evictable under the unified memory
-    * manager, so it borrows, never starves, execution memory); at 100 TB
-    * set false: the gram column is far larger than cluster memory and
-    * recomputing a scan is cheaper than churning a cache. */
-  def minhashLshPairs(s: SparkSession, d: String,
-                      cacheGrams: Boolean = true): DataFrame =
-    minhashLshPairsOf(Tables.documents(s, d), cacheGrams)
+  /** The one MinHash banding step: (doc_id, bucket), each doc's
+    * [[MinHashBands]] band hashes via the native LshBandBuckets expression
+    * (the band index is baked into each hash, so the bucket alone is the
+    * join key). */
+  private def lshBandsOf(grams: DataFrame): DataFrame =
+    signaturesOf(grams).select(col("doc_id"),
+      explode(GraftFunctions.lshBuckets(col("sig"), MinHashBands)).as("bucket"))
+
+  def minhashLshPairs(s: SparkSession, d: String): DataFrame =
+    minhashLshPairsOf(Tables.documents(s, d))
 
   /** [[minhashLshPairs]] over an arbitrary documents frame
     * (doc_id, text) — the form [[dedupClusters]]'s identical-copy guard
-    * and the planted-duplicate specs compose on.
+    * and the planted-duplicate specs compose on. The kernel's LSH leg with
+    * the symmetric candidate source: docs sharing a band bucket.
     *
     * NOTE the m² caveat: a cluster of m IDENTICAL documents shares all
     * [[MinHashBands]] band buckets, so candidate generation alone is
@@ -316,30 +377,14 @@ object Dedup {
     * the operator's output. Callers that only need *connectivity* (the
     * clustering path) must collapse identical copies to one
     * representative first — [[clusterEdges]] does exactly that. */
-  def minhashLshPairsOf(docs: DataFrame, cacheGrams: Boolean = true): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions
-    val grams0 = gramsOf(docs)
-    val grams = if (cacheGrams) grams0.cache() else grams0
-    // band bucket hashes via the native LshBandBuckets expression (band
-    // index is baked into each hash, so the bucket alone is the join key)
-    val bands = signaturesOf(grams)
-      .select($"doc_id",
-        explode(GraftFunctions.lshBuckets($"sig", MinHashBands)).as("bucket"))
-    val cands = bands.as("a").join(bands.as("b"),
-        $"a.bucket" === $"b.bucket" && $"a.doc_id" < $"b.doc_id")
-      .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .distinct()
-    // exact verification of candidates only
-    cands
-      .join(grams.select($"doc_id".as("doc_a"), $"grams".as("ga")), "doc_a")
-      .join(grams.select($"doc_id".as("doc_b"), $"grams".as("gb")), "doc_b")
-      .withColumn("c", size(array_intersect($"ga", $"gb")))
-      .withColumn("jac", $"c" / (size($"ga") + size($"gb") - $"c"))
-      .filter($"jac" >= 0.5)
-      .select($"doc_a", $"doc_b",
-        ratio4("c", "size(ga) + size(gb) - c").as("jac"))
+  def minhashLshPairsOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    lshJaccardPairsOf(docs, NearDupJaccard) { bands =>
+      bands.as("a").join(bands.as("b"),
+          $"a.bucket" === $"b.bucket" && $"a.doc_id" < $"b.doc_id")
+        .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
+        .distinct()
+    }
   }
 
   /** DuckDB twin of [[minhashLshPairs]] — the operator is DETERMINISTIC
@@ -467,13 +512,7 @@ object Dedup {
        |${bandChain(r, initList)},
        |${p}cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM ${p}buckets a JOIN ${p}buckets b ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
-       |${p}inter AS (SELECT c.doc_a, c.doc_b, count(*) AS c
-       |  FROM ${p}cand c JOIN ${p}g a ON a.doc_id = c.doc_a
-       |              JOIN ${p}g b ON b.doc_id = c.doc_b AND a.gram = b.gram
-       |  GROUP BY 1, 2),
-       |${p}pairs AS (SELECT doc_a, doc_b, ${ratio4Sql("c", "sa.n + sb.n - c")} AS jac
-       |  FROM ${p}inter JOIN ${p}sz sa ON sa.doc_id = doc_a JOIN ${p}sz sb ON sb.doc_id = doc_b
-       |  WHERE c / (sa.n + sb.n - c) >= 0.5)""".stripMargin
+       |${scoredPairsCtes(p, "g", "gram", NearDupJaccard, "jac", "pairs")}""".stripMargin
   }
 
   val minhashLshOracle: String =
@@ -515,36 +554,19 @@ object Dedup {
   def dedupClustersOf(docs: DataFrame): DataFrame =
     connectedComponents(docs.sparkSession, clusterEdges(docs))
 
-  /** Near-dup graph edges with the identical-copy guard: md5-collapse to
-    * representatives, LSH candidates among representatives only, plus one
-    * copy→rep edge per duplicate copy. Edge count is |rep LSH pairs| +
+  /** Near-dup graph edges with the identical-copy guard: the collapse
+    * half alone ([[collapseCopies]]), LSH pairs among representatives, plus
+    * one copy→rep edge per duplicate copy. Edge count is |rep LSH pairs| +
     * |copies| — linear in copies, never quadratic (the planted-duplicate
-    * spec asserts this count directly).
-    *
-    * Scoped to GRAM-BEARING documents (>= 3 tokens) only: a doc with no
-    * 3-grams can never appear in a near-dup pair, so identical gram-less
-    * copies must not be clustered here either — that keeps the edge set's
-    * node universe (and the DuckDB closure oracle, whose gram CTE drops
-    * such docs) exactly what it was before the guard existed. */
+    * spec asserts this count directly). Scoped to GRAM-BEARING documents:
+    * identical gram-less copies are no near-dups, and the DuckDB closure
+    * oracle's gram CTE drops them too. */
   private[graft] def clusterEdges(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val withH = docs
-      .filter(size(org.apache.spark.sql.graft.GraftFunctions
-        .wordGrams($"text", 3)) > 0)
-      .select($"doc_id", md5($"text").as("h"))
-    // shuffle carries (128-bit digest, id) — never the document text
-    val groups = withH.groupBy($"h")
-      .agg(min($"doc_id").as("rep_id"), count(lit(1)).as("m"))
-    val repDocs = docs.join(
-      groups.select($"rep_id".as("doc_id")), Seq("doc_id"), "left_semi")
-    val lshEdges = minhashLshPairsOf(repDocs)
-      .select($"doc_a".as("src"), $"doc_b".as("dst"))
-    val copyEdges = withH
-      .join(groups.filter($"m" > 1).select($"h", $"rep_id"), "h")
-      .filter($"doc_id" =!= $"rep_id")
-      .select($"doc_id".as("src"), $"rep_id".as("dst"))
-    lshEdges.union(copyEdges)
+    import docs.sparkSession.implicits._
+    val copies = collapseCopies(docs, gramBearing)
+    minhashLshPairsOf(copies.reps).select($"doc_a".as("src"), $"doc_b".as("dst"))
+      .union(copies.members.filter($"doc_id" =!= $"rep")
+        .select($"doc_id".as("src"), $"rep".as("dst")))
   }
 
   /** Alternating star contraction to a fixpoint. Input: undirected edges
@@ -638,19 +660,23 @@ object Dedup {
        |${p}sz AS (SELECT doc_id, count(*) AS n FROM ${p}g GROUP BY doc_id)""".stripMargin
 
   /** Shared oracle fragments — the gram chain over `documents`, the
-    * 0.5-Jaccard pair predicate, and transitive-closure SQL that every
-    * closure-based oracle (clusters, keep-list, curation pipeline,
-    * contamination) composes from, so a threshold change is one edit. */
+    * [[NearDupJaccard]] pair predicate, and transitive-closure SQL that
+    * every closure-based oracle (clusters, keep-list, keep-best, curation
+    * pipeline) composes from. Its pairs are counted straight off the gram
+    * self-join, not through [[scoredPairsCtes]]: that tail re-joins a
+    * DISTINCT candidate CTE, and over every gram-sharing pair the extra
+    * pass outgrows a 4 GB DuckDB pool at sf0.1 where this form fits. */
   private[operators] val gramCtes: String = gramCtesFrom("documents", "")
 
-  private[operators] val closureCtes: String = gramCtes + ",\n" +
-    """inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
+  private[operators] val closureCtes: String =
+    s"""$gramCtes,
+      |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
       |  FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
       |  GROUP BY 1, 2),
       |pairs AS (
       |  SELECT doc_a, doc_b
       |  FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-      |  WHERE c / (sa.n + sb.n - c) >= 0.5),
+      |  WHERE c / (sa.n + sb.n - c) >= $NearDupJaccard),
       |sym AS (
       |  SELECT doc_a AS a, doc_b AS b FROM pairs
       |  UNION SELECT doc_b, doc_a FROM pairs
@@ -814,7 +840,6 @@ object Dedup {
       grams: DataFrame, k: Int, log2m: Int): DataFrame = {
     val s = grams.sparkSession
     import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions
     val nWords = 1 << (log2m - 6)
     // resolved here, not in the Aggregator's body: `s.implicits` there
     // would make the task-shipped class capture the session
@@ -857,7 +882,6 @@ object Dedup {
       evalMax: Long, k: Int, log2m: Int): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions
     gramsOf(docs).filter($"doc_id" >= evalMax)
       .crossJoin(broadcast(bitmap))
       .select($"doc_id".as("train_doc"),
@@ -911,7 +935,6 @@ object Dedup {
 
   private[graft] def simhashesOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions
     docs.select($"doc_id", GraftFunctions.simhash64(TextOps.tokens).as("simhash"))
   }
 
@@ -1359,9 +1382,7 @@ object Dedup {
   def embeddingPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.graft.GraftFunctions.dot
-    val vecs = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(dot($"v", $"v")))
+    val vecs = Similarity.withNormOf(s, Similarity.vecsOf(Tables.embeddings(s, d)))
     val a = vecs.select($"vec_id".as("vec_a"), $"v".as("va"), $"norm".as("na"))
     val b = vecs.select($"vec_id".as("vec_b"), $"v".as("vb"), $"norm".as("nb"))
     a.join(broadcast(b), $"vec_a" < $"vec_b")
@@ -1370,10 +1391,15 @@ object Dedup {
       .select($"vec_a", $"vec_b", round($"sim", 4).as("cos_sim"))
   }
 
+  /** DuckDB twin of [[Similarity.withNormOf]] over the decoded
+    * `embeddings`: CTEs e(vec_id, v) and n(vec_id, v, norm), shared by the
+    * two cosine twins. */
+  private def normedVecCtes: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)""".stripMargin
+
   val embeddingPairsOracle: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      |           FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)
+    s"""WITH $normedVecCtes
       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
       |  round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) AS cos_sim
       |FROM n a JOIN n b ON a.vec_id < b.vec_id
@@ -1508,46 +1534,29 @@ object Dedup {
   def fuzzyContamination(s: SparkSession, d: String): DataFrame =
     fuzzyContaminationOf(Tables.documents(s, d), EvalSetSize)
 
-  /** [[fuzzyContamination]] over an arbitrary frame / eval prefix. */
+  /** [[fuzzyContamination]] over an arbitrary frame / eval prefix: the
+    * kernel's LSH leg with the broadcast eval-side candidate source. */
   private[graft] def fuzzyContaminationOf(
       docs: DataFrame, evalMax: Long): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    import org.apache.spark.sql.graft.GraftFunctions
-    val grams = gramsOf(docs).cache()
-    val bands = signaturesOf(grams)
-      .select($"doc_id",
-        explode(GraftFunctions.lshBuckets($"sig", MinHashBands)).as("bucket"))
-    val evalBands = bands.filter($"doc_id" < evalMax)
-      .select($"doc_id".as("eval_doc"), $"bucket")
-    val trainBands = bands.filter($"doc_id" >= evalMax)
-      .select($"doc_id".as("train_doc"), $"bucket")
-    val cands = trainBands.join(broadcast(evalBands), "bucket")
-      .select($"train_doc", $"eval_doc").distinct()
-    cands
-      .join(grams.select($"doc_id".as("train_doc"), $"grams".as("ga")), "train_doc")
-      .join(grams.select($"doc_id".as("eval_doc"), $"grams".as("gb")), "eval_doc")
-      .withColumn("c", size(array_intersect($"ga", $"gb")))
-      .withColumn("jac", $"c" / (size($"ga") + size($"gb") - $"c"))
-      .filter($"jac" >= FuzzyContamJaccard)
-      .select($"train_doc", $"eval_doc",
-        ratio4("c", "size(ga) + size(gb) - c").as("jac"))
+    import docs.sparkSession.implicits._
+    lshJaccardPairsOf(docs, FuzzyContamJaccard) { bands =>
+      bands.filter($"doc_id" >= evalMax).select($"doc_id".as("doc_a"), $"bucket")
+        .join(broadcast(bands.filter($"doc_id" < evalMax)
+          .select($"doc_id".as("doc_b"), $"bucket")), "bucket")
+        .select($"doc_a", $"doc_b").distinct()
+    }.select($"doc_a".as("train_doc"), $"doc_b".as("eval_doc"), $"jac")
   }
 
   /** DuckDB twin: exact symmetric Jaccard over the bounded train×eval
     * gram join — the fuzzy candidates are recall machinery, the emitted
     * set is exactly this. */
-  val fuzzyContaminationOracle: String = "WITH " + gramCtes + ",\n" +
-    s"""inter AS (SELECT tr.doc_id AS train_doc, ev.doc_id AS eval_doc,
-       |    count(*) AS c
+  val fuzzyContaminationOracle: String =
+    s"""WITH $gramCtes,
+       |cand AS (SELECT DISTINCT tr.doc_id AS doc_a, ev.doc_id AS doc_b
        |  FROM g tr JOIN g ev ON tr.gram = ev.gram
-       |  WHERE tr.doc_id >= $EvalSetSize AND ev.doc_id < $EvalSetSize
-       |  GROUP BY 1, 2)
-       |SELECT train_doc, eval_doc,
-       |  ${ratio4Sql("c", "sa.n + sb.n - c")} AS jac
-       |FROM inter JOIN sz sa ON sa.doc_id = train_doc
-       |  JOIN sz sb ON sb.doc_id = eval_doc
-       |WHERE c / (sa.n + sb.n - c) >= $FuzzyContamJaccard""".stripMargin
+       |  WHERE tr.doc_id >= $EvalSetSize AND ev.doc_id < $EvalSetSize),
+       |${scoredPairsCtes("", "g", "gram", FuzzyContamJaccard, "jac", "fz")}
+       |SELECT doc_a AS train_doc, doc_b AS eval_doc, jac FROM fz""".stripMargin
 
   // ------------------------------------------------- ingest-batch dedup
   /** Incremental-ingest admission check: before a NEW crawl batch joins
@@ -1647,9 +1656,7 @@ object Dedup {
     val s = vecs0.sparkSession
     import s.implicits._
     import org.apache.spark.sql.graft.GraftFunctions.dot
-    val vecs = vecs0
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
-      .withColumn("norm", sqrt(dot($"v", $"v")))
+    val vecs = Similarity.withNormOf(s, Similarity.vecsOf(vecs0))
     val ev = vecs.filter($"vec_id" < evalMax)
       .select($"vec_id".as("eval_vec"), $"v".as("ve"), $"norm".as("ne"))
     val tr = vecs.filter($"vec_id" >= evalMax)
@@ -1664,9 +1671,7 @@ object Dedup {
     * exactly like the engine's codegen'd dot ([[embeddingPairs]]
     * precedent), so the 4dp cosines agree bit-for-bit. */
   val semanticContaminationOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |           FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)
+    s"""WITH $normedVecCtes
        |SELECT t.vec_id AS train_vec, ev.vec_id AS eval_vec,
        |  round(list_dot_product(t.v, ev.v) / (t.norm * ev.norm), 4) AS cos_sim
        |FROM n t JOIN n ev ON t.vec_id >= $EvalSetSize AND ev.vec_id < $EvalSetSize

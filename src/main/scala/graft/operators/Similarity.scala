@@ -41,22 +41,24 @@ object Similarity {
   val NumQueries = 5
   val TopK = 10
 
-  private type Vecs = Dataset[(Long, Array[Double])]
+  private[operators] type Vecs = Dataset[(Long, Array[Double])]
 
-  /** The (vec_id, v: array<double>) corpus frame — the one embedding
-    * decode; [[annRecallReport]] persists it once for all its legs. */
-  private def vecsOf(s: SparkSession, d: String): Vecs = {
-    import s.implicits._
-    Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("v"))
+  /** The (vec_id, v: array<double>) frame of a (vec_id, embedding) frame —
+    * the one embedding decode, also read by Dedup's cosine legs;
+    * [[annRecallReport]] persists it once for all its legs. */
+  private[operators] def vecsOf(emb: DataFrame): Vecs = {
+    import emb.sparkSession.implicits._
+    emb.select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
   }
+
+  private def vecsOf(s: SparkSession, d: String): Vecs = vecsOf(Tables.embeddings(s, d))
 
   private def labelsOf(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).select("vec_id", "label")
 
   /** (vec_id, v, norm) of a vector frame. */
-  private def withNormOf(s: SparkSession, vecs: Vecs): DataFrame = {
+  private[operators] def withNormOf(s: SparkSession, vecs: Vecs): DataFrame = {
     import s.implicits._
     vecs.toDF("vec_id", "v").withColumn("norm", sqrt(dot($"v", $"v")))
   }

@@ -994,15 +994,16 @@ object TextOps {
     winnowFingerprintsOf(Tables.documents(s, d))
 
   /** [[winnowFingerprints]] over an arbitrary (doc_id, text) frame. */
-  private[graft] def winnowFingerprintsOf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    // native codegen'd expression + explode: the text and the fingerprint
-    // array never leave Tungsten rows (the earlier typed flatMap paid a
-    // Dataset encoder round-trip per document)
-    docs.select($"doc_id",
-      explode(org.apache.spark.sql.graft.GraftFunctions
-        .winnow($"text", WinnowK, WinnowWindow)).as("fingerprint"))
-  }
+  private[graft] def winnowFingerprintsOf(docs: DataFrame): DataFrame =
+    winnowSetsOf(docs).select(col("doc_id"), explode(col("els")).as("fingerprint"))
+
+  /** (doc_id, els): each doc's fingerprint set, via the native codegen'd
+    * expression — the text and the fingerprint array never leave Tungsten
+    * rows (the earlier typed flatMap paid a Dataset encoder round-trip per
+    * document). Empty for text shorter than k. */
+  private def winnowSetsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), org.apache.spark.sql.graft.GraftFunctions
+      .winnow(col("text"), WinnowK, WinnowWindow).as("els"))
 
   /** DuckDB twin of the winnowing scheme: Rabin-Karp k-gram hashes as a
     * HUGEINT fold mod 2^64 (DuckDB's 128-bit integer holds h·B + c without
@@ -1042,136 +1043,47 @@ object TextOps {
 
   // ------------------------------------------ winnowing near-dup detection
   /** Near-dup pairs by winnowing-fingerprint Jaccard >= [[WinnowJaccard]]
-    * — the MOSS similarity score end-to-end, with the MOSS index shape:
+    * — the MOSS similarity score end to end: the pruned-index leg of the
+    * near-dup kernel in [[Dedup]] over fingerprint elements, exactly as
+    * [[Dedup.ngramJaccardPairs]] runs it over word 3-grams: identical
+    * copies collapsed ([[Dedup.collapseCopies]]), candidates from the
+    * df-pruned fingerprint index, exact full-set scores
+    * ([[Dedup.prunedJaccardPairsOf]]), copy pairs restored.
     *
-    *   1. **candidate generation** over the frequency-pruned inverted
-    *      index: fingerprints appearing in more than max(16, 1%) of
-    *      documents are dropped from the index (MOSS's "too common to be
-    *      interesting" rule). Without the prune the fingerprint self-join
-    *      is quadratic per hot bucket — common char-8-grams of ordinary
-    *      text appear in 10-30% of documents, and the join exploded 6x at
-    *      10x the corpus. With it, bucket sizes are capped by the df
-    *      threshold. A jac >= 0.5 pair shares ~1/3 of its fingerprint
-    *      union (~10+ hashes here), so requiring one *rare* shared hash
-    *      loses essentially nothing (measured recall 1.0 at the gate
-    *      scale; asserted >= 0.9 in TextSpec against the unpruned truth).
-    *   2. **exact verification on FULL fingerprint sets** for candidates
-    *      only — emitted scores are exact by construction, identical to
-    *      [[Dedup.minhashLshPairs]]'s verify stage.
-    *
-    * The Jaccard normalization (not raw shared counts) is what makes the
-    * operator selective at all: >40% of doc pairs share >= 2 fingerprints.
-    * Hash-defined → rows-only oracle; TextSpec recomputes every emitted
-    * pair's score in-JVM and cross-checks the n-gram Jaccard dup set. */
+    * Without the prune the fingerprint self-join is quadratic per hot
+    * bucket — common char-8-grams of ordinary text appear in 10-30% of
+    * documents, and the join exploded 6x at 10x the corpus. A jac >= 0.5
+    * pair shares ~1/3 of its fingerprint union (~10+ hashes here), so
+    * requiring one *rare* shared hash loses essentially nothing (measured
+    * recall 1.0 at the gate scale; asserted >= 0.9 in TextSpec against the
+    * unpruned truth). The Jaccard normalization (not raw shared counts) is
+    * what makes the operator selective at all: >40% of doc pairs share >= 2
+    * fingerprints. TextSpec recomputes every emitted pair's score in-JVM
+    * and cross-checks the n-gram Jaccard dup set. */
   val WinnowJaccard = 0.5
 
   def winnowCandidates(s: SparkSession, d: String): DataFrame =
     winnowCandidatesOf(Tables.documents(s, d))
 
-  /** [[winnowCandidates]] over an arbitrary (doc_id, text) frame.
-    *
-    * `cacheFps`: the fingerprint frame feeds the df aggregate, the pruned
-    * index, the hot-set gather, and the sizes join — caching skips the
-    * re-winnow per consumer (default — right for bounded corpora; the
-    * cache is MEMORY_AND_DISK and evictable). At 100 TB set false:
-    * recomputing a scan is cheaper than churning a cache (same contract
-    * as [[Dedup.minhashLshPairs]]'s `cacheGrams`).
-    *
-    * Identical-copy collapse (as in [[Dedup.ngramJaccardPairsOf]]): docs
-    * are md5-collapsed to representatives BEFORE fingerprint indexing, so
-    * a cluster of more than dfCap byte-identical copies cannot make its
-    * own fingerprints hot and silently vanish from the pruned index —
-    * with the absolute [[Dedup.DfCapCeiling]] that blind spot would
-    * trigger at ~65 copies at ANY corpus size, and duplicate-heavy
-    * clusters are precisely what a dedup operator must find. Rep pairs
-    * are expanded back to copy pairs (identical text ⇒ identical
-    * fingerprint set ⇒ same score) plus the within-group clique at
-    * jac 1.0 — both output-bound. The same honest residual as the n-gram
-    * op remains: > dfCap NEAR-identical (not byte-identical) docs still
-    * go hot; the LSH path is the recall authority there. */
-  private[graft] def winnowCandidatesOf(docs: DataFrame,
-                                        cacheFps: Boolean = true): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    // collapse scoped to fingerprint-BEARING docs (text shorter than k
-    // emits no fingerprints); see [[Dedup.expandCollapsedPairs]]
-    Dedup.expandCollapsedPairs(docs, length($"text") >= WinnowK,
-      "winnow_jac") { repDocs =>
-
-      val fps0 = winnowFingerprintsOf(repDocs)
-      val fps = if (cacheFps) fps0.cache() else fps0
-      // df cap: max(16, 1%) absolute-bounded at [[Dedup.DfCapCeiling]] — a
-      // pure percentage cap grows with the corpus, making the per-bucket
-      // self-join (0.01·n)² = quadratic overall (measured: 65× time at 10×
-      // docs in the sf1 rehearsal), and even a loose ceiling leaves a
-      // quadratic transition regime (see the constant's doc). True
-      // near-dup pairs share many fingerprints including single-digit-df
-      // ones, so the tight ceiling costs no measurable recall (TextSpec
-      // recall bound holds). The doc count is a broadcast single-row
-      // aggregate (the scalar-subquery shape, as in tf-idf) — part of the
-      // one plan, no separate driver-side count() action.
-      val nd = fps.agg(countDistinct($"doc_id").as("ndocs"))
-      val hot = fps.groupBy($"fingerprint")
-        .agg(count(lit(1)).as("df"))
-        .crossJoin(broadcast(nd))
-        .filter($"df" > least(greatest(lit(16L), ($"ndocs" / 100).cast("long")),
-          lit(Dedup.DfCapCeiling)))
-        .select($"fingerprint")
-      // hot set is small by construction (fingerprints in >1% of docs)
-      val rare = fps.join(broadcast(hot), Seq("fingerprint"), "left_anti")
-      // exact-intersection under the prune (same trick as the n-gram
-      // Jaccard operator): the rare self-join counts c_rare per pair in ONE
-      // aggregate — no distinct pass, no full fingerprint sets shipped per
-      // candidate — and the hot contribution |hot(a)∩hot(b)| is added back
-      // from per-doc HOT sets (small by construction), so the emitted score
-      // is the exact full-set jaccard at pruned-index cost
-      val rarePairs = rare.as("a").join(rare.as("b"),
-          $"a.fingerprint" === $"b.fingerprint" && $"a.doc_id" < $"b.doc_id")
-        .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-        .agg(count(lit(1)).as("c_rare"))
-      val hotSets = fps.join(broadcast(hot), Seq("fingerprint"))
-        .groupBy($"doc_id").agg(collect_set($"fingerprint").as("hf"))
-      val sizes = fps.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-      rarePairs
-        .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
-        .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
-        .join(hotSets.select($"doc_id".as("doc_a"), $"hf".as("ha")), Seq("doc_a"), "left")
-        .join(hotSets.select($"doc_id".as("doc_b"), $"hf".as("hb")), Seq("doc_b"), "left")
-        .withColumn("c", $"c_rare" + when($"ha".isNull || $"hb".isNull, 0)
-          .otherwise(size(array_intersect($"ha", $"hb"))))
-        .withColumn("jac", $"c" / ($"na" + $"nb" - $"c"))
-        .filter($"jac" >= WinnowJaccard)
-        .select($"doc_a", $"doc_b",
-          Dedup.ratio4("c", "na + nb - c").as("winnow_jac"))
-    }
+  /** [[winnowCandidates]] over an arbitrary (doc_id, text) frame; the
+    * collapse is scoped to fingerprint-bearing docs (text shorter than k
+    * emits no fingerprints). */
+  private[graft] def winnowCandidatesOf(docs: DataFrame): DataFrame = {
+    val copies = Dedup.collapseCopies(docs, length(col("text")) >= WinnowK)
+    copies.expand(Dedup.prunedJaccardPairsOf(winnowSetsOf(copies.reps),
+      WinnowJaccard, "winnow_jac"), "winnow_jac")
   }
 
-  /** DuckDB twin of [[winnowCandidates]] — including the df-prune AND the
-    * identical-copy collapse: the SQL md5-collapses to representatives,
-    * replicates the max(16, 1%) hot-fingerprint cap over rep docs exactly
-    * (so a pair the prune drops in Spark is dropped here too — a plain
-    * full-Jaccard oracle would be a *different* operator), scores
-    * surviving candidates on FULL fingerprint sets, then expands rep
-    * pairs to copy pairs and adds the within-group clique at 1.0, as in
-    * the engine. */
+  /** DuckDB twin of [[winnowCandidates]] — the same collapse, df-prune (a
+    * pair the prune drops in Spark is dropped here too: a plain full-Jaccard
+    * oracle would be a *different* operator), full-set scoring and
+    * expansion, over the fingerprint CTE. */
   val winnowCandidatesOracle: String =
     s"""WITH ${Dedup.collapseCtes(s"length(text) >= $WinnowK")},
        |${winnowCtesFrom("repdocs")},
-       |nd AS (SELECT count(DISTINCT doc_id) AS n FROM fps),
-       |hot AS (SELECT fp FROM fps GROUP BY fp
-       |  HAVING count(*) > (SELECT least(greatest(16, n // 100), ${Dedup.DfCapCeiling}) FROM nd)),
-       |rare AS (SELECT f.doc_id, f.fp FROM fps f ANTI JOIN hot h ON f.fp = h.fp),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM rare a JOIN rare b ON a.fp = b.fp AND a.doc_id < b.doc_id),
        |sz AS (SELECT doc_id, count(*) AS n FROM fps GROUP BY doc_id),
-       |inter AS (SELECT c.doc_a, c.doc_b, count(*) AS c
-       |  FROM cand c JOIN fps a ON a.doc_id = c.doc_a
-       |              JOIN fps b ON b.doc_id = c.doc_b AND a.fp = b.fp
-       |  GROUP BY 1, 2),
-       |rp AS (SELECT doc_a, doc_b,
-       |    ${Dedup.ratio4Sql("c", "sa.n + sb.n - c")} AS winnow_jac
-       |  FROM inter JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
-       |  WHERE c / (sa.n + sb.n - c) >= $WinnowJaccard)
+       |${Dedup.prunedCandCtes("fps", "fp")},
+       |${Dedup.scoredPairsCtes("", "fps", "fp", WinnowJaccard, "winnow_jac", "rp")}
        |${Dedup.expandCollapsedSql("winnow_jac")}""".stripMargin
 
   // ------------------------------------------------------- PII redaction

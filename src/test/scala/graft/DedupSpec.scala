@@ -155,14 +155,27 @@ class DedupSpec extends SparkTestBase {
     assert(pairs === expected)
   }
 
-  test("ngram jaccard: cacheGrams=false agrees with the cached default") {
+  test("ngram jaccard: a pair sharing rare AND hot grams scores its full-set jaccard") {
     import spark.implicits._
-    val docs = graft.core.Tables.documents(spark, sf).select("doc_id", "text")
-    val cached = Dedup.ngramJaccardPairsOf(docs, cacheGrams = true)
-      .as[(Long, Long, Double)].collect().toSet
-    val uncached = Dedup.ngramJaccardPairsOf(docs, cacheGrams = false)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(cached === uncached)
+    // 300 fillers make "common shared phrase" hot (df 302 > cap 16); the
+    // pair shares it plus five rare grams, so only the hot add-back turns
+    // the rare count 5 (5/9 = 0.5556) into the full intersection 6 (6/8)
+    val hotDocs = (0L until 300L).map(i =>
+      (i, s"common shared phrase filler${i}a filler${i}b"))
+    val a = "common shared phrase alpha beta gamma delta epsilon zeta"
+    val b = "common shared phrase alpha beta gamma delta epsilon eta"
+    val docs = (hotDocs ++ Seq((1000L, a), (1001L, b))).toDF("doc_id", "text")
+    def grams(t: String): Set[String] =
+      t.split(" ").sliding(3).map(_.mkString(" ")).toSet
+    val (ga, gb) = (grams(a), grams(b))
+    assert(ga.intersect(gb).contains("common shared phrase"))
+    val c = ga.intersect(gb).size.toDouble
+    val expect = BigDecimal(c / (ga.size + gb.size - c))
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(expect === 0.75)
+    val got = Dedup.ngramJaccardPairsOf(docs)
+      .as[(Long, Long, Double)].collect()
+    assert(got.toSeq === Seq((1000L, 1001L, expect)))
   }
 
   test("duplicate spans: planted cross-doc substring recovered exactly, unique doc silent") {

@@ -240,16 +240,6 @@ class TextSpec extends SparkTestBase {
     assert(pairs.forall(_._3 === 1.0))
   }
 
-  test("winnow candidates: cacheFps=false agrees with the cached default") {
-    val docs = graft.core.Tables.documents(spark, sf).select("doc_id", "text")
-    val cached = TextOps.winnowCandidatesOf(docs, cacheFps = true)
-      .as[(Long, Long, Double)].collect().toSet
-    val uncached = TextOps.winnowCandidatesOf(docs, cacheFps = false)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(cached === uncached)
-    assert(cached.nonEmpty)
-  }
-
   test("PII redaction masks planted emails and IPs and counts them") {
     val planted = Seq(
       (1L, "contact bob.smith+dev@example-corp.io or 10.0.255.3 today"),
