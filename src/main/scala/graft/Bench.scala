@@ -1,11 +1,58 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.{JArray, JBool, JDouble, JInt, JLong, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.{compact, parse}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+/** Throughput bench: every `SparkEntry.queries` entry over
+  * `SPARK_GRAFT_SF_DIR`, n runs each, reported by its minimum. Prints the
+  * full bench line, then a compact headline line as the last stdout line. */
 object Bench {
   /** One measured run: wall-clock total and the streaming-execution span
     * inside it ([[graft.streaming.EventStream.drainOpSecs]]; 0 for batch
     * queries). `total - op` for a `stream_*` gate entry is the harness
     * cost (corpus restage + sentinels + checkpoint dirs + read-back). */
   private case class Run(total: Double, op: Double, batches: Long)
+
+  /** The accepted run series of one query, and how the guard reached it. */
+  private case class Series(name: String, runs: Seq[Run], retries: Int, escalated: Boolean,
+      t0: Double) {
+    def min: Double = runs.map(_.total).min
+    def max: Double = runs.map(_.total).max
+  }
+
+  /** A series is only trustworthy if its runs agree: a >3x max/min spread
+    * means co-tenant noise or GC landed on this query. The 0.5 s absolute
+    * floor keeps JIT/GC flutter on sub-100 ms queries from counting (a
+    * lone 0.4 s outlier on a 0.09 s query cannot have corrupted the min)
+    * while still catching sub-second queries whose runs disagree. */
+  private def dispersion(rs: Seq[Run]): Double = {
+    val ts = rs.map(_.total)
+    if (ts.nonEmpty && ts.min > 0 && ts.max - ts.min > 0.5) ts.max / ts.min else 1.0
+  }
+  private def dispersed(rs: Seq[Run]): Boolean = dispersion(rs) > 3.0
+
+  /** Per-query minima of a prior bench artifact and the sf they were
+    * measured at. `BENCH_LOCAL_<sf>.json` is one bench line; a
+    * `BENCH_r*.json` wrapper holds stdout in `tail`, whose last line is the
+    * compact headline. None when neither shape parses. */
+  def priorMinima(path: String): Option[(String, Map[String, Double])] = {
+    def minima(line: JValue) = (line \ "sf", line \ "queries") match {
+      case (JString(sf), JObject(qs)) => Some(sf -> qs.collect {
+        case (k, JDouble(v)) => k -> v
+        case (k, JInt(v))    => k -> v.toDouble
+      }.toMap)
+      case _ => None
+    }
+    try {
+      val doc = parse(new String(Files.readAllBytes(Paths.get(path)), UTF_8))
+      doc \ "tail" match {
+        case JString(tail) => minima(parse(tail.trim.linesIterator.toSeq.last))
+        case _             => minima(doc)
+      }
+    } catch { case _: Exception => None }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,39 +75,22 @@ object Bench {
     try graft.core.Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => }
-    // n repeats per query, report the min — a single run at n=1 let a stray
-    // GC/JIT pause land on one query (q17 showed 22 s for a 0.2 MB
-    // projection in round 1; re-measured at ~0.5 s)
+    // n repeats per query, report the min: a single run lets a stray
+    // GC/JIT pause land on one query
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    // optional comma-separated query filter (scale rehearsals bench a
-    // headline subset; unset OR EMPTY = the full suite — an empty/typo'd
-    // filter must never silently produce a plausible-looking empty artifact
+    // optional comma-separated query filter; unset OR EMPTY = the full
+    // suite, so an empty or mistyped filter never yields a plausible-looking
+    // empty artifact
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
     only.foreach(_.diff(SparkEntry.queries.keySet).foreach(unknown =>
       System.err.println(s"[bench] WARNING: SPARK_GRAFT_BENCH_ONLY names " +
         s"unknown query '$unknown' — ignored")))
-    // a series is only trustworthy if its runs AGREE — a 3x max/min spread
-    // means co-tenant noise / GC landed on this query (round 2 committed an
-    // 8.5 s min for a 0.3 s query; round 6 committed FOUR queries at 7-29x
-    // their true cost with max_dispersion 9.32 — its warning was printed
-    // and ignored, so the guard now ACTS instead of warning)
-    // the 0.5 s absolute floor keeps pure JIT/GC flutter on sub-100ms
-    // queries from triggering (a lone 0.4 s outlier on a 0.09 s query
-    // cannot have corrupted the min) while still catching sub-second
-    // queries whose runs disagree by enough to matter — the r6 corruption
-    // class included 0.2 s queries committed at ~0.9 s
-    def dispersed(rs: Seq[Run]): Boolean = rs.nonEmpty && {
-      val ts = rs.map(_.total)
-      ts.min > 0 && ts.max / ts.min > 3.0 && ts.max - ts.min > 0.5
-    }
     // only SUCCESSFUL runs may contribute — a failed run's fast abort
     // must never report as a fast query; a fully-failed query reports
     // -1 and is listed in "failed"
-    def measure(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        runs: Int): Seq[Run] = {
+    def measure(name: String, fn: (SparkSession, String) => DataFrame, runs: Int): Seq[Run] = {
       val times = (1 to runs).flatMap { _ =>
         graft.streaming.EventStream.drainOpSecs() // zero the span counter
         graft.streaming.EventStream.drainOpBatches()
@@ -84,19 +114,15 @@ object Bench {
       times
     }
     val maxRetries = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "2").toInt
-    // a query that stays dispersed after every retry escalates to one
-    // LONG series (r7 shipped q22_json_extract at 4.16x with the "do NOT
-    // commit" warning fired and ignored — the guard now escalates instead
-    // of shipping a warned artifact): measure escN runs, accept the n
-    // fastest — the min is the min of the WHOLE series (trimming the slow
-    // tail cannot invent a faster run), and if even the n fastest disagree
-    // >3x the noise is real and the query stays listed in still_dispersed
+    // a query that stays dispersed after every retry escalates to one long
+    // series of escN runs and keeps the n fastest: the min is the min of
+    // the WHOLE series (trimming the slow tail cannot invent a faster run),
+    // and if even the n fastest disagree >3x the noise is real and the
+    // query is listed in still_dispersed
     val escN = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_ESC_N", "7").toInt,
       2 * n + 1)
-    // bench epoch: every per-query series records its start offset from
-    // here, so a >2x cross-round mover can be adjudicated against a
-    // transient-load WINDOW instead of inferred from alphabetical
-    // clustering (the r10 verdict's pack_*/profile_* forensics)
+    // bench epoch: every series records its start offset from here, so a
+    // cross-run mover can be checked against a transient-load window
     val benchEpochNanos = System.nanoTime()
     val benchEpochMs = System.currentTimeMillis()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -107,14 +133,12 @@ object Bench {
         // series (up to maxRetries); the accepted series is the one whose
         // runs agree best (lowest max/min; tie -> lowest min), so the
         // committed min is always backed by a mutually-consistent series
-        // rather than one lucky (or unlucky) outlier
         var best = measure(name, fn, n)
         var retries = 0
         while (dispersed(best) && retries < maxRetries) {
-          System.err.println(
-            f"[bench] $name dispersion ${best.map(_.total).max / best.map(_.total).min}%.1fx " +
-              f"(min ${best.map(_.total).min}%.2fs max ${best.map(_.total).max}%.2fs) — retrying " +
-              s"(${retries + 1}/$maxRetries)")
+          val (mn, mx) = (best.map(_.total).min, best.map(_.total).max)
+          System.err.println(f"[bench] $name dispersion ${mx / mn}%.1fx " +
+            f"(min $mn%.2fs max $mx%.2fs) — retrying (${retries + 1}/$maxRetries)")
           val fresh = measure(name, fn, n)
           if (fresh.nonEmpty) {
             val (fr, br) = (fresh.map(_.total).max / fresh.map(_.total).min,
@@ -134,155 +158,98 @@ object Bench {
             best = big.sortBy(_.total).take(n)
           }
         }
-        (name, best, retries, escalated, t0Sec)
+        Series(name, best, retries, escalated, t0Sec)
       }
-    val stillDispersed = results.collect { case (name, rs, _, _, _) if dispersed(rs) => name }
+    val ok = results.filter(_.runs.nonEmpty)
+    val stillDispersed = results.filter(r => dispersed(r.runs)).map(_.name)
     stillDispersed.foreach { name =>
       System.err.println(
         s"[bench] WARNING: $name STILL dispersed after retries AND the " +
           s"$escN-run escalation — genuinely noisy; listed in still_dispersed")
     }
-    val qs = results.map { case (k, rs, _, _, _) =>
-      s"\"" + k + "\":" + (if (rs.nonEmpty) rs.map(_.total).min else -1.0)
-    }.mkString("{", ",", "}")
-    // per-query {min,max,n_ok,retries[,esc][,op,harness]}: makes cross-run
-    // dispersion visible in the committed artifact itself (min alone hides
-    // that ALL runs were slow, retries/esc show where the guard intervened,
-    // and op/harness split a streaming gate entry's query-execution span
-    // from its restage+checkpoint scaffolding)
-    val spread = results.map { case (k, rs, r, esc, t0) =>
-      val (mn, mx) = if (rs.nonEmpty) (rs.map(_.total).min, rs.map(_.total).max)
-                     else (-1.0, -1.0)
-      val escS = if (esc) ",\"esc\":true" else ""
-      val opS = rs.sortBy(_.total).headOption.filter(_.op > 0.0).map { fastest =>
-        val h = math.max(0.0, fastest.total - fastest.op)
-        // batches makes the per-batch floor first-class in the artifact:
-        // op/batches is the stateful-commit floor the r8 verdict asked
-        // this round to either shrink or document
-        s""","op":${fastest.op},"harness":$h,"batches":${fastest.batches}"""
-      }.getOrElse("")
-      s"\"$k\":{\"min\":$mn,\"max\":$mx,\"n_ok\":${rs.length},\"retries\":$r,\"t0\":$t0$escS$opS}"
-    }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, rs, _, _, _) if rs.isEmpty => s"\"$k\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, rs, _, _, _) if rs.nonEmpty => rs.map(_.total).min }.sum
-    // locale-proof rounding: Double.toString always uses '.', where the f
-    // interpolator follows the default locale and can emit ',' — invalid JSON
-    //
-    // max_dispersion reports the SAME quantity the retry guard acts on:
-    // ratio counts only when the absolute spread exceeds the 0.5 s floor.
-    // A 0.09 s min with one 0.4 s outlier run is a 4x ratio but pure
-    // JIT/GC flutter — it cannot have corrupted the committed min, and
-    // headlining it would make every artifact read "noisy" while the
-    // actionable signal (a min that might itself be inflated) drowned.
-    // The full per-query min/max series stays visible in "spread"
-    // regardless.
-    val maxDisp = math.round(results.collect {
-      case (_, rs, _, _, _) if rs.nonEmpty && rs.map(_.total).min > 0 &&
-          rs.map(_.total).max - rs.map(_.total).min > 0.5 =>
-        rs.map(_.total).max / rs.map(_.total).min
-    }.foldLeft(1.0)(math.max) * 100) / 100.0
-    // cross-round minima diff: if EVERY run of a query lands equally
-    // inflated, no intra-series metric can see it (r7's q15 committed
-    // 8.8 s min over 3 consistent runs; the same query ran 0.60 s on 30x
-    // the data) — the only detector is the PREVIOUS round's minimum. Diff
-    // against the latest same-sf BENCH_r*.json (or $SPARK_GRAFT_BENCH_PREV)
-    // and embed every >2x mover in the artifact, so q15-class noise
-    // arrives as data instead of needing a prose excavation.
-    // full-minima sibling artifact: the driver's BENCH_r*.json wrapper
-    // TRUNCATES the bench line (r7's committed artifact physically lost
-    // the q15 row it was supposed to make comparable), so every full-suite
-    // run also writes BENCH_LOCAL_<sf>.json in the repo root and the next
-    // run prefers it as the diff base — the cross-round minima check can
-    // then never be blinded by wrapper truncation
+    def round(x: Double, digits: Int): Double = {
+      val p = math.pow(10, digits)
+      math.round(x * p) / p
+    }
+    def obj(fields: Seq[(String, JValue)]): JObject = JObject(fields.toList)
+    def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+    val total = ok.map(_.min).sum
+    // the quantity the retry guard acts on: a ratio counts only when the
+    // absolute spread exceeds the 0.5 s floor, so sub-second flutter that
+    // cannot have corrupted a min does not make every artifact read noisy
+    // (the full per-query min/max series stays visible in "spread")
+    val maxDisp = round(ok.map(r => dispersion(r.runs)).foldLeft(1.0)(math.max), 2)
+    val failed = strs(results.filter(_.runs.isEmpty).map(_.name))
+    // per query {min,max,n_ok,retries,t0[,esc][,op,harness,batches]}: min
+    // alone hides that ALL runs were slow, retries/esc show where the guard
+    // intervened, and op/harness/batches split a streaming gate entry's
+    // query-execution span (and its per-batch floor) from its scaffolding
+    val spread = obj(results.map { r =>
+      val (mn, mx) = if (r.runs.nonEmpty) (r.min, r.max) else (-1.0, -1.0)
+      val esc = if (r.escalated) Seq("esc" -> JBool(true)) else Nil
+      val op = r.runs.sortBy(_.total).headOption.filter(_.op > 0.0).toSeq.flatMap { f =>
+        Seq("op" -> JDouble(f.op), "harness" -> JDouble(math.max(0.0, f.total - f.op)),
+          "batches" -> JLong(f.batches))
+      }
+      r.name -> obj(Seq("min" -> JDouble(mn), "max" -> JDouble(mx), "n_ok" -> JInt(r.runs.length),
+        "retries" -> JInt(r.retries), "t0" -> JDouble(r.t0)) ++ esc ++ op)
+    })
+    // cross-run minima diff: a query whose EVERY run lands equally
+    // inflated passes every intra-series check, so the only detector is a
+    // prior minimum. Diff against $SPARK_GRAFT_BENCH_PREV, else
+    // BENCH_LOCAL_<sf>.json (the untruncated full-suite minima every full
+    // run writes), else the latest BENCH_r*.json, and record every >2x mover.
     val sfTag = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse("sf")
     val localName = s"BENCH_LOCAL_$sfTag.json"
-    val (prevName, vsPrev) = {
-      val explicit = sys.env.get("SPARK_GRAFT_BENCH_PREV")
-      val candidate = explicit.orElse {
-        if (new java.io.File(localName).isFile) Some(localName)
-        else {
-          val rs = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-            .map(_.getName).filter(_.matches("BENCH_r\\d+\\.json")).sorted
-          rs.lastOption
-        }
-      }
-      candidate.flatMap { f =>
-        try {
-          // the driver's BENCH_r*.json wraps (and escapes, and may
-          // truncate) the bench line inside a "tail" field — unescape
-          // before matching so both the raw line and the wrapper parse
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(f)), java.nio.charset.StandardCharsets.UTF_8)
-            .replace("\\\"", "\"")
-          val sfRe = """"sf"\s*:\s*"([^"]*)"""".r
-          val prevSf = sfRe.findFirstMatchIn(txt).map(_.group(1))
-          // minima are comparable only at the same scale factor
-          if (!prevSf.contains(sfDir)) None
-          else {
-            val num = """-?[0-9.]+(?:[Ee][+-]?[0-9]+)?"""
-            val qStart = txt.indexOf("\"queries\":{")
-            val prev: Map[String, Double] =
-              if (qStart >= 0) {
-                val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-                val entryRe = (""""([A-Za-z0-9_]+)":(""" + num + ")").r
-                entryRe.findAllMatchIn(body)
-                  .map(m => m.group(1) -> m.group(2).toDouble).toMap
-              } else {
-                // truncated wrapper: the "queries" object is gone but the
-                // surviving "spread" tail still carries per-query minima
-                val spreadRe = (""""([A-Za-z0-9_]+)":\{"min":(""" + num + ")").r
-                spreadRe.findAllMatchIn(txt)
-                  .map(m => m.group(1) -> m.group(2).toDouble).toMap
-              }
-            val movers = results.flatMap { case (k, rs2, _, _, _) =>
-              for {
-                cur <- rs2.map(_.total).minOption if cur > 0
-                p <- prev.get(k) if p > 0
-                ratio = cur / p
-                if ratio > 2.0 || ratio < 0.5
-              } yield s""""$k":${math.round(ratio * 100) / 100.0}"""
-            }
-            if (prev.isEmpty) None else Some((f, movers.mkString("{", ",", "}")))
-          }
-        } catch { case _: Throwable => None }
-      }.map { case (f, m) => (s""""$f"""", m) }.getOrElse(("null", "{}"))
+    val prevFile = sys.env.get("SPARK_GRAFT_BENCH_PREV").orElse {
+      if (new java.io.File(localName).isFile) Some(localName)
+      else Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+        .map(_.getName).filter(_.matches("BENCH_r\\d+\\.json")).sorted.lastOption
     }
-    val stillJson = stillDispersed.map(s => s""""$s"""").mkString("[", ",", "]")
+    // minima are comparable only at the same scale factor
+    val prev = prevFile.flatMap(f => priorMinima(f).collect {
+      case (sf, mins) if sf == sfDir && mins.nonEmpty => f -> mins
+    })
+    val vsPrev = obj(prev.toSeq.flatMap { case (_, mins) =>
+      ok.flatMap { r =>
+        mins.get(r.name).filter(p => r.min > 0 && p > 0).map(r.min / _)
+          .filter(ratio => ratio > 2.0 || ratio < 0.5)
+          .map(ratio => r.name -> JDouble(round(ratio, 2)))
+      }
+    })
     // epoch_ms anchors every spread row's "t0" (seconds after it) to
     // absolute wall-clock, so a mover can be checked against external
     // load records for its exact window
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"epoch_ms":$benchEpochMs,"queries":$qs,"spread":$spread,"max_dispersion":$maxDisp,"still_dispersed":$stillJson,"prev":$prevName,"vs_prev":$vsPrev,"failed":$failed,"sf":"$sfDir"}"""
+    val line = compact(obj(Seq(
+      "metric" -> JString("total"), "value" -> JDouble(total), "unit" -> JString("sec"),
+      "n" -> JInt(n), "epoch_ms" -> JLong(benchEpochMs),
+      "queries" -> obj(results.map(r => r.name -> JDouble(if (r.runs.nonEmpty) r.min else -1.0))),
+      "spread" -> spread, "max_dispersion" -> JDouble(maxDisp),
+      "still_dispersed" -> strs(stillDispersed),
+      "prev" -> prev.fold[JValue](JNull)(p => JString(p._1)), "vs_prev" -> vsPrev,
+      "failed" -> failed, "sf" -> JString(sfDir))))
     println(line)
-    // The driver's BENCH_r*.json wrapper keeps only the LAST 2000 chars of
-    // stdout as "tail" and parses the metric line out of that window. The
-    // full line above is ~19 KB at 160+ queries, so its head — the part
-    // with "metric"/"value" — scrolls out of the window. Emit a COMPACT
-    // headline line LAST, sized well under the window: suite total + the
-    // baseline-comparable headline queries (numbered q*, wc_*, rwlg_*).
-    // BENCH_r10 proved the compact line lands in the window but STILL
-    // fails the driver's parse because sbt prefixed it with "[info] " and
-    // appended a "[success] Total time" trailer — fixed in build.sbt
-    // (StdoutOutput + showSuccess := false), so this println is now the
-    // literal last stdout line. The untruncated per-query detail still
-    // ships via target/bench.json and BENCH_LOCAL_<sf>.json above.
-    val headline = results.collect {
-      case (k, rs, _, _, _)
-          if rs.nonEmpty &&
-            (k.matches("q\\d+_.*") || k.startsWith("wc_") || k.startsWith("rwlg_")) =>
-        s"\"" + k + "\":" + math.round(rs.map(_.total).min * 1000) / 1000.0
-    }.mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${math.round(total * 100) / 100.0},"unit":"sec","n":$n,"n_queries":${results.size},"queries":$headline,"max_dispersion":$maxDisp,"failed":$failed,"sf":"$sfDir"}""")
-    // bare copy without sbt's [info] log prefix, for log-scrape-free parsing
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("target/bench.json"), line)
+    // A wrapper that keeps only the last ~2000 chars of stdout loses the
+    // head of the full line (~19 KB at 180+ queries), so a COMPACT headline
+    // line comes LAST: suite total + the baseline-comparable headline
+    // queries (numbered q*, wc_*, rwlg_*). build.sbt passes forked stdout
+    // through verbatim with no success trailer, so this is the literal last
+    // stdout line; the full detail ships in target/bench.json and
+    // BENCH_LOCAL_<sf>.json.
+    val headline = ok.filter(r =>
+      r.name.matches("q\\d+_.*") || r.name.startsWith("wc_") || r.name.startsWith("rwlg_"))
+    println(compact(obj(Seq(
+      "metric" -> JString("total"), "value" -> JDouble(round(total, 2)), "unit" -> JString("sec"),
+      "n" -> JInt(n), "n_queries" -> JInt(results.size),
+      "queries" -> obj(headline.map(r => r.name -> JDouble(round(r.min, 3)))),
+      "max_dispersion" -> JDouble(maxDisp), "failed" -> failed, "sf" -> JString(sfDir)))))
+    // bare copy without any log prefix, for log-scrape-free parsing
+    try Files.writeString(Paths.get("target/bench.json"), line)
     catch { case _: Throwable => }
-    // full-suite runs persist the untruncated minima for the next round's
-    // diff base (partial SPARK_GRAFT_BENCH_ONLY runs must not overwrite
-    // the full-suite history with a subset)
+    // only full-suite runs persist the next run's diff base: a subset run
+    // must not overwrite the full-suite minima
     if (only.isEmpty)
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(localName), line)
+      try Files.writeString(Paths.get(localName), line)
       catch { case _: Throwable => }
     spark.stop()
   }

@@ -1,17 +1,35 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Skew
 import graft.operators.{AsOf, Corpus, Dedup, Events, Graph, Profiling, RangeJoin, Relational, Sampling, Similarity, TextOps}
 import graft.multimodal.Multimodal
+import graft.sources.Writers
 import graft.streaming.EventStream
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its engine function and the DuckDB SQL that must
+  * return the same rows, or no SQL for a rows-only query. The SQL is built
+  * on first read, so listing the queries initializes no operator object. */
+final class Query private (val name: String, val run: Query.Fn, sql: () => Option[String]) {
+  lazy val oracle: Option[String] = sql()
+}
+
+object Query {
+  type Fn = (SparkSession, String) => DataFrame
+  def apply(name: String, run: Fn, oracle: => String): Query =
+    new Query(name, run, () => Some(oracle))
+  /** A query with no exact DuckDB twin; it is held against its exact twin
+    * instead (HLL++ sketches: Verify's sketch bounds, SketchSpec). */
+  def rowsOnly(name: String, run: Fn): Query = new Query(name, run, () => None)
+}
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` is the operator inventory made executable: one entry per
-  * implemented operator (SURVEY.md §2 + the training-pipeline extensions);
-  * `oracleSql` carries the DuckDB-equivalent for every SQL-expressible one.
+  * `registry` is the operator inventory made executable: one entry per
+  * implemented operator (SURVEY.md §2 + the training-pipeline extensions),
+  * with the DuckDB-equivalent SQL of every SQL-expressible one.
   * Probabilistic operators (MinHash LSH, sign-LSH ANN, SimHash, heuristic
-  * language ID) are rows-only here and verified statistically in ScalaTest
+  * language ID) are verified statistically in ScalaTest as well
   * (recall/precision against their exact counterparts).
   */
 object SparkEntry {
@@ -20,338 +38,202 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q03RevenueByNation(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Map[String, (SparkSession, String) => DataFrame](
-      // reference applications, engine path + declarative path
-      "wc_maple_juice"    -> (TextOps.wcMapleJuice _),
-      "wc_dataframe"      -> (TextOps.wcDataFrame _),
-      "wc_maple_juice_agg" -> (TextOps.wcMapleJuiceAggregated _),
-      "rwlg_maple_juice"  -> (TextOps.rwlgMapleJuice _),
-      "rwlg_dataframe"    -> (TextOps.rwlgDataFrame _),
-      // text analysis
-      "text_token_stats"  -> (TextOps.tokenStats _),
-      "text_chunks"       -> (TextOps.chunkDocuments _),
-      "text_bpe_tokens"   -> (TextOps.bpeTokens _),
-      "text_bpe_merges"   -> (TextOps.bpeMergeCandidates _),
-      "text_bpe_train"    -> (TextOps.bpeTrain _),
-      "text_bpe_apply"    -> (TextOps.bpeApply _),
-      "text_vocab_coverage" -> (TextOps.vocabCoverage _),
-      "text_quality_score" -> (TextOps.qualityScore _),
-      "text_quality_filter" -> (TextOps.qualityQuantileFilter _),
-      "text_gopher_rules" -> (TextOps.gopherRules _),
-      "text_fingerprint"  -> (TextOps.fingerprint _),
-      "text_winnow_fingerprints" -> (TextOps.winnowFingerprints _),
-      "dedup_winnow_candidates"  -> (TextOps.winnowCandidates _),
-      "text_langid"       -> (TextOps.langId _),
-      "text_redact_pii"   -> ((s, d) => TextOps.redactPii(s, d)),
-      "text_blocklist_filter" -> (TextOps.blocklistFilter _),
-      "text_c4_line_clean" -> (TextOps.c4LineClean _),
-      "text_inverted_index" -> (TextOps.invertedIndex _),
-      "text_repetition"   -> (TextOps.repetitionSignals _),
-      "text_charclass_profile" -> (TextOps.charclassProfile _),
-      // corpus provenance / mixture layer
-      "text_source_stats"    -> (Corpus.sourceStats _),
-      "corpus_dataset_card"  -> (Corpus.datasetCard _),
-      "train_mix_weights"    -> (Corpus.mixWeights _),
-      "text_tfidf_top_terms" -> (Corpus.tfidfTopTerms _),
-      "text_lm_bits"         -> (Corpus.lmBits _),
-      "train_dsir_weights"   -> (Corpus.dsirWeights _),
-      "text_nb_quality"      -> (Corpus.nbQuality _),
-      "dedup_cross_source"   -> (Corpus.crossSourceOverlap _),
-      "text_ccnet_buckets"   -> (Corpus.ccnetBuckets _),
-      "text_bm25_topk"       -> (Corpus.bm25TopK _),
-      "retrieval_hybrid_rrf" -> (Corpus.hybridRrfTopK _),
-      "retrieval_rm3_expand" -> (Corpus.rm3Expand _),
-      "retrieval_phrase_match" -> (Corpus.phraseMatch _),
-      "retrieval_eval_report" -> (Corpus.retrievalEvalReport _),
-      "corpus_length_histogram" -> (Corpus.lengthHistogram _),
-      "corpus_ngram_diversity" -> (Corpus.ngramDiversity _),
-      "corpus_ngram_novelty" -> (Corpus.ngramNovelty _),
-      "corpus_domain_js"     -> (Corpus.domainJs _),
-      "text_kn_bigram"       -> (Corpus.knBigram _),
-      "text_kn_score"        -> (Corpus.knScore _),
-      "train_contrastive_triplets" -> (Similarity.contrastiveTriplets _),
-      "train_token_budget"   -> (Corpus.tokenBudget _),
-      "train_epoch_plan"     -> (Corpus.epochPlan _),
-      "train_sampling_temperature" -> (Corpus.samplingTemperature _),
-      // link-graph analytics
-      "graph_pagerank"       -> (Graph.pageRank _),
-      "graph_triangles"      -> (Graph.triangleCounts _),
-      "graph_triangles_approx" -> (Graph.triangleCountApprox _),
-      "graph_components"     -> (Graph.components _),
-      "graph_kcore"          -> (Graph.kcore _),
-      "graph_degree_histogram" -> (Graph.degreeHistogram _),
-      "graph_label_prop"     -> (Graph.labelPropagation _),
-      "graph_ppr"            -> (Graph.personalizedPageRank _),
-      "graph_bfs_layers"     -> (Graph.bfsLayers _),
-      "graph_hits"           -> (Graph.hits _),
-      "graph_random_walks"   -> (Graph.randomWalks _),
-      "graph_jaccard_neighbors" -> (Graph.jaccardNeighbors _),
-      "graph_modularity"     -> (Graph.modularity _),
-      "graph_adamic_adar"    -> (Graph.adamicAdar _),
-      "orders_basket_rules"  -> (Graph.basketRules _),
-      // batch event analytics
-      "events_funnel"        -> (Events.eventFunnel _),
-      "events_retention"     -> (Events.retentionCohorts _),
-      "events_anomaly"       -> (Events.anomalyWindows _),
-      "events_anomaly_mad"   -> (Events.madAnomalyWindows _),
-      "events_transitions"   -> (Events.typeTransitions _),
-      "events_transitions_skewres" -> (Events.typeTransitionsSkewResistant _),
-      "events_attribution"   -> (Events.attribution _),
-      "events_cohort_ltv"    -> (Events.cohortLtv _),
-      "stream_lateness_advisor" -> (Events.latenessAdvisor _),
-      // deduplication
-      "dedup_exact"          -> (Dedup.exactDedup _),
-      "dedup_ngram_jaccard"  -> (Dedup.ngramJaccardPairs _),
-      "dedup_clusters"       -> (Dedup.dedupClusters _),
-      "dedup_minhash_lsh"    -> (Dedup.minhashLshPairs _),
-      "dedup_sketch_recall"  -> (Dedup.sketchRecallReport _),
-      "dedup_simhash"        -> (Dedup.simhashPairs _),
-      "dedup_embedding_cosine" -> (Dedup.embeddingPairs _),
-      "dedup_keep_list"        -> (Dedup.keepList _),
-      "dedup_contamination"    -> (Dedup.contamination _),
-      "dedup_contamination_bloom" -> (Dedup.bloomContamination _),
-      "dedup_contamination_fuzzy" -> (Dedup.fuzzyContamination _),
-      "dedup_contamination_semantic" -> (Dedup.semanticContamination _),
-      "dedup_contamination_report"   -> (Dedup.contaminationReport _),
-      "dedup_ingest_batch"     -> (Dedup.ingestBatchDedup _),
-      "dedup_duplicate_spans"  -> (Dedup.duplicateSpans _),
-      "dedup_span_clean"       -> (Dedup.spanCleanedDocs _),
-      "dedup_paragraphs"       -> (Dedup.paragraphDedup _),
-      "dedup_soft_weights"     -> (Dedup.softDedupWeights _),
-      "dedup_keep_best"        -> (Dedup.keepBest _),
-      "er_blocked_matches"     -> (Dedup.erBlockedMatches _),
-      // similarity search
-      "ann_brute_topk" -> (Similarity.annBruteTopK _),
-      "ann_lsh_topk"   -> (Similarity.annLshTopK _),
-      "ann_ivf_topk"   -> (Similarity.annIvfTopK _),
-      "ann_pq_topk"    -> (Similarity.annPqTopK _),
-      "ann_ivfpq_topk" -> (Similarity.annIvfPqTopK _),
-      "ann_filtered_topk" -> (Similarity.annFilteredTopK _),
-      "ann_filtered_brute" -> (Similarity.annFilteredBruteTopK _),
-      "ann_hardneg_topk" -> (Similarity.annHardNegatives _),
-      "ann_hardneg_brute" -> (Similarity.annHardNegBruteTopK _),
-      "mine_bitext_margin" -> (Similarity.bitextMarginPairs _),
-      "embed_cluster_profile" -> (Similarity.clusterProfile _),
-      "embed_cluster_terms" -> (Similarity.clusterTerms _),
-      "embed_drift_report" -> (Similarity.embedDriftReport _),
-      "embed_power_iteration" -> (Similarity.powerIteration _),
-      "ann_recall_report" -> (Similarity.annRecallReport _),
-      "dedup_semantic" -> (Similarity.semanticDedup _),
-      "embed_quantize_int8" -> (Similarity.quantizeStats _),
-      "embed_reduce_rp"     -> (Similarity.reduceEmbeddings _),
-      "embed_pq_codes"      -> (Similarity.pqCodes _),
-      "embed_matryoshka_report" -> (Similarity.matryoshkaReport _),
-      // profiling + merge
-      "profile_lineitem" -> (Profiling.profileLineitem _),
-      "profile_lineitem_approx" -> (Profiling.profileLineitemApprox _),
-      "merge_upsert"     -> (Profiling.mergeUpsert _),
-      "profile_hot_keys" -> (Profiling.hotKeys _),
-      "profile_correlations" -> (Profiling.correlations _),
-      "profile_entropy"  -> (Profiling.entropy _),
-      "merge_incremental_agg" -> (Profiling.incrementalAgg _),
-      "orders_rfm_segments" -> (Profiling.rfmSegments _),
-      "orders_abc_pareto"  -> (Profiling.abcPareto _),
-      "audit_integrity"  -> (Profiling.auditIntegrity _),
-      "corpus_snapshot_diff" -> (Profiling.snapshotDiff _),
-      // dataset curation
-      "sample_stratified" -> ((s, d) => Sampling.stratifiedSample(s, d)),
-      "train_shards"      -> ((s, d) => Sampling.trainShards(s, d)),
-      "train_test_split"  -> (Sampling.trainTestSplit _),
-      "train_curriculum_order" -> (Sampling.curriculumOrder _),
-      "curation_pipeline" -> ((s, d) => Sampling.curationPipeline(s, d)),
-      "pack_sequences"    -> (Sampling.packSequences _),
-      "pack_efficiency"   -> (Sampling.packEfficiency _),
-      "scd2_history"      -> (Profiling.scd2History _),
-      "scd2_history_skewres" -> (Profiling.scd2HistorySkewResistant _),
-      // source formats
-      "source_jsonl_roundtrip" -> (graft.sources.Writers.jsonlRoundtrip _),
-      "source_csv_roundtrip"   -> (graft.sources.Writers.csvRoundtrip _),
-      "orders_zorder_index"    -> (graft.sources.Writers.zorderIndex _),
-      "files_compact_plan"     -> (graft.sources.Writers.compactionPlan _),
-      "layout_skipping_report" -> (graft.sources.Writers.layoutSkippingReport _),
-      // multimodal plumbing
-      "multimodal_decode_meta" -> (Multimodal.decodeMeta _),
-      "multimodal_features"    -> (Multimodal.extractFeatures _),
-      "multimodal_resize"      -> (Multimodal.resizePayloads _),
-      "multimodal_frame_sample" -> (Multimodal.frameSample _),
-      "multimodal_phash_pairs" -> (Multimodal.phashPairs _),
-      "multimodal_exact_dedup" -> (Multimodal.exactDedup _),
-      // as-of + range joins
-      "asof_purchase_view" -> (AsOf.purchaseToLastView _),
-      "asof_next_view"     -> (AsOf.purchaseToNextView _),
-      "range_join_events"  -> (RangeJoin.errorsNearClicks _),
-      // streaming
-      "stream_event_windows"    -> (EventStream.runWindowedCountsBatch _),
-      "stream_sessionize_batch" -> (EventStream.sessionizeBatchEquivalent _),
-      "stream_sessionize_skewres" -> (EventStream.sessionizeSkewResistant _),
-      "stream_dedup"            -> (EventStream.streamingDedupBatch _),
-      "stream_decontaminate"    -> (EventStream.streamingDecontaminateBatch _),
-      "stream_topk_types"       -> (EventStream.runTopKTypesBatch _),
-      "stream_funnel"           -> (EventStream.runFunnelUsersBatch _),
-      "stream_interval_join"    -> (EventStream.runIntervalJoinBatch _),
-      // skew mitigation
-      "skew_salted_agg"      -> (graft.core.Skew.saltedAggQuery _),
-      "skew_replicated_join" -> (graft.core.Skew.replicatedJoinQuery _),
-    )
+  lazy val registry: Seq[Query] = Relational.registry ++ Seq(
+    // reference applications, engine path + declarative path
+    Query("wc_maple_juice", TextOps.wcMapleJuice _, TextOps.wcOracle),
+    Query("wc_dataframe", TextOps.wcDataFrame _, TextOps.wcOracle),
+    Query("wc_maple_juice_agg", TextOps.wcMapleJuiceAggregated _, TextOps.wcOracle),
+    Query("rwlg_maple_juice", TextOps.rwlgMapleJuice _, TextOps.rwlgOracle),
+    Query("rwlg_dataframe", TextOps.rwlgDataFrame _, TextOps.rwlgOracle),
+    // text analysis
+    Query("text_token_stats", TextOps.tokenStats _, TextOps.tokenStatsOracle),
+    Query("text_chunks", TextOps.chunkDocuments _, TextOps.chunkDocumentsOracle),
+    Query("text_bpe_tokens", TextOps.bpeTokens _, TextOps.bpeTokensOracle),
+    Query("text_bpe_merges", TextOps.bpeMergeCandidates _, TextOps.bpeMergeCandidatesOracle),
+    Query("text_bpe_train", TextOps.bpeTrain _, TextOps.bpeTrainOracle),
+    Query("text_bpe_apply", TextOps.bpeApply _, TextOps.bpeApplyOracle),
+    Query("text_vocab_coverage", TextOps.vocabCoverage _, TextOps.vocabCoverageOracle),
+    Query("text_quality_score", TextOps.qualityScore _, TextOps.qualityScoreOracle),
+    Query("text_quality_filter", TextOps.qualityQuantileFilter _,
+      TextOps.qualityQuantileFilterOracle),
+    Query("text_gopher_rules", TextOps.gopherRules _, TextOps.gopherRulesOracle),
+    Query("text_fingerprint", TextOps.fingerprint _, TextOps.fingerprintOracle),
+    Query("text_winnow_fingerprints", TextOps.winnowFingerprints _,
+      TextOps.winnowFingerprintsOracle),
+    Query("dedup_winnow_candidates", TextOps.winnowCandidates _, TextOps.winnowCandidatesOracle),
+    Query("text_langid", TextOps.langId _, TextOps.langIdOracle),
+    Query("text_redact_pii", (s, d) => TextOps.redactPii(s, d), TextOps.redactPiiOracle),
+    Query("text_blocklist_filter", TextOps.blocklistFilter _, TextOps.blocklistFilterOracle),
+    Query("text_c4_line_clean", TextOps.c4LineClean _, TextOps.c4LineCleanOracle),
+    Query("text_inverted_index", TextOps.invertedIndex _, TextOps.invertedIndexOracle),
+    Query("text_repetition", TextOps.repetitionSignals _, TextOps.repetitionSignalsOracle),
+    Query("text_charclass_profile", TextOps.charclassProfile _, TextOps.charclassProfileOracle),
+    // corpus provenance / mixture layer
+    Query("text_source_stats", Corpus.sourceStats _, Corpus.sourceStatsOracle),
+    Query("corpus_dataset_card", Corpus.datasetCard _, Corpus.datasetCardOracle),
+    Query("train_mix_weights", Corpus.mixWeights _, Corpus.mixWeightsOracle),
+    Query("text_tfidf_top_terms", Corpus.tfidfTopTerms _, Corpus.tfidfTopTermsOracle),
+    Query("text_lm_bits", Corpus.lmBits _, Corpus.lmBitsOracle),
+    Query("train_dsir_weights", Corpus.dsirWeights _, Corpus.dsirWeightsOracle),
+    Query("text_nb_quality", Corpus.nbQuality _, Corpus.nbQualityOracle),
+    Query("dedup_cross_source", Corpus.crossSourceOverlap _, Corpus.crossSourceOverlapOracle),
+    Query("text_ccnet_buckets", Corpus.ccnetBuckets _, Corpus.ccnetBucketsOracle),
+    Query("text_bm25_topk", Corpus.bm25TopK _, Corpus.bm25TopKOracle),
+    Query("retrieval_hybrid_rrf", Corpus.hybridRrfTopK _, Corpus.hybridRrfTopKOracle),
+    Query("retrieval_rm3_expand", Corpus.rm3Expand _, Corpus.rm3ExpandOracle),
+    Query("retrieval_phrase_match", Corpus.phraseMatch _, Corpus.phraseMatchOracle),
+    Query("retrieval_eval_report", Corpus.retrievalEvalReport _, Corpus.retrievalEvalReportOracle),
+    Query("corpus_length_histogram", Corpus.lengthHistogram _, Corpus.lengthHistogramOracle),
+    Query("corpus_ngram_diversity", Corpus.ngramDiversity _, Corpus.ngramDiversityOracle),
+    Query("corpus_ngram_novelty", Corpus.ngramNovelty _, Corpus.ngramNoveltyOracle),
+    Query("corpus_domain_js", Corpus.domainJs _, Corpus.domainJsOracle),
+    Query("text_kn_bigram", Corpus.knBigram _, Corpus.knBigramOracle),
+    Query("text_kn_score", Corpus.knScore _, Corpus.knScoreOracle),
+    Query("train_contrastive_triplets", Similarity.contrastiveTriplets _,
+      Similarity.contrastiveTripletsOracle),
+    Query("train_token_budget", Corpus.tokenBudget _, Corpus.tokenBudgetOracle),
+    Query("train_epoch_plan", Corpus.epochPlan _, Corpus.epochPlanOracle),
+    Query("train_sampling_temperature", Corpus.samplingTemperature _,
+      Corpus.samplingTemperatureOracle),
+    // link-graph analytics
+    Query("graph_pagerank", Graph.pageRank _, Graph.pageRankOracle),
+    Query("graph_triangles", Graph.triangleCounts _, Graph.triangleCountsOracle),
+    Query("graph_triangles_approx", Graph.triangleCountApprox _, Graph.triangleCountApproxOracle),
+    Query("graph_components", Graph.components _, Graph.componentsOracle),
+    Query("graph_kcore", Graph.kcore _, Graph.kcoreOracle),
+    Query("graph_degree_histogram", Graph.degreeHistogram _, Graph.degreeHistogramOracle),
+    Query("graph_label_prop", Graph.labelPropagation _, Graph.labelPropagationOracle),
+    Query("graph_ppr", Graph.personalizedPageRank _, Graph.personalizedPageRankOracle),
+    Query("graph_bfs_layers", Graph.bfsLayers _, Graph.bfsLayersOracle),
+    Query("graph_hits", Graph.hits _, Graph.hitsOracle),
+    Query("graph_random_walks", Graph.randomWalks _, Graph.randomWalksOracle),
+    Query("graph_jaccard_neighbors", Graph.jaccardNeighbors _, Graph.jaccardNeighborsOracle),
+    Query("graph_modularity", Graph.modularity _, Graph.modularityOracle),
+    Query("graph_adamic_adar", Graph.adamicAdar _, Graph.adamicAdarOracle),
+    Query("orders_basket_rules", Graph.basketRules _, Graph.basketRulesOracle),
+    // batch event analytics
+    Query("events_funnel", Events.eventFunnel _, Events.eventFunnelOracle),
+    Query("events_retention", Events.retentionCohorts _, Events.retentionCohortsOracle),
+    Query("events_anomaly", Events.anomalyWindows _, Events.anomalyWindowsOracle),
+    Query("events_anomaly_mad", Events.madAnomalyWindows _, Events.madAnomalyWindowsOracle),
+    Query("events_transitions", Events.typeTransitions _, Events.typeTransitionsOracle),
+    Query("events_transitions_skewres", Events.typeTransitionsSkewResistant _,
+      Events.typeTransitionsOracle),
+    Query("events_attribution", Events.attribution _, Events.attributionOracle),
+    Query("events_cohort_ltv", Events.cohortLtv _, Events.cohortLtvOracle),
+    Query("stream_lateness_advisor", Events.latenessAdvisor _, Events.latenessAdvisorOracle),
+    // deduplication
+    Query("dedup_exact", Dedup.exactDedup _, Dedup.exactDedupOracle),
+    Query("dedup_ngram_jaccard", Dedup.ngramJaccardPairs _, Dedup.ngramJaccardOracle),
+    Query("dedup_clusters", Dedup.dedupClusters _, Dedup.dedupClustersOracle),
+    Query("dedup_minhash_lsh", Dedup.minhashLshPairs _, Dedup.minhashLshOracle),
+    Query("dedup_sketch_recall", Dedup.sketchRecallReport _, Dedup.sketchRecallReportOracle),
+    Query("dedup_simhash", Dedup.simhashPairs _, Dedup.simhashPairsOracle),
+    Query("dedup_embedding_cosine", Dedup.embeddingPairs _, Dedup.embeddingPairsOracle),
+    Query("dedup_keep_list", Dedup.keepList _, Dedup.keepListOracle),
+    Query("dedup_contamination", Dedup.contamination _, Dedup.contaminationOracle),
+    Query("dedup_contamination_bloom", Dedup.bloomContamination _, Dedup.bloomContaminationOracle),
+    Query("dedup_contamination_fuzzy", Dedup.fuzzyContamination _, Dedup.fuzzyContaminationOracle),
+    Query("dedup_contamination_semantic", Dedup.semanticContamination _,
+      Dedup.semanticContaminationOracle),
+    Query("dedup_contamination_report", Dedup.contaminationReport _,
+      Dedup.contaminationReportOracle),
+    Query("dedup_ingest_batch", Dedup.ingestBatchDedup _, Dedup.ingestBatchDedupOracle),
+    Query("dedup_duplicate_spans", Dedup.duplicateSpans _, Dedup.duplicateSpansOracle),
+    Query("dedup_span_clean", Dedup.spanCleanedDocs _, Dedup.spanCleanedDocsOracle),
+    Query("dedup_paragraphs", Dedup.paragraphDedup _, Dedup.paragraphDedupOracle),
+    Query("dedup_soft_weights", Dedup.softDedupWeights _, Dedup.softDedupWeightsOracle),
+    Query("dedup_keep_best", Dedup.keepBest _, Dedup.keepBestOracle),
+    Query("er_blocked_matches", Dedup.erBlockedMatches _, Dedup.erBlockedMatchesOracle),
+    // similarity search
+    Query("ann_brute_topk", Similarity.annBruteTopK _, Similarity.annBruteTopKOracle),
+    Query("ann_lsh_topk", Similarity.annLshTopK _, Similarity.annLshTopKOracle),
+    Query("ann_ivf_topk", Similarity.annIvfTopK _, Similarity.annIvfTopKOracle),
+    Query("ann_pq_topk", Similarity.annPqTopK _, Similarity.annPqTopKOracle),
+    Query("ann_ivfpq_topk", Similarity.annIvfPqTopK _, Similarity.annIvfPqTopKOracle),
+    Query("ann_filtered_topk", Similarity.annFilteredTopK _, Similarity.annFilteredTopKOracle),
+    Query("ann_filtered_brute", Similarity.annFilteredBruteTopK _,
+      Similarity.annFilteredBruteTopKOracle),
+    Query("ann_hardneg_topk", Similarity.annHardNegatives _, Similarity.annHardNegativesOracle),
+    Query("ann_hardneg_brute", Similarity.annHardNegBruteTopK _,
+      Similarity.annHardNegBruteTopKOracle),
+    Query("mine_bitext_margin", Similarity.bitextMarginPairs _, Similarity.bitextMarginPairsOracle),
+    Query("embed_cluster_profile", Similarity.clusterProfile _, Similarity.clusterProfileOracle),
+    Query("embed_cluster_terms", Similarity.clusterTerms _, Similarity.clusterTermsOracle),
+    Query("embed_drift_report", Similarity.embedDriftReport _, Similarity.embedDriftReportOracle),
+    Query("embed_power_iteration", Similarity.powerIteration _, Similarity.powerIterationOracle),
+    Query("ann_recall_report", Similarity.annRecallReport _, Similarity.annRecallReportOracle),
+    Query("dedup_semantic", Similarity.semanticDedup _, Similarity.semanticDedupOracle),
+    Query("embed_quantize_int8", Similarity.quantizeStats _, Similarity.quantizeStatsOracle),
+    Query("embed_reduce_rp", Similarity.reduceEmbeddings _, Similarity.reduceEmbeddingsOracle),
+    Query("embed_pq_codes", Similarity.pqCodes _, Similarity.pqCodesOracle),
+    Query("embed_matryoshka_report", Similarity.matryoshkaReport _,
+      Similarity.matryoshkaReportOracle),
+    // profiling + merge
+    Query("profile_lineitem", Profiling.profileLineitem _, Profiling.profileLineitemOracle),
+    Query.rowsOnly("profile_lineitem_approx", Profiling.profileLineitemApprox _),
+    Query("merge_upsert", Profiling.mergeUpsert _, Profiling.mergeUpsertOracle),
+    Query("profile_hot_keys", Profiling.hotKeys _, Profiling.hotKeysOracle),
+    Query("profile_correlations", Profiling.correlations _, Profiling.correlationsOracle),
+    Query("profile_entropy", Profiling.entropy _, Profiling.entropyOracle),
+    Query("merge_incremental_agg", Profiling.incrementalAgg _, Profiling.incrementalAggOracle),
+    Query("orders_rfm_segments", Profiling.rfmSegments _, Profiling.rfmSegmentsOracle),
+    Query("orders_abc_pareto", Profiling.abcPareto _, Profiling.abcParetoOracle),
+    Query("audit_integrity", Profiling.auditIntegrity _, Profiling.auditIntegrityOracle),
+    Query("corpus_snapshot_diff", Profiling.snapshotDiff _, Profiling.snapshotDiffOracle),
+    // dataset curation
+    Query("sample_stratified", (s, d) => Sampling.stratifiedSample(s, d),
+      Sampling.stratifiedSampleOracle),
+    Query("train_shards", (s, d) => Sampling.trainShards(s, d), Sampling.trainShardsOracle),
+    Query("train_test_split", Sampling.trainTestSplit _, Sampling.trainTestSplitOracle),
+    Query("train_curriculum_order", Sampling.curriculumOrder _, Sampling.curriculumOrderOracle),
+    Query("curation_pipeline", (s, d) => Sampling.curationPipeline(s, d),
+      Sampling.curationPipelineOracle),
+    Query("pack_sequences", Sampling.packSequences _, Sampling.packSequencesOracle),
+    Query("pack_efficiency", Sampling.packEfficiency _, Sampling.packEfficiencyOracle),
+    Query("scd2_history", Profiling.scd2History _, Profiling.scd2HistoryOracle),
+    Query("scd2_history_skewres", Profiling.scd2HistorySkewResistant _,
+      Profiling.scd2HistoryOracle),
+    // source formats
+    Query("source_jsonl_roundtrip", Writers.jsonlRoundtrip _, Writers.jsonlRoundtripOracle),
+    Query("source_csv_roundtrip", Writers.csvRoundtrip _, Writers.csvRoundtripOracle),
+    Query("orders_zorder_index", Writers.zorderIndex _, Writers.zorderIndexOracle),
+    Query("files_compact_plan", Writers.compactionPlan _, Writers.compactionPlanOracle),
+    Query("layout_skipping_report", Writers.layoutSkippingReport _,
+      Writers.layoutSkippingReportOracle),
+    // multimodal plumbing
+    Query("multimodal_decode_meta", Multimodal.decodeMeta _, Multimodal.decodeMetaOracle),
+    Query("multimodal_features", Multimodal.extractFeatures _, Multimodal.extractFeaturesOracle),
+    Query("multimodal_resize", Multimodal.resizePayloads _, Multimodal.resizePayloadsOracle),
+    Query("multimodal_frame_sample", Multimodal.frameSample _, Multimodal.frameSampleOracle),
+    Query("multimodal_phash_pairs", Multimodal.phashPairs _, Multimodal.phashPairsOracle),
+    Query("multimodal_exact_dedup", Multimodal.exactDedup _, Multimodal.exactDedupOracle),
+    // as-of + range joins
+    Query("asof_purchase_view", AsOf.purchaseToLastView _, AsOf.purchaseToLastViewOracle),
+    Query("asof_next_view", AsOf.purchaseToNextView _, AsOf.purchaseToNextViewOracle),
+    Query("range_join_events", RangeJoin.errorsNearClicks _, RangeJoin.errorsNearClicksOracle),
+    // streaming
+    Query("stream_event_windows", EventStream.runWindowedCountsBatch _,
+      Relational.q20EventWindowsOracle),
+    Query("stream_sessionize_batch", EventStream.sessionizeBatchEquivalent _,
+      Relational.q21SessionizeOracle),
+    Query("stream_sessionize_skewres", EventStream.sessionizeSkewResistant _,
+      Relational.q21SessionizeOracle),
+    Query("stream_dedup", EventStream.streamingDedupBatch _, EventStream.streamingDedupOracle),
+    Query("stream_decontaminate", EventStream.streamingDecontaminateBatch _,
+      Dedup.bloomContaminationOracle),
+    Query("stream_topk_types", EventStream.runTopKTypesBatch _, EventStream.topKTypesOracle),
+    Query("stream_funnel", EventStream.runFunnelUsersBatch _, EventStream.funnelUsersOracle),
+    Query("stream_interval_join", EventStream.runIntervalJoinBatch _,
+      EventStream.intervalJoinOracle),
+    // skew mitigation
+    Query("skew_salted_agg", Skew.saltedAggQuery _, Skew.saltedAggOracle),
+    Query("skew_replicated_join", Skew.replicatedJoinQuery _, Skew.replicatedJoinOracle),
+  )
 
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Map(
-      "wc_maple_juice"   -> TextOps.wcOracle,
-      "wc_dataframe"     -> TextOps.wcOracle,
-      "wc_maple_juice_agg" -> TextOps.wcOracle,
-      "rwlg_maple_juice" -> TextOps.rwlgOracle,
-      "rwlg_dataframe"   -> TextOps.rwlgOracle,
-      "text_token_stats" -> TextOps.tokenStatsOracle,
-      "text_chunks"      -> TextOps.chunkDocumentsOracle,
-      "text_bpe_tokens"  -> TextOps.bpeTokensOracle,
-      "text_bpe_merges"  -> TextOps.bpeMergeCandidatesOracle,
-      "text_bpe_train"   -> TextOps.bpeTrainOracle,
-      "text_bpe_apply"   -> TextOps.bpeApplyOracle,
-      "text_vocab_coverage" -> TextOps.vocabCoverageOracle,
-      "text_quality_score" -> TextOps.qualityScoreOracle,
-      "text_quality_filter" -> TextOps.qualityQuantileFilterOracle,
-      "text_gopher_rules" -> TextOps.gopherRulesOracle,
-      "text_fingerprint" -> TextOps.fingerprintOracle,
-      "text_winnow_fingerprints" -> TextOps.winnowFingerprintsOracle,
-      "dedup_winnow_candidates"  -> TextOps.winnowCandidatesOracle,
-      "text_langid"      -> TextOps.langIdOracle,
-      "dedup_simhash"    -> Dedup.simhashPairsOracle,
-      "dedup_exact"         -> Dedup.exactDedupOracle,
-      "dedup_minhash_lsh"   -> Dedup.minhashLshOracle,
-      "dedup_sketch_recall"  -> Dedup.sketchRecallReportOracle,
-      "dedup_ngram_jaccard" -> Dedup.ngramJaccardOracle,
-      "dedup_clusters"      -> Dedup.dedupClustersOracle,
-      "dedup_keep_list"     -> Dedup.keepListOracle,
-      "text_redact_pii"     -> TextOps.redactPiiOracle,
-      "text_repetition"     -> TextOps.repetitionSignalsOracle,
-      "text_charclass_profile" -> TextOps.charclassProfileOracle,
-      "text_source_stats"    -> Corpus.sourceStatsOracle,
-      "corpus_dataset_card"  -> Corpus.datasetCardOracle,
-      "train_mix_weights"    -> Corpus.mixWeightsOracle,
-      "text_tfidf_top_terms" -> Corpus.tfidfTopTermsOracle,
-      "text_lm_bits"         -> Corpus.lmBitsOracle,
-      "train_dsir_weights"   -> Corpus.dsirWeightsOracle,
-      "dedup_cross_source"   -> Corpus.crossSourceOverlapOracle,
-      "text_ccnet_buckets"   -> Corpus.ccnetBucketsOracle,
-      "text_bm25_topk"       -> Corpus.bm25TopKOracle,
-      "retrieval_hybrid_rrf" -> Corpus.hybridRrfTopKOracle,
-      "retrieval_rm3_expand" -> Corpus.rm3ExpandOracle,
-      "retrieval_phrase_match" -> Corpus.phraseMatchOracle,
-      "retrieval_eval_report" -> Corpus.retrievalEvalReportOracle,
-      "corpus_length_histogram" -> Corpus.lengthHistogramOracle,
-      "corpus_ngram_diversity" -> Corpus.ngramDiversityOracle,
-      "corpus_ngram_novelty" -> Corpus.ngramNoveltyOracle,
-      "corpus_domain_js"     -> Corpus.domainJsOracle,
-      "text_kn_bigram"       -> Corpus.knBigramOracle,
-      "text_kn_score"        -> Corpus.knScoreOracle,
-      "train_contrastive_triplets" -> Similarity.contrastiveTripletsOracle,
-      "train_token_budget"   -> Corpus.tokenBudgetOracle,
-      "train_epoch_plan"     -> Corpus.epochPlanOracle,
-      "train_sampling_temperature" -> Corpus.samplingTemperatureOracle,
-      "graph_pagerank"       -> Graph.pageRankOracle,
-      "graph_triangles"      -> Graph.triangleCountsOracle,
-      "graph_triangles_approx" -> Graph.triangleCountApproxOracle,
-      "graph_components"     -> Graph.componentsOracle,
-      "graph_kcore"          -> Graph.kcoreOracle,
-      "graph_degree_histogram" -> Graph.degreeHistogramOracle,
-      "graph_label_prop"     -> Graph.labelPropagationOracle,
-      "graph_ppr"            -> Graph.personalizedPageRankOracle,
-      "graph_bfs_layers"     -> Graph.bfsLayersOracle,
-      "graph_hits"           -> Graph.hitsOracle,
-      "graph_random_walks"   -> Graph.randomWalksOracle,
-      "graph_jaccard_neighbors" -> Graph.jaccardNeighborsOracle,
-      "graph_modularity"     -> Graph.modularityOracle,
-      "graph_adamic_adar"    -> Graph.adamicAdarOracle,
-      "orders_basket_rules"  -> Graph.basketRulesOracle,
-      "events_funnel"        -> Events.eventFunnelOracle,
-      "events_retention"     -> Events.retentionCohortsOracle,
-      "events_anomaly"       -> Events.anomalyWindowsOracle,
-      "events_anomaly_mad"   -> Events.madAnomalyWindowsOracle,
-      "events_transitions"   -> Events.typeTransitionsOracle,
-      "events_transitions_skewres" -> Events.typeTransitionsOracle,
-      "events_attribution"   -> Events.attributionOracle,
-      "events_cohort_ltv"    -> Events.cohortLtvOracle,
-      "stream_lateness_advisor" -> Events.latenessAdvisorOracle,
-      "text_nb_quality"      -> Corpus.nbQualityOracle,
-      "text_blocklist_filter" -> TextOps.blocklistFilterOracle,
-      "text_c4_line_clean" -> TextOps.c4LineCleanOracle,
-      "text_inverted_index" -> TextOps.invertedIndexOracle,
-      "dedup_contamination"  -> Dedup.contaminationOracle,
-      "dedup_contamination_bloom" -> Dedup.bloomContaminationOracle,
-      "dedup_contamination_fuzzy" -> Dedup.fuzzyContaminationOracle,
-      "dedup_contamination_semantic" -> Dedup.semanticContaminationOracle,
-      "dedup_contamination_report"   -> Dedup.contaminationReportOracle,
-      "dedup_ingest_batch"     -> Dedup.ingestBatchDedupOracle,
-      "dedup_duplicate_spans" -> Dedup.duplicateSpansOracle,
-      "dedup_span_clean"      -> Dedup.spanCleanedDocsOracle,
-      "dedup_paragraphs"      -> Dedup.paragraphDedupOracle,
-      "dedup_soft_weights"    -> Dedup.softDedupWeightsOracle,
-      "dedup_keep_best"       -> Dedup.keepBestOracle,
-      "er_blocked_matches"    -> Dedup.erBlockedMatchesOracle,
-      "dedup_embedding_cosine" -> Dedup.embeddingPairsOracle,
-      "ann_brute_topk" -> Similarity.annBruteTopKOracle,
-      "ann_lsh_topk"   -> Similarity.annLshTopKOracle,
-      "ann_ivf_topk"   -> Similarity.annIvfTopKOracle,
-      "ann_pq_topk"    -> Similarity.annPqTopKOracle,
-      "ann_ivfpq_topk" -> Similarity.annIvfPqTopKOracle,
-      "ann_filtered_topk" -> Similarity.annFilteredTopKOracle,
-      "ann_filtered_brute" -> Similarity.annFilteredBruteTopKOracle,
-      "ann_hardneg_topk" -> Similarity.annHardNegativesOracle,
-      "ann_hardneg_brute" -> Similarity.annHardNegBruteTopKOracle,
-      "mine_bitext_margin" -> Similarity.bitextMarginPairsOracle,
-      "embed_cluster_profile" -> Similarity.clusterProfileOracle,
-      "embed_cluster_terms" -> Similarity.clusterTermsOracle,
-      "embed_drift_report" -> Similarity.embedDriftReportOracle,
-      "embed_power_iteration" -> Similarity.powerIterationOracle,
-      "ann_recall_report" -> Similarity.annRecallReportOracle,
-      "dedup_semantic" -> Similarity.semanticDedupOracle,
-      "embed_quantize_int8" -> Similarity.quantizeStatsOracle,
-      "embed_reduce_rp"     -> Similarity.reduceEmbeddingsOracle,
-      "embed_pq_codes"      -> Similarity.pqCodesOracle,
-      "embed_matryoshka_report" -> Similarity.matryoshkaReportOracle,
-      "multimodal_features" -> Multimodal.extractFeaturesOracle,
-      "profile_lineitem" -> Profiling.profileLineitemOracle,
-      "merge_upsert"     -> Profiling.mergeUpsertOracle,
-      "profile_hot_keys" -> Profiling.hotKeysOracle,
-      "profile_correlations" -> Profiling.correlationsOracle,
-      "profile_entropy"  -> Profiling.entropyOracle,
-      "merge_incremental_agg" -> Profiling.incrementalAggOracle,
-      "orders_rfm_segments" -> Profiling.rfmSegmentsOracle,
-      "orders_abc_pareto"  -> Profiling.abcParetoOracle,
-      "audit_integrity"  -> Profiling.auditIntegrityOracle,
-      "corpus_snapshot_diff" -> Profiling.snapshotDiffOracle,
-      "sample_stratified" -> Sampling.stratifiedSampleOracle,
-      "train_shards"      -> Sampling.trainShardsOracle,
-      "train_test_split"  -> Sampling.trainTestSplitOracle,
-      "train_curriculum_order" -> Sampling.curriculumOrderOracle,
-      "curation_pipeline" -> Sampling.curationPipelineOracle,
-      "pack_sequences"    -> Sampling.packSequencesOracle,
-      "pack_efficiency"   -> Sampling.packEfficiencyOracle,
-      "scd2_history"      -> Profiling.scd2HistoryOracle,
-      "scd2_history_skewres" -> Profiling.scd2HistoryOracle,
-      "source_jsonl_roundtrip" -> graft.sources.Writers.jsonlRoundtripOracle,
-      "source_csv_roundtrip"   -> graft.sources.Writers.csvRoundtripOracle,
-      "orders_zorder_index"    -> graft.sources.Writers.zorderIndexOracle,
-      "files_compact_plan"     -> graft.sources.Writers.compactionPlanOracle,
-      "layout_skipping_report" -> graft.sources.Writers.layoutSkippingReportOracle,
-      "multimodal_decode_meta" -> Multimodal.decodeMetaOracle,
-      "multimodal_resize"      -> Multimodal.resizePayloadsOracle,
-      "multimodal_frame_sample" -> Multimodal.frameSampleOracle,
-      "multimodal_phash_pairs" -> Multimodal.phashPairsOracle,
-      "multimodal_exact_dedup" -> Multimodal.exactDedupOracle,
-      "asof_purchase_view" -> AsOf.purchaseToLastViewOracle,
-      "asof_next_view"     -> AsOf.purchaseToNextViewOracle,
-      "range_join_events"  -> RangeJoin.errorsNearClicksOracle,
-      "stream_event_windows"    -> Relational.oracle("q20_event_windows"),
-      "stream_sessionize_batch" -> Relational.oracle("q21_sessionize"),
-      "stream_sessionize_skewres" -> Relational.oracle("q21_sessionize"),
-      "stream_dedup"            -> EventStream.streamingDedupOracle,
-      "stream_topk_types"       -> EventStream.topKTypesOracle,
-      "stream_funnel"           -> EventStream.funnelUsersOracle,
-      "stream_interval_join"    -> EventStream.intervalJoinOracle,
-      "stream_decontaminate"    -> Dedup.bloomContaminationOracle,
-      "skew_salted_agg"         -> graft.core.Skew.saltedAggOracle,
-      "skew_replicated_join"    -> graft.core.Skew.replicatedJoinOracle,
-    )
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

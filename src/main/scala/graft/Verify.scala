@@ -1,9 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s.{JBool, JDouble, JInt, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check.py).
+  *
+  * Usage: Verify <sfDir> <outDir>; `SPARK_GRAFT_VERIFY_ONLY=a,b` dumps only
+  * the named queries (one-query iteration: dump it, then run check.py). */
 object Verify {
+  /** oracle_sql.json: query name → oracle SQL, one JSON object. */
+  def oracleJson(oracles: Map[String, String]): String =
+    compact(JObject(oracles.toList.map { case (k, v) => k -> JString(v) }))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -17,28 +26,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    // write the oracle map BEFORE the dumps, not after: if the driver's
-    // gate budget expires mid-run and kills this JVM, a trailing write
-    // would leave NO oracle_sql.json and the round's correctness artifact
-    // silently collapses to {} (r9's gate) — with the map on disk first,
-    // every query dumped before the kill still gets compared
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // optional comma-separated subset (iterating one oracle without
-    // re-dumping 160 queries); unset/empty = full suite
+    // the oracle map goes to disk BEFORE the dumps: if a time budget kills
+    // this JVM mid-run, every query dumped so far can still be compared
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+    // unset/empty = full suite
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
@@ -69,32 +60,29 @@ object Verify {
     * |approx − exact| ≤ max(2, 3·rsd·exact) per group (rsd = 0.02, with a
     * 2-count floor where HLL++ sparse mode is near-exact). tools/check.py
     * computes the same bound; this copy ships the verdict WITH the dumped
-    * artifacts, so the driver's correctness directory carries the evidence
-    * for its two permanent no-oracle rows even when check.py never runs. */
+    * artifacts, so the correctness directory carries the evidence for its
+    * two permanent no-oracle rows even when check.py never runs. */
   private def writeSketchBounds(spark: SparkSession, outDir: String): Unit = try {
     val rsd = 0.02
     val tol = 3 * rsd
     def relErr(a: Double, e: Double): Double =
       if (e != 0) math.abs(a - e) / e else if (a == 0) 0.0 else Double.PositiveInfinity
-    // worst is a STRING at the call sites: NaN (empty dump) / Infinity
-    // (exact=0, approx!=0) are not valid JSON literals, and the file must
-    // stay parseable precisely when something went wrong — the check.py
-    // twin serializes the same cases as null
-    def bound(pairs: Seq[(Double, Double)]): (Int, String, Boolean) = {
-      val worst = if (pairs.isEmpty) Double.NaN else pairs.map((relErr _).tupled).max
-      val worstJson = if (worst.isNaN || worst.isInfinite) "null" else worst.toString
+    // an empty dump or exact = 0 with approx != 0 has no finite worst
+    // error: it is written as null, as check.py writes it
+    def bound(pairs: Seq[(Double, Double)]): JValue = {
+      val worst = pairs.map((relErr _).tupled).maxOption.filterNot(_.isInfinite)
       val ok = pairs.nonEmpty &&
         pairs.forall { case (a, e) => math.abs(a - e) <= math.max(2.0, tol * e) }
-      (pairs.size, worstJson, ok)
+      JObject("groups" -> JInt(pairs.size), "max_rel_err" -> worst.fold[JValue](JNull)(JDouble(_)),
+        "tol" -> JDouble(tol), "ok" -> JBool(ok))
     }
     def exists(name: String) = Files.isDirectory(Paths.get(s"$outDir/$name"))
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+    val entries = scala.collection.mutable.ArrayBuffer.empty[(String, JValue)]
     if (exists("q25_approx_distinct")) {
       val pairs = spark.read.parquet(s"$outDir/q25_approx_distinct")
         .select("approx_parts", "exact_parts").collect()
         .map(r => (r.getLong(0).toDouble, r.getLong(1).toDouble)).toSeq
-      val (n, worst, ok) = bound(pairs)
-      entries += s""""q25_approx_distinct":{"groups":$n,"max_rel_err":$worst,"tol":$tol,"ok":$ok}"""
+      entries += "q25_approx_distinct" -> bound(pairs)
     }
     if (exists("profile_lineitem_approx") && exists("profile_lineitem")) {
       val a = spark.read.parquet(s"$outDir/profile_lineitem_approx")
@@ -103,12 +91,10 @@ object Verify {
         .select("column_name", "n_distinct").withColumnRenamed("n_distinct", "exact")
       val pairs = a.join(e, "column_name").select("n_distinct", "exact").collect()
         .map(r => (r.getLong(0).toDouble, r.getLong(1).toDouble)).toSeq
-      val (n, worst, ok) = bound(pairs)
-      entries += s""""profile_lineitem_approx":{"groups":$n,"max_rel_err":$worst,"tol":$tol,"ok":$ok}"""
+      entries += "profile_lineitem_approx" -> bound(pairs)
     }
     if (entries.nonEmpty)
-      Files.writeString(Paths.get(s"$outDir/sketch_bounds.json"),
-        entries.mkString("{", ",", "}"))
+      Files.writeString(Paths.get(s"$outDir/sketch_bounds.json"), compact(JObject(entries.toList)))
   } catch { case e: Throwable =>
     System.err.println(s"[verify] sketch bounds failed: ${e.getMessage}")
   }

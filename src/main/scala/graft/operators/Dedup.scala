@@ -598,51 +598,55 @@ object Dedup {
     val nodes = edges0.flatMap { case (u, v) => Iterator(u, v) }
       .distinct().persist(lvl)
     var edges = edges0
-    var edgeCount = edges.count()
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
-      // large-star: every node attaches its strictly-larger neighbors to
-      // the minimum of its closed neighborhood
-      val sym = (edges ++ edges.map(_.swap)).partitionBy(part).persist(lvl)
-      val largeMin = sym
-        .mapPartitions(_.map { case (u, v) => (u, math.min(v, u)) },
-          preservesPartitioning = true)
-        .reduceByKey(part, math.min(_: Long, _: Long)) // narrow: co-partitioned
-      val large = sym.join(largeMin) // narrow
-        .flatMap { case (u, (v, m)) =>
-          if (v > u) Iterator.single((v, m)) else Iterator.empty
-        }
-        .distinct().persist(lvl)
-      // small-star: over (big → small) edges, connect each node and its
-      // smaller neighbors to the smallest of them
-      val smallMin = large.reduceByKey(part, math.min(_: Long, _: Long))
-      val stepped = large.partitionBy(part).join(smallMin) // narrow join
-        .flatMap { case (u, (v, m)) =>
-          if (v != m) Iterator.single((v, m)) else Iterator.empty
-        }
-        .union(smallMin)
-        .distinct().persist(lvl)
-      val steppedCount = stepped.count()
-      val grew = steppedCount != edgeCount
-      done = !grew && stepped.subtract(edges).isEmpty()
-      sym.unpersist(false); large.unpersist(false)
+    // every exit, the unconverged throw included, releases what the
+    // loop persisted
+    try {
+      var edgeCount = edges.count()
+      var iter = 0
+      var done = false
+      while (!done && iter < maxIter) {
+        // large-star: every node attaches its strictly-larger neighbors to
+        // the minimum of its closed neighborhood
+        val sym = (edges ++ edges.map(_.swap)).partitionBy(part).persist(lvl)
+        val largeMin = sym
+          .mapPartitions(_.map { case (u, v) => (u, math.min(v, u)) },
+            preservesPartitioning = true)
+          .reduceByKey(part, math.min(_: Long, _: Long)) // narrow: co-partitioned
+        val large = sym.join(largeMin) // narrow
+          .flatMap { case (u, (v, m)) =>
+            if (v > u) Iterator.single((v, m)) else Iterator.empty
+          }
+          .distinct().persist(lvl)
+        // small-star: over (big → small) edges, connect each node and its
+        // smaller neighbors to the smallest of them
+        val smallMin = large.reduceByKey(part, math.min(_: Long, _: Long))
+        val stepped = large.partitionBy(part).join(smallMin) // narrow join
+          .flatMap { case (u, (v, m)) =>
+            if (v != m) Iterator.single((v, m)) else Iterator.empty
+          }
+          .union(smallMin)
+          .distinct().persist(lvl)
+        val steppedCount = stepped.count()
+        val grew = steppedCount != edgeCount
+        done = !grew && stepped.subtract(edges).isEmpty()
+        sym.unpersist(false); large.unpersist(false)
+        if (edges ne edges0) edges.unpersist(false)
+        edges = stepped
+        edgeCount = steppedCount
+        iter += 1
+      }
+      if (!done)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter star rounds")
+      // fixpoint is a star forest: edges point non-roots at their component
+      // min; roots (and only roots) never appear on the left
+      val labels = edges.map { case (u, v) => (u, v) }
+      val roots = nodes.subtract(edges.keys).map(n => (n, n))
+      labels.union(roots).toDF("doc_id", "cluster").localCheckpoint()
+    } finally {
+      edges0.unpersist(false); nodes.unpersist(false)
       if (edges ne edges0) edges.unpersist(false)
-      edges = stepped
-      edgeCount = steppedCount
-      iter += 1
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter star rounds")
-    // fixpoint is a star forest: edges point non-roots at their component
-    // min; roots (and only roots) never appear on the left
-    val labels = edges.map { case (u, v) => (u, v) }
-    val roots = nodes.subtract(edges.keys).map(n => (n, n))
-    val out = labels.union(roots).toDF("doc_id", "cluster").localCheckpoint()
-    edges0.unpersist(false); nodes.unpersist(false)
-    if (edges ne edges0) edges.unpersist(false)
-    out
   }
 
   /** DuckDB twin of [[gramsOf]]: the `t/g/sz` CTE chain over the docs of
@@ -1391,15 +1395,8 @@ object Dedup {
       .select($"vec_a", $"vec_b", round($"sim", 4).as("cos_sim"))
   }
 
-  /** DuckDB twin of [[Similarity.withNormOf]] over the decoded
-    * `embeddings`: CTEs e(vec_id, v) and n(vec_id, v, norm), shared by the
-    * two cosine twins. */
-  private def normedVecCtes: String =
-    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)""".stripMargin
-
   val embeddingPairsOracle: String =
-    s"""WITH $normedVecCtes
+    s"""WITH ${Similarity.normedVecCtes}
       |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
       |  round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 4) AS cos_sim
       |FROM n a JOIN n b ON a.vec_id < b.vec_id
@@ -1671,7 +1668,7 @@ object Dedup {
     * exactly like the engine's codegen'd dot ([[embeddingPairs]]
     * precedent), so the 4dp cosines agree bit-for-bit. */
   val semanticContaminationOracle: String =
-    s"""WITH $normedVecCtes
+    s"""WITH ${Similarity.normedVecCtes}
        |SELECT t.vec_id AS train_vec, ev.vec_id AS eval_vec,
        |  round(list_dot_product(t.v, ev.v) / (t.norm * ev.norm), 4) AS cos_sim
        |FROM n t JOIN n ev ON t.vec_id >= $EvalSetSize AND ev.vec_id < $EvalSetSize

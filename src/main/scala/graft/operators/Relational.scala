@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Query
 import graft.core.Tables
 
 /** Relational operator suite over the TPC-H-ish test tables.
@@ -447,84 +448,32 @@ object Relational {
         .as("trailing_30d_spend"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q24_date_arithmetic"   -> q24DateArithmetic _,
-    "q25_approx_distinct"   -> q25ApproxDistinct _,
-    "q26_pivot"             -> q26Pivot _,
-    "q27_percentiles"       -> q27Percentiles _,
-    "q28_range_frame"       -> q28RangeFrame _,
-    "q23_from_json_typed"   -> q23FromJsonTyped _,
-    "q01_pricing_summary"   -> q01PricingSummary _,
-    "q02_filter_project"    -> q02FilterProject _,
-    "q03_revenue_by_nation" -> q03RevenueByNation _,
-    "q04_order_priority_semi" -> q04OrderPrioritySemi _,
-    "q05_top_orders"        -> q05TopOrders _,
-    "q06_forecast_revenue"  -> q06ForecastRevenue _,
-    "q07_latest_orders_window" -> q07LatestOrdersPerCustomer _,
-    "q07b_topk_custom"      -> q07bTopKCustom _,
-    "q08_running_sum_window" -> q08RunningSum _,
-    "q09_distinct_partsupp" -> q09DistinctPartSupp _,
-    "q10_set_ops"           -> q10SetOps _,
-    "q11_rollup"            -> q11Rollup _,
-    "q12_cube"              -> q12Cube _,
-    "q13_anti_join"         -> q13CustomersWithoutOrders _,
-    "q14_supplier_revenue_having" -> q14SupplierRevenue _,
-    "q15_monthly_returns"   -> q15MonthlyReturns _,
-    "q16_grouping_sets"     -> q16GroupingSets _,
-    "q17_scalar_functions"  -> q17ScalarFunctions _,
-    "q18_above_avg_orders"  -> q18AboveAverageOrders _,
-    "q19_regional_revenue"  -> q19RegionalRevenue _,
-    "q20_event_windows"     -> q20EventWindows _,
-    "q21_sessionize"        -> q21Sessionize _,
-    "q22_json_extract"      -> q22JsonExtract _,
-  )
+  /** Shared with the stream_* gates, which must return the same rows. */
+  val q20EventWindowsOracle: String =
+    """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,
+      | event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
+      |FROM events GROUP BY 1, 2""".stripMargin
 
-  /** DuckDB-dialect oracles, value-identical to the Spark plans above
-    * (same aliases, same rounding, same casts). */
-  val oracle: Map[String, String] = Map(
-    "q26_pivot" ->
-      """SELECT CAST(user_id % 10 AS INT) AS user_bucket,
-        | round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS click,
-        | round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS view,
-        | round(sum(CASE WHEN event_type = 'purchase' THEN value END), 2) AS purchase,
-        | round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS error
-        |FROM events GROUP BY 1""".stripMargin,
-    "q27_percentiles" ->
-      """SELECT o_orderpriority,
-        | round(quantile_cont(o_totalprice, 0.25), 2) AS p25,
-        | round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-        | round(quantile_cont(o_totalprice, 0.95), 2) AS p95,
-        | count(*) AS n
-        |FROM orders GROUP BY 1""".stripMargin,
-    "q28_range_frame" ->
-      """SELECT o_orderkey, o_custkey, o_orderdate,
-        | round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
-        |   RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW), 2)
-        |   AS trailing_30d_spend
-        |FROM orders""".stripMargin,
-    // q25 has no oracle: HLL estimators differ across engines (rows-only;
-    // SketchSpec bounds the estimate against the exact count instead)
-    "q24_date_arithmetic" ->
-      """SELECT o_orderkey,
-        | CAST(year(o_orderdate) AS INTEGER) AS order_year,
-        | CAST(quarter(o_orderdate) AS INTEGER) AS order_quarter,
-        | CAST(month(o_orderdate) AS INTEGER) AS order_month,
-        | CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS order_dow,
-        | CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INTEGER) AS days_to_2002,
-        | CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus_quarter,
-        | last_day(CAST(o_orderdate AS DATE)) AS month_end
-        |FROM orders""".stripMargin,
-    "q07b_topk_custom" ->
-      """SELECT o_custkey, o_orderkey, rn FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |  FROM orders) t WHERE rn <= 3""".stripMargin,
-    "q23_from_json_typed" ->
-      """SELECT event_id,
-        | CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val
-        |FROM events""".stripMargin,
-    "q01_pricing_summary" ->
+  val q21SessionizeOracle: String =
+    """WITH gaps AS (
+      |  SELECT user_id, event_id, ts, value,
+      |    CASE WHEN lag(ts) OVER w IS NULL
+      |           OR date_diff('second', lag(ts) OVER w, ts) > 1800
+      |         THEN 1 ELSE 0 END AS new_session
+      |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+      |sess AS (
+      |  SELECT user_id, value,
+      |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+      |  FROM gaps)
+      |SELECT user_id, session_id, count(*) AS n_events,
+      |       round(sum(value), 2) AS session_value
+      |FROM sess GROUP BY user_id, session_id""".stripMargin
+
+  /** Each relational query with its DuckDB-dialect oracle, value-identical
+    * to the Spark plan (same aliases, same rounding, same casts). */
+  val registry: Seq[Query] = Seq(
+    Query("q01_pricing_summary", q01PricingSummary _,
       """SELECT l_returnflag, l_linestatus,
         | round(sum(l_quantity), 2) AS sum_qty,
         | round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -535,84 +484,90 @@ object Relational {
         | round(avg(l_discount), 4) AS avg_disc,
         | count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q02_filter_project", q02FilterProject _,
       """SELECT l_orderkey, l_partkey, l_suppkey, l_quantity FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-03-01'
-        |  AND l_quantity > 45.0""".stripMargin,
-    "q03_revenue_by_nation" ->
+        |  AND l_quantity > 45.0""".stripMargin),
+    Query("q03_revenue_by_nation", q03RevenueByNation _,
       """SELECT n_name,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
         | count(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         | JOIN customer ON o_custkey = c_custkey
         | JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q04_order_priority_semi" ->
+        |GROUP BY n_name""".stripMargin),
+    Query("q04_order_priority_semi", q04OrderPrioritySemi _,
       """SELECT o_orderpriority, count(*) AS order_count FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 48.0)
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q05_top_orders" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    Query("q05_top_orders", q05TopOrders _,
       """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
-        |FROM orders ORDER BY orders.o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q06_forecast_revenue" ->
+        |FROM orders ORDER BY orders.o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Query("q06_forecast_revenue", q06ForecastRevenue _,
       """SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue, count(*) AS n_rows
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.03 AND l_discount <= 0.07 AND l_quantity < 24.0""".stripMargin,
-    "q07_latest_orders_window" ->
+        |  AND l_discount >= 0.03 AND l_discount <= 0.07 AND l_quantity < 24.0""".stripMargin),
+    Query("q07_latest_orders_window", q07LatestOrdersPerCustomer _,
       """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey,
         |    row_number() OVER (PARTITION BY o_custkey
         |                       ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |  FROM orders) t WHERE rn <= 3""".stripMargin,
-    "q08_running_sum_window" ->
+        |  FROM orders) t WHERE rn <= 3""".stripMargin),
+    Query("q07b_topk_custom", q07bTopKCustom _,
+      """SELECT o_custkey, o_orderkey, rn FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    row_number() OVER (PARTITION BY o_custkey
+        |                       ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+        |  FROM orders) t WHERE rn <= 3""".stripMargin),
+    Query("q08_running_sum_window", q08RunningSum _,
       """SELECT event_id, user_id,
         | round(sum(value) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_value
-        |FROM events""".stripMargin,
-    "q09_distinct_partsupp" ->
-      "SELECT DISTINCT l_partkey, l_suppkey FROM lineitem",
-    "q10_set_ops" ->
+        |FROM events""".stripMargin),
+    Query("q09_distinct_partsupp", q09DistinctPartSupp _,
+      "SELECT DISTINCT l_partkey, l_suppkey FROM lineitem"),
+    Query("q10_set_ops", q10SetOps _,
       """(SELECT o_custkey FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
         | INTERSECT
         | SELECT o_custkey FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01')
         |EXCEPT
-        |SELECT o_custkey FROM orders WHERE o_totalprice < 5000.0""".stripMargin,
-    "q11_rollup" ->
+        |SELECT o_custkey FROM orders WHERE o_totalprice < 5000.0""".stripMargin),
+    Query("q11_rollup", q11Rollup _,
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |       coalesce(l_linestatus, 'ALL') AS linestatus,
         |       round(sum(l_quantity), 2) AS sum_qty, count(*) AS n_rows
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q12_cube" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    Query("q12_cube", q12Cube _,
       """SELECT coalesce(o_orderstatus, 'ALL') AS orderstatus,
         |       coalesce(o_orderpriority, 'ALL') AS orderpriority,
         |       round(sum(o_totalprice), 2) AS sum_price, count(*) AS n_orders
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q13_anti_join" ->
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin),
+    Query("q13_anti_join", q13CustomersWithoutOrders _,
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 300000.0)""".stripMargin,
-    "q14_supplier_revenue_having" ->
+        |                  WHERE o_custkey = c_custkey AND o_totalprice > 300000.0)""".stripMargin),
+    Query("q14_supplier_revenue_having", q14SupplierRevenue _,
       """SELECT s_suppkey, s_name, total_revenue FROM (
         |  SELECT l_suppkey, round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS total_revenue
         |  FROM lineitem GROUP BY l_suppkey HAVING total_revenue > 1000.0) r
-        |JOIN supplier ON l_suppkey = s_suppkey""".stripMargin,
-    "q15_monthly_returns" ->
+        |JOIN supplier ON l_suppkey = s_suppkey""".stripMargin),
+    Query("q15_monthly_returns", q15MonthlyReturns _,
       """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS ship_month,
         | round(sum(CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0.0 END), 2) AS returned_value,
         | round(sum(CASE WHEN l_returnflag <> 'R' THEN l_extendedprice ELSE 0.0 END), 2) AS kept_value,
         | count(*) AS n_items
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q16_grouping_sets" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("q16_grouping_sets", q16GroupingSets _,
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |       coalesce(CAST(l_linenumber AS VARCHAR), 'ALL') AS linenumber,
         |       round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linenumber), ())""".stripMargin,
-    "q17_scalar_functions" ->
+        |FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linenumber), ())""".stripMargin),
+    Query("q17_scalar_functions", q17ScalarFunctions _,
       """SELECT p_partkey,
         | upper(p_name) AS name_upper,
         | substr(p_name, 1, 4) AS name_prefix,
@@ -622,14 +577,14 @@ object Relational {
         | round(abs(p_retailprice - 1000.0), 2) AS price_dist,
         | CASE WHEN p_size >= 25 THEN 'large' WHEN p_size >= 10 THEN 'medium'
         |      ELSE 'small' END AS size_class
-        |FROM part""".stripMargin,
-    "q18_above_avg_orders" ->
+        |FROM part""".stripMargin),
+    Query("q18_above_avg_orders", q18AboveAverageOrders _,
       """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS o_totalprice
         |FROM orders JOIN (SELECT o_custkey AS a_custkey, avg(o_totalprice) AS avg_price
         |                  FROM orders GROUP BY o_custkey) a
         |  ON o_custkey = a_custkey
-        |WHERE o_totalprice > avg_price * 1.5""".stripMargin,
-    "q19_regional_revenue" ->
+        |WHERE o_totalprice > avg_price * 1.5""".stripMargin),
+    Query("q19_regional_revenue", q19RegionalRevenue _,
       """SELECT r_name, n_name,
         | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
         |FROM lineitem
@@ -639,31 +594,51 @@ object Relational {
         | JOIN nation ON c_nationkey = n_nationkey
         | JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name IN ('ASIA', 'AMERICA')
-        |GROUP BY r_name, n_name""".stripMargin,
-    "q20_event_windows" ->
-      """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,
-        | event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q21_sessionize" ->
-      """WITH gaps AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR date_diff('second', lag(ts) OVER w, ts) > 1800
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-        |sess AS (
-        |  SELECT user_id, value,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM gaps)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       round(sum(value), 2) AS session_value
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-    "q22_json_extract" ->
+        |GROUP BY r_name, n_name""".stripMargin),
+    Query("q20_event_windows", q20EventWindows _, q20EventWindowsOracle),
+    Query("q21_sessionize", q21Sessionize _, q21SessionizeOracle),
+    Query("q22_json_extract", q22JsonExtract _,
       """SELECT event_type,
         | CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         | count(json_extract_string(props, '$.k')) AS n_with_k,
         | round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 4) AS avg_k
-        |FROM events GROUP BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type""".stripMargin),
+    Query("q23_from_json_typed", q23FromJsonTyped _,
+      """SELECT event_id,
+        | CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val
+        |FROM events""".stripMargin),
+    Query("q24_date_arithmetic", q24DateArithmetic _,
+      """SELECT o_orderkey,
+        | CAST(year(o_orderdate) AS INTEGER) AS order_year,
+        | CAST(quarter(o_orderdate) AS INTEGER) AS order_quarter,
+        | CAST(month(o_orderdate) AS INTEGER) AS order_month,
+        | CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS order_dow,
+        | CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INTEGER) AS days_to_2002,
+        | CAST(o_orderdate + INTERVAL 3 MONTH AS DATE) AS plus_quarter,
+        | last_day(CAST(o_orderdate AS DATE)) AS month_end
+        |FROM orders""".stripMargin),
+    // HLL estimators differ across engines: rows-only; SketchSpec bounds
+    // the estimate against the exact count instead
+    Query.rowsOnly("q25_approx_distinct", q25ApproxDistinct _),
+    Query("q26_pivot", q26Pivot _,
+      """SELECT CAST(user_id % 10 AS INT) AS user_bucket,
+        | round(sum(CASE WHEN event_type = 'click' THEN value END), 2) AS click,
+        | round(sum(CASE WHEN event_type = 'view' THEN value END), 2) AS view,
+        | round(sum(CASE WHEN event_type = 'purchase' THEN value END), 2) AS purchase,
+        | round(sum(CASE WHEN event_type = 'error' THEN value END), 2) AS error
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("q27_percentiles", q27Percentiles _,
+      """SELECT o_orderpriority,
+        | round(quantile_cont(o_totalprice, 0.25), 2) AS p25,
+        | round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
+        | round(quantile_cont(o_totalprice, 0.95), 2) AS p95,
+        | count(*) AS n
+        |FROM orders GROUP BY 1""".stripMargin),
+    Query("q28_range_frame", q28RangeFrame _,
+      """SELECT o_orderkey, o_custkey, o_orderdate,
+        | round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
+        |   RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW), 2)
+        |   AS trailing_30d_spend
+        |FROM orders""".stripMargin),
   )
 }

@@ -127,11 +127,22 @@ object Similarity {
        |  WHERE $c <> $q$where)""".stripMargin
   }
 
+  /** DuckDB twin of [[vecsOf]]: the decoded corpus as CTE `e(vec_id, v)`. */
+  private def vecCte: String =
+    "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
+
+  /** DuckDB twin of [[withNormOf]] over `e`: CTE `name(vec_id, v, norm)`. */
+  private def normCte(name: String): String =
+    s"$name AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e)"
+
+  /** [[vecCte]] and its norms `n(vec_id, v, norm)`: the cosine twins' prefix. */
+  private[operators] def normedVecCtes: String = s"$vecCte,\n${normCte("n")}"
+
   /** DuckDB twin of [[rerankOn]] + [[topK]]: exact cosine re-rank of the
     * candidate CTE `cand` over the corpus CTE `e(vec_id, v)`, and the one
     * rank tail. The statement's last CTEs and its final SELECT. */
   private def rerankSql(cand: String): String =
-    s"""n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    s"""${normCte("n")},
        |q AS (SELECT vec_id AS query_id, v AS qv, norm AS qnorm FROM n
        |      WHERE vec_id < $NumQueries),
        |scored AS (SELECT c.query_id, c.vec_id,
@@ -146,7 +157,7 @@ object Similarity {
 
   /** DuckDB twin of [[bruteOn]]: every (query, vector) pair is a candidate. */
   private def bruteSql(rel: Option[String]): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $vecCte,
        |${candSql(s"e c JOIN e q ON q.vec_id < $NumQueries", "c.vec_id", "q.vec_id", rel)},
        |${rerankSql("cand")}""".stripMargin
 
@@ -214,7 +225,7 @@ object Similarity {
   }
 
   val quantizeStatsOracle: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $vecCte,
       |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx FROM e),
       |sc AS (SELECT vec_id, v,
       |  CASE WHEN mx = 0 THEN 1.0 ELSE mx / 127.0 END AS scale FROM m),
@@ -630,7 +641,7 @@ object Similarity {
         row.map(_.toString).mkString(s"($p, [", ", ", "]::DOUBLE[])")
     }.mkString(",\n")
     val mask = (1 << BandBits) - 1
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $vecCte,
        |planes(p, pv) AS (VALUES $planeRows),
        |sigbit AS (SELECT vec_id, p,
        |    CASE WHEN list_reduce(list_prepend(0.0,
@@ -717,7 +728,7 @@ object Similarity {
     * keep-first min-struct rule via row_number over (a_id ASC). */
   val semanticDedupOracle: String =
     s"""$ivfCorpusCtes,
-       |nn AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+       |${normCte("nn")},
        |w AS (SELECT nn.vec_id, nn.v, nn.norm, asg.cell FROM nn JOIN asg USING (vec_id)),
        |prs AS (SELECT b.vec_id AS vec_id, a.vec_id AS a_id, a.cell,
        |    list_dot_product(a.v, b.v) / (a.norm * b.norm) AS sim
@@ -782,7 +793,7 @@ object Similarity {
       case (row, p) =>
         row.map(_.toString).mkString(s"($p, [", ", ", "]::DOUBLE[])")
     }.mkString(",\n")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $vecCte,
        |planes(p, pv) AS (VALUES $planeRows)
        |SELECT vec_id, p AS comp,
        |  CAST(floor(list_reduce(list_prepend(0.0,
@@ -1481,8 +1492,7 @@ object Similarity {
   /** DuckDB twin of [[bitextMarginPairs]] — same halves, same windows,
     * identical left-associated margin expression. */
   val bitextMarginPairsOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS norm FROM e),
+    s"""WITH $normedVecCtes,
        |x AS (SELECT vec_id AS src_id, v AS xv, norm AS xnorm FROM n
        |  WHERE vec_id % 2 = 0 AND vec_id < $BitextQueries),
        |y AS (SELECT vec_id AS tgt_id, v AS yv, norm AS ynorm FROM n
@@ -1803,7 +1813,7 @@ object Similarity {
          |      FROM s$d s JOIN t${MrlDims.last} f USING (query_id, neighbor_id))
          |    AS BIGINT) AS avg_abs_delta_micros""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""WITH $vecCte,
        |$dims
        |$rows""".stripMargin
   }

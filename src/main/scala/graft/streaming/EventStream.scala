@@ -308,21 +308,6 @@ object EventStream {
     * checkpoint directory carries offsets+state for exactly-once). The
     * read-back is only so the finite-gate harness can compare results;
     * production consumers read the sink directory directly. */
-  /** Spark's embedded-RocksDB state-store provider, selectable per
-    * session with `spark.graft.stream.stateStore=rocksdb` (default
-    * `hdfs`). The round-9 provider matrix (SCALE_r9.md) measured RocksDB
-    * SLOWER than the default HDFSBackedStateStoreProvider on every
-    * stateful gate at sf0.1 (e.g. interval join 4.0 s vs 2.9 s op at 8
-    * state partitions): per-batch native store open/commit/changelog
-    * overhead dominates while state is tiny. The gates therefore pin
-    * `hdfs`; a deployment whose per-partition state outgrows executor
-    * heap flips this knob — the HDFS provider keeps every retained
-    * version of a partition's state map ON HEAP, which is the thing that
-    * does not survive 100 TB, and that boundary is a config, not a code
-    * change. */
-  private val RocksProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   def runAppendToFileSink(s: SparkSession, df: DataFrame): DataFrame = {
     // under target/, not /tmp: repeated harness runs (Bench repeats,
     // Verify) would otherwise accumulate unbounded data+checkpoint dirs
@@ -331,26 +316,21 @@ object EventStream {
       java.lang.Long.toHexString(System.nanoTime()))
     java.nio.file.Files.createDirectories(base)
     val out = s"$base/out"
-    // provider + state-partition knobs are session confs read at QUERY
-    // START (the checkpoint then owns them for the query's lifetime —
-    // fresh checkpoint per gate run, so setting them here is complete);
-    // set/restore around start so a session's batch queries never see a
-    // streaming-only override
+    // the state-partition knob is a session conf read at QUERY START (the
+    // checkpoint then owns it for the query's lifetime — fresh checkpoint
+    // per gate run, so setting it here is complete); set/restore around
+    // the run so a session's batch queries never see a streaming-only
+    // override. The state-store provider is Spark's own deploy setting
+    // (`spark.sql.streaming.stateStore.providerClass`), left untouched.
     val conf = s.conf
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val partsKey = "spark.sql.shuffle.partitions"
-    val prevProvider = conf.getOption(providerKey)
     val prevParts = conf.getOption(partsKey)
-    conf.get("spark.graft.stream.stateStore", "hdfs") match {
-      case "rocksdb" => conf.set(providerKey, RocksProvider)
-      case _         => conf.unset(providerKey)
-    }
     // state partition count == shuffle partitions at first batch; the
     // gate default keeps the session's value (scale posture), override
     // for floor measurement only
     conf.getOption("spark.graft.stream.statePartitions")
       .foreach(conf.set(partsKey, _))
-    // the overrides must survive until the stream thread has captured its
+    // the override must survive until the stream thread has captured its
     // session: StreamExecution clones the session LAZILY on the query
     // thread, so restoring right after start() RACES that capture and the
     // stream intermittently plans its state stores with the session's
@@ -360,7 +340,7 @@ object EventStream {
     // original contract: no batch query of this session ever runs under
     // the streaming-only override. The restore lives in an OUTER finally
     // that also covers start() itself — an analysis error there would
-    // otherwise leak the overrides into every later batch query of the
+    // otherwise leak the override into every later batch query of the
     // session (Bench's per-query catch keeps running after a failure).
     try {
       val q = df.writeStream.outputMode(OutputMode.Append())
@@ -373,10 +353,7 @@ object EventStream {
         opNanos.addAndGet(System.nanoTime() - t0)
         Option(q.lastProgress).foreach(p => opBatches.addAndGet(p.batchId + 1))
       }
-    } finally {
-      prevProvider.fold(conf.unset(providerKey))(conf.set(providerKey, _))
-      prevParts.foreach(conf.set(partsKey, _))
-    }
+    } finally prevParts.foreach(conf.set(partsKey, _))
     // a stream that emitted nothing (empty source, or every window still
     // inside the watermark) writes no parquet files — read.parquet would
     // throw "unable to infer schema"; the correct result is an EMPTY

@@ -57,9 +57,12 @@ class DedupSpec extends SparkTestBase {
   test("unconverged star contraction fails loudly instead of returning partial labels") {
     import spark.implicits._
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     intercept[IllegalStateException] {
       Dedup.connectedComponents(spark, chain, maxIter = 1)
     }
+    // the throw path releases what the loop held (edges, nodes, last step)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
   }
 
   test("dedup clusters are consistent: pair endpoints share a cluster, rep is min member") {

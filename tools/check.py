@@ -28,7 +28,7 @@ def canon(rows, cols):
     return out
 
 def make_views(con, sf_dir):
-    """ONE table-view setup for check.py and check_one.py."""
+    """ONE table-view setup for check.py, same_rows.py and perfbench/verify.py."""
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         # driver testdata ships single parquet FILES; ScaleGen rehearsal
