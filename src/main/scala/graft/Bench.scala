@@ -33,16 +33,25 @@ object Bench {
   }
   private def dispersed(rs: Seq[Run]): Boolean = dispersion(rs) > 3.0
 
-  /** Per-query minima of a prior bench artifact and the sf they were
-    * measured at. `BENCH_LOCAL_<sf>.json` is one bench line; a
-    * `BENCH_r*.json` wrapper holds stdout in `tail`, whose last line is the
-    * compact headline. None when neither shape parses. */
-  def priorMinima(path: String): Option[(String, Map[String, Double])] = {
+  /** Per-query minima of a prior bench artifact, with the sf and the
+    * thread count (`SPARK_GRAFT_CPUS`) they were measured at. */
+  case class Prior(sf: String, cpus: Int, minima: Map[String, Double])
+
+  /** The thread count of artifacts whose line predates its `cpus` field:
+    * they were all taken at Bench's default. */
+  val LegacyCpus = 32
+
+  /** Reads a prior bench artifact. `BENCH_LOCAL_<sf>.json` is one bench
+    * line; a `BENCH_r*.json` wrapper holds stdout in `tail`, whose last
+    * line is the compact headline. None when neither shape parses. */
+  def priorMinima(path: String): Option[Prior] = {
     def minima(line: JValue) = (line \ "sf", line \ "queries") match {
-      case (JString(sf), JObject(qs)) => Some(sf -> qs.collect {
-        case (k, JDouble(v)) => k -> v
-        case (k, JInt(v))    => k -> v.toDouble
-      }.toMap)
+      case (JString(sf), JObject(qs)) => Some(Prior(sf,
+        line \ "cpus" match { case JInt(c) => c.toInt; case _ => LegacyCpus },
+        qs.collect {
+          case (k, JDouble(v)) => k -> v
+          case (k, JInt(v))    => k -> v.toDouble
+        }.toMap))
       case _ => None
     }
     try {
@@ -54,20 +63,28 @@ object Bench {
     } catch { case _: Exception => None }
   }
 
+  /** The minima of `path` when they are comparable with a run at `sf` on
+    * `cpus` threads: other data or another thread count moves every query. */
+  def diffBase(path: String, sf: String, cpus: Int): Option[Map[String, Double]] =
+    priorMinima(path).collect {
+      case Prior(`sf`, `cpus`, mins) if mins.nonEmpty => mins
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(LegacyCpus)(_.toInt)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
     graft.core.Tables.sessionDefaults.foreach { case (k, v) => builder.config(k, v) }
     graft.core.Tables.envExtraConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    // warmup: touch every table + one shuffle so JIT/codegen/file-listing
-    // costs don't land on whichever query happens to run first
+    // warmup: touch every table (which memoizes its schema,
+    // Tables.schemaOf) + one shuffle so JIT/codegen costs don't land on
+    // whichever query happens to run first
     graft.core.Tables.names.foreach { t =>
       try graft.core.Tables(spark, sfDir, t).limit(1).count()
       catch { case _: Throwable => }
@@ -198,7 +215,8 @@ object Bench {
     // inflated passes every intra-series check, so the only detector is a
     // prior minimum. Diff against $SPARK_GRAFT_BENCH_PREV, else
     // BENCH_LOCAL_<sf>.json (the untruncated full-suite minima every full
-    // run writes), else the latest BENCH_r*.json, and record every >2x mover.
+    // run writes), else the latest BENCH_r*.json, when it was taken at this
+    // sf and thread count (diffBase), and record every >2x mover.
     val sfTag = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse("sf")
     val localName = s"BENCH_LOCAL_$sfTag.json"
     val prevFile = sys.env.get("SPARK_GRAFT_BENCH_PREV").orElse {
@@ -206,10 +224,7 @@ object Bench {
       else Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
         .map(_.getName).filter(_.matches("BENCH_r\\d+\\.json")).sorted.lastOption
     }
-    // minima are comparable only at the same scale factor
-    val prev = prevFile.flatMap(f => priorMinima(f).collect {
-      case (sf, mins) if sf == sfDir && mins.nonEmpty => f -> mins
-    })
+    val prev = prevFile.flatMap(f => diffBase(f, sfDir, cpus).map(f -> _))
     val vsPrev = obj(prev.toSeq.flatMap { case (_, mins) =>
       ok.flatMap { r =>
         mins.get(r.name).filter(p => r.min > 0 && p > 0).map(r.min / _)
@@ -227,7 +242,7 @@ object Bench {
       "spread" -> spread, "max_dispersion" -> JDouble(maxDisp),
       "still_dispersed" -> strs(stillDispersed),
       "prev" -> prev.fold[JValue](JNull)(p => JString(p._1)), "vs_prev" -> vsPrev,
-      "failed" -> failed, "sf" -> JString(sfDir))))
+      "failed" -> failed, "sf" -> JString(sfDir), "cpus" -> JInt(cpus))))
     println(line)
     // A wrapper that keeps only the last ~2000 chars of stdout loses the
     // head of the full line (~19 KB at 180+ queries), so a COMPACT headline
@@ -242,7 +257,8 @@ object Bench {
       "metric" -> JString("total"), "value" -> JDouble(round(total, 2)), "unit" -> JString("sec"),
       "n" -> JInt(n), "n_queries" -> JInt(results.size),
       "queries" -> obj(headline.map(r => r.name -> JDouble(round(r.min, 3)))),
-      "max_dispersion" -> JDouble(maxDisp), "failed" -> failed, "sf" -> JString(sfDir)))))
+      "max_dispersion" -> JDouble(maxDisp), "failed" -> failed, "sf" -> JString(sfDir),
+      "cpus" -> JInt(cpus)))))
     // bare copy without any log prefix, for log-scrape-free parsing
     try Files.writeString(Paths.get("target/bench.json"), line)
     catch { case _: Throwable => }

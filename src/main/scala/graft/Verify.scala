@@ -1,10 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.json4s.{JBool, JDouble, JInt, JNull, JObject, JString, JValue}
+import org.json4s.{JArray, JBool, JDouble, JInt, JNull, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods.compact
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (tools/check.py).
+  * verify_manifest.json lists the queries this run dumped, so a subset
+  * run into a directory holding older dumps is checked on its own dumps.
   *
   * Usage: Verify <sfDir> <outDir>; `SPARK_GRAFT_VERIFY_ONLY=a,b` dumps only
   * the named queries (one-query iteration: dump it, then run check.py). */
@@ -29,6 +31,11 @@ object Verify {
     // the oracle map goes to disk BEFORE the dumps: if a time budget kills
     // this JVM mid-run, every query dumped so far can still be compared
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+    // the manifest is rewritten after every dump, for the same reason
+    val dumped = scala.collection.mutable.ArrayBuffer.empty[String]
+    def writeManifest(): Unit = Files.writeString(Paths.get(s"$outDir/$ManifestName"),
+      compact(JArray(dumped.map(JString(_)).toList)))
+    writeManifest()
     // unset/empty = full suite
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -40,6 +47,8 @@ object Verify {
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
+          dumped += name
+          writeManifest()
           System.err.println(
             f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
         } catch { case e: Throwable =>
@@ -50,9 +59,11 @@ object Verify {
         // no query's storage lingers under the rest of the run
         spark.catalog.clearCache()
       }
-    writeSketchBounds(spark, outDir)
+    writeSketchBounds(spark, outDir, dumped.toSet)
     spark.stop()
   }
+
+  val ManifestName = "verify_manifest.json"
 
   /** The two HLL++ queries have no DuckDB twin BY CONSTRUCTION (different
     * register layouts), so the gate records them `no_oracle` — but their
@@ -62,7 +73,8 @@ object Verify {
     * computes the same bound; this copy ships the verdict WITH the dumped
     * artifacts, so the correctness directory carries the evidence for its
     * two permanent no-oracle rows even when check.py never runs. */
-  private def writeSketchBounds(spark: SparkSession, outDir: String): Unit = try {
+  private def writeSketchBounds(spark: SparkSession, outDir: String,
+      dumped: Set[String]): Unit = try {
     val rsd = 0.02
     val tol = 3 * rsd
     def relErr(a: Double, e: Double): Double =
@@ -76,15 +88,14 @@ object Verify {
       JObject("groups" -> JInt(pairs.size), "max_rel_err" -> worst.fold[JValue](JNull)(JDouble(_)),
         "tol" -> JDouble(tol), "ok" -> JBool(ok))
     }
-    def exists(name: String) = Files.isDirectory(Paths.get(s"$outDir/$name"))
     val entries = scala.collection.mutable.ArrayBuffer.empty[(String, JValue)]
-    if (exists("q25_approx_distinct")) {
+    if (dumped("q25_approx_distinct")) {
       val pairs = spark.read.parquet(s"$outDir/q25_approx_distinct")
         .select("approx_parts", "exact_parts").collect()
         .map(r => (r.getLong(0).toDouble, r.getLong(1).toDouble)).toSeq
       entries += "q25_approx_distinct" -> bound(pairs)
     }
-    if (exists("profile_lineitem_approx") && exists("profile_lineitem")) {
+    if (dumped("profile_lineitem_approx") && dumped("profile_lineitem")) {
       val a = spark.read.parquet(s"$outDir/profile_lineitem_approx")
         .select("column_name", "n_distinct")
       val e = spark.read.parquet(s"$outDir/profile_lineitem")

@@ -1,6 +1,10 @@
 package graft.core
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet test tables (TESTDATA.md).
   *
@@ -10,6 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate-pushdown-capable — which is the 100 TB-safe replacement
   * (SURVEY.md §1.4). All queries take the scale-factor directory as a
   * parameter so the same code runs sf0.001 → sf100.
+  *
+  * Every read gives Spark the table's schema ([[schemaOf]]). Without one,
+  * `spark.read.parquet` infers it with a one-task Spark job that reads a
+  * footer, on every call: ~50 ms of driver time per table read, paid once
+  * per table a query reads and again on every run. The schema is memoized,
+  * not the DataFrame or its plan: each call must build a fresh relation
+  * with fresh attribute ids, or a self-join of two reads would share them.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,8 +28,43 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = spark.read.schema(schemaOf(spark, sfDir, name)).parquet(pathOf(sfDir, name))
     if (name == "events") normalizeEventTs(df) else df
+  }
+
+  private def pathOf(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  /** What an inferred schema depends on: the table's files (a table
+    * rewritten in place lists other names, lengths or mtimes) and the
+    * session's explicitly set conf, since parquet inference reads several
+    * confs (`nanosAsLong`, `binaryAsString`, `int96AsTimestamp`,
+    * `inferTimestampNTZ`, ...) and keying on all of them needs no list
+    * kept in step with Spark. */
+  private case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+      conf: Map[String, String])
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The schema `spark.read.parquet` infers for table `name`, inferred
+    * once per file set and session conf. A missing path is not memoized:
+    * it fails in Spark's own read, with its PATH_NOT_FOUND error. */
+  def schemaOf(spark: SparkSession, sfDir: String, name: String): StructType = {
+    val path = pathOf(sfDir, name)
+    def infer() = spark.read.parquet(path).schema
+    val key = try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+      Some(SchemaKey(fs.makeQualified(root).toString, files, spark.conf.getAll))
+    } catch { case _: FileNotFoundException => None }
+    key.fold(infer()) { k =>
+      Option(schemas.get(k)).getOrElse {
+        val schema = infer()
+        schemas.putIfAbsent(k, schema)
+        schema
+      }
+    }
   }
 
   /** The events table has shipped `ts` in two physical forms across driver

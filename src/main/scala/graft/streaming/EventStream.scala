@@ -41,9 +41,10 @@ object EventStream {
       "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
         "event_type STRING, value DOUBLE, props STRING")
 
-  /** Which raw family a corpus ships: one batch footer read, no data scan. */
-  private def tsIsNsLong(s: SparkSession, path: String): Boolean =
-    s.read.parquet(path).schema("ts").dataType ==
+  /** Which raw family a corpus ships, from the events schema that
+    * [[graft.core.Tables.schemaOf]] infers once per file set. */
+  private def tsIsNsLong(s: SparkSession, d: String): Boolean =
+    graft.core.Tables.schemaOf(s, d, "events")("ts").dataType ==
       org.apache.spark.sql.types.LongType
 
   /** Streaming read of raw event files with the ts family normalized to
@@ -63,8 +64,7 @@ object EventStream {
     * Glob form — FileStreamSource requires a directory or glob, not a bare
     * file path ("Option 'basePath' must be a directory"). */
   def readEvents(s: SparkSession, d: String): DataFrame =
-    readEventStream(s, s"$d/events.parque*",
-      tsIsNsLong(s, s"$d/events.parquet"))
+    readEventStream(s, s"$d/events.parque*", tsIsNsLong(s, d))
 
   /** Tumbling 1-hour windows per event type with a 2-hour watermark —
     * streaming twin of Relational.q20 (same output schema + rounding). */
@@ -154,7 +154,7 @@ object EventStream {
     // that on the first cut. Sentinels are written in the SAME raw ts
     // family as the staged corpus files (ns longs or TIMESTAMP_NTZ µs) so
     // one schema reads every staged file.
-    val nsFamily = tsIsNsLong(s, s"$d/events.parquet")
+    val nsFamily = tsIsNsLong(s, d)
     val maxUs = graft.core.Tables.events(s, d)
       .agg(max(unix_micros(col("ts")))).head().getLong(0)
     import s.implicits._

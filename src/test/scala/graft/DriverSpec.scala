@@ -46,9 +46,24 @@ class DriverSpec extends AnyFunSuite {
   for ((file, n) <- Seq("BENCH_LOCAL_sf0.1.json" -> 186, "BENCH_r12.json" -> 33))
     test(s"Bench diff base: $file parses to the same $n minima as the old regex scan") {
       val got = Bench.priorMinima(file)
-      assert(got.map(_._2.size) === Some(n))
-      assert(got === regexMinima(file))
+      assert(got.map(_.minima.size) === Some(n))
+      assert(got.map(p => p.sf -> p.minima) === regexMinima(file))
     }
+
+  test("Bench diff base: only at the same sf and cpus; a line without cpus was taken at 32") {
+    val legacy = Bench.priorMinima("BENCH_LOCAL_sf0.1.json").get
+    assert(legacy.cpus === 32)
+    val sf = legacy.sf
+    assert(Bench.diffBase("BENCH_LOCAL_sf0.1.json", sf, 32) === Some(legacy.minima))
+    assert(Bench.diffBase("BENCH_LOCAL_sf0.1.json", sf, 4) === None)
+    assert(Bench.diffBase("BENCH_LOCAL_sf0.1.json", "/root/testdata/sf0.01", 32) === None)
+    val f = Files.createTempFile("bench", ".json")
+    try {
+      Files.writeString(f, s"""{"metric":"total","queries":{"q01":1.5},"sf":"$sf","cpus":4}""")
+      assert(Bench.diffBase(f.toString, sf, 4) === Some(Map("q01" -> 1.5)))
+      assert(Bench.diffBase(f.toString, sf, 32) === None)
+    } finally Files.delete(f)
+  }
 
   test("Bench diff base: an unparseable artifact yields no diff base") {
     val f = Files.createTempFile("bench", ".json")

@@ -7,7 +7,9 @@ Registers each test table as a DuckDB view over the sf parquet, runs every
 oracle_sql.json entry, and compares against the Spark result parquet written
 by graft.Verify: columns sorted by name, rows sorted by all columns, values
 compared exactly (floats to 9dp to forgive representation noise only —
-queries are expected to round themselves).
+queries are expected to round themselves). When Verify's
+verify_manifest.json is present, only the dumps it lists are compared:
+other dump directories are older runs' and are reported STALE.
 """
 import json, os, sys, glob, math
 import duckdb
@@ -59,9 +61,13 @@ def main():
     con = duckdb.connect()
     make_views(con, sf_dir)
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    dumped = this_run(out_dir)
     n_pass = n_fail = n_rowsonly = 0
     for name in sorted(glob.glob(f"{out_dir}/*/")):
         q = name.rstrip("/").split("/")[-1]
+        if dumped is not None and q not in dumped:
+            print(f"STALE {q}: not dumped by this run, skipped")
+            continue
         got_rel = con.sql(f"SELECT * FROM '{name}/*.parquet'")
         got = canon(got_rel.fetchall(), got_rel.columns)
         if q not in oracles:
@@ -89,21 +95,30 @@ def main():
             for r in diff_g: print(f"   got-only: {r}")
             for r in diff_e: print(f"   exp-only: {r}")
             n_fail += 1
-    n_fail += bound_sketches(con, out_dir)
+    n_fail += bound_sketches(con, out_dir, dumped)
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
     sys.exit(1 if n_fail else 0)
 
 
-def bound_sketches(con, out_dir):
+def this_run(out_dir):
+    """The query names Verify's manifest lists, or None without one."""
+    path = f"{out_dir}/verify_manifest.json"
+    return set(json.load(open(path))) if os.path.exists(path) else None
+
+
+def bound_sketches(con, out_dir, dumped=None):
     """Tolerance bounds for the two rows-only HLL++ queries: hash-matching
     a sketch against DuckDB is impossible by construction (different
     register layouts), but the estimates CAN be held against their exact
     twins — |approx - exact| / exact <= 3*rsd (rsd = 0.02) per group, with
     a 2-count absolute floor for tiny NDVs (HLL++ sparse mode is
     near-exact there). Converts "unchecked" into "bounded"; results also
-    land in <outDir>/sketch_bounds.json."""
-    import os
+    land in <outDir>/sketch_bounds.json. With `dumped`, only those dumps
+    count."""
     rsd, tol = 0.02, 3 * 0.02
+
+    def present(q):
+        return os.path.isdir(f"{out_dir}/{q}") and (dumped is None or q in dumped)
 
     # an empty result dir must report FAIL-BOUND, not crash the formatter;
     # exact count 0 is a bounded comparison too (abs diff gate), not a
@@ -116,7 +131,7 @@ def bound_sketches(con, out_dir):
 
     results, fails = {}, 0
     q25 = f"{out_dir}/q25_approx_distinct"
-    if os.path.isdir(q25):
+    if present("q25_approx_distinct"):
         rows = con.sql(
             f"SELECT l_returnflag, approx_parts, exact_parts FROM '{q25}/*.parquet'"
         ).fetchall()
@@ -130,7 +145,7 @@ def bound_sketches(con, out_dir):
         fails += 0 if ok else 1
     prof = f"{out_dir}/profile_lineitem_approx"
     exact = f"{out_dir}/profile_lineitem"
-    if os.path.isdir(prof) and os.path.isdir(exact):
+    if present("profile_lineitem_approx") and present("profile_lineitem"):
         rows = con.sql(
             f"""SELECT a.column_name, a.n_distinct, e.n_distinct
                 FROM '{prof}/*.parquet' a JOIN '{exact}/*.parquet' e

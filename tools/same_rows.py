@@ -4,7 +4,8 @@
 Usage: python3 tools/same_rows.py <sfDir> <parentVerifyOut> <changeVerifyOut>
 
 For a change that must not move any row (a refactor), this reports:
-  1. per query dumped in both directories, whether the two engine dumps hold
+  1. per query dumped in both directories (by the run that wrote each, when
+     it left a verify_manifest.json), whether the two engine dumps hold
      the same rows (same canonical form as check.py: columns sorted by name,
      rows sorted, floats to 9 significant digits);
   2. per query whose oracle SQL text differs between the two oracle_sql.json
@@ -15,7 +16,7 @@ import glob, json, os, sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb
-from check import canon, make_views
+from check import canon, make_views, this_run
 
 
 def rows(con, sql):
@@ -24,7 +25,9 @@ def rows(con, sql):
 
 
 def dumps(out_dir):
-    return {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out_dir}/*/")}
+    found = {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{out_dir}/*/")}
+    dumped = this_run(out_dir)
+    return found if dumped is None else found & dumped
 
 
 def main():
