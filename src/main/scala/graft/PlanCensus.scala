@@ -59,11 +59,11 @@ object PlanCensus {
     "dedup_embedding_cosine" -> Map("BroadcastNestedLoopJoin" ->
       "exact all-pairs verifier, bounded-N by contract; scale paths: Similarity.semanticDedup (cell-blocked pruning) and annLshTopK candidates + rerank"),
     "curation_pipeline" -> Map("ExistingRDD" ->
-      "localCheckpoint lineage cuts inside the star-contraction fixpoint loop"),
+      "sealed result checkpoint of the connected-components fixpoint (Graph.componentsOf, HashMin on the message-passing kernel) that labels the clusters"),
     "dedup_clusters" -> Map("ExistingRDD" ->
-      "localCheckpoint lineage cuts inside the star-contraction fixpoint loop"),
+      "sealed result checkpoint of the connected-components fixpoint (Graph.componentsOf, HashMin on the message-passing kernel) that labels the clusters"),
     "dedup_keep_list" -> Map("ExistingRDD" ->
-      "localCheckpoint lineage cuts inside the star-contraction fixpoint loop"),
+      "sealed result checkpoint of the connected-components fixpoint (Graph.componentsOf, HashMin on the message-passing kernel) that labels the clusters"),
     "text_tfidf_top_terms" -> Map("BroadcastNestedLoopJoin" ->
       "crossJoin(broadcast(single-row N aggregate)) — the scalar-subquery shape; build side is exactly 1 row"),
     "text_lm_bits" -> Map("BroadcastNestedLoopJoin" ->
@@ -103,9 +103,9 @@ object PlanCensus {
     "retrieval_hybrid_rrf" -> Map("BroadcastNestedLoopJoin" ->
       "inherits bm25's crossJoin(broadcast(single-row (n_docs,avgdl) aggregate)) in both the term-selection and BM25 legs — the scalar-subquery shape; build side is exactly 1 row"),
     "dedup_keep_best" -> Map("ExistingRDD" ->
-      "localCheckpoint lineage cuts inside the star-contraction fixpoint loop (inherits dedup_clusters)"),
+      "sealed result checkpoint of the connected-components fixpoint (Graph.componentsOf, HashMin on the message-passing kernel) that labels the clusters (inherits dedup_clusters)"),
     "graph_pagerank" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11): the damped-sum rounds run at the RDD layer on a persisted co-partitioned adjacency (one map-side-combined shuffle per round); the final frame is the sealed result checkpoint"),
+      "RDD fixpoint output: the damped-sum rounds run at the RDD layer on a persisted co-partitioned adjacency (one map-side-combined shuffle per round); the final frame is the sealed result checkpoint"),
     "graph_triangles" -> Map("ExistingRDD" ->
       "localCheckpoint of the distinct edge list and the oriented edge set — each feeds multiple downstream branches (degree count, adjacency gather, closure probe) and would otherwise recompute the pair-expansion join per branch"),
     "graph_triangles_approx" -> Map(
@@ -114,20 +114,20 @@ object PlanCensus {
       "BroadcastNestedLoopJoin" ->
         "crossJoin(broadcast(single-row edge/triangle count aggregates)) assembling the one-row estimator report — the scalar-subquery shape; build sides are exactly 1 row"),
     "graph_components" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11): HashMin rounds at the RDD layer — self-message carry folds the old per-round join into the one min shuffle; sealed result checkpoint"),
+      "RDD fixpoint output: HashMin rounds at the RDD layer, in blocks run to the fixpoint — self-message carry makes each round one min shuffle with no join; sealed result checkpoint"),
     "graph_label_prop" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11): plurality rounds at the RDD layer — (node,label) count shuffle + per-node argmax shuffle, both map-side combined; sealed result checkpoint"),
+      "RDD fixpoint output: plurality rounds at the RDD layer — (node,label) count shuffle + per-node argmax shuffle, both map-side combined; sealed result checkpoint"),
     "graph_ppr" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11, inherits graph_pagerank's loop): seed mass recomputed from node-id arithmetic, no seed frame; sealed result checkpoint"),
+      "RDD fixpoint output (inherits graph_pagerank's loop): seed mass recomputed from node-id arithmetic, no seed frame; sealed result checkpoint"),
     "graph_bfs_layers" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11): min-relaxation rounds at the RDD layer with self-message carry (the componentsOf idiom), frontier-sized shuffles; sealed result checkpoint"),
+      "RDD fixpoint output: min-relaxation rounds at the RDD layer with self-message carry (the componentsOf idiom), frontier-sized shuffles; sealed result checkpoint"),
     "graph_hits" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11): half-steps at the RDD layer over persisted out-/in-adjacency, one sum shuffle each; the max-normalization constant is one tiny max action instead of a scalar-subquery crossJoin; sealed result checkpoint"),
+      "RDD fixpoint output: half-steps at the RDD layer over persisted out-/in-adjacency, one sum shuffle each; the max-normalization constant is one tiny max action instead of a scalar-subquery crossJoin; sealed result checkpoint"),
     "graph_random_walks" -> Map("ExistingRDD" ->
-      "RDD fixpoint output (r11): the sorted adjacency array IS the ranked adjacency (index = rank); per step one frontier-sized repartition, the md5 draw replayed in-closure byte-identically; sealed result checkpoint"),
+      "RDD fixpoint output: the sorted adjacency array IS the ranked adjacency (index = rank); per step one frontier-sized repartition, the md5 draw replayed in-closure byte-identically; sealed result checkpoint"),
     "graph_modularity" -> Map(
       "ExistingRDD" ->
-        "localCheckpoints: the converged LPA label frame (now labelPropagationOf's sealed RDD-fixpoint output, checkpointed once more for the double fan-out here) — the fan-out-reused edge list itself is persist()ed (r11, the SCALE_r10 OOM lesson), not checkpointed",
+        "localCheckpoints: the converged LPA label frame (now labelPropagationOf's sealed RDD-fixpoint output, checkpointed once more for the double fan-out here) — the fan-out-reused edge list itself is persist()ed (a checkpoint of it ran out of heap at sf3), not checkpointed",
       "BroadcastNestedLoopJoin" ->
         "crossJoin(broadcast(single-row m2 edge-count aggregate)) — the scalar-subquery shape; build side is exactly 1 row"),
     "retrieval_eval_report" -> Map(
@@ -156,7 +156,7 @@ object PlanCensus {
       "inherited from the composed dedup_contamination_bloom leg: crossJoin(broadcast(single-row Bloom bitmap aggregate)); build side is exactly 1 row"),
     "ann_recall_report" -> Map(
       "ExistingRDD" ->
-        "sealed result checkpoint (r12): the 6-row report materializes inside the operator so the shared persisted vector frame / once-trained codebooks can be released at exit; the plan the census sees is the sealed scan (each leg's own census is audited under its standalone query)"),
+        "sealed result checkpoint: the 6-row report materializes inside the operator so the shared persisted vector frame / once-trained codebooks can be released at exit; the plan the census sees is the sealed scan (each leg's own census is audited under its standalone query)"),
     "train_token_budget" -> Map("BroadcastNestedLoopJoin" ->
       "bounded |sources|^2 remainder-rank theta self-join over the per-source aggregate (~20 rows) plus two crossJoin(broadcast(single-row total)) scalar subqueries"),
     "train_epoch_plan" -> Map(

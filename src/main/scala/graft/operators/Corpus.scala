@@ -80,11 +80,10 @@ object Corpus {
     *
     * Scale shape: ONE corpus scan — the per-language aggregate
     * (map-side combined, |langs| rows) is materialized once
-    * (`localCheckpoint`, the star-contraction lineage-cut idiom) so the
-    * two scalar-subquery branches (token total, q normalizer) re-read
-    * the bounded aggregate, not the corpus (the naive three-branch plan
-    * re-scans 100 TB three times for two scalar totals); no windows, no
-    * collect. */
+    * (`localCheckpoint`, a lineage cut) so the two scalar-subquery
+    * branches (token total, q normalizer) re-read the bounded aggregate,
+    * not the corpus (the naive three-branch plan re-scans 100 TB three
+    * times for two scalar totals); no windows, no collect. */
   def samplingTemperature(s: SparkSession, d: String): DataFrame =
     samplingTemperatureOf(Tables.documents(s, d))
 
@@ -236,7 +235,7 @@ object Corpus {
     * (uniform mixing, the diversity-maximizing prior), but no source may
     * repeat beyond [[EpochCap]] epochs. The surplus the caps free up is
     * water-filled in BOUNDED MULTI-ROUND form (the fixed-iteration
-    * discipline of `PrIters`/`CcIters`, deterministic and
+    * discipline of `Graph.PrIters`, deterministic and
     * finite-SQL-replayable where iterating to the exact water level is
     * not):
     *

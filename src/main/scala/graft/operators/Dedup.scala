@@ -531,12 +531,10 @@ object Dedup {
     *     pair parity at test scale is asserted in DedupSpec, so the DuckDB
     *     oracle (recursive-CTE closure over the exact pairs) sees an
     *     identical graph.
-    *   - **contraction** is the alternating large-star/small-star
-    *     algorithm (Kiveris et al., "Connected Components in MapReduce and
-    *     Beyond", SoCC'14): converges in O(log n) rounds regardless of
-    *     component diameter, where plain min-label propagation is
-    *     O(diameter) rounds — the difference between 5 and 500 shuffles on
-    *     a chain-shaped component.
+    *   - **labels** come from the one connected-components operator,
+    *     [[Graph.componentsOf]]: HashMin on the message-passing kernel, run
+    *     to its fixpoint in blocks of [[Graph.CcIters]] rounds — a
+    *     chain-shaped component costs more blocks, never a wrong label.
     *   - **identical copies never reach LSH** ([[clusterEdges]]): m copies
     *     of one document share all 32 band buckets, so unguarded candidate
     *     generation is m²/2 pairs per identical cluster (1,000 copies →
@@ -552,7 +550,17 @@ object Dedup {
 
   /** [[dedupClusters]] over an arbitrary (doc_id, text) frame. */
   def dedupClustersOf(docs: DataFrame): DataFrame =
-    connectedComponents(docs.sparkSession, clusterEdges(docs))
+    clustersOf(clusterEdges(docs))
+
+  /** Cluster labels of an undirected (src, dst) edge frame: (doc_id,
+    * cluster = min node of its component) for every node incident to a
+    * non-self-loop edge. Self-loops are dropped before the edges are
+    * placed, since [[Graph.componentsOf]] would label an isolated (x, x). */
+  private[graft] def clustersOf(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    Graph.componentsOf(edges.sparkSession, edges.filter($"src" =!= $"dst"))
+      .toDF("doc_id", "cluster")
+  }
 
   /** Near-dup graph edges with the identical-copy guard: the collapse
     * half alone ([[collapseCopies]]), LSH pairs among representatives, plus
@@ -567,86 +575,6 @@ object Dedup {
     minhashLshPairsOf(copies.reps).select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(copies.members.filter($"doc_id" =!= $"rep")
         .select($"doc_id".as("src"), $"rep".as("dst")))
-  }
-
-  /** Alternating star contraction to a fixpoint. Input: undirected edges
-    * (src, dst); output: (doc_id, cluster = min node of its component) for
-    * every node incident to an edge.
-    *
-    * The rounds run at the RDD layer (the lesson of the Graph
-    * message-passing kernel): each round of the old DF loop paid plan analysis, AQE
-    * re-planning, an eager localCheckpoint barrier, a count action and
-    * (on count plateaus) an `except` anti-join — measured 6-8 s at sf0.1
-    * on a 249-EDGE set, i.e. pure orchestration. The RDD rounds are four
-    * small map-side-combined shuffles plus one count; the convergence
-    * proof stays exact — equal counts short-circuit into a real set
-    * difference (`subtract`), never a hash proxy. Same algorithm, same
-    * min arithmetic, bit-identical labels. Exceeding `maxIter` still
-    * throws — unconverged labels are wrong labels, and the failure must
-    * be loud, never a silent partial result. */
-  def connectedComponents(s: SparkSession, edgesIn: DataFrame,
-                          maxIter: Int = 50): DataFrame = {
-    import s.implicits._
-    val part = new org.apache.spark.HashPartitioner(
-      s.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // canonical orientation (u > v), no self-loops, deduped — the dedup
-    // runs as a Tungsten DF distinct (flat longs in the shuffle)
-    val edges0 = edgesIn.filter($"src" =!= $"dst")
-      .select(greatest($"src", $"dst").as("u"), least($"src", $"dst").as("v"))
-      .distinct().as[(Long, Long)].rdd.persist(lvl)
-    val nodes = edges0.flatMap { case (u, v) => Iterator(u, v) }
-      .distinct().persist(lvl)
-    var edges = edges0
-    // every exit, the unconverged throw included, releases what the
-    // loop persisted
-    try {
-      var edgeCount = edges.count()
-      var iter = 0
-      var done = false
-      while (!done && iter < maxIter) {
-        // large-star: every node attaches its strictly-larger neighbors to
-        // the minimum of its closed neighborhood
-        val sym = (edges ++ edges.map(_.swap)).partitionBy(part).persist(lvl)
-        val largeMin = sym
-          .mapPartitions(_.map { case (u, v) => (u, math.min(v, u)) },
-            preservesPartitioning = true)
-          .reduceByKey(part, math.min(_: Long, _: Long)) // narrow: co-partitioned
-        val large = sym.join(largeMin) // narrow
-          .flatMap { case (u, (v, m)) =>
-            if (v > u) Iterator.single((v, m)) else Iterator.empty
-          }
-          .distinct().persist(lvl)
-        // small-star: over (big → small) edges, connect each node and its
-        // smaller neighbors to the smallest of them
-        val smallMin = large.reduceByKey(part, math.min(_: Long, _: Long))
-        val stepped = large.partitionBy(part).join(smallMin) // narrow join
-          .flatMap { case (u, (v, m)) =>
-            if (v != m) Iterator.single((v, m)) else Iterator.empty
-          }
-          .union(smallMin)
-          .distinct().persist(lvl)
-        val steppedCount = stepped.count()
-        val grew = steppedCount != edgeCount
-        done = !grew && stepped.subtract(edges).isEmpty()
-        sym.unpersist(false); large.unpersist(false)
-        if (edges ne edges0) edges.unpersist(false)
-        edges = stepped
-        edgeCount = steppedCount
-        iter += 1
-      }
-      if (!done)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter star rounds")
-      // fixpoint is a star forest: edges point non-roots at their component
-      // min; roots (and only roots) never appear on the left
-      val labels = edges.map { case (u, v) => (u, v) }
-      val roots = nodes.subtract(edges.keys).map(n => (n, n))
-      labels.union(roots).toDF("doc_id", "cluster").localCheckpoint()
-    } finally {
-      edges0.unpersist(false); nodes.unpersist(false)
-      if (edges ne edges0) edges.unpersist(false)
-    }
   }
 
   /** DuckDB twin of [[gramsOf]]: the `t/g/sz` CTE chain over the docs of

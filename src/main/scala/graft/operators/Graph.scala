@@ -16,8 +16,8 @@ import graft.core.Tables
   * next query a link-graph user runs — the centrality score CommonCrawl-
   * scale corpus curation uses as a document-quality prior — and the
   * operator class (iterative message passing to a fixpoint) is the one
-  * the engine's star-contraction ([[Dedup.connectedComponents]]) already
-  * exercises for clustering.
+  * near-dup clustering runs too: [[Dedup.dedupClusters]] labels its
+  * clusters with this file's connected components ([[componentsOf]]).
   *
   * Arithmetic is FIXED-POINT integer end-to-end (the [[Similarity]] IVF
   * Lloyd-means precedent): ranks are BIGINT micro-units, per-edge
@@ -30,7 +30,8 @@ import graft.core.Tables
   * LPA, HITS, random walks) run on one RDD message-passing kernel — flat
   * edges placed once, one map-side-combined shuffle per round (the kernel
   * note below); the rest are DataFrame plans. Driver traffic is a scalar
-  * at most (HITS's max, the CC convergence count) — no collect anywhere.
+  * at most (HITS's max, the CC convergence probe's count) — no collect
+  * anywhere.
   */
 object Graph {
 
@@ -138,8 +139,7 @@ object Graph {
     /** Run one fixpoint loop: `body` builds the result on a fresh [[Loop]],
       * the result is materialized eagerly (so the caller's action replays
       * none of the loop), and everything the loop held is released on
-      * every exit — a throw, such as the components convergence probe's,
-      * included. */
+      * every exit, a throw included. */
     def run(s: SparkSession)(body: Loop => DataFrame): DataFrame = {
       val loop = new Loop(s)
       try body(loop).localCheckpoint()
@@ -626,66 +626,74 @@ object Graph {
       |SELECT node, count(*) AS n_triangles FROM n GROUP BY node""".stripMargin
 
   // ---------------------------------------------------- connected components
-  /** HashMin rounds for [[components]] — enough to converge any graph of
-    * diameter ≤ CcIters; a FIXED count (the [[PrIters]] discipline) keeps
-    * the oracle a finite CTE chain. A pathological longer-diameter graph
-    * no longer ships truncated labels silently: the runtime fixpoint probe
-    * in [[componentsOf]] (one extra round must change nothing) throws, and
-    * GraphSpec pins both the loud-failure path (14-node path graph) and
-    * convergence exactly at the bound (13-node path), alongside the
-    * corpus-level cross-check against the O(log n) star-contraction
-    * implementation ([[graft.operators.Dedup.connectedComponents]]). */
+  /** HashMin block length: [[componentsOf]] runs its rounds in blocks of
+    * CcIters until a probe round moves no label, and [[componentsOracle]]
+    * unrolls exactly CcIters rounds — a finite CTE chain. */
   val CcIters = 12
 
   /** Connected components of the support-filtered part co-purchase graph
     * (edges = part pairs bought together in ≥ [[BasketMinSupport]] orders):
-    * every node labeled with the minimum node id reachable within
-    * [[CcIters]] hops — the component id once converged. The component
-    * structure of a thresholded co-occurrence graph is the catalog-
-    * clustering / related-items primitive, and CC is the same operator the
-    * dedup pipeline runs over near-dup candidate edges
-    * ([[Dedup.dedupClusters]]).
+    * every node labeled with the minimum node id of its component. The
+    * component structure of a thresholded co-occurrence graph is the
+    * catalog-clustering / related-items primitive, and the dedup pipeline
+    * runs the same operator over near-dup edges ([[Dedup.dedupClusters]]).
     *
     * Algorithm: synchronous HashMin label propagation (the Pregel CC
     * baseline) — `lbl ← min(lbl, min over neighbors lbl)` per round, the
-    * [[minRelaxation]] loop with the label itself as the message. HashMin
-    * converges in O(diameter) rounds; at 100 TB, graphs with large
-    * diameter switch to the star-contraction form
-    * ([[Dedup.connectedComponents]], O(log n) rounds) — both are shipped,
-    * and GraphSpec pins them equal. */
+    * [[minRelaxation]] loop with the label itself as the message, run to
+    * its fixpoint. HashMin needs O(diameter) rounds, where alternating star
+    * contraction (Kiveris et al., SoCC'14) needs O(log n); star
+    * contraction is not shipped because it pays a count job every round
+    * (and a set-difference job on count plateaus), where a HashMin block
+    * is one job — measured slower on both sf0.1 graphs (co-purchase: 1.7–
+    * 1.9 s vs 0.8–0.9 s; near-dup cluster edges: 0.57–0.73 s vs 0.50–0.57
+    * s, 4 cores), each of which converges within one block. */
   def components(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     componentsOf(s, supportPairs(s, orderBaskets(s, d))
       .select($"a".as("u"), $"b".as("v")))
   }
 
-  /** [[components]] over an arbitrary canonical (u, v) edge frame.
-    * Bit-identical to the unrolled-CTE oracle. */
+  /** [[components]] over an arbitrary edge frame (its first two columns,
+    * either orientation; a self-loop (x, x) labels x). Exact on any
+    * diameter, and bit-identical to the unrolled-CTE oracle on graphs of
+    * diameter ≤ [[CcIters]].
+    *
+    * The fixpoint: after each block of [[CcIters]] rounds, one probe
+    * round asks whether any label still falls, and while one does another
+    * block runs. Labels are node ids that only fall and are bounded below
+    * by the component minimum, so the loop ends after at most
+    * ⌈diameter / CcIters⌉ + 1 blocks, with no round cap. A block and its
+    * probe are one job; later jobs reuse the earlier blocks' shuffle
+    * output. */
   private[graft] def componentsOf(s: SparkSession, e0: DataFrame): DataFrame = {
     import s.implicits._
     Loop.run(s) { loop =>
       val g = loop.place(distinctSymPairs(e0))
       def hashMin(lbl: RDD[(Long, Long)], rounds: Int) =
         minRelaxation(g, lbl, rounds, "components")(l => l)
-      val lbl = hashMin(g.init(n => n), CcIters)
-      // Runtime fixpoint probe (the [[Dedup.connectedComponents]]
-      // non-convergence discipline): HashMin has converged iff one extra
-      // round changes NOTHING. A graph whose diameter exceeds [[CcIters]]
-      // would otherwise silently ship within-CcIters-hop labels as
-      // component ids; unconverged labels are wrong labels, so fail LOUDLY
-      // and point at the O(log n) star-contraction form, which has no
-      // diameter dependence. Cost: one more min round + a narrow
-      // co-partitioned join and count.
-      val falling = hashMin(lbl, 1).join(lbl)
-        .values.filter { case (next, l) => next < l }.count()
-      if (falling > 0)
-        throw new IllegalStateException(
-          s"components did not converge in $CcIters HashMin rounds " +
-            s"($falling labels still falling — graph diameter exceeds the " +
-            "round bound; use Dedup.connectedComponents, the O(log n) " +
-            "star-contraction form, for large-diameter graphs)")
+      def falling(lbl: RDD[(Long, Long)]) =
+        hashMin(lbl, 1).join(lbl).values.filter { case (next, l) => next < l }.count() > 0
+      var lbl = hashMin(g.init(n => n), CcIters)
+      while (falling(lbl)) lbl = hashMin(lbl, CcIters)
       lbl.toDF("node", "component")
     }
+  }
+
+  /** In-JVM union-find reference of [[componentsOf]], for specs: every
+    * edge endpoint labeled with its component's minimum (a union keeps
+    * the smaller root, so each root is its set's minimum). */
+  private[graft] def componentsLocal(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(n => n -> find(n)).toMap
   }
 
   /** The min-relaxation loop of HashMin [[componentsOf]] and
@@ -714,7 +722,11 @@ object Graph {
     }.mkString(",\n")
 
   /** DuckDB twin of [[components]]: [[CcIters]] HashMin rounds over the
-    * symmetric support pairs, every node starting as its own label. */
+    * symmetric support pairs, every node starting as its own label. It
+    * equals the engine only while the graph's diameter is ≤ [[CcIters]]:
+    * on a wider graph the engine runs further blocks to the exact labels,
+    * so the width shows up as a Verify MISMATCH of this 12-round oracle,
+    * not as an engine throw. */
   lazy val componentsOracle: String =
     s"""WITH $supportPairsCtes,
        |ed AS MATERIALIZED (SELECT a AS src, b AS dst FROM pr UNION SELECT b, a FROM pr),
@@ -726,7 +738,7 @@ object Graph {
   /** Core order for [[kcore]]: the 3-core — the standard "dense enough to
     * be a community, sparse enough to keep most real nodes" cut. */
   val KcoreK = 3L
-  /** Fixed peel rounds — the [[CcIters]] discipline: deterministic,
+  /** Fixed peel rounds — the [[PrIters]] discipline: deterministic,
     * oracle-replayable; GraphSpec asserts the peel has actually reached its
     * fixpoint on the test corpora (a further round changes nothing). */
   val KcoreIters = 8
@@ -838,7 +850,7 @@ object Graph {
       |ORDER BY side, bucket""".stripMargin
 
   // ------------------------------------------------- label propagation (LPA)
-  /** Fixed synchronous LPA rounds — the [[PrIters]]/[[CcIters]] contract:
+  /** Fixed synchronous LPA rounds — the [[PrIters]] contract:
     * a pure function of the input, replayable as a finite CTE chain. */
   val LpaIters = 6
 
@@ -967,7 +979,7 @@ object Graph {
     dampedRanksOracle(PprIters, seedSql("node"), "ppr_micros")
 
   // ---------------------------------------------- multi-source BFS layers
-  /** BFS hop bound — the [[CcIters]] bounded-horizon contract: output
+  /** BFS hop bound — a fixed round count, the [[PrIters]] contract: output
     * distances are exact for every node within [[BfsMaxHops]] of a seed,
     * and nodes farther out are absent BY CONTRACT (documented bounded
     * reach, the production shape for "N-hop neighborhood of a seed

@@ -177,8 +177,8 @@ object Sampling {
     *
     * The one materialization ([[DataFrame.localCheckpoint]]) pins the
     * partitioning so the count pass and the assign pass see the SAME
-    * layout — the census exempts ExistingRDD for exactly this pattern
-    * (star-contraction precedent). Quality sx is the shared integer-space
+    * layout — the census exempts ExistingRDD for exactly this pattern.
+    * Quality sx is the shared integer-space
     * score ([[TextOps.qualitySxOf]]), so the sort key has no float knife
     * edge; the salt ("order:") keeps the within-tier shuffle independent
     * of every other md5-keyed decision (split/shard hygiene). */

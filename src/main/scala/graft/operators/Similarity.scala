@@ -1620,7 +1620,8 @@ object Similarity {
 
   // ------------------------------------------- power iteration (top PC)
   /** Power-iteration rounds. Fixed (not convergence-tested) so the
-    * output is a pure function of the input — the CcIters discipline. */
+    * output is a pure function of the input — the [[Graph.PrIters]]
+    * discipline. */
   val PowerIters = 8
   /** Weight-vector scale: w components live in [−1000, 1000]. */
   val PowerScale = 1000L

@@ -283,10 +283,10 @@ object TextOps {
        |ORDER BY cnt DESC, a ASC, b ASC LIMIT $BpeMergeTopK""".stripMargin
 
   // ------------------------------------------------- iterative BPE trainer
-  /** Fixed merge-round count for [[bpeTrain]] — the [[graft.operators.Graph]]
-    * `PrIters`/`CcIters` fixed-iteration discipline: deterministic and
-    * finite-CTE-replayable where looping to a vocabulary-size target is
-    * not. */
+  /** Fixed merge-round count for [[bpeTrain]] — the
+    * [[graft.operators.Graph.PrIters]] fixed-iteration discipline:
+    * deterministic and finite-CTE-replayable where looping to a
+    * vocabulary-size target is not. */
   val BpeTrainRounds = 10
 
   /** TRUE iterative BPE training (Sennrich et al. 2016 §3, the actual

@@ -39,30 +39,25 @@ class DedupSpec extends SparkTestBase {
     assert(lsh === exact)
   }
 
-  test("star contraction labels chain, triangle and isolated pair with component minima") {
+  test("clusters label chain, triangle and isolated pair with component minima") {
     import spark.implicits._
-    // a 64-node chain (diameter 63 — label propagation would need 63
-    // rounds; star contraction needs O(log)), a triangle, a lone pair
+    // a 64-node chain (diameter 63: six HashMin blocks of CcIters rounds),
+    // a triangle, a lone pair
     val chain = (1L until 64L).map(i => (i, i + 1))
     val edges = (chain ++ Seq((100L, 101L), (101L, 102L), (102L, 100L), (200L, 201L)))
       .toDF("src", "dst")
-    val out = Dedup.connectedComponents(spark, edges)
-      .as[(Long, Long)].collect().toMap
+    val out = Dedup.clustersOf(edges).as[(Long, Long)].collect().toMap
     (1L to 64L).foreach(n => assert(out(n) === 1L, s"chain node $n"))
     Seq(100L, 101L, 102L).foreach(n => assert(out(n) === 100L))
     assert(out(200L) === 200L && out(201L) === 200L)
     assert(out.size === 64 + 3 + 2)
   }
 
-  test("unconverged star contraction fails loudly instead of returning partial labels") {
+  test("clusters drop self-loop edges: an isolated (x, x) labels nothing") {
     import spark.implicits._
-    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[IllegalStateException] {
-      Dedup.connectedComponents(spark, chain, maxIter = 1)
-    }
-    // the throw path releases what the loop held (edges, nodes, last step)
-    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
+    val edges = Seq((1L, 2L), (7L, 7L)).toDF("src", "dst")
+    val out = Dedup.clustersOf(edges).as[(Long, Long)].collect().toMap
+    assert(out === Map(1L -> 1L, 2L -> 1L))
   }
 
   test("dedup clusters are consistent: pair endpoints share a cluster, rep is min member") {

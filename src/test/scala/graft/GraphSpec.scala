@@ -109,7 +109,7 @@ class GraphSpec extends SparkTestBase {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
-  test("components: HashMin equals star-contraction CC on the corpus co-purchase graph") {
+  test("components: HashMin equals union-find on the corpus co-purchase graph") {
     import org.apache.spark.sql.functions.col
     val edges = Graph.supportPairs(spark,
         graft.core.Tables.lineitem(spark, sf)
@@ -118,13 +118,7 @@ class GraphSpec extends SparkTestBase {
       .localCheckpoint()
     val hashMin = Graph.componentsOf(spark, edges)
       .as[(Long, Long)].collect().toMap
-    // two independent algorithms (O(diameter) HashMin vs O(log n) star
-    // contraction) must produce the identical component labeling — this is
-    // also the convergence proof for the fixed CcIters round count here
-    val star = graft.operators.Dedup.connectedComponents(spark,
-        edges.select(col("u").as("src"), col("v").as("dst")))
-      .as[(Long, Long)].collect().toMap
-    assert(hashMin === star)
+    assert(hashMin === Graph.componentsLocal(edges.as[(Long, Long)].collect().toSeq))
     assert(hashMin.nonEmpty)
   }
 
@@ -136,19 +130,24 @@ class GraphSpec extends SparkTestBase {
     assert(got === (1L to 13L).map(_ -> 1L).toMap)
   }
 
-  test("components: fails LOUDLY when the graph diameter exceeds the round bound") {
-    // 14-node path: diameter 13 > CcIters = 12 — after 12 rounds node 14
-    // still holds label 2 (the min within 12 hops), so the one-extra-round
-    // probe must throw instead of silently shipping within-12-hop labels
-    val edges = (1L to 13L).map(i => (i, i + 1)).toDF("u", "v")
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val ex = intercept[IllegalStateException] {
-      Graph.componentsOf(spark, edges).collect()
+  test("components: paths wider than CcIters get exact labels in more blocks, RDDs freed") {
+    // 14-node path: diameter 13 > CcIters = 12 — after one block node 14
+    // still holds label 2, so the probe runs a second block; the 64-node
+    // path needs six
+    import org.apache.spark.sql.execution.LogicalRDD
+    for (n <- Seq(14L, 64L)) {
+      val edges = (1L until n).map(i => (i, i + 1)).toDF("u", "v")
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val out = Graph.componentsOf(spark, edges)
+      assert(out.as[(Long, Long)].collect().toMap === (1L to n).map(_ -> 1L).toMap)
+      // every RDD the loop persisted (placed pairs, degrees) is released;
+      // only the sealed result stays, until its owner drops it
+      out.queryExecution.analyzed.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+        case _ =>
+      }
+      assert(spark.sparkContext.getPersistentRDDs.keySet === persisted, s"$n-node path")
     }
-    assert(ex.getMessage.contains("did not converge"))
-    assert(ex.getMessage.contains("star-contraction"))
-    // the throw path releases what the loop held (placed pairs, degrees)
-    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
   }
 
   test("kcore: peeling cascades and reports in-core degrees exactly") {

@@ -51,38 +51,21 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  test("star contraction == union-find on random graphs (property, 6 seeds)") {
+  test("clusters == union-find on random graphs with long paths (property, 6 seeds)") {
     import spark.implicits._
+    import graft.operators.{Dedup, Graph}
     val edgeGen = for {
       n <- Gen.choose(5, 60)                    // node id space
       m <- Gen.choose(0, 80)                    // edge count
       es <- Gen.listOfN(m, for {
         a <- Gen.choose(0L, n.toLong); b <- Gen.choose(0L, n.toLong)
       } yield (a, b))
-    } yield es
+      // a path longer than 2 x CcIters, so at least three HashMin blocks run
+      len <- Gen.choose(2 * Graph.CcIters + 1, 3 * Graph.CcIters)
+    } yield es ++ (1000L until 1000L + len).map(i => (i, i + 1))
     samples(edgeGen, 6).foreach { edges =>
-      // brute-force union-find truth
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      def union(a: Long, b: Long): Unit = {
-        val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val real = edges.filter(e => e._1 != e._2)
-      real.foreach { case (a, b) => union(a, b) }
-      val nodes = real.flatMap(e => Seq(e._1, e._2)).distinct
-      // component min == union-find root chain min
-      val truth = nodes.map { x =>
-        val root = find(x)
-        x -> nodes.filter(y => find(y) == root).min
-      }.toMap
-      val got =
-        if (real.isEmpty) Map.empty[Long, Long]
-        else graft.operators.Dedup.connectedComponents(spark, real.toDF("src", "dst"))
-          .as[(Long, Long)].collect().toMap
-      assert(got === truth, s"edges: $real")
+      val got = Dedup.clustersOf(edges.toDF("src", "dst")).as[(Long, Long)].collect().toMap
+      assert(got === Graph.componentsLocal(edges.filter(e => e._1 != e._2)), s"edges: $edges")
     }
   }
 
